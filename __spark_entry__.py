@@ -1,239 +1,23 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point façade over the query registry (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
-
-All real logic lives in ``bookstore_aws_lakehouse_spark/``; this module is
-the thin registry façade. See ``bookstore_aws_lakehouse_spark/golden.py``
-for the relational/golden set and the extension modules for dedup /
-similarity / text / streaming queries.
+``entry(spark)`` is a smoke query; ``queries()[name](spark, sf_dir)``
+builds each registered query and ``oracle_sql()[name]`` is its DuckDB
+twin. All real logic lives in ``bookstore_aws_lakehouse_spark/``: see
+``golden.py`` for the relational set and the ``queries_*`` modules for the
+dedup / similarity / text / streaming families.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bookstore_aws_lakehouse_spark.registry import MODULE, load_all
+from bookstore_aws_lakehouse_spark.registry import load_all
 
 GOLDEN, ORACLE = load_all()
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-_REPO = os.path.dirname(os.path.abspath(__file__))
-
-#: verification-first ordering for queries without a driver-green row yet:
-#: LLM-pipeline surfaces (dedup/similarity/text/streaming/etl/events) lead,
-#: the long-verified relational basics trail.
-_MODULE_PRIORITY = (
-    "queries_dedup",
-    "queries_similarity",
-    "queries_text",
-    "queries_streaming",
-    "queries_etl",
-    "queries_events",
-    "queries_sampling",
-    "queries_temporal",
-    "queries_quality",
-    "queries_multimodal",
-    "queries_sketches",
-    "queries_graph",
-    "golden",
-    "queries_sql",
-)
-
-
-def _driver_rows() -> dict[str, tuple[bool, int]]:
-    """name -> (green, round_last_checked) across all prior
-    CORRECTNESS_r*.json. Non-green checked names are past failures whose
-    fixes deserve the front of the queue. A query's verdict is its LATEST
-    round's row (files sort by round number): a regression in round N
-    must not stay 'green' on the strength of round N-1. The round number
-    feeds an age tiebreaker: with few unchecked queries left, the driver
-    window re-verifies the STALEST greens first, so every row re-proves
-    itself every few rounds instead of coasting on a round-1 check."""
-    latest: dict[str, tuple[bool, int]] = {}
-
-    def _round_no(path: str) -> int:
-        # numeric sort: lexicographic would order r100 before r11 and let
-        # older rounds overwrite newer verdicts
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        return int(m.group(1)) if m else -1
-
-    for path in sorted(
-        glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")), key=_round_no
-    ):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = not row.get("err") and bool(
-                row.get("rows_match")
-                and row.get("schema_match", True)
-                and row.get("hash_match", True)
-            )
-            latest[name] = (ok, _round_no(path))
-    return latest
-
-
-#: modules whose query builders are pure plan construction (safe to build
-#: for an analysis-only probe). Excluded wholesale: queries_streaming
-#: (building runs availableNow jobs) and queries_etl (the source/sink
-#: round-trip queries write files on build).
-_PROBE_MODULES = frozenset(
-    {
-        "golden",
-        "queries_sql",
-        "queries_events",
-        "queries_temporal",
-        "queries_text",
-        "queries_sampling",
-        "queries_quality",
-        "queries_dedup",
-        "queries_similarity",
-        "queries_multimodal",
-        "queries_pipeline",
-        "queries_sketches",
-        "queries_graph",
-    }
-)
-
-#: probe-safe modules' builders that nonetheless EXECUTE on build
-#: (iterative convergence loops / store-table writes) — skipped by name
-_PROBE_EXCLUDE = frozenset(
-    {
-        "dedup_clusters",
-        "dedup_survivors",
-        "dedup_incremental_bucketed",
-        # runs connected_components' convergence loop on build
-        "embedding_dedup_survivors",
-        # runs its observed noop-write job on build (the metrics ARE the
-        # result, so construction executes)
-        "events_observed_metrics",
-        # pins its stage frames with eager localCheckpoints on build
-        "dataset_curation_pipeline_v2",
-        # r9 plan-hygiene pins (model-sized artifacts localCheckpointed
-        # eagerly) make these execute partial jobs on build too
-        "token_cms_heavy_hitters",
-        "text_nb_langid_confusion",
-        "ann_ivfpq_residual_topk",
-        "ann_ivfpq_residual_multiprobe",
-        "ann_recall_floor",  # runs the multiprobe pipeline on build
-        "dataset_temperature_mix",
-        "join_salted_hot",  # detect_hot_keys runs its count job on build
-        # r14: these three collect the dim-row covariance/trajectory
-        # frame on build (loadings/means become projection literals);
-        # top_pc/top_pcs/pc_spectrum are fully lazy and stay probed
-        "embedding_pca_scores_topk",
-        "embedding_pc_variance",
-        "embedding_pca_reduce",
-    }
-)
-
-
-#: queries whose code/oracle genuinely changed, mapped to the ROUND the
-#: change landed in: a query is demoted to re-verification-needed while
-#: its latest driver green predates that round, and rotates normally once
-#: a fresh green lands. The round-5 fixture-regen casualties all re-won
-#: their greens in r5 and are gone; keep this minimal — the stalest-first
-#: rotation must drain the r2/r3 verification debt without non-changed
-#: entries jumping the queue (VERDICT r5 #1).
-_FORCE_REVERIFY: dict[str, int] = {
-    # r9 (all 20 r8-era entries pruned: each held a green at-or-after its
-    # change round in CORRECTNESS_r08 — the mechanism self-cleaned).
-    # r9: remove_repeated_passages rebuilt as ONE aggregation over all
-    # chunks (the totals scan + second join are gone) — same values,
-    # materially different plan
-    "text_remove_boilerplate": 9,
-    # r9: apply_rollup_delta's NULL-sum contract changed twice this
-    # round (both-NULL emits NULL; then exact nn_<col> non-NULL-count
-    # tracking — rollup_delta emits d_nn_, the MV mart stores nn_), and
-    # materialized_rollup_build/refresh now carry the nn column end-to-end
-    "snapshot_incremental_rollup": 9,
-    "snapshot_materialized_view_refresh": 9,
-    # r9: the lakesnap stream reader caches immutable manifests across
-    # the window loop, and both stream rows gained in-query phase
-    # instrumentation — executed reader path differs from the r8 greens.
-    # (The atomic-publish commit protocol also changed for EVERY
-    # snapshot row this round — deliberately not forced: results are
-    # byte-identical, any snapshot green exercises it, and forcing ~30
-    # rows would crowd the r4 cohort out of the drain window.)
-    "stream_snapshot_source_tail": 9,
-    "stream_snapshot_native_sink": 9,
-    # r13 (VERDICT r13 #1): the PII registry extension changed output
-    # VALUES (new SSN/IBAN/card patterns + new oracle-side plants), and
-    # the PCA family's plans changed post-green (covariance_rows gained a
-    # mean column + repartition(1), fused power step, localCheckpointed
-    # deflation) — all five earned their greens in r12, before the change.
-    "text_pii_redact": 13,
-    "text_pii_rate_by_source": 13,
-    # r14: the PCA family changed AGAIN this round (fused one-job
-    # trajectory+Rayleigh, zero-norm guard added to the oracle CTEs), so
-    # the force round advances past any r14-predating green; top_pcs'
-    # generated oracle gained the same guard.
-    "embedding_pca_scores_topk": 14,
-    "embedding_top_pc": 14,
-    "embedding_pc_variance": 14,
-    "embedding_top_pcs": 14,
-    # r14 (VERDICT r14 #1): the z-order bucket rank was rewritten to a
-    # binary search (a2df699) and connected-components probes every round
-    # (959b90d) — values identical by construction and by 3-SF parity, but
-    # none of the five consumers is in the r14 driver window, so their
-    # greens predate the change. Force the r15 window to re-verify first.
-    "snapshot_zorder_prune": 14,
-    "snapshot_zorder_time_prune": 14,
-    "dedup_clusters": 14,
-    "dedup_clusters_capped": 14,
-    "embedding_dedup_survivors": 14,
-}
-
-
-_PROBE_CACHE: set[str] | None = None
-
-
-def _analysis_probe() -> set[str]:
-    """Build every probe-safe GOLDEN entry against sf0.001 and force
-    ``.schema`` (Catalyst analysis only — no jobs). Returns the names that
-    FAIL analysis. Purpose: an environmental change (e.g. the round-4
-    fixture regeneration flipping events.ts from ns to µs) can break
-    queries that hold fresh driver greens; the rotation would otherwise
-    leave them out of the verification window for rounds. Costs a few
-    seconds of footer reads; any probe-level failure degrades to 'no
-    information' rather than breaking queries()."""
-    global _PROBE_CACHE
-    if _PROBE_CACHE is not None:
-        return _PROBE_CACHE
-    broken: set[str] = set()
-    try:
-        from bookstore_aws_lakehouse_spark.session import get_spark
-
-        # match the machine: if no session exists yet, the one we create
-        # here is the one the driver's getOrCreate() will reuse — a
-        # local[4] probe session would quietly throttle the whole run
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
-        spark = get_spark(master=f"local[{cpus}]")
-        for name, fn in GOLDEN.items():
-            if MODULE.get(name, "") not in _PROBE_MODULES or name in _PROBE_EXCLUDE:
-                continue
-            try:
-                fn(spark, SMOKE_SF_DIR).schema
-            except Exception:
-                broken.add(name)
-    except Exception:
-        return set()
-    _PROBE_CACHE = broken
-    return broken
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -242,52 +26,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so queries with no driver-green CORRECTNESS row yet come
-    first (the driver checks a bounded prefix per round): past failures
-    whose fixes need re-verification lead, then the never-checked by
-    module priority (registration order within a module);
-    already-green queries follow OLDEST driver check first (age-based
-    rotation — with the unchecked backlog cleared, the window's free
-    slots re-verify stale round-1 greens instead of re-running last
-    round's), module/registration order breaking ties within a round.
-
-    Before ordering, an analysis-only self-probe builds each probe-safe
-    query against sf0.001; queries failing analysis jump to the very
-    front regardless of green age — a green row from a prior round means
-    nothing once the fixtures change under it.
-    """
-    latest = _driver_rows()
-    broken = _analysis_probe()
-    # changed queries with no post-change green row yet: treat like past
-    # failures until the driver re-verifies them
-    for name, changed_round in _FORCE_REVERIFY.items():
-        g, rnd = latest.get(name, (False, 0))
-        if g and rnd < changed_round:  # green predates the change → stale
-            latest[name] = (False, rnd)
-    reg_index = {name: i for i, name in enumerate(GOLDEN)}
-    mod_rank = {m: i for i, m in enumerate(_MODULE_PRIORITY)}
-
-    def key(name: str) -> tuple:
-        green, rnd = latest.get(name, (False, 0))
-        if name in broken:  # analysis-broken: ahead of everything
-            green = False
-        # non-green, ordered: analysis-broken (-1), then past failures
-        # whose fixes need re-checking (0), then never-checked (1);
-        # green: stalest (lowest last-checked round) first
-        if not green:
-            rank2 = -1 if name in broken else (0 if rnd > 0 else 1)
-        else:
-            rank2 = rnd
-        return (
-            green,
-            rank2,
-            mod_rank.get(MODULE.get(name, ""), len(_MODULE_PRIORITY)),
-            reg_index[name],
-        )
-
-    return {name: GOLDEN[name] for name in sorted(GOLDEN, key=key)}
+    """Every registered query, in registration order."""
+    return dict(GOLDEN)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,11 +1,12 @@
 """Golden query set: every operator of SURVEY.md §2 proven against a DuckDB
-oracle on the driver fixtures (`/root/testdata/sf*`).
+oracle on the generated fixtures (TESTDATA.md).
 
 Registry contract (mirrors ``__spark_entry__.py``):
 - ``GOLDEN[name](spark, sf_dir) -> DataFrame`` — the Spark plan, built from
   the operator library;
-- ``ORACLE[name]`` — ANSI-SQL twin DuckDB runs on the same parquet (views
-  pre-registered by the driver). Omitted only for non-SQL-expressible ops.
+- ``ORACLE[name]`` — ANSI-SQL twin DuckDB runs on the same parquet (one
+  view per fixture table, as ``tests/oracle.py::duckdb_connection``
+  registers them). Omitted only for non-SQL-expressible ops.
 
 Determinism policy (SURVEY §7.3): every top-k has a total order (tiebreak on
 a key column); money-double aggregates go through ``exact_sum``/``exact_avg``
@@ -777,8 +778,8 @@ def q_window_ranking_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan + conjunctive filter + global aggregate —
     the pushdown showcase (every predicate reaches the parquet scan; zero
-    shuffle beyond the single-row final agg). The scan-throughput lower
-    bound for the bench."""
+    shuffle beyond the single-row final agg): the scan-throughput lower
+    bound among the golden queries."""
     li = load_table(spark, sf_dir, "lineitem")
     filtered = li.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))

@@ -1,23 +1,17 @@
-"""Candidate-volume instrumentation for the bench growth harness
-(VERDICT r10 #4).
+"""Candidate-volume counters for the near-duplicate operators.
 
-The dedup/winnow/ANN growth rows bound their worst case by construction
-(bucket caps, ``max_df`` guards, auto-granularity), but a measured 3–4×
-wall-time ratio at 10× data is un-adjudicable from time alone: it could
-be inherent candidate-pair growth (the workload genuinely has more
-near-duplicate structure per row) or shuffle inefficiency (the plan
-degrades). These counters compute ``n_candidates`` — the pre-threshold
-pair count of each row's index stage — so the growth section can record
-both and the ratio of ratios attributes the cost.
+Each counter returns ``n_candidates`` — the pre-threshold pair count of a
+query's index stage — so a benchmark can report how many candidates an
+operator scores per pair it emits (``perfbench``'s ``*.candidates`` and
+``*.useful_ratio`` curation metrics).
 
 Each counter mirrors its golden query's literals exactly (cited per
 entry); ``tests/test_instrumentation.py`` pins the superset contract
 (candidates ⊇ the query's emitted pairs) so parameter drift between a
 query and its counter fails loudly instead of mismeasuring.
 
-Counting runs are SEPARATE Spark jobs from the timed runs — the growth
-section times first, counts after, so instrumentation never pollutes the
-wall-time it explains.
+Counting runs are SEPARATE Spark jobs from the timed runs, so the
+counters never add to the wall time they explain.
 """
 
 from __future__ import annotations
@@ -25,25 +19,12 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bookstore_aws_lakehouse_spark.catalog import load_table
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
-def _centroids(emb: DataFrame) -> DataFrame:
-    # the IVF-family seeding rule shared by queries_similarity.py
-    # (q_semantic_dedup / q_ann_ivfpq_residual_multiprobe)
-    return emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
 
 
 def _n_minhash(spark: SparkSession, sf_dir: str) -> int:
@@ -57,31 +38,12 @@ def _n_minhash(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _n_shingle(spark: SparkSession, sf_dir: str) -> int:
-    # shared index stage of q_dedup_ngram_jaccard (threshold=0.1) and
-    # q_dedup_containment_pairs (threshold=0.5): both cut the same
+    # index stage of q_dedup_ngram_jaccard (threshold=0.1): the
     # shingle_k=3 / max_df=100 candidate table
     from bookstore_aws_lakehouse_spark.operators.dedup import shingle_candidates
 
     return shingle_candidates(
         _docs(spark, sf_dir), "doc_id", "text", shingle_k=3, max_df=100
-    ).count()
-
-
-def _n_simhash(spark: SparkSession, sf_dir: str) -> int:
-    # q_dedup_simhash_pairs pre-Hamming candidates (max_hamming=3)
-    from bookstore_aws_lakehouse_spark.operators.dedup import simhash_candidates
-
-    return simhash_candidates(
-        _docs(spark, sf_dir), "doc_id", "text", max_hamming=3
-    ).count()
-
-
-def _n_winnowed(spark: SparkSession, sf_dir: str) -> int:
-    # q_dedup_winnowed_pairs pre-min_shared candidates (k=3, window=4)
-    from bookstore_aws_lakehouse_spark.operators.dedup import winnowed_candidates
-
-    return winnowed_candidates(
-        _docs(spark, sf_dir), "doc_id", "text", k=3, window=4, max_df=100
     ).count()
 
 
@@ -93,160 +55,15 @@ def _n_near_dup(spark: SparkSession, sf_dir: str) -> int:
         lsh_candidate_pairs,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     return lsh_candidate_pairs(
         emb, "vec_id", "embedding", num_planes=_auto_planes(emb.count())
     ).count()
 
 
-def _n_semantic(spark: SparkSession, sf_dir: str) -> int:
-    # q_semantic_dedup's in-cell pair volume: Σ_cell C(|cell|, 2) over the
-    # operator's EFFECTIVE cells — (centroid_id, auto-granularity
-    # sub-cell), counted over semantic_dedup's OWN planning stage
-    # (semantic_cell_assignment) so the counter cannot drift from the
-    # operator (ADVICE r11)
-    from bookstore_aws_lakehouse_spark.operators.similarity import (
-        semantic_cell_assignment,
-    )
-
-    emb = _emb(spark, sf_dir)
-    cells = semantic_cell_assignment(
-        emb, _centroids(emb), "vec_id", "embedding"
-    ).select("centroid_id", "_subcell")
-    row = (
-        cells.groupBy("centroid_id", "_subcell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("pairs"))
-        .collect()[0]
-    )
-    return int(row["pairs"] or 0)
-
-
-def _n_multiprobe(spark: SparkSession, sf_dir: str) -> int:
-    # q_ann_ivfpq_residual_multiprobe's scored candidates: corpus cells
-    # joined to each query's nprobe=2 probed cells, self-matches excluded
-    # — the `cand` table of ivfpq_residual_multiprobe
-    from bookstore_aws_lakehouse_spark.operators.similarity import (
-        coarse_probe_cells,
-        ivf_assign,
-    )
-    from bookstore_aws_lakehouse_spark.queries_similarity import N_QUERIES
-
-    emb = _emb(spark, sf_dir)
-    centroids = _centroids(emb)
-    cells = ivf_assign(emb, centroids, "vec_id", "embedding").select(
-        "vec_id", "centroid_id"
-    )
-    probes = coarse_probe_cells(
-        emb.filter(F.col("vec_id") < N_QUERIES), centroids, nprobe=2
-    ).select("query_id", "centroid_id")
-    return (
-        cells.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .count()
-    )
-
-
-def _n_cc_input(spark: SparkSession, sf_dir: str) -> int:
-    # q_dedup_clusters / q_dedup_survivors: the iterative CC's input is
-    # the THRESHOLDED jaccard pair set (3-gram, θ=0.1) — its growth, not
-    # the candidate index's, drives per-iteration join volume AND the
-    # iteration count (longer chains converge slower). Measured: the 10×
-    # growth corpus grows candidates ~11.5× (linear) but θ=0.1-passing
-    # pairs ~25× (the mutated copies are more mutually similar at that
-    # low threshold than the duplicate-density contract's bound) — so a
-    # ~3× CC time ratio is workload growth, not plan inefficiency.
-    from bookstore_aws_lakehouse_spark.operators.dedup import jaccard_pairs
-
-    return jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", shingle_k=3, threshold=0.1
-    ).count()
-
-
-def _n_cc_capped_input(spark: SparkSession, sf_dir: str) -> int:
-    # q_dedup_clusters_capped: CC's input AFTER the per-id top-k cap —
-    # ≤ 2k·|docs| by construction (VERDICT r11 #3), recorded so the
-    # bound is observable next to dedup_clusters' uncapped 25× growth
-    from bookstore_aws_lakehouse_spark.operators.dedup import (
-        cap_pair_neighbors,
-        jaccard_pairs,
-    )
-    from bookstore_aws_lakehouse_spark.queries_dedup import _CAP_K
-
-    pairs = jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", shingle_k=3, threshold=0.1
-    )
-    return cap_pair_neighbors(pairs, "id_a", "id_b", "jaccard", k=_CAP_K).count()
-
-
-def _recall_multiprobe(spark: SparkSession, sf_dir: str) -> float:
-    """Planted-neighbor recall@5 of the production ANN row at THIS corpus
-    scale (VERDICT r12 #5): the growth harness previously recorded only
-    cost (candidates, seconds) at 10× — this measures whether the
-    recall/cost dial survives the scale-up (10× denser cells, same
-    nprobe). Uses the SAME plant + hit predicate as q_ann_recall_floor
-    via the shared ``plant_ann_recall_corpus`` helper (ADVICE r13: the
-    hand-duplicated copy would silently desynchronize if the golden
-    row's plant ever changed); the documented floor is
-    ``ANN_RECALL_FLOOR``. Growth-dir compatibility is by construction:
-    copy ids are odd and ≥ 2·10⁷, so the % 50 == 0 centroid seeds stay
-    the base corpus's and the planted ids (≈ 10⁶ + small) collide with
-    nothing."""
-    from bookstore_aws_lakehouse_spark.operators.similarity import (
-        ivfpq_residual_multiprobe,
-    )
-    from bookstore_aws_lakehouse_spark.queries_similarity import (
-        ANN_RECALL_K,
-        N_QUERIES,
-        plant_ann_recall_corpus,
-    )
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    corpus, is_planted_hit = plant_ann_recall_corpus(emb, queries)
-    ann = ivfpq_residual_multiprobe(
-        corpus, _centroids(emb), queries, k=ANN_RECALL_K
-    )
-    row = ann.agg(
-        F.sum(is_planted_hit.cast("int")).alias("_hits"),
-        F.count_distinct("query_id").alias("_nq"),
-    ).first()
-    if not row or not row["_nq"]:
-        return 0.0
-    return round(row["_hits"] / (float(ANN_RECALL_K) * row["_nq"]), 3)
-
-
-#: growth-row name → planted-recall probe (returns recall@k as a float in
-#: [0, 1]); recorded at BOTH scales so the growth entry carries the
-#: quality axis next to the cost axis. Floor documented per probe.
-GROWTH_RECALL_PROBES: dict[str, Callable[[SparkSession, str], float]] = {
-    "ann_ivfpq_residual_multiprobe": _recall_multiprobe,
-}
-
-#: the recall contract the probes are graded against (q_ann_recall_floor)
-from bookstore_aws_lakehouse_spark.queries_similarity import (  # noqa: E402
-    ANN_RECALL_FLOOR as GROWTH_RECALL_FLOOR,
-)
-
-
-#: growth-row name → candidate counter. Keys must match bench.py's
-#: _growth_section names; rows absent here (iterative/agg shapes whose
-#: cost isn't candidate-driven) simply record no candidate fields.
+#: registered query name → candidate counter
 GROWTH_CANDIDATE_COUNTERS: dict[str, Callable[[SparkSession, str], int]] = {
     "dedup_minhash_pairs": _n_minhash,
     "dedup_ngram_jaccard": _n_shingle,
-    "dedup_containment_pairs": _n_shingle,
-    "dedup_simhash_pairs": _n_simhash,
-    "dedup_winnowed_pairs": _n_winnowed,
-    "dedup_clusters": _n_cc_input,
-    "dedup_clusters_capped": _n_cc_capped_input,
-    "dedup_survivors": _n_cc_input,
     "embedding_near_dup": _n_near_dup,
-    "semantic_dedup": _n_semantic,
-    "ann_ivfpq_residual_multiprobe": _n_multiprobe,
-    # pre-staged for the r15 flip (NOTES_r19 §4): the verify stage's cost
-    # contract is per-candidate, so its counter IS the LSH pair count —
-    # bench's growth loop skips the name (with a note) until the row is
-    # registered, then activates it with zero bench edits
-    "dedup_lsh_verified": _n_minhash,
 }

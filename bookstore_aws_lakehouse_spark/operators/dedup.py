@@ -217,7 +217,6 @@ def minhash_band_pairs(
     band_rows: int = 2,
     shingle_k: int = 3,
     max_bucket: int | None = 100_000,
-    stages: dict | None = None,
 ) -> DataFrame:
     """LSH banding: docs whose signature agrees on all rows of ≥1 band
     become candidate near-duplicate pairs (id_a < id_b, with the count of
@@ -256,10 +255,6 @@ def minhash_band_pairs(
             max_bucket,
         )
     wide = _minhash_wide(df, id_col, text_col, num_hashes, shingle_k)
-    if stages is not None:
-        # per-stage frames for the growth harness (VERDICT r11 #7):
-        # recorded as built, so the split cannot drift from the operator
-        stages["signatures"] = wide
     num_bands = num_hashes // band_rows
     band_rows_exprs = []
     for band in range(num_bands):
@@ -284,8 +279,6 @@ def minhash_band_pairs(
     bands = _cap_saturated_buckets(
         bands, ["band", "band_key"], max_bucket, "minhash_band_pairs"
     )
-    if stages is not None:
-        stages["banding"] = bands
     a = bands.select(F.col(id_col).alias("id_a"), "band", "band_key", "gkey")
     b = bands.select(F.col(id_col).alias("id_b"), "band", "band_key", "gkey")
     out = (
@@ -294,8 +287,6 @@ def minhash_band_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
-    if stages is not None:
-        stages["join_agg"] = out
     return out
 
 
@@ -306,7 +297,6 @@ def _shingle_shared(
     shingle_k: int,
     max_df: int | None,
     pin: bool = False,
-    stages: dict | None = None,
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """Shared front end of the n-gram similarity family: shingle →
     portable-hash → optional stop-shingle filter → inverted-index
@@ -329,14 +319,7 @@ def _shingle_shared(
     aggregate, and BOTH self-join sides; measured: containment's plan
     held 88 exchanges and zero reuse). persist over localCheckpoint for
     the stats the join planner needs — the bigram-LM/pagerank lesson
-    (NOTES_r14 §1-2).
-
-    ``stages`` (optional dict) records the pipeline's intermediate lazy
-    frames under ``postings`` / ``stop_filter`` / ``join_agg`` as they
-    are built — the growth harness's per-stage attribution reads the
-    operator's OWN frames, so the split can never drift from the
-    implementation (VERDICT r11 #7; same no-reimplementation rule as
-    ``semantic_cell_assignment``)."""
+    (NOTES_r14 §1-2)."""
     from bookstore_aws_lakehouse_spark.operators.scale import ensure_parallelism
 
     pins: list[DataFrame] = []
@@ -361,8 +344,6 @@ def _shingle_shared(
     sh = _pin(
         sh.select(F.col(id_col), md5_hash64(F.col("shingle")).alias("shingle_h"))
     )
-    if stages is not None:
-        stages["postings"] = sh
     if max_df is not None:
         df_counts = sh.groupBy("shingle_h").agg(F.count(F.lit(1)).alias("df"))
         sh = _pin(
@@ -370,8 +351,6 @@ def _shingle_shared(
                 F.col(id_col), "shingle_h"
             )
         )
-        if stages is not None:
-            stages["stop_filter"] = sh
     # sizes is consumed twice downstream (the sa/sb aliases — same
     # no-reuse hazard), and it's per-doc-sized: cheap to pin
     sizes = _pin(sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles")))
@@ -383,8 +362,6 @@ def _shingle_shared(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    if stages is not None:
-        stages["join_agg"] = shared
     return shared, sizes, pins
 
 
@@ -412,7 +389,6 @@ def jaccard_pairs(
     threshold: float = 0.4,
     max_df: int | None = 100,
     pin: bool = True,
-    stages: dict | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over an inverted-index self-join: only doc pairs
     sharing ≥1 shingle are ever compared. jaccard = |A∩B| / (|A|+|B|-|A∩B|)
@@ -431,13 +407,9 @@ def jaccard_pairs(
     consumer). ``pin=False`` returns the fully LAZY scored plan — for
     plan-shape tests (the eager form explains as a checkpoint scan,
     hiding the join shapes) and callers embedding the pairs inside a
-    larger one-shot plan.
-
-    ``stages`` (with ``pin=False``) records the pipeline's own lazy
-    frames (postings / stop_filter / join_agg / score) for the growth
-    harness's per-stage attribution — see ``_shingle_shared``."""
+    larger one-shot plan."""
     shared, sizes, pins = _shingle_shared(
-        df, id_col, text_col, shingle_k, max_df, pin=pin, stages=stages
+        df, id_col, text_col, shingle_k, max_df, pin=pin
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
@@ -458,8 +430,6 @@ def jaccard_pairs(
             )
             .select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
         )
-        if stages is not None:
-            stages["score"] = scored
         if not pin:
             return scored
         return scored.localCheckpoint(eager=True)
@@ -478,7 +448,6 @@ def containment_pairs(
     threshold: float = 0.5,
     max_df: int | None = 100,
     pin: bool = True,
-    stages: dict | None = None,
 ) -> DataFrame:
     """Directed n-gram containment: emit (id_sub, id_super) where
     containment(sub→super) = |sub ∩ super| / |sub| ≥ threshold — the
@@ -498,11 +467,9 @@ def containment_pairs(
     measured 3.9× wall-time at 10× data against the family's ~2×).
     Construction is EAGER by default: postings pinned, result
     materialized, pins dropped (``_shingle_shared`` pin=True);
-    ``pin=False`` returns the lazy scored plan for plan-shape tests.
-    ``stages`` (with ``pin=False``) records the pipeline's own lazy
-    frames for the growth harness — see ``_shingle_shared``."""
+    ``pin=False`` returns the lazy scored plan for plan-shape tests."""
     shared, sizes, pins = _shingle_shared(
-        df, id_col, text_col, shingle_k, max_df, pin=pin, stages=stages
+        df, id_col, text_col, shingle_k, max_df, pin=pin
     )
     t = F.lit(int(round(threshold * 1_000_000)))
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
@@ -536,8 +503,6 @@ def containment_pairs(
                 (F.col("n_shared") / F.col("_d.n_sub")).alias("containment"),
             )
         )
-        if stages is not None:
-            stages["score"] = scored
         if not pin:
             return scored
         return scored.localCheckpoint(eager=True)

@@ -577,7 +577,7 @@ def q_dedup_winnowed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnowed_pairs(docs, "doc_id", "text", k=3, window=4, min_shared=2)
 
 
-# --- two-stage LSH → exact-Jaccard verify (pending: r15 flip budget) ------
+# --- two-stage LSH → exact-Jaccard verify ----------------------------------
 
 _VERIFY_THRESHOLD = 0.2
 _VERIFY_PPM = int(round(_VERIFY_THRESHOLD * 1_000_000))
@@ -616,7 +616,7 @@ JOIN sizes sb ON sb.doc_id = c.id_b
 )
 
 
-@golden("dedup_lsh_verified", _LSH_VERIFIED_SQL, pending=True)
+@golden("dedup_lsh_verified", _LSH_VERIFIED_SQL)
 def q_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical two-stage fuzzy-dedup pipeline: MinHash+LSH banding
     GENERATES candidate pairs (sublinear, bucketed), then exact 3-gram
@@ -668,7 +668,7 @@ FROM ends GROUP BY 1, 2
 )
 
 
-@golden("dedup_cross_source_matrix", _CROSS_SOURCE_SQL, pending=True)
+@golden("dedup_cross_source_matrix", _CROSS_SOURCE_SQL)
 def q_dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-overlap matrix: MinHash+LSH candidate pairs aggregated by
     the UNORDERED source pair of their endpoints (operators/dedup.py::
@@ -714,7 +714,7 @@ JOIN pairs e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b
 )
 
 
-@golden("graph_similarity_triangles", _TRIANGLES_SQL, pending=True)
+@golden("graph_similarity_triangles", _TRIANGLES_SQL)
 def q_graph_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle enumeration over the Jaccard(θ=0.1) similarity graph —
     the graph-motif operator (mutual near-dup triples are the densest
@@ -775,7 +775,7 @@ JOIN sizes sb ON sb.doc_id = c.id_b
     )
 
 
-@golden("dedup_minhash_estimate", _minhash_estimate_sql(), pending=True)
+@golden("dedup_minhash_estimate", _minhash_estimate_sql())
 def q_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator calibration for the MinHash signature (operators/
     dedup.py::minhash_estimate_pairs): per LSH candidate, the

@@ -2841,17 +2841,9 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-skip contract itself (each probe opens strictly fewer files
     than the table holds, and the combined scan fewer still) is asserted
     in tests/test_snapshots.py::test_zorder_multi_column_pruning. The
-    rewrite is layout-only: content is value-identical at every step.
-
-    Phase timings (build / zorder / scan) land in
-    queries_streaming.PHASE_TIMINGS for the bench detail — the row's
-    wall-time is dominated by the two full-table writes (the natural-
-    layout build and the Z-order rewrite), so a scan-side regression
-    would otherwise hide inside write noise."""
+    rewrite is layout-only: content is value-identical at every step."""
     import shutil
-    import time as _time
 
-    from bookstore_aws_lakehouse_spark.queries_streaming import PHASE_TIMINGS
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_overwrite,
         snapshot_scan_multi,
@@ -2864,7 +2856,6 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="blhs_zorder_")
     try:
         table = f"{root}/lineitem_z"
-        t0 = _time.monotonic()
         snapshot_overwrite(
             li.repartitionByRange(16, "l_orderkey").sortWithinPartitions(
                 "l_orderkey"
@@ -2872,11 +2863,9 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             table,
             stats_cols=["l_orderkey", "l_partkey", "l_suppkey"],
         )
-        t1 = _time.monotonic()
         snapshot_zorder(
             spark, table, ["l_partkey", "l_suppkey"], target_file_bytes=256_000
         )
-        t2 = _time.monotonic()
         out = (
             snapshot_scan_multi(
                 spark,
@@ -2891,13 +2880,7 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("total_qty"),
             )
         )
-        res = out.localCheckpoint(eager=True)
-        PHASE_TIMINGS["snapshot_zorder_prune"] = {
-            "build_s": round(t1 - t0, 3),
-            "zorder_s": round(t2 - t1, 3),
-            "scan_s": round(_time.monotonic() - t2, 3),
-        }
-        return res
+        return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -2932,9 +2915,7 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     values must equal the plain doubly-filtered oracle."""
     import datetime as _dt
     import shutil
-    import time as _time
 
-    from bookstore_aws_lakehouse_spark.queries_streaming import PHASE_TIMINGS
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         _stat_norm,
@@ -2952,7 +2933,6 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="blhs_zorder_time_")
     try:
         table = f"{root}/events_z"
-        t0 = _time.monotonic()
         snapshot_overwrite(
             ev.repartition(8, "user_id"), table, stats_cols=["ts", "user_id"]
         )
@@ -2966,14 +2946,12 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in m0["files"]
             if "://" not in (f[5:] if f.startswith("file:") else f)
         )
-        t1 = _time.monotonic()
         snapshot_zorder(
             spark,
             table,
             ["ts", "user_id"],
             target_file_bytes=max(4_000, total_bytes // 12),
         )
-        t2 = _time.monotonic()
         m = _read_manifest(spark, table, list_versions(spark, table)[-1])
         stats = m.get("file_stats") or {}
         probes = {"ts": (_stat_norm(lo), _stat_norm(hi)), "user_id": (10, 40)}
@@ -3003,12 +2981,6 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("*", F.lit(pruned).alias("pruned"))
         )
-        res = out.localCheckpoint(eager=True)
-        PHASE_TIMINGS["snapshot_zorder_time_prune"] = {
-            "build_s": round(t1 - t0, 3),
-            "zorder_s": round(t2 - t1, 3),
-            "scan_s": round(_time.monotonic() - t2, 3),
-        }
-        return res
+        return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -1,17 +1,12 @@
 """End-to-end dataset-curation pipeline as ONE oracle-checked query.
 
 The individual stages (quality gate, exact dedup, hash split, hash
-subsample) are each driver-verified on their own; production runs them
+subsample) are each oracle-checked on their own; production runs them
 COMPOSED, where stage-interaction bugs live (a dedup that sees pre-filter
 rows, a split applied after sampling, ...). This module pins the whole
 chain — documents → quality filter → canonical dedup survivors →
 train/test split → train-side subsample — to a single DuckDB twin that
 replays every gate bit-for-bit.
-
-Registered in its own module so the verification-first ordering in
-``__spark_entry__.queries()`` places it AFTER all previously-unchecked
-queries: it can never displace an outstanding CORRECTNESS row from the
-driver's per-round window.
 
 Scale shape: one scan; the only shuffle is the dedup's groupBy(text)
 (16-byte-hashable, map-side combinable — at 100 TB group on a content

@@ -244,7 +244,7 @@ _SOURCE_DRIFT_SQL = _drift_sql(
     "src AS (SELECT source AS g, n_chars FROM documents)", "source"
 )
 
-@golden("dq_source_drift", _SOURCE_DRIFT_SQL, pending=True)
+@golden("dq_source_drift", _SOURCE_DRIFT_SQL)
 def q_dq_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source length-distribution drift vs the corpus
     (operators/quality.py::distribution_drift): 100-char buckets capped
@@ -277,7 +277,7 @@ _VERSION_DRIFT_SQL = _drift_sql(
 )
 
 
-@golden("dq_version_drift", _VERSION_DRIFT_SQL, pending=True)
+@golden("dq_version_drift", _VERSION_DRIFT_SQL)
 def q_dq_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution drift BETWEEN SNAPSHOT VERSIONS — the ingestion-batch
     monitor: commit v1 of a document table, append a corrupted batch

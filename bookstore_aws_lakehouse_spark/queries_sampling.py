@@ -405,7 +405,6 @@ WEIGHTED_SAMPLE_K = 64
     ORDER BY sample_key DESC, doc_id
     LIMIT {WEIGHTED_SAMPLE_K}
     """,
-    pending=True,  # registration budgeted for r15 (driver window math)
 )
 def q_dataset_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement (Efraimidis–Spirakis A-Res,
@@ -453,7 +452,6 @@ GROUP_SAMPLE_K = 16
     SELECT doc_id, lang, n_tokens, sample_key, rk
     FROM r WHERE rk <= {GROUP_SAMPLE_K}
     """,
-    pending=True,  # registration budgeted for r15 (driver window math)
 )
 def q_dataset_weighted_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group weighted sampling without replacement (operators/
@@ -499,7 +497,6 @@ _BUCKET_MOD = (
     WHERE doc_id IS NOT NULL
     GROUP BY 1
     """,
-    pending=True,  # registration budgeted for r15 (driver window math)
 )
 def q_dataset_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharded-training-export balance audit (operators/sampling.py::
@@ -536,7 +533,6 @@ TRAIN_ORDER_EPOCH = 1
                 AS INT) AS position
     FROM d
     """,
-    pending=True,  # registration budgeted for r15 (driver window math)
 )
 def q_dataset_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible per-epoch training order (operators/sampling.py::

@@ -1695,7 +1695,6 @@ def q_embedding_wide_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p JOIN n na ON na.label = p.label_a
            JOIN n nb ON nb.label = p.label_b
     """,
-    pending=True,  # registration budgeted for r15+ (driver window math)
 )
 def q_embedding_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-mixture drift matrix (operators/similarity.py::
@@ -1716,8 +1715,7 @@ def q_embedding_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # ONE corpus scan: the grid (|labels|·64 rows, counts fused into the
     # same aggregation) is pinned, and the self-join + both count joins
-    # read the pin. Executes on build — needs _PROBE_EXCLUDE at flip
-    # time, like dataset_temperature_mix.
+    # read the pin. Executes on build, like dataset_temperature_mix.
     cent = label_centroids(emb, "label", "embedding").localCheckpoint(eager=True)
     pairs = centroid_cosine_pairs(cent.select("label", "dim", "c"))
     counts = cent.filter(F.col("dim") == 1).select("label", "n")
@@ -1765,7 +1763,7 @@ def _pca_outlier_sql(iters: int, k: int) -> str:
     )
 
 
-@golden("embedding_pca_outliers", _pca_outlier_sql(iters=3, k=20), pending=True)
+@golden("embedding_pca_outliers", _pca_outlier_sql(iters=3, k=20))
 def q_embedding_pca_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA-residual outliers (the anomaly consumer of the PCA family):
     the top-20 vectors by centered energy NOT captured by the top-2

@@ -916,7 +916,7 @@ s0 AS MATERIALIZED (
     )
 
 
-@golden("text_bpe_merges", _bpe_sql(steps=3), pending=True)
+@golden("text_bpe_merges", _bpe_sql(steps=3))
 def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-style merge training (operators/text.py::bpe_train_merges):
     three corpus-wide merge steps at word level — count adjacent symbol
@@ -966,7 +966,7 @@ s0 AS MATERIALIZED (
     )
 
 
-@golden("text_bpe_compression", _bpe_compression_sql(steps=3), pending=True)
+@golden("text_bpe_compression", _bpe_compression_sql(steps=3))
 def q_text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BPE compression curve: per merge step, the corpus symbol
     count before, the merges actually APPLIED (≤ pair_count — greedy

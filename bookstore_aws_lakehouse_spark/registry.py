@@ -2,7 +2,7 @@
 
 ``GOLDEN[name](spark, sf_dir) -> DataFrame`` — Spark plan;
 ``ORACLE[name]`` — its ANSI-SQL DuckDB twin (omitted only for queries whose
-semantics SQL cannot express; the driver then records a rows-only check).
+semantics SQL cannot express; those are only checked to build and run).
 
 Query modules self-register via the ``@golden`` decorator; ``load_all()``
 imports every module so the registry is complete.
@@ -20,20 +20,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 GOLDEN: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
-#: defining module (short name) per query — drives the verification-first
-#: ordering in __spark_entry__.queries()
+#: defining module (short name) per query — the QUERIES.md module column
 MODULE: dict[str, str] = {}
-
-#: built-and-verified queries NOT yet exposed through queries(): the
-#: driver checks a fixed window of ~50 rows per round, so registrations
-#: are budgeted per round (VERDICT r13 #4 capped them at the count that
-#: still drains the stalest green tier). Pending rows get the full local
-#: verification treatment — tests/test_golden_parity.py runs them against
-#: their DuckDB twins exactly like registered rows — and flip to GOLDEN
-#: (delete the ``pending=True``) at the next round boundary, arriving
-#: pre-verified instead of consuming build time inside that round.
-PENDING_GOLDEN: dict[str, QueryFn] = {}
-PENDING_ORACLE: dict[str, str] = {}
 
 _QUERY_MODULES = (
     "bookstore_aws_lakehouse_spark.golden",
@@ -54,24 +42,20 @@ _QUERY_MODULES = (
 )
 
 
-def golden(
-    name: str, oracle: str | None = None, *, pending: bool = False
-) -> Callable[[QueryFn], QueryFn]:
+def golden(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query (and optionally its DuckDB oracle) under ``name``.
 
-    ``pending=True`` routes the row to the PENDING registries: locally
-    verified (parity tests cover it) but invisible to the driver until a
-    later round's registration budget flips it live.
+    Raises ``ValueError`` if ``name`` is already registered: a second
+    registration would otherwise silently replace the first.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
-        target, target_oracle = (
-            (PENDING_GOLDEN, PENDING_ORACLE) if pending else (GOLDEN, ORACLE)
-        )
-        target[name] = fn
+        if name in GOLDEN:
+            raise ValueError(f"query {name!r} is already registered")
+        GOLDEN[name] = fn
         MODULE[name] = fn.__module__.rsplit(".", 1)[-1]
         if oracle is not None:
-            target_oracle[name] = dedent(oracle).strip()
+            ORACLE[name] = dedent(oracle).strip()
         return fn
 
     return deco

@@ -9,16 +9,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bookstore_aws_lakehouse_spark.registry import (
-    GOLDEN,
-    MODULE,
-    PENDING_GOLDEN,
-    load_all,
-)
+from bookstore_aws_lakehouse_spark.registry import GOLDEN, MODULE, load_all
 
 
-def _row(registry, name: str) -> str:
-    doc = (registry[name].__doc__ or "").strip().splitlines()
+def _row(name: str) -> str:
+    doc = (GOLDEN[name].__doc__ or "").strip().splitlines()
     first = (doc[0].strip() if doc else "").replace("|", "\\|")
     return f"| `{name}` | {MODULE[name]} | {first} |"
 
@@ -36,22 +31,7 @@ def main() -> None:
         "|---|---|---|",
     ]
     for name in sorted(GOLDEN):
-        lines.append(_row(GOLDEN, name))
-    if PENDING_GOLDEN:
-        lines += [
-            "",
-            f"## Pending registration ({len(PENDING_GOLDEN)})",
-            "",
-            "Built and parity-verified (same DuckDB-twin gate, sf0.001 +",
-            "sf0.01) but held out of `queries()` until the next round's",
-            "registration budget — the driver's per-round verification",
-            "window is sized to drain the stalest green tier first.",
-            "",
-            "| query | module | what it proves |",
-            "|---|---|---|",
-        ]
-        for name in sorted(PENDING_GOLDEN):
-            lines.append(_row(PENDING_GOLDEN, name))
+        lines.append(_row(name))
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")

@@ -28,10 +28,9 @@ def spark():
             # per-run managed-table location so saveAsTable tests never
             # collide with leftovers from previous sessions
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="blhs_warehouse_"),
-            # status-store retention caps (same rationale as bench.py):
-            # a 560-test session otherwise accumulates thousands of
-            # retained execution plans whose heap/GC pressure slows the
-            # suite's tail
+            # status-store retention caps: a 700-test session otherwise
+            # accumulates thousands of retained execution plans whose
+            # heap/GC pressure slows the suite's tail
             "spark.sql.ui.retainedExecutions": "20",
             "spark.ui.retainedJobs": "100",
             "spark.ui.retainedStages": "100",

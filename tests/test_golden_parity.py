@@ -1,8 +1,8 @@
 """Every golden query vs its DuckDB oracle at sf0.001 (fast inner loop).
 
-The driver runs the same comparison at sf0.01; run
+To check at the larger sf0.01 scale, run
 ``SPARK_GRAFT_PARITY_SF=/root/testdata/sf0.01 pytest tests/test_golden_parity.py``
-before committing a new query to check at driver scale.
+before committing a new query.
 """
 
 from __future__ import annotations
@@ -11,11 +11,7 @@ import os
 
 import pytest
 
-from bookstore_aws_lakehouse_spark.registry import (
-    PENDING_GOLDEN,
-    PENDING_ORACLE,
-    load_all,
-)
+from bookstore_aws_lakehouse_spark.registry import golden, load_all
 from tests.oracle import compare, duckdb_connection
 
 GOLDEN, ORACLE = load_all()
@@ -33,60 +29,6 @@ def test_golden_matches_oracle(spark, con, name):
     compare(GOLDEN[name](spark, SF_DIR), con, ORACLE[name], name)
 
 
-@pytest.mark.parametrize("name", sorted(PENDING_ORACLE))
-def test_pending_matches_oracle(spark, con, name):
-    """Pending rows (built this round, registration deferred to the next
-    round's driver-window budget) get the exact same parity gate as live
-    rows — they must arrive at registration pre-verified."""
-    compare(PENDING_GOLDEN[name](spark, SF_DIR), con, PENDING_ORACLE[name], name)
-
-
-def test_pending_rows_hidden_from_driver():
-    """Pending rows must not leak into the driver contract early: the
-    per-round registration budget (VERDICT r13 #4) is enforced by keeping
-    them out of queries()/oracle_sql() until the flip."""
-    import __spark_entry__ as e
-
-    assert not set(PENDING_GOLDEN) & set(e.queries())
-    assert not set(PENDING_ORACLE) & set(e.oracle_sql())
-    assert not set(PENDING_GOLDEN) & set(GOLDEN)
-
-
-def test_pending_flip_orders_as_never_checked():
-    """De-risk the r15 flip: once pending rows enter GOLDEN they must
-    sort as never-checked — after any forced re-verifications, before
-    every green row — so they land inside the driver's verification
-    window on their first registered round."""
-    import __spark_entry__ as e
-    from bookstore_aws_lakehouse_spark import registry
-
-    if not registry.PENDING_GOLDEN:
-        pytest.skip("no pending rows")
-    saved_cache = e._PROBE_CACHE
-    e._PROBE_CACHE = set()  # analysis probe already covered elsewhere
-    try:
-        for n, fn in registry.PENDING_GOLDEN.items():
-            e.GOLDEN[n] = fn
-        ordered = list(e.queries())
-        latest = e._driver_rows()
-        green_positions = [
-            i
-            for i, n in enumerate(ordered)
-            if latest.get(n, (False, 0))[0]
-            and not (
-                n in e._FORCE_REVERIFY
-                and latest[n][1] < e._FORCE_REVERIFY[n]
-            )
-        ]
-        first_green = min(green_positions)
-        for n in registry.PENDING_GOLDEN:
-            assert ordered.index(n) < first_green, (n, ordered.index(n), first_green)
-    finally:
-        for n in registry.PENDING_GOLDEN:
-            e.GOLDEN.pop(n, None)
-        e._PROBE_CACHE = saved_cache
-
-
 def test_all_golden_queries_run(spark):
     """Queries without an oracle must still execute and return a schema."""
     for name, fn in GOLDEN.items():
@@ -100,36 +42,20 @@ def test_entry_smoke(spark):
 
     df = e.entry(spark)
     assert df.count() > 0
-    assert set(e.oracle_sql()) <= set(e.queries())
+    assert list(e.queries()) == list(GOLDEN)
+    assert e.oracle_sql() == ORACLE
 
 
-def test_analysis_probe_flags_broken_query(spark):
-    """The rotation's blind-spot guard: a query that fails Catalyst
-    analysis (e.g. after a fixture schema change) must be detected by the
-    analysis-only self-probe and promoted to the head of the driver
-    window, regardless of any green history."""
-    import __spark_entry__ as e
+def test_duplicate_registration_raises():
+    """A second registration under a taken name must fail loudly instead
+    of silently replacing the first query."""
+    name = next(iter(GOLDEN))
+    before = GOLDEN[name]
 
-    def broken(spark, sf_dir):
-        # references a column that does not exist -> AnalysisException
-        from pyspark.sql import functions as F
+    with pytest.raises(ValueError, match=name):
 
-        return (
-            spark.read.parquet(f"{sf_dir}/nation.parquet")
-            .withColumn("x", F.col("no_such_column") + 1)
-        )
+        @golden(name)
+        def _again(spark, sf_dir):
+            raise AssertionError("never built")
 
-    from bookstore_aws_lakehouse_spark import registry
-
-    name = "zz_probe_canary"
-    e.GOLDEN[name] = broken
-    registry.MODULE[name] = "golden"  # a probe-safe module
-    saved_cache = e._PROBE_CACHE
-    e._PROBE_CACHE = None  # force a fresh probe
-    try:
-        ordered = list(e.queries())
-        assert ordered[0] == name, ordered[:5]
-    finally:
-        del e.GOLDEN[name]
-        del registry.MODULE[name]
-        e._PROBE_CACHE = saved_cache
+    assert GOLDEN[name] is before

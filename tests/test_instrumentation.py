@@ -1,9 +1,9 @@
 """Candidate-volume counters (instrumentation.py) stay glued to their
 golden queries: each counter must measure a SUPERSET of the pairs its
 query emits — the pre-threshold index stage. If a query's literals drift
-(shingle_k, max_df, planes, nprobe...) without the counter following,
-the superset contract breaks here instead of silently mismeasuring the
-bench growth section."""
+(shingle_k, max_df, planes...) without the counter following, the
+superset contract breaks here instead of silently mismeasuring the
+curation candidate counts."""
 
 from __future__ import annotations
 
@@ -16,27 +16,15 @@ GOLDEN, _ = load_all()
 
 
 def test_counters_cover_only_registered_growth_rows():
-    # every instrumented name must be a registered query OR a pending one
-    # (pre-staged growth wiring that activates at the flip — NOTES_r19
-    # §10; bench's growth loop leaves an explicit note for those);
-    # a truly stale key would still silently record nothing
-    from bookstore_aws_lakehouse_spark.registry import PENDING_GOLDEN
-
+    # a stale key (a counter for an unregistered query) would silently
+    # count nothing anyone reads
     for name in GROWTH_CANDIDATE_COUNTERS:
-        assert name in GOLDEN or name in PENDING_GOLDEN, name
+        assert name in GOLDEN, name
 
 
 @pytest.mark.parametrize(
     "name",
-    [
-        "dedup_minhash_pairs",
-        "dedup_ngram_jaccard",
-        "dedup_containment_pairs",
-        "dedup_simhash_pairs",
-        "dedup_winnowed_pairs",
-        "embedding_near_dup",
-        "ann_ivfpq_residual_multiprobe",
-    ],
+    ["dedup_minhash_pairs", "dedup_ngram_jaccard", "embedding_near_dup"],
 )
 def test_candidates_superset_of_emitted_pairs(spark, sf_smoke, name):
     n_cand = GROWTH_CANDIDATE_COUNTERS[name](spark, sf_smoke)
@@ -48,38 +36,14 @@ def test_candidates_superset_of_emitted_pairs(spark, sf_smoke, name):
     assert n_cand > 0
 
 
-def test_semantic_dedup_counter_matches_cell_math(spark, sf_smoke):
-    # Σ C(|cell|,2) recomputed independently from the operator's own
-    # assignment — the counter must agree exactly
-    from pyspark.sql import functions as F
-
-    from bookstore_aws_lakehouse_spark.catalog import load_table
-    from bookstore_aws_lakehouse_spark.operators.similarity import ivf_assign
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    sizes = [
-        r["n"]
-        for r in ivf_assign(emb, centroids)
-        .groupBy("centroid_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    ]
-    expect = sum(n * (n - 1) // 2 for n in sizes)
-    got = GROWTH_CANDIDATE_COUNTERS["semantic_dedup"](spark, sf_smoke)
-    assert got == expect
-
-
 def test_semantic_subcell_branch_matches_operator_assignment(spark):
     """ADVICE r11: at fixture scale occupancy (~50) resolves to 0 planes,
     so the sub-cell branch that actually runs on the growth corpus was
     never exercised. A 600-vector / 2-centroid corpus (occupancy 300 →
     2 planes) checks that (a) the split actually subdivides cells — the
-    occupancy bound the branch exists to hold, (b) the counter math over
-    the operator's OWN assignment shows strictly less in-cell pair
-    volume than the undivided cells, and (c) an oversized num_dims no
+    occupancy bound the branch exists to hold, (b) the operator's OWN
+    assignment shows strictly less in-cell pair volume than the
+    undivided cells, and (c) an oversized num_dims no
     longer silently no-ops the split (the zip_with null-pad bug: every
     dot NULL → every sub-cell bit 0)."""
     from pyspark.sql import functions as F
@@ -115,19 +79,3 @@ def test_semantic_subcell_branch_matches_operator_assignment(spark):
     assert (
         cells_big.select("centroid_id", "_subcell").distinct().count() > n_cells
     )
-
-
-def test_growth_recall_probe_clears_floor_on_fixture(spark, sf_smoke):
-    """The growth recall probe (VERDICT r12 #5) mirrors
-    q_ann_recall_floor's planted contract: on the base fixture it must
-    clear the same documented floor the golden row enforces, so the
-    growth entry's quality axis can't silently drift from the
-    driver-checked one."""
-    from bookstore_aws_lakehouse_spark.instrumentation import (
-        GROWTH_RECALL_FLOOR,
-        GROWTH_RECALL_PROBES,
-    )
-
-    r = GROWTH_RECALL_PROBES["ann_ivfpq_residual_multiprobe"](spark, sf_smoke)
-    assert 0.0 <= r <= 1.0
-    assert r >= GROWTH_RECALL_FLOOR

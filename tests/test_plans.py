@@ -638,10 +638,7 @@ def test_pca_outliers_scoring_plan_is_one_scan_topk(spark, sf_smoke):
     """The outlier row's scoring pass must stay map-side: exactly one
     FileScan, no Exchange, ending in TakeOrderedAndProject — the
     covariance chain runs at build and rides in as literals."""
-    from bookstore_aws_lakehouse_spark.registry import PENDING_GOLDEN, load_all
-
-    load_all()
-    df = PENDING_GOLDEN["embedding_pca_outliers"](spark, sf_smoke)
+    df = GOLDEN["embedding_pca_outliers"](spark, sf_smoke)
     plan = plan_of(df)
     # one "Location:" line per FileScan node detail (the tree summary
     # repeats the node name, so counting "Scan parquet" would double)
