@@ -19,21 +19,25 @@ staging-swap ``upsert_parquet``):
   files a concurrent reader's plan references.)
 - **Time travel**: every version stays readable until ``vacuum``.
 - **Atomic commit with conflict detection**: a manifest claims
-  ``v<N>.json`` via ``FileSystem.create(overwrite=False)`` — exclusive
-  create. State-independent commits (overwrite) retry at the next free
-  number; state-DEPENDENT commits (append/merge) claim exactly the
-  version they composed against +1 and on a race re-read the tip and
-  recompute (append recomposes the manifest; merges re-run against the
-  new snapshot and delete their orphaned files) — the Delta
-  optimistic-concurrency contract. Partitioned merges additionally
-  resolve conflict CLASSES: a merge provably disjoint from every racing
-  commit (the racers kept all files this merge rewrote, and every file
-  they added is stats-excluded from this merge's partition values)
-  REBASES its already-written files onto the new tip without recomputing
-  the merge — only overlapping writers pay the recompute
+  ``v<N>.json`` by an exclusive create (``_claim_version``). Every writer
+  commits through ONE optimistic-concurrency loop (``_commit_loop``, the
+  Delta contract): read the tip, compose against it, claim exactly
+  tip+1; a lost claim reclaims the attempt's files and retries against
+  the new tip a bounded number of times, any other failure reclaims them
+  and raises. Writers differ only in their compose step — append and
+  overwrite recompose a manifest over files written once; rewriting
+  writers recompute. Partitioned merges additionally resolve conflict
+  CLASSES: a merge provably disjoint from every racing commit (the
+  racers kept all files this merge rewrote, and every file they added is
+  stats-excluded from this merge's partition values) REBASES its
+  already-written files onto the new tip without recomputing the merge
+  — only overlapping writers pay the recompute
   (``_try_rebase_partitioned``).
 - **Logical operations**: append = old files ∪ new files; overwrite = new
-  files only; merge = anti-join rewrite committed as a full new file set.
+  files only; every copy-on-write op (merge, delete, update, optimize,
+  ...) = carried files ∪ a rewrite of the rest (``_rewrite``), with
+  per-file stats carried for the former and re-collected for the latter;
+  a full-rewrite op simply carries nothing.
 
 Scale shape: a commit writes only its delta's data files plus one small
 JSON manifest; readers do ONE metadata read (the latest manifest) and then
@@ -118,10 +122,16 @@ def list_versions(spark: SparkSession, table: str) -> list[int]:
 
 
 class SnapshotConflictError(RuntimeError):
-    """A state-dependent commit (append/merge) found its base version
-    superseded — the caller must re-read the table and recompute. Blindly
-    taking the next free number there would LOSE the racing writer's
-    changes (the manifest was composed against stale state)."""
+    """A commit's base version was superseded more times than the
+    writer's retry bound allows, or (append) a concurrent column rename/
+    drop invalidated files already written — re-run the operation.
+    Blindly taking the next free number instead would LOSE the racing
+    writer's changes (the manifest was composed against stale state)."""
+
+
+class _LostRace(SnapshotConflictError):
+    """The claim of exactly tip+1 found that version taken: the one
+    conflict that re-reading the tip and composing again resolves."""
 
 
 def _claim_version(spark: SparkSession, table: str, manifest: dict, v: int) -> bool:
@@ -188,39 +198,19 @@ def _claim_version(spark: SparkSession, table: str, manifest: dict, v: int) -> b
 
 
 def _try_commit(
-    spark: SparkSession,
-    table: str,
-    manifest: dict,
-    expected_version: int | None = None,
+    spark: SparkSession, table: str, manifest: dict, version: int
 ) -> int:
-    """Commit a manifest.
-
-    ``expected_version=None`` (state-INDEPENDENT commits — overwrite,
-    whose content doesn't reference prior state): claim the next free
-    number, skipping past racing writers.
-
-    ``expected_version=v`` (state-DEPENDENT commits — append/merge,
-    composed against the snapshot at v-1): claim EXACTLY v; if a racing
-    writer took it, raise :class:`SnapshotConflictError` so the caller
-    re-reads and recomputes instead of silently dropping the racer's
-    files — the same optimistic-concurrency contract Delta's commit
-    protocol enforces."""
-    if expected_version is not None:
-        if _claim_version(spark, table, manifest, expected_version):
-            return expected_version
-        raise SnapshotConflictError(
-            f"version {expected_version} on {table} was taken by a "
-            f"concurrent writer; re-read and retry the operation"
-        )
-    versions = list_versions(spark, table)
-    v = (versions[-1] + 1) if versions else 1
-    for _ in range(_MAX_COMMIT_RETRIES):
-        if _claim_version(spark, table, manifest, v):
-            return v
-        v += 1  # lost the race for this number; content is state-free
-    raise RuntimeError(
-        f"snapshot commit lost {_MAX_COMMIT_RETRIES} consecutive version "
-        f"races on {table} — runaway concurrent writer loop?"
+    """Claim EXACTLY ``version`` for a manifest composed against
+    ``version - 1``; a racing writer holding it raises :class:`_LostRace`
+    so the caller re-reads and recomposes instead of silently dropping
+    the racer's files — the optimistic-concurrency contract Delta's
+    commit protocol enforces. Even a state-INDEPENDENT overwrite claims
+    exactly tip+1: the table facts it inherits are read from that tip."""
+    if _claim_version(spark, table, manifest, version):
+        return version
+    raise _LostRace(
+        f"version {version} on {table} was taken by a concurrent writer; "
+        f"re-read and retry the operation"
     )
 
 
@@ -369,12 +359,15 @@ def _validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
 # MANIFEST FACT KEYS — the carry checklist. Any new key added to a
 # manifest must be threaded through EVERY commit path or it is silently
 # lost on the next commit of that path:
-#   via _commit inheritance (all data ops): file_stats (explicit arg),
-#     file_blooms, constraints, dv, txn, column_mapping, retired_physical
+#   _commit (every writer commits through it inside _commit_loop):
+#     file_stats (explicit arg — _rewrite composes the carried files'
+#     entries with re-collected ones for every copy-on-write op, and
+#     append carries them the same way); file_blooms, constraints, dv,
+#     txn, column_mapping, retired_physical (inherited from the loop's
+#     tip unless the writer passes them explicitly)
 #   hand-built manifests (explicit copy lists — grep these when adding a
-#     key): snapshot_drop_constraint, snapshot_rename_column,
-#     snapshot_drop_column, snapshot_restore (txn merges by max; clone
-#     deliberately omits txn — a fork is a new writer identity), and the
+#     key): snapshot_restore (txn merges by max), snapshot_clone
+#     (deliberately omits txn — a fork is a new writer identity), and the
 #     DataSource writer pyds.SnapshotWriter.commit (append carries
 #     per-file facts + table facts; overwrite carries table facts only).
 # The review that added this list found three keys dropped exactly this
@@ -382,154 +375,248 @@ def _validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
 
 
 def _commit(
-    df: DataFrame,
+    spark: SparkSession,
     table: str,
     operation: str,
     files: list[str],
+    schema: StructType,
+    tip_v: int,
+    tip: dict | None,
     file_stats: dict | None = None,
-    expected_version: int | None = None,
-    schema: "StructType | None" = None,
     file_blooms: dict | None = None,
     constraints: dict | None = None,
     app: dict | None = None,
     dv: dict | None = None,
     txn: tuple[str, int] | None = None,
     column_mapping: dict | None = None,
+    retired_physical: list | None = None,
+    delta: DataFrame | None = None,
     constraints_validated: dict | None = None,
+    extra: dict | None = None,
 ) -> int:
-    """``column_mapping``: explicit logical→physical map describing how
+    """Compose the manifest committing ``files`` under ``schema`` against
+    the tip ``tip`` (version ``tip_v``; None for a new table) and claim
+    exactly ``tip_v + 1`` — :class:`_LostRace` when a racer holds it.
+    Every fact but ``file_stats`` (always explicit) is inherited from the
+    tip when left as None.
+
+    ``column_mapping``: explicit logical→physical map describing how
     THIS commit's files store their columns (a per-file fact, like
     stats). Schema-replacing commits pass the mapping their files were
-    actually written with — inheriting the claim-time tip's instead
-    would let a racing rename land a mapping the files don't satisfy
-    (logical names resolving to physical columns the parquet lacks).
-    ``constraints_validated``: the constraint set the caller validated
-    ``df`` against; when the inherited tip constraints differ (a racing
-    ADD CONSTRAINT), the commit re-validates before claiming so no
-    unchecked rows ride in."""
-    committed_schema = schema or df.schema
-    arg_constraints, arg_blooms, arg_dv = constraints, file_blooms, dv
-    arg_mapping = column_mapping
-    attempts = 1 if expected_version is not None else _MAX_COMMIT_RETRIES
-    for _attempt in range(attempts):
-        constraints, file_blooms, dv = arg_constraints, arg_blooms, arg_dv
-        txn_map = {}
-        column_mapping = None
-        retired_physical = None
-        versions = list_versions(df.sparkSession, table)
-        # one tip read serves both inheritances: constraints are
-        # table-level facts every commit carries forward unchanged unless
-        # explicitly replacing them (snapshot_add/drop_constraint), and
+    actually written with — inheriting the tip's instead would let a
+    racing rename land a mapping the files don't satisfy (logical names
+    resolving to physical columns the parquet lacks).
+    ``delta`` / ``constraints_validated``: the rows this commit adds and
+    the constraint set the caller validated them against; when the
+    inherited tip constraints differ (a racing ADD CONSTRAINT), ``delta``
+    is re-validated before claiming so no unchecked rows ride in.
+    ``extra``: operation metadata stored verbatim in the manifest."""
+    tip = tip or {}
+    if constraints is None:
+        # constraints are table-level facts every commit carries forward
+        # unless explicitly replacing them (snapshot_add/drop_constraint)
+        constraints = tip.get("constraints") or {}
+        if delta is not None and constraints != constraints_validated:
+            _validate_constraints(delta, constraints)  # raises on violation
+    if file_blooms is None:
         # bloom entries are PER-FILE facts about immutable files — any
         # entry whose file this commit still references stays valid
         # verbatim. Ops that rewrite files produce new names, so stale
-        # bloom entries can't survive; new/rewritten files are simply
-        # unindexed (conservative). Best-effort: absence is safe.
-        try:
-            tip_m = (
-                _read_manifest(df.sparkSession, table, versions[-1])
-                if versions
-                else {}
-            )
-        except Exception:
-            tip_m = {}
-        if constraints is None:
-            constraints = tip_m.get("constraints") or {}
-            if (
-                constraints_validated is not None
-                and constraints != constraints_validated
-            ):
-                # a racer's ADD/DROP CONSTRAINT landed after the caller
-                # validated df — the inherited set binds this commit, so
-                # re-check before claiming (raises on violation; the
-                # caller's except path reclaims its files)
-                _validate_constraints(df, constraints)
-        if file_blooms is None:
-            prev = tip_m.get("file_blooms") or {}
-            inherited = {f: prev[f] for f in files if f in prev}
-            if inherited:
-                file_blooms = inherited
-        if dv is None:
-            # deletion vectors are per-file facts like blooms: entries
-            # survive exactly as long as their data file stays referenced
-            # (a rewriting op drops the file, and with it the dead rows),
-            # and the sidecar list rides along while any entry survives
-            prev_dv = tip_m.get("dv") or {}
-            prev_card = prev_dv.get("cardinality") or {}
-            inherited_card = {f: prev_card[f] for f in files if f in prev_card}
-            if inherited_card:
-                dv = {
-                    "sidecars": prev_dv.get("sidecars") or [],
-                    "cardinality": inherited_card,
-                }
-        # idempotent-writer watermarks ride the TIP (not the whole log):
-        # one manifest read answers "was (app, version) already applied",
-        # and vacuum dropping old manifests can't forget a watermark
-        txn_map = dict(tip_m.get("txn") or {})
-        # column mapping rides every commit: entries for logical names
-        # still in the committed schema persist; a vanished logical
-        # (overwrite with a redefined schema) just drops its entry — the
-        # only schema-redefining path through here is overwrite, which
-        # replaces every file, so nothing can resurrect and NO retirement
-        # is added (retiring here once bricked the revert-a-rename case:
-        # the vanished logical's physical equalled a committed column).
-        # Genuine retirement happens in snapshot_drop_column only.
-        prev_map = tip_m.get("column_mapping") or {}
-        src_map = arg_mapping if arg_mapping is not None else prev_map
-        if src_map or tip_m.get("retired_physical"):
-            names = set(committed_schema.names)
-            column_mapping = {
-                l: p for l, p in src_map.items() if l in names
-            }
-            retired_physical = list(tip_m.get("retired_physical") or [])
-        manifest = {
-            "operation": operation,
-            "files": files,
-            "schema": json.loads(committed_schema.json()),
-            "committed_at_unix": round(time.time(), 3),
+        # entries can't survive; new files are simply unindexed
+        # (conservative). Best-effort: absence is safe.
+        prev = tip.get("file_blooms") or {}
+        file_blooms = {f: prev[f] for f in files if f in prev}
+    if dv is None:
+        # deletion vectors are per-file facts like blooms: entries
+        # survive exactly as long as their data file stays referenced
+        # (a rewriting op drops the file, and with it the dead rows),
+        # and the sidecar list rides along while any entry survives
+        prev_dv = tip.get("dv") or {}
+        prev_card = prev_dv.get("cardinality") or {}
+        dv = {
+            "sidecars": prev_dv.get("sidecars") or [],
+            "cardinality": {f: prev_card[f] for f in files if f in prev_card},
         }
-        if txn is not None:
-            app_id, v = txn
-            txn_map[app_id] = max(int(v), int(txn_map.get(app_id, v)))
-        if txn_map:
-            manifest["txn"] = txn_map
-        if column_mapping:
-            manifest["column_mapping"] = column_mapping
-        if retired_physical:
-            manifest["retired_physical"] = retired_physical
-        if file_stats:
-            manifest["file_stats"] = file_stats
-        if file_blooms:
-            manifest["file_blooms"] = file_blooms
-        if constraints:
-            manifest["constraints"] = constraints
-        if dv and dv.get("cardinality"):
-            manifest["dv"] = dv
-        if app:
-            # application metadata rides the commit ATOMICALLY (Delta's
-            # txn/commitInfo analog): e.g. the materialized-view watermark
-            # advances in the same manifest write that publishes the mart
-            # content, so no crash window can separate the two
-            manifest["app"] = app
-        if expected_version is not None:
-            # state-DEPENDENT: claim exactly the caller's version; a race
-            # raises SnapshotConflictError for the caller to recompute
-            return _try_commit(
-                df.sparkSession, table, manifest, expected_version
-            )
-        # state-INDEPENDENT (overwrite/restore-style): content needs no
-        # recompute on a race, but the inherited TABLE FACTS (constraints,
-        # txn watermarks, column mapping) were read from a tip a racer may
-        # have superseded — losing the claim loops back to RE-INHERIT from
-        # the new tip instead of blindly bumping the version number, so a
-        # racing ADD CONSTRAINT or watermark advance is never erased
-        claim = (versions[-1] + 1) if versions else 1
-        if _claim_version(df.sparkSession, table, manifest, claim):
-            return claim
-    raise RuntimeError(
-        f"snapshot commit lost {_MAX_COMMIT_RETRIES} consecutive version "
-        f"races on {table} — runaway concurrent writer loop?"
+    # idempotent-writer watermarks ride the TIP (not the whole log):
+    # one manifest read answers "was (app, version) already applied",
+    # and vacuum dropping old manifests can't forget a watermark
+    txn_map = dict(tip.get("txn") or {})
+    if txn is not None:
+        app_id, v = txn
+        txn_map[app_id] = max(int(v), int(txn_map.get(app_id, v)))
+    # column mapping rides every commit: entries for logical names still
+    # in the committed schema persist; a vanished logical (overwrite with
+    # a redefined schema) just drops its entry — overwrite replaces every
+    # file, so nothing can resurrect and NO retirement is added (retiring
+    # here once bricked the revert-a-rename case: the vanished logical's
+    # physical equalled a committed column). Genuine retirement happens
+    # in snapshot_drop_column only.
+    if column_mapping is None:
+        column_mapping = tip.get("column_mapping") or {}
+    names = set(schema.names)
+    column_mapping = {l: p for l, p in column_mapping.items() if l in names}
+    if retired_physical is None:
+        retired_physical = tip.get("retired_physical") or []
+    manifest = {
+        "operation": operation,
+        "files": files,
+        "schema": json.loads(schema.json()),
+        "committed_at_unix": round(time.time(), 3),
+        **(extra or {}),
+    }
+    # application metadata (``app``) rides the commit ATOMICALLY (Delta's
+    # txn/commitInfo analog): e.g. the materialized-view watermark
+    # advances in the same manifest write that publishes the mart
+    # content, so no crash window can separate the two
+    for key, value in (
+        ("txn", txn_map),
+        ("column_mapping", column_mapping),
+        ("retired_physical", retired_physical),
+        ("file_stats", file_stats),
+        ("file_blooms", file_blooms),
+        ("constraints", constraints),
+        ("app", app),
+    ):
+        if value:
+            manifest[key] = value
+    if dv.get("cardinality"):
+        manifest["dv"] = dv
+    return _try_commit(spark, table, manifest, tip_v + 1)
+
+
+def _commit_loop(
+    spark: SparkSession,
+    table: str,
+    operation: str,
+    compose,
+    attempts: int = 3,
+    create: bool = False,
+    prewritten=(),
+) -> int:
+    """The optimistic-concurrency loop every writer commits through.
+
+    Each attempt reads the tip once — ``(tip_v, tip)``, or ``(0, None)``
+    for a table that does not exist yet (FileNotFoundError unless
+    ``create``) — and returns ``compose(tip_v, tip, write)``: the version
+    the writer committed against that tip (through ``_commit`` or
+    ``_rewrite``, claiming exactly tip_v+1) or a no-op version.
+    ``write(df, **kw)`` is ``_write_data_files`` on this table, recording
+    the attempt's files. A lost claim (:class:`_LostRace`) reclaims them
+    and retries against the new tip; any other exception reclaims them
+    and propagates. ``prewritten`` files are written once before the
+    loop and reused by every attempt (append, overwrite); they are
+    reclaimed only when the loop raises. ``attempts`` bounds consecutive
+    lost races: 3 where each attempt recomputes data,
+    ``_MAX_COMMIT_RETRIES`` where it only recomposes a manifest."""
+    for _ in range(attempts):
+        versions = list_versions(spark, table)
+        if not versions and not create:
+            raise FileNotFoundError(f"no snapshot manifests under {table}")
+        tip_v = versions[-1] if versions else 0
+        tip = _read_manifest(spark, table, tip_v) if versions else None
+        written: list[str] = []
+
+        def write(df: DataFrame, **kw) -> list[str]:
+            files = _write_data_files(df, table, **kw)
+            written.extend(files)
+            return files
+
+        try:
+            return compose(tip_v, tip, write)
+        except _LostRace:
+            _delete_files(spark, written)
+        except BaseException:
+            # a rejected attempt's files are referenced by no manifest —
+            # reclaim them now (vacuum never would)
+            _delete_files(spark, written + list(prewritten))
+            raise
+    _delete_files(spark, list(prewritten))
+    raise _LostRace(
+        f"{operation} on {table} lost {attempts} consecutive races — retry "
+        f"under lower write concurrency"
     )
+
+
+def _rewrite_stats(
+    tip: dict, carried: list[str], new_files: list[str], stats_cols=()
+) -> dict | None:
+    """``file_stats`` for a commit of ``carried + new_files`` against
+    ``tip``: the tip's entries for the carried files, plus footer stats
+    for the new files on every column the tip tracks and ``stats_cols`` —
+    so a stats-pruned table keeps whole-file skipping across every
+    rewrite instead of silently losing it."""
+    prev_stats = tip.get("file_stats") or {}
+    cols = _prev_stats_cols(prev_stats)
+    cols += [c for c in stats_cols if c not in cols]
+    new_stats = (
+        _collect_file_stats(new_files, cols, tip.get("column_mapping") or {})
+        if cols
+        else None
+    )
+    carried_stats = {f: prev_stats[f] for f in carried if f in prev_stats}
+    return {**carried_stats, **(new_stats or {})} or None
+
+
+def _rewrite(
+    spark: SparkSession,
+    table: str,
+    operation: str,
+    tip_v: int,
+    tip: dict | None,
+    write,
+    carried: list[str],
+    df: DataFrame | None,
+    schema: StructType | None = None,
+    stats_cols=(),
+    on_lost_race=None,
+    **commit_kw,
+) -> int:
+    """The copy-on-write step of every rewriting writer, run inside its
+    ``_commit_loop`` attempt: write ``df`` — the replacement for every
+    tip file not in ``carried`` — as new data files, compose their
+    re-collected stats with the carried files' (``_rewrite_stats``), and
+    commit ``carried + new files`` against the tip. A full rewrite
+    carries nothing; ``df`` None rewrites nothing (every file carried).
+    ``schema`` defaults to the tip's (``df``'s for a new table);
+    ``commit_kw`` passes through to ``_commit``.
+    ``on_lost_race(new_files)`` gets one chance to commit the written
+    files onto a newer tip without recomputing (the partitioned merge's
+    rebase); None lets the loop reclaim them and recompute."""
+    tip = tip or {}
+    new_files = write(df, tip_manifest=tip) if df is not None else []
+    if schema is None:
+        schema = StructType.fromJson(tip["schema"]) if tip else df.schema
+    try:
+        return _commit(
+            spark,
+            table,
+            operation,
+            carried + new_files,
+            schema,
+            tip_v,
+            tip,
+            file_stats=_rewrite_stats(tip, carried, new_files, stats_cols),
+            **commit_kw,
+        )
+    except _LostRace:
+        version = on_lost_race(new_files) if on_lost_race else None
+        if version is None:
+            raise  # the loop reclaims new_files and recomputes
+        return version
+
+
+def _check_types(old: StructType, new: StructType, what: str, hint: str) -> None:
+    """Refuse a rewrite whose output changes a column's type: the files
+    would carry ``new``'s types while the pinned manifest schema stays
+    ``old`` — a lying manifest and an unreadable tip. ``hint`` may name
+    the table's type as ``{t}``."""
+    for f_old, f_new in zip(old.fields, new.fields):
+        if f_old.dataType != f_new.dataType:
+            t = f_old.dataType.simpleString()
+            raise ValueError(
+                f"{what} changes column {f_old.name!r} from {t} to "
+                f"{f_new.dataType.simpleString()} — {hint.format(t=t)}"
+            )
 
 
 def _stat_norm(v):
@@ -656,6 +743,34 @@ def _file_may_contain(stats_row, values: list, want_null: bool) -> bool:
     return False
 
 
+def _range_may_match(stats_row, lo, hi) -> bool:
+    """Conservative range-pruning predicate: can a file whose stats row
+    for a column is ``stats_row`` hold a value in ``[lo, hi]``? No stats
+    → True (must read); stats of an empty file → False. The probes meet
+    the stats in their canonical form (``_stat_norm``: temporal stats
+    are ISO strings in the manifest); a cross-type compare → True."""
+    if stats_row is None:
+        return True
+    fmin, fmax, _null = stats_row
+    if fmin is None:
+        return False
+    try:
+        return fmin <= _stat_norm(hi) and _stat_norm(lo) <= fmax
+    except TypeError:
+        return True
+
+
+def _split_by_range(tip: dict, column: str, lo, hi) -> tuple[list, list]:
+    """(touched, carried): the tip files whose stats say ``column`` may
+    land in ``[lo, hi]``, and the provably disjoint rest."""
+    stats = tip.get("file_stats") or {}
+    touched, carried = [], []
+    for f in tip["files"]:
+        row = stats.get(f, {}).get(column)
+        (touched if _range_may_match(row, lo, hi) else carried).append(f)
+    return touched, carried
+
+
 # ---- column mapping: metadata-only RENAME / DROP COLUMN -------------------
 #
 # Delta's column-mapping (name mode) rebuilt on the manifest: every data
@@ -764,17 +879,18 @@ def snapshot_convert(
     files = _list_parquet_files(spark, directory)
     if not files:
         raise FileNotFoundError(f"no parquet files under {directory}")
-    try:
-        if list_versions(spark, directory):
-            raise ValueError(
-                f"{directory} is already a snapshot table — CONVERT is for "
-                f"plain parquet directories"
-            )
-    except FileNotFoundError:
-        pass
+    if list_versions(spark, directory):
+        raise ValueError(
+            f"{directory} is already a snapshot table — CONVERT is for "
+            f"plain parquet directories"
+        )
     df = spark.read.parquet(*files)
     stats = _collect_file_stats(files, stats_cols) if stats_cols else None
-    return _commit(df, directory, "convert", files, stats, expected_version=1)
+    # creates the table: claims v1 directly (a racer raises), nothing to
+    # recompose against
+    return _commit(
+        spark, directory, "convert", files, df.schema, 0, None, file_stats=stats
+    )
 
 
 def snapshot_overwrite(
@@ -798,18 +914,14 @@ def snapshot_overwrite(
     spark = df.sparkSession
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
-    if txn_app_id is not None:
+    txn = (txn_app_id, int(txn_version)) if txn_app_id is not None else None
+    versions = list_versions(spark, table)
+    tip_pre = _read_manifest(spark, table, versions[-1]) if versions else {}
+    if txn is not None and versions:
         # idempotent writer protocol, same contract as snapshot_append:
         # an already-applied (app, version) no-ops before writing a byte
-        versions0 = list_versions(spark, table)
-        if versions0:
-            seen = _read_manifest(spark, table, versions0[-1]).get("txn") or {}
-            if int(seen.get(txn_app_id, -1)) >= int(txn_version):
-                return versions0[-1]
-    versions_pre = list_versions(spark, table)
-    tip_pre = (
-        _read_manifest(spark, table, versions_pre[-1]) if versions_pre else {}
-    )
+        if int((tip_pre.get("txn") or {}).get(txn_app_id, -1)) >= txn[1]:
+            return versions[-1]
     cons_seen = tip_pre.get("constraints") or {}
     _validate_constraints(df, cons_seen)
     mapping = tip_pre.get("column_mapping") or {}
@@ -819,30 +931,28 @@ def snapshot_overwrite(
     stats = (
         _collect_file_stats(files, stats_cols, mapping) if stats_cols else None
     )
-    try:
+    # the mapping these files were WRITTEN with (restricted to the
+    # committed schema): a racing rename landing between the write and
+    # the claim must not install a mapping the parquet files don't
+    # satisfy — overwrite replaces the whole schema, so the racer's
+    # rename is superseded, not half-applied
+    mapping = {l: p for l, p in mapping.items() if l in df.columns}
+
+    def compose(tip_v: int, tip: dict | None, write) -> int:
+        # the content is state-free, but the inherited TABLE FACTS
+        # (constraints, txn watermarks) come from this tip — a lost claim
+        # re-inherits from the new tip, so a racing ADD CONSTRAINT or
+        # watermark advance is never erased (and re-checks the delta)
         return _commit(
-            df,
-            table,
-            "overwrite",
-            files,
-            stats,
-            app=app,
-            txn=(txn_app_id, int(txn_version))
-            if txn_app_id is not None
-            else None,
-            # the mapping these files were WRITTEN with (restricted to the
-            # committed schema): a racing rename landing between the write
-            # and the claim must not install a mapping the parquet files
-            # don't satisfy — overwrite replaces the whole schema, so the
-            # racer's rename is superseded, not half-applied
-            column_mapping={l: p for l, p in mapping.items() if l in df.columns},
-            constraints_validated=cons_seen,
+            spark, table, "overwrite", files, df.schema, tip_v, tip,
+            file_stats=stats, app=app, txn=txn, column_mapping=mapping,
+            delta=df, constraints_validated=cons_seen,
         )
-    except SnapshotConstraintError:
-        # a racing ADD CONSTRAINT rejected this content mid-commit: the
-        # files are referenced by no manifest — reclaim them
-        _delete_files(spark, files)
-        raise
+
+    return _commit_loop(
+        spark, table, "overwrite", compose, attempts=_MAX_COMMIT_RETRIES,
+        create=True, prewritten=files,
+    )
 
 
 def _merged_append_schema(
@@ -913,110 +1023,68 @@ def snapshot_append(
     spark = df.sparkSession
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
-    if txn_app_id is not None:
-        versions0 = list_versions(spark, table)
-        if versions0:
-            seen = (
-                _read_manifest(spark, table, versions0[-1]).get("txn") or {}
-            )
-            if int(seen.get(txn_app_id, -1)) >= int(txn_version):
-                return versions0[-1]  # already applied: exactly-once no-op
-    versions_pre = list_versions(spark, table)
-    tip_pre = (
-        _read_manifest(spark, table, versions_pre[-1]) if versions_pre else {}
-    )
+    txn = (txn_app_id, int(txn_version)) if txn_app_id is not None else None
+
+    def applied(tip: dict) -> bool:
+        return int((tip.get("txn") or {}).get(txn_app_id, -1)) >= txn[1]
+
+    versions = list_versions(spark, table)
+    tip_pre = _read_manifest(spark, table, versions[-1]) if versions else {}
+    if txn is not None and versions and applied(tip_pre):
+        return versions[-1]  # already applied: exactly-once no-op
     cons_seen = tip_pre.get("constraints") or {}
     _validate_constraints(df, cons_seen)
     new_files = _write_data_files(df, table, tip_manifest=tip_pre)
     map_pre = tip_pre.get("column_mapping") or {}
     ret_pre = tip_pre.get("retired_physical") or []
-    new_stats_cache: dict[tuple[str, ...], dict | None] = {}
-    for _ in range(_MAX_COMMIT_RETRIES):
-        versions = list_versions(spark, table)
-        prev_manifest = (
-            _read_manifest(spark, table, versions[-1]) if versions else {}
-        )
+
+    def compose(tip_v: int, tip: dict | None, write) -> int:
+        tip = tip or {}
         # Delta-style concurrent-METADATA detection: the delta files were
-        # written with the pre-write tip's column mapping and retired set;
-        # a racer's rename/drop landing since would make the committed
-        # mapping disagree with the files' physical column names (wrong-
-        # column reads, or a dropped column's data resurrecting through a
-        # re-used physical name). Abort loudly — the caller re-runs the
-        # append and writes against the new metadata. (Delta raises
-        # ConcurrentMetadataUpdate for exactly this interleaving.)
+        # written with the pre-write tip's column mapping and retired
+        # set; a racer's rename/drop landing since would make the
+        # committed mapping disagree with the files' physical column
+        # names (wrong-column reads, or a dropped column's data
+        # resurrecting through a re-used physical name). Abort loudly —
+        # the caller re-runs the append and writes against the new
+        # metadata. (Delta raises ConcurrentMetadataUpdate for exactly
+        # this interleaving.) Not a lost race: the loop reclaims the
+        # files and raises instead of retrying.
         if (
-            (prev_manifest.get("column_mapping") or {}) != map_pre
-            or (prev_manifest.get("retired_physical") or []) != ret_pre
+            (tip.get("column_mapping") or {}) != map_pre
+            or (tip.get("retired_physical") or []) != ret_pre
         ):
-            _delete_files(spark, new_files)
             raise SnapshotConflictError(
                 f"a concurrent column rename/drop changed {table}'s column "
                 f"metadata while this append was writing — re-run the append"
             )
-        cons_now = prev_manifest.get("constraints") or {}
-        if cons_now != cons_seen:
-            # a racer's ADD CONSTRAINT binds our delta too: the commit
-            # inherits the new constraint set, so rows this append never
-            # validated must not ride in unchecked
-            try:
-                _validate_constraints(df, cons_now)
-            except Exception:
-                _delete_files(spark, new_files)
-                raise
-            cons_seen = cons_now
-        prev = prev_manifest.get("files", [])
-        prev_stats = prev_manifest.get("file_stats") or {}
         schema = df.schema
-        if prev_manifest.get("schema") is not None:
-            try:
-                schema = _merged_append_schema(
-                    StructType.fromJson(prev_manifest["schema"]), df.schema,
-                    merge_schema,
-                )
-            except ValueError:
-                # rejected commit: the already-written delta files are
-                # referenced by no manifest — reclaim them now (vacuum
-                # never would)
-                _delete_files(spark, new_files)
-                raise
-        # stats continuity: carry the tip's per-file stats and collect the
-        # same columns for this append's files, so a stats-pruned table
-        # (merge_partitioned / overwrite(stats_cols=...)) keeps whole-file
-        # skipping across appends instead of silently losing it
-        file_stats = None
-        stats_cols = tuple(_prev_stats_cols(prev_stats))
-        if stats_cols:
-            if stats_cols not in new_stats_cache:
-                new_stats_cache[stats_cols] = _collect_file_stats(
-                    new_files,
-                    list(stats_cols),
-                    prev_manifest.get("column_mapping") or {},
-                )
-            file_stats = {**prev_stats, **(new_stats_cache[stats_cols] or {})}
-        if txn_app_id is not None:
-            seen = prev_manifest.get("txn") or {}
-            if int(seen.get(txn_app_id, -1)) >= int(txn_version):
-                # a racer (same app) applied this version while we wrote:
-                # reclaim our files and report the tip — still at-most-once
-                _delete_files(spark, new_files)
-                return versions[-1]
-        nxt = (versions[-1] + 1) if versions else 1
-        try:
-            return _commit(
-                df, table, "append", prev + new_files, file_stats,
-                expected_version=nxt, schema=schema,
-                # every prior file stays referenced by an append, so its
-                # bloom entry (snapshot_bloom_index) stays valid verbatim;
-                # this commit's files simply have none yet (conservative)
-                file_blooms=prev_manifest.get("file_blooms"),
-                txn=(txn_app_id, int(txn_version))
-                if txn_app_id is not None
-                else None,
+        if tip.get("schema") is not None:
+            schema = _merged_append_schema(
+                StructType.fromJson(tip["schema"]), df.schema, merge_schema
             )
-        except SnapshotConflictError:
-            continue
-    raise SnapshotConflictError(
-        f"append to {table} lost {_MAX_COMMIT_RETRIES} consecutive races"
+        if txn is not None and applied(tip):
+            # a racer (same app) applied this version while we wrote:
+            # reclaim our files and report the tip — still at-most-once
+            _delete_files(spark, new_files)
+            return tip_v
+        prev = tip.get("files", [])
+        return _commit(
+            spark, table, "append", prev + new_files, schema, tip_v, tip,
+            # every prior file and its stats / bloom entry stay valid
+            # verbatim; the new files get stats on the columns the tip
+            # tracks (_rewrite_stats), so a stats-pruned table keeps
+            # whole-file skipping across appends
+            file_stats=_rewrite_stats(tip, prev, new_files),
+            txn=txn,
+            # a racing ADD CONSTRAINT binds our delta too: rows this
+            # append never validated must not ride in unchecked
+            delta=df, constraints_validated=cons_seen,
+        )
+
+    return _commit_loop(
+        spark, table, "append", compose, attempts=_MAX_COMMIT_RETRIES,
+        create=True, prewritten=new_files,
     )
 
 
@@ -1144,8 +1212,6 @@ def snapshot_scan(
     files it opens, but only a table format's metadata can skip whole
     files before planning. Record stats via
     ``snapshot_merge_partitioned(..., stats_cols=[column])``."""
-    from pyspark.sql import functions as F
-
     versions = list_versions(spark, table)
     if not versions:
         raise FileNotFoundError(f"no snapshot manifests under {table}")
@@ -1154,22 +1220,11 @@ def snapshot_scan(
         raise ValueError(f"version {v} not in {table} (have {versions})")
     manifest = _read_manifest(spark, table, v)
     stats = manifest.get("file_stats") or {}
-    # probes meet stats in the stats' canonical form (timestamps/dates
-    # are ISO strings in the manifest)
-    plo, phi = _stat_norm(lo), _stat_norm(hi)
-
-    def may_intersect(f: str) -> bool:
-        row = stats.get(f, {}).get(column)
-        if row is None:
-            return True  # no stats: must read
-        fmin, fmax, _null = row
-        if fmin is None:  # stats say the file is empty
-            return False
-        try:
-            return fmin <= phi and plo <= fmax
-        except TypeError:
-            return True  # cross-type compare: be conservative
-    files = [f for f in manifest["files"] if may_intersect(f)]
+    files = [
+        f
+        for f in manifest["files"]
+        if _range_may_match(stats.get(f, {}).get(column), lo, hi)
+    ]
     schema = StructType.fromJson(manifest["schema"])
     pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
     return _read_data_files(spark, schema, files, manifest).filter(pred)
@@ -1192,62 +1247,31 @@ def snapshot_merge(df: DataFrame, table: str, key_cols: list[str]) -> int:
     cons_seen = _tip_constraints(spark, table)
     _validate_constraints(df, cons_seen)
     keys = list(key_cols)
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            files = _write_data_files(df, table)
-            try:
-                return _commit(
-                    df, table, "merge", files, expected_version=1,
-                    constraints_validated=cons_seen,
-                )
-            except SnapshotConflictError:
-                _delete_files(spark, files)  # racer created v1: re-merge
-                continue
-            except SnapshotConstraintError:
-                _delete_files(spark, files)
-                raise
-        existing = snapshot_read(spark, table, version=versions[-1])
-        keep = _anti_join_null_safe(existing, df.select(*keys), keys)
-        merged = keep.unionByName(df.select(keep.columns))
-        # the files are written from `merged`, so the manifest must carry
-        # MERGED's schema — which must equal the table's: a delta whose
-        # column types drift would widen the union output and make the
-        # pinned-schema read of the new tip throw. Refuse with a hint.
-        for f_old, f_new in zip(existing.schema.fields, merged.schema.fields):
-            if f_old.dataType != f_new.dataType:
-                raise ValueError(
-                    f"merge delta changes column {f_old.name!r} from "
-                    f"{f_old.dataType.simpleString()} to "
-                    f"{f_new.dataType.simpleString()} — CAST the delta to "
-                    f"the table's types first"
-                )
-        files = _write_data_files(merged, table)
-        try:
-            return _commit(
-                df,
-                table,
-                "merge",
-                files,
-                expected_version=versions[-1] + 1,
-                schema=existing.schema,
-                # a racing ADD CONSTRAINT is re-checked against the delta
-                # at claim time (the racer's own commit validated the
-                # kept rows; the delta is the unvalidated remainder)
-                constraints_validated=cons_seen,
+
+    def compose(tip_v: int, tip: dict | None, write) -> int:
+        merged, schema = df, None
+        if tip is not None:
+            existing = _read_data_files(
+                spark, StructType.fromJson(tip["schema"]), tip["files"], tip
             )
-        except SnapshotConflictError:
-            # merged content was computed against a superseded snapshot:
-            # discard the orphaned files and recompute against the new tip
-            _delete_files(spark, files)
-            continue
-        except SnapshotConstraintError:
-            _delete_files(spark, files)
-            raise
-    raise SnapshotConflictError(
-        f"merge into {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+            keep = _anti_join_null_safe(existing, df.select(*keys), keys)
+            merged = keep.unionByName(df.select(keep.columns))
+            # the files are written from `merged`, so the manifest must
+            # carry MERGED's schema — which must equal the table's
+            schema = existing.schema
+            _check_types(
+                schema, merged.schema, "merge delta",
+                "CAST the delta to the table's types first",
+            )
+        return _rewrite(
+            spark, table, "merge", tip_v, tip, write, [], merged, schema=schema,
+            # a racing ADD CONSTRAINT is re-checked against the delta at
+            # claim time (the racer's own commit validated the kept rows;
+            # the delta is the unvalidated remainder)
+            delta=df, constraints_validated=cons_seen,
+        )
+
+    return _commit_loop(spark, table, "merge", compose, create=True)
 
 
 def snapshot_merge_when(
@@ -1300,11 +1324,10 @@ def snapshot_merge_when(
                 "pre-aggregate the source so each key appears once "
                 "(Delta raises the same error)"
             )
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        tgt = snapshot_read(spark, table, version=versions[-1])
+    def compose(tip_v: int, tip: dict | None, write) -> int:
+        tgt = _read_data_files(
+            spark, StructType.fromJson(tip["schema"]), tip["files"], tip
+        )
         cols = tgt.columns
         missing = [c for c in cols if c not in source.columns]
         if when_not_matched_insert and missing:
@@ -1328,7 +1351,6 @@ def snapshot_merge_when(
         t_only = F.coalesce(F.col("t._t_present"), F.lit(False)) & ~F.coalesce(
             F.col("s._s_present"), F.lit(False)
         )
-        s_only = ~F.coalesce(F.col("t._t_present"), F.lit(False))
 
         def cond(expr_str: str | None):
             if expr_str is None:
@@ -1370,32 +1392,16 @@ def snapshot_merge_when(
                 .alias(c)
             )
         merged = j.filter(keep).select(*out_cols)
-        for f_old, f_new in zip(tgt.schema.fields, merged.schema.fields):
-            if f_old.dataType != f_new.dataType:
-                raise ValueError(
-                    f"MERGE UPDATE expression changes column {f_old.name!r} "
-                    f"from {f_old.dataType.simpleString()} to "
-                    f"{f_new.dataType.simpleString()} — add an explicit "
-                    f"CAST(... AS {f_old.dataType.simpleString()})"
-                )
-        _validate_constraints(merged, _tip_constraints(spark, table))
-        files = _write_data_files(merged, table)
-        try:
-            return _commit(
-                merged,
-                table,
-                "merge",
-                files,
-                expected_version=versions[-1] + 1,
-                schema=tgt.schema,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, files)
-            continue
-    raise SnapshotConflictError(
-        f"conditional merge into {table} lost 3 consecutive races — retry "
-        f"under lower write concurrency"
-    )
+        _check_types(
+            tgt.schema, merged.schema, "MERGE UPDATE expression",
+            "add an explicit CAST(... AS {t})",
+        )
+        _validate_constraints(merged, tip.get("constraints") or {})
+        return _rewrite(
+            spark, table, "merge", tip_v, tip, write, [], merged, schema=tgt.schema
+        )
+
+    return _commit_loop(spark, table, "merge", compose)
 
 
 #: racer operations a partitioned merge can rebase across: each leaves
@@ -1413,12 +1419,11 @@ def _try_rebase_partitioned(
     base_files: list[str],
     touched: list[str],
     new_files: list[str],
-    new_stats: dict | None,
+    stats_cols: list[str],
     partition_col: str,
     values: list,
     want_null: bool,
-    manifest_df: DataFrame,
-    schema: "StructType | None" = None,
+    schema: StructType,
 ) -> int | None:
     """Conflict-class resolution for a partitioned merge that lost its
     version race: if every racing commit since ``base_version`` is
@@ -1439,47 +1444,37 @@ def _try_rebase_partitioned(
     The rebased manifest is (tip ∖ touched) ∪ new_files — racer rewrites
     of files this merge only CARRIED adopt the racer's version. Returns
     the committed version, or None when the conflict is not provably
-    disjoint (caller recomputes). Retries follow-on races by re-running
-    the same proof against each newer tip."""
-    for _ in range(_MAX_COMMIT_RETRIES):
-        versions = list_versions(spark, table)
-        tip_v = versions[-1]
+    disjoint (caller recomputes). Follow-on races re-run the same proof
+    against each newer tip, through the commit loop."""
+    touched_set = set(touched)
+
+    def compose(tip_v: int, tip: dict, write) -> int | None:
         if tip_v <= base_version:  # racer vanished (vacuum?) — recompute
             return None
-        racers = [_read_manifest(spark, table, v)
-                  for v in versions if base_version < v <= tip_v]
+        racers = [
+            _read_manifest(spark, table, v)
+            for v in list_versions(spark, table)
+            if base_version < v < tip_v
+        ] + [tip]
         if any(m["operation"] not in _REBASEABLE_OPS for m in racers):
             return None
-        tip = racers[-1]
         tip_files = set(tip["files"])
-        if not set(touched) <= tip_files:
+        if not touched_set <= tip_files:
             return None
         tip_stats = tip.get("file_stats") or {}
         for f in tip_files - set(base_files):
             row = tip_stats.get(f, {}).get(partition_col)
             if row is None or _file_may_contain(row, values, want_null):
                 return None
-        touched_set = set(touched)
-        rebased_files = [f for f in tip["files"] if f not in touched_set]
-        file_stats = None
-        if new_stats is not None:
-            file_stats = {
-                **{f: tip_stats[f] for f in rebased_files if f in tip_stats},
-                **new_stats,
-            }
-        try:
-            return _commit(
-                manifest_df,
-                table,
-                "merge",
-                rebased_files + new_files,
-                file_stats,
-                expected_version=tip_v + 1,
-                schema=schema,
-            )
-        except SnapshotConflictError:
-            continue  # yet another racer: re-prove against the newer tip
-    return None
+        rebased = [f for f in tip["files"] if f not in touched_set]
+        return _commit(
+            spark, table, "merge", rebased + new_files, schema, tip_v, tip,
+            file_stats=_rewrite_stats(tip, rebased, new_files, stats_cols),
+        )
+
+    return _commit_loop(
+        spark, table, "merge", compose, attempts=_MAX_COMMIT_RETRIES
+    )
 
 
 def snapshot_merge_partitioned(
@@ -1545,108 +1540,53 @@ def snapshot_merge_partitioned(
         )
     values = [p for p in parts if p is not None]
     want_null = any(p is None for p in parts)
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            files = _write_data_files(clustered(df), table)
-            try:
-                return _commit(
-                    df,
-                    table,
-                    "merge",
-                    files,
-                    _collect_file_stats(files, all_stats_cols),  # new table: unmapped
-                    expected_version=1,
-                )
-            except SnapshotConflictError:
-                _delete_files(spark, files)  # racer created v1: re-merge
-                continue
-        manifest = _read_manifest(spark, table, versions[-1])
-        prev_files = manifest["files"]
-        prev_stats = manifest.get("file_stats") or {}
+
+    def compose(tip_v: int, tip: dict | None, write) -> int:
+        if tip is None:  # a new table: the delta is the whole content
+            return _rewrite(
+                spark, table, "merge", tip_v, tip, write, [], clustered(df),
+                stats_cols=all_stats_cols,
+            )
+        prev_stats = tip.get("file_stats") or {}
         touched, carried = [], []
-        for f in prev_files:
+        for f in tip["files"]:
             row = prev_stats.get(f, {}).get(partition_col)
             if row is not None and not _file_may_contain(row, values, want_null):
                 carried.append(f)
             else:
                 touched.append(f)
-        schema = StructType.fromJson(manifest["schema"])
+        schema = StructType.fromJson(tip["schema"])
         if touched:
-            existing = _read_data_files(spark, schema, touched, manifest)
+            existing = _read_data_files(spark, schema, touched, tip)
             keep = _anti_join_null_safe(existing, df.select(*keys), keys)
             merged = keep.unionByName(df.select(keep.columns))
         else:
             merged = df.select(*schema.names)
-        # files are written from `merged`; the manifest must not lie about
-        # them — refuse a type-drifted delta (the union would widen the
-        # files while the pinned schema stays narrow → unreadable tip)
-        for f_old, f_new in zip(schema.fields, merged.schema.fields):
-            if f_old.dataType != f_new.dataType:
-                raise ValueError(
-                    f"merge delta changes column {f_old.name!r} from "
-                    f"{f_old.dataType.simpleString()} to "
-                    f"{f_new.dataType.simpleString()} — CAST the delta to "
-                    f"the table's types first"
-                )
-        new_files = _write_data_files(clustered(merged), table)
-        new_stats = _collect_file_stats(
-            new_files, all_stats_cols, manifest.get("column_mapping") or {}
+        _check_types(
+            schema, merged.schema, "merge delta",
+            "CAST the delta to the table's types first",
         )
-        file_stats = None
-        if new_stats is not None:
-            # carried files keep their stats; absent entries stay conservative
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **new_stats,
-            }
-        try:
-            return _commit(
-                df,
-                table,
-                "merge",
-                carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
-                schema=schema,
-                # racing ADD CONSTRAINT: re-check the delta at claim time
-                # (the rebase path never sees one — constraint ops are not
-                # in _REBASEABLE_OPS, so those races recompute through
-                # here)
-                constraints_validated=cons_seen,
-            )
-        except SnapshotConstraintError:
-            _delete_files(spark, new_files)
-            raise
-        except SnapshotConflictError:
+
+        def rebase(new_files: list[str]) -> int | None:
             # computed against a superseded snapshot. If every racing
             # commit is provably disjoint (kept our touched files, added
             # nothing in our partition values), rebase the already-written
-            # files onto the new tip — no recompute, no data I/O:
-            rebased = _try_rebase_partitioned(
-                spark,
-                table,
-                base_version=versions[-1],
-                base_files=prev_files,
-                touched=touched,
-                new_files=new_files,
-                new_stats=new_stats,
-                partition_col=partition_col,
-                values=values,
-                want_null=want_null,
-                manifest_df=df,
-                schema=schema,
+            # files onto the new tip — no recompute, no data I/O
+            return _try_rebase_partitioned(
+                spark, table, tip_v, tip["files"], touched, new_files,
+                all_stats_cols, partition_col, values, want_null, schema,
             )
-            if rebased is not None:
-                return rebased
-            # overlapping (or unprovable) conflict: drop the orphaned
-            # files and recompute against the new tip
-            _delete_files(spark, new_files)
-            continue
-    raise SnapshotConflictError(
-        f"partitioned merge into {table} lost 3 consecutive races — retry "
-        f"under lower write concurrency"
-    )
+
+        return _rewrite(
+            spark, table, "merge", tip_v, tip, write, carried, clustered(merged),
+            stats_cols=all_stats_cols, on_lost_race=rebase,
+            # racing ADD CONSTRAINT: re-check the delta at claim time (the
+            # rebase path never sees one — constraint ops are not in
+            # _REBASEABLE_OPS, so those races recompute through here)
+            delta=df, constraints_validated=cons_seen,
+        )
+
+    return _commit_loop(spark, table, "merge", compose, create=True)
 
 
 def snapshot_scan_multi(
@@ -1664,8 +1604,6 @@ def snapshot_scan_multi(
     ``snapshot_read(...).filter(AND of all ranges)`` — files without
     stats are conservatively included, pruning is never a semantics
     change. ``ranges`` maps column -> (lo, hi), both inclusive."""
-    from pyspark.sql import functions as F
-
     if not ranges:
         raise ValueError("ranges must name at least one column")
     versions = list_versions(spark, table)
@@ -1676,29 +1614,14 @@ def snapshot_scan_multi(
         raise ValueError(f"version {v} not in {table} (have {versions})")
     manifest = _read_manifest(spark, table, v)
     stats = manifest.get("file_stats") or {}
-
-    # probes meet stats in the stats' canonical form (timestamps/dates
-    # are ISO strings in the manifest)
-    norm_ranges = {
-        c: (_stat_norm(lo), _stat_norm(hi)) for c, (lo, hi) in ranges.items()
-    }
-
-    def may_intersect(f: str) -> bool:
-        for column, (lo, hi) in norm_ranges.items():
-            row = stats.get(f, {}).get(column)
-            if row is None:
-                continue  # no stats for this column: can't prune on it
-            fmin, fmax, _null = row
-            if fmin is None:
-                return False  # stats say the file is empty
-            try:
-                if not (fmin <= hi and lo <= fmax):
-                    return False
-            except TypeError:
-                continue  # cross-type compare: be conservative
-        return True
-
-    files = [f for f in manifest["files"] if may_intersect(f)]
+    files = [
+        f
+        for f in manifest["files"]
+        if all(
+            _range_may_match(stats.get(f, {}).get(c), lo, hi)
+            for c, (lo, hi) in ranges.items()
+        )
+    ]
     schema = StructType.fromJson(manifest["schema"])
     pred = None
     for column, (lo, hi) in ranges.items():
@@ -1740,8 +1663,6 @@ def snapshot_delete(
     travel) until ``vacuum``. Conflicts recompute against the new tip
     (delete predicates are ranges, not value lists, so the partitioned-
     merge rebase proof doesn't apply as-is)."""
-    from pyspark.sql import functions as F
-
     pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
     if extra_condition is not None:
         extra = (
@@ -1750,67 +1671,21 @@ def snapshot_delete(
             else extra_condition
         )
         pred = pred & extra
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        prev_stats = manifest.get("file_stats") or {}
-        touched, carried = [], []
-        for f in manifest["files"]:
-            row = prev_stats.get(f, {}).get(column)
-            if row is not None and row[0] is not None:
-                fmin, fmax, _null = row
-                try:
-                    # probes meet stats in canonical form (_stat_norm)
-                    disjoint = not (
-                        fmin <= _stat_norm(hi) and _stat_norm(lo) <= fmax
-                    )
-                except TypeError:
-                    disjoint = False
-                (carried if disjoint else touched).append(f)
-            elif row is not None:  # stats say the file is empty
-                carried.append(f)
-            else:
-                touched.append(f)
-        schema = StructType.fromJson(manifest["schema"])
-        new_files: list[str] = []
-        new_stats = None
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        touched, carried = _split_by_range(tip, column, lo, hi)
+        survivors = None
         if touched:
             # the shared read path applies any deletion vectors on the
             # touched files, so the rewrite can't resurrect dead rows
-            survivors = _read_data_files(spark, schema, touched, manifest).filter(
-                ~F.coalesce(pred, F.lit(False))
-            )
-            new_files = _write_data_files(survivors, table, tip_manifest=manifest)
-            stats_cols = _prev_stats_cols(prev_stats)
-            if stats_cols:
-                new_stats = _collect_file_stats(
-                    new_files, stats_cols, manifest.get("column_mapping") or {}
-                )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
-        placeholder = spark.createDataFrame([], schema)
-        try:
-            return _commit(
-                placeholder,
-                table,
-                "delete",
-                carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, new_files)
-            continue
-    raise SnapshotConflictError(
-        f"delete on {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+            survivors = _read_data_files(
+                spark, StructType.fromJson(tip["schema"]), touched, tip
+            ).filter(~F.coalesce(pred, F.lit(False)))
+        return _rewrite(
+            spark, table, "delete", tip_v, tip, write, carried, survivors
+        )
+
+    return _commit_loop(spark, table, "delete", compose)
 
 
 def snapshot_replace_where(
@@ -1844,77 +1719,25 @@ def snapshot_replace_where(
         )
     cons_seen = _tip_constraints(spark, table)
     _validate_constraints(df, cons_seen)
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        cons_now = manifest.get("constraints") or {}
-        if cons_now != cons_seen:
-            # a racing ADD CONSTRAINT landed since the pre-loop check: the
-            # commit below inherits the new set, so the replacement rows
-            # must be re-validated (the commit's own df is an empty
-            # placeholder — the check has to happen here). Survivor rows
-            # were validated by the constraint-add's full-table pass.
-            _validate_constraints(df, cons_now)
-            cons_seen = cons_now
-        prev_stats = manifest.get("file_stats") or {}
-        touched, carried = [], []
-        for f in manifest["files"]:
-            row = prev_stats.get(f, {}).get(column)
-            if row is not None and row[0] is not None:
-                fmin, fmax, _null = row
-                try:
-                    # probes meet stats in canonical form (_stat_norm)
-                    disjoint = not (
-                        fmin <= _stat_norm(hi) and _stat_norm(lo) <= fmax
-                    )
-                except TypeError:
-                    disjoint = False
-                (carried if disjoint else touched).append(f)
-            elif row is not None:  # stats say the file is empty
-                carried.append(f)
-            else:
-                touched.append(f)
-        schema = StructType.fromJson(manifest["schema"])
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        touched, carried = _split_by_range(tip, column, lo, hi)
+        schema = StructType.fromJson(tip["schema"])
         replacement = df.select(*schema.names)
         if touched:
-            survivors = _read_data_files(spark, schema, touched, manifest).filter(
+            survivors = _read_data_files(spark, schema, touched, tip).filter(
                 ~F.coalesce(pred, F.lit(False))
             )
             replacement = survivors.unionByName(replacement)
-        new_files = _write_data_files(replacement, table, tip_manifest=manifest)
-        stats_cols = _prev_stats_cols(prev_stats)
-        new_stats = (
-            _collect_file_stats(
-                new_files, stats_cols, manifest.get("column_mapping") or {}
-            )
-            if stats_cols
-            else None
+        return _rewrite(
+            spark, table, "replace_where", tip_v, tip, write, carried,
+            replacement,
+            # a racing ADD CONSTRAINT binds the replacement rows (survivor
+            # rows were validated by the constraint-add's full-table pass)
+            delta=df, constraints_validated=cons_seen,
         )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
-        placeholder = spark.createDataFrame([], schema)
-        try:
-            return _commit(
-                placeholder,
-                table,
-                "replace_where",
-                carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, new_files)
-            continue
-    raise SnapshotConflictError(
-        f"replace_where on {table} lost 3 consecutive races — retry under "
-        f"lower write concurrency"
-    )
+
+    return _commit_loop(spark, table, "replace_where", compose)
 
 
 def snapshot_optimize(
@@ -1936,15 +1759,11 @@ def snapshot_optimize(
     correct, but file skipping degrades); stats are re-collected for the
     same columns the previous manifest tracked either way. No-op (returns
     the current version) when fewer than two files qualify."""
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        prev_stats = manifest.get("file_stats") or {}
+
+    def compose(tip_v: int, tip: dict, write) -> int:
         fs, _, jvm = _fs(spark, table)
         small, carried, small_bytes = [], [], 0
-        for f in manifest["files"]:
+        for f in tip["files"]:
             size = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getLen()
             if size < target_file_bytes:
                 small.append(f)
@@ -1952,54 +1771,24 @@ def snapshot_optimize(
             else:
                 carried.append(f)
         if len(small) < 2:
-            return versions[-1]
-        schema = StructType.fromJson(manifest["schema"])
+            return tip_v
+        schema = StructType.fromJson(tip["schema"])
         # DV-aware read: packing a file folds its deletion vector into
         # the rewrite, and _commit inheritance drops the entry with the
         # file — OPTIMIZE doubles as incremental DV purge for small files
-        packed = _read_data_files(spark, schema, small, manifest)
-        _tipm = manifest
+        packed = _read_data_files(spark, schema, small, tip)
         n_out = max(1, -(-small_bytes // target_file_bytes))
         if cluster_col is not None:
-            from pyspark.sql import functions as F
-
             packed = packed.repartitionByRange(
                 n_out, F.col(cluster_col)
             ).sortWithinPartitions(cluster_col)
         else:
             packed = packed.coalesce(n_out)
-        new_files = _write_data_files(packed, table, tip_manifest=_tipm)
-        stats_cols = _prev_stats_cols(prev_stats)
-        new_stats = (
-            _collect_file_stats(
-                new_files, stats_cols, manifest.get("column_mapping") or {}
-            )
-            if stats_cols
-            else None
+        return _rewrite(
+            spark, table, "optimize", tip_v, tip, write, carried, packed
         )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
-        placeholder = spark.createDataFrame([], schema)
-        try:
-            return _commit(
-                placeholder,
-                table,
-                "optimize",
-                carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, new_files)
-            continue
-    raise SnapshotConflictError(
-        f"optimize on {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+
+    return _commit_loop(spark, table, "optimize", compose)
 
 
 _CHECKPOINT_NAME = "_history_checkpoint.json"
@@ -2189,33 +1978,38 @@ def snapshot_restore(spark: SparkSession, table: str, version: int) -> int:
             f"version {version} not in {table} (have {versions})"
         )
     m = _read_manifest(spark, table, version)
-    tip_txn = _read_manifest(spark, table, versions[-1]).get("txn") or {}
-    manifest = {
-        "operation": "restore",
-        "restored_from": version,
-        "files": m["files"],
-        "schema": m["schema"],
-        "committed_at_unix": round(time.time(), 3),
-    }
-    if m.get("file_stats"):
-        manifest["file_stats"] = m["file_stats"]
-    for key in ("file_blooms", "dv", "constraints", "column_mapping",
-                "retired_physical"):
-        # per-file facts (blooms, deletion vectors) travel with the
-        # restored file list; constraints are part of the restored state
-        if m.get(key):
-            manifest[key] = m[key]
-    # idempotent-writer watermarks are HIGH-WATER marks, not state: a
-    # restore rolls data back but must never let an already-applied
-    # (app, version) re-apply — take the element-wise max of both maps
-    restored_txn = m.get("txn") or {}
-    merged_txn = {
-        a: max(int(restored_txn.get(a, -1)), int(tip_txn.get(a, -1)))
-        for a in set(restored_txn) | set(tip_txn)
-    }
-    if merged_txn:
-        manifest["txn"] = merged_txn
-    return _try_commit(spark, table, manifest, expected_version=None)
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        manifest = {
+            "operation": "restore",
+            "restored_from": version,
+            "files": m["files"],
+            "schema": m["schema"],
+            "committed_at_unix": round(time.time(), 3),
+        }
+        for key in ("file_stats", "file_blooms", "dv", "constraints",
+                    "column_mapping", "retired_physical"):
+            # per-file facts (stats, blooms, deletion vectors) travel with
+            # the restored file list; constraints are part of the
+            # restored state
+            if m.get(key):
+                manifest[key] = m[key]
+        # idempotent-writer watermarks are HIGH-WATER marks, not state: a
+        # restore rolls data back but must never let an already-applied
+        # (app, version) re-apply — take the element-wise max of the
+        # restored map and the tip's
+        restored_txn, tip_txn = m.get("txn") or {}, tip.get("txn") or {}
+        merged_txn = {
+            a: max(int(restored_txn.get(a, -1)), int(tip_txn.get(a, -1)))
+            for a in set(restored_txn) | set(tip_txn)
+        }
+        if merged_txn:
+            manifest["txn"] = merged_txn
+        return _try_commit(spark, table, manifest, tip_v + 1)
+
+    return _commit_loop(
+        spark, table, "restore", compose, attempts=_MAX_COMMIT_RETRIES
+    )
 
 
 def version_at_timestamp(spark: SparkSession, table: str, ts_unix: float) -> int:
@@ -2482,59 +2276,55 @@ def snapshot_bloom_index(
     1k distinct values per file."""
     if num_bits % 8:
         raise ValueError("num_bits must be a multiple of 8")
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    tip = versions[-1]
-    manifest = _read_manifest(spark, table, tip)
-    schema = StructType.fromJson(manifest["schema"])
-    if column not in schema.names:
-        raise ValueError(f"column {column!r} not in table schema {schema.names}")
-    files = manifest["files"]
-    blooms = dict(manifest.get("file_blooms") or {})
-    mapping = manifest.get("column_mapping") or {}
-    if files:
-        scan = (
-            spark.read.schema(_physical_schema(schema, mapping))
-            .parquet(*files)
-            .select(
-                F.input_file_name().alias("_f"),
-                F.col(mapping.get(column, column)).alias("_v"),
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        schema = StructType.fromJson(tip["schema"])
+        if column not in schema.names:
+            raise ValueError(
+                f"column {column!r} not in table schema {schema.names}"
             )
-            .where(F.col("_v").isNotNull())
-        )
-        per_file = (
-            scan.select(
-                "_f",
-                F.explode(
-                    _bloom_positions_expr(F.col("_v"), num_bits, num_hashes)
-                ).alias("_p"),
+        files = tip["files"]
+        blooms = dict(tip.get("file_blooms") or {})
+        mapping = tip.get("column_mapping") or {}
+        if files:
+            scan = (
+                spark.read.schema(_physical_schema(schema, mapping))
+                .parquet(*files)
+                .select(
+                    F.input_file_name().alias("_f"),
+                    F.col(mapping.get(column, column)).alias("_v"),
+                )
+                .where(F.col("_v").isNotNull())
             )
-            .groupBy("_f")
-            .agg(F.collect_set("_p").alias("_ps"))
+            per_file = (
+                scan.select(
+                    "_f",
+                    F.explode(
+                        _bloom_positions_expr(F.col("_v"), num_bits, num_hashes)
+                    ).alias("_p"),
+                )
+                .groupBy("_f")
+                .agg(F.collect_set("_p").alias("_ps"))
+            )
+            by_norm = {_norm_uri(f): f for f in files}
+            for row in per_file.collect():  # O(files) rows — manifest-sized
+                f = by_norm.get(_norm_uri(row["_f"]))
+                if f is None:
+                    continue
+                bits = bytearray(num_bits // 8)
+                for p in row["_ps"]:
+                    bits[p >> 3] |= 1 << (p & 7)
+                entry = dict(blooms.get(f) or {})
+                entry[column] = {
+                    "m": num_bits, "k": num_hashes, "bits": bits.hex()
+                }
+                blooms[f] = entry
+        return _commit(
+            spark, table, "index", files, schema, tip_v, tip,
+            file_stats=tip.get("file_stats"), file_blooms=blooms,
         )
-        by_norm = {_norm_uri(f): f for f in files}
-        for row in per_file.collect():  # O(files) rows — manifest-sized
-            f = by_norm.get(_norm_uri(row["_f"]))
-            if f is None:
-                continue
-            bits = bytearray(num_bits // 8)
-            for p in row["_ps"]:
-                bits[p >> 3] |= 1 << (p & 7)
-            entry = dict(blooms.get(f) or {})
-            entry[column] = {"m": num_bits, "k": num_hashes, "bits": bits.hex()}
-            blooms[f] = entry
-    df = snapshot_read(spark, table, tip)
-    return _commit(
-        df,
-        table,
-        "index",
-        files,
-        manifest.get("file_stats"),
-        expected_version=tip + 1,
-        schema=schema,
-        file_blooms=blooms,
-    )
+
+    return _commit_loop(spark, table, "index", compose, attempts=1)
 
 
 def _bloom_may_contain(entry: dict, positions_by_cfg: dict) -> bool:
@@ -2681,56 +2471,45 @@ def snapshot_add_constraint(
     table — and rejects with :class:`SnapshotConstraintError` on any
     FALSE row (NULL passes, SQL CHECK semantics). Express NOT NULL as
     ``col IS NOT NULL``."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    tip = versions[-1]
-    manifest = _read_manifest(spark, table, tip)
-    active = dict(manifest.get("constraints") or {})
-    if name in active:
-        raise ValueError(f"constraint {name!r} already exists: {active[name]}")
-    df = snapshot_read(spark, table, tip)
-    _validate_constraints(df, {name: expression})
-    active[name] = expression
-    return _commit(
-        df,
-        table,
-        "set_constraint",
-        manifest["files"],
-        manifest.get("file_stats"),
-        expected_version=tip + 1,
-        schema=StructType.fromJson(manifest["schema"]),
-        file_blooms=manifest.get("file_blooms"),
-        constraints=active,
-    )
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        active = dict(tip.get("constraints") or {})
+        if name in active:
+            raise ValueError(
+                f"constraint {name!r} already exists: {active[name]}"
+            )
+        schema = StructType.fromJson(tip["schema"])
+        _validate_constraints(
+            _read_data_files(spark, schema, tip["files"], tip),
+            {name: expression},
+        )
+        active[name] = expression
+        return _commit(
+            spark, table, "set_constraint", tip["files"], schema, tip_v, tip,
+            file_stats=tip.get("file_stats"), constraints=active,
+        )
+
+    return _commit_loop(spark, table, "set_constraint", compose, attempts=1)
 
 
 def snapshot_drop_constraint(spark: SparkSession, table: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT: metadata-only commit removing the
     named constraint from the active set."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    tip = versions[-1]
-    manifest = _read_manifest(spark, table, tip)
-    active = dict(manifest.get("constraints") or {})
-    if name not in active:
-        raise ValueError(f"no constraint named {name!r} (have {sorted(active)})")
-    del active[name]
-    df = snapshot_read(spark, table, tip)
-    manifest2 = {
-        "operation": "set_constraint",
-        "files": manifest["files"],
-        "schema": manifest["schema"],
-        "committed_at_unix": round(time.time(), 3),
-    }
-    for key in ("file_stats", "file_blooms", "dv", "column_mapping",
-                "retired_physical", "txn"):
-        if manifest.get(key):
-            manifest2[key] = manifest[key]
-    if active:
-        manifest2["constraints"] = active
-    return _try_commit(spark, table, manifest2, expected_version=tip + 1)
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        active = dict(tip.get("constraints") or {})
+        if name not in active:
+            raise ValueError(
+                f"no constraint named {name!r} (have {sorted(active)})"
+            )
+        del active[name]
+        return _commit(
+            spark, table, "set_constraint", tip["files"],
+            StructType.fromJson(tip["schema"]), tip_v, tip,
+            file_stats=tip.get("file_stats"), constraints=active,
+        )
+
+    return _commit_loop(spark, table, "set_constraint", compose, attempts=1)
 
 
 def _constraints_referencing(constraints: dict, col: str) -> list[str]:
@@ -2755,26 +2534,22 @@ def snapshot_rename_column(
     CHECK constraint references is refused — the stored expression would
     silently stop binding (drop the constraint first, re-add against the
     new name)."""
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        tip = versions[-1]
-        manifest = _read_manifest(spark, table, tip)
-        schema = StructType.fromJson(manifest["schema"])
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        schema = StructType.fromJson(tip["schema"])
         if old not in schema.names:
             raise ValueError(f"no column {old!r} in {table} ({schema.names})")
         if new in schema.names:
             raise ValueError(f"column {new!r} already exists in {table}")
-        mapping = dict(manifest.get("column_mapping") or {})
-        retired = list(manifest.get("retired_physical") or [])
+        mapping = dict(tip.get("column_mapping") or {})
+        retired = tip.get("retired_physical") or []
         phys_in_use = {mapping.get(f.name, f.name) for f in schema.fields}
         if new in (phys_in_use - {mapping.get(old, old)}) or new in retired:
             raise ValueError(
                 f"logical name {new!r} collides with a physical column name "
                 f"in {table}'s data files — pick a different name"
             )
-        refs = _constraints_referencing(manifest.get("constraints"), old)
+        refs = _constraints_referencing(tip.get("constraints"), old)
         if refs:
             raise ValueError(
                 f"column {old!r} is referenced by CHECK constraint(s) {refs} "
@@ -2791,39 +2566,21 @@ def snapshot_rename_column(
             else f
             for f in schema.fields
         ]
-        manifest2 = {
-            "operation": "rename_column",
-            "renamed": {"from": old, "to": new},
-            "files": manifest["files"],
-            "schema": json.loads(StructType(fields).json()),
-            "committed_at_unix": round(time.time(), 3),
-            "column_mapping": mapping,
-        }
-        if retired:
-            manifest2["retired_physical"] = retired
         # manifest metadata is logical-keyed: move old → new in place
-        stats = manifest.get("file_stats")
-        if stats:
-            manifest2["file_stats"] = {
+        def moved(per_file: dict | None) -> dict | None:
+            return per_file and {
                 f: {(new if c == old else c): v for c, v in per.items()}
-                for f, per in stats.items()
+                for f, per in per_file.items()
             }
-        blooms = manifest.get("file_blooms")
-        if blooms:
-            manifest2["file_blooms"] = {
-                f: {(new if c == old else c): v for c, v in per.items()}
-                for f, per in blooms.items()
-            }
-        for key in ("constraints", "dv", "txn"):
-            if manifest.get(key):
-                manifest2[key] = manifest[key]
-        try:
-            return _try_commit(spark, table, manifest2, expected_version=tip + 1)
-        except SnapshotConflictError:
-            continue
-    raise SnapshotConflictError(
-        f"rename_column on {table} lost 3 consecutive races"
-    )
+
+        return _commit(
+            spark, table, "rename_column", tip["files"], StructType(fields),
+            tip_v, tip, file_stats=moved(tip.get("file_stats")),
+            file_blooms=moved(tip.get("file_blooms")), column_mapping=mapping,
+            extra={"renamed": {"from": old, "to": new}},
+        )
+
+    return _commit_loop(spark, table, "rename_column", compose)
 
 
 def snapshot_drop_column(spark: SparkSession, table: str, col: str) -> int:
@@ -2835,60 +2592,40 @@ def snapshot_drop_column(spark: SparkSession, table: str, col: str) -> int:
     served as a physical name (`retired_physical` guard in the write
     path), so historic data can't resurrect under a re-added column.
     Refused while a CHECK constraint references the column."""
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        tip = versions[-1]
-        manifest = _read_manifest(spark, table, tip)
-        schema = StructType.fromJson(manifest["schema"])
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        schema = StructType.fromJson(tip["schema"])
         if col not in schema.names:
             raise ValueError(f"no column {col!r} in {table} ({schema.names})")
         if len(schema.fields) == 1:
             raise ValueError("cannot drop a table's only column")
-        refs = _constraints_referencing(manifest.get("constraints"), col)
+        refs = _constraints_referencing(tip.get("constraints"), col)
         if refs:
             raise ValueError(
                 f"column {col!r} is referenced by CHECK constraint(s) {refs} "
                 f"— drop them first"
             )
-        mapping = dict(manifest.get("column_mapping") or {})
+        mapping = dict(tip.get("column_mapping") or {})
         if not mapping:
             mapping = {f.name: f.name for f in schema.fields}
         phys = mapping.pop(col, col)
-        retired = list(manifest.get("retired_physical") or []) + [phys]
-        fields = [f for f in schema.fields if f.name != col]
-        manifest2 = {
-            "operation": "drop_column",
-            "dropped": col,
-            "files": manifest["files"],
-            "schema": json.loads(StructType(fields).json()),
-            "committed_at_unix": round(time.time(), 3),
-            "column_mapping": mapping,
-            "retired_physical": retired,
-        }
-        stats = manifest.get("file_stats")
-        if stats:
-            manifest2["file_stats"] = {
+
+        def dropped(per_file: dict | None) -> dict | None:
+            return per_file and {
                 f: {c: v for c, v in per.items() if c != col}
-                for f, per in stats.items()
+                for f, per in per_file.items()
             }
-        blooms = manifest.get("file_blooms")
-        if blooms:
-            manifest2["file_blooms"] = {
-                f: {c: v for c, v in per.items() if c != col}
-                for f, per in blooms.items()
-            }
-        for key in ("constraints", "dv", "txn"):
-            if manifest.get(key):
-                manifest2[key] = manifest[key]
-        try:
-            return _try_commit(spark, table, manifest2, expected_version=tip + 1)
-        except SnapshotConflictError:
-            continue
-    raise SnapshotConflictError(
-        f"drop_column on {table} lost 3 consecutive races"
-    )
+
+        return _commit(
+            spark, table, "drop_column", tip["files"],
+            StructType([f for f in schema.fields if f.name != col]),
+            tip_v, tip, file_stats=dropped(tip.get("file_stats")),
+            file_blooms=dropped(tip.get("file_blooms")), column_mapping=mapping,
+            retired_physical=list(tip.get("retired_physical") or []) + [phys],
+            extra={"dropped": col},
+        )
+
+    return _commit_loop(spark, table, "drop_column", compose)
 
 
 def snapshot_delete_where(
@@ -2902,29 +2639,18 @@ def snapshot_delete_where(
     can match and carries the rest by identity. Constraints and carried
     bloom entries inherit via the normal commit path (rewritten files
     are unindexed until re-index)."""
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        kept = snapshot_read(spark, table, versions[-1]).filter(
-            ~F.coalesce(F.expr(predicate), F.lit(False))
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        existing = _read_data_files(
+            spark, StructType.fromJson(tip["schema"]), tip["files"], tip
         )
-        files = _write_data_files(kept, table)
-        try:
-            # state-DEPENDENT: the rewrite was computed from versions[-1],
-            # so claim exactly the next number — a racer's commit must
-            # trigger a recompute, not be silently erased
-            return _commit(
-                kept, table, "delete", files,
-                expected_version=versions[-1] + 1,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, files)
-            continue
-    raise SnapshotConflictError(
-        f"delete on {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+        kept = existing.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+        return _rewrite(
+            spark, table, "delete", tip_v, tip, write, [], kept,
+            schema=existing.schema,
+        )
+
+    return _commit_loop(spark, table, "delete", compose)
 
 
 def snapshot_update(
@@ -2942,81 +2668,45 @@ def snapshot_update(
     key-addressed upserts prefer :func:`snapshot_merge` /
     :func:`snapshot_merge_partitioned` (file-pruned); this is the
     predicate-addressed form."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    df = snapshot_read(spark, table, versions[-1])
-    for col in set_exprs:
-        if col not in df.columns:
-            raise ValueError(f"UPDATE of unknown column {col!r} ({df.columns})")
     hit = (
         F.coalesce(F.expr(where), F.lit(False)) if where is not None else F.lit(True)
     )
-    updated = df.select(
-        *[
-            F.when(hit, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in df.columns
-        ]
-    )
-    # UPDATE never changes a column's type: the when/otherwise coercion can
-    # silently widen a SET column (int col = double expr), and committing
-    # df.schema while the files carry updated's types would make the
-    # manifest schema lie about the parquet data. Validate and refuse —
-    # the caller CASTs explicitly if a type change is intended.
-    for f_old, f_new in zip(df.schema.fields, updated.schema.fields):
-        if f_old.dataType != f_new.dataType:
-            raise ValueError(
-                f"UPDATE SET expression changes column {f_old.name!r} from "
-                f"{f_old.dataType.simpleString()} to "
-                f"{f_new.dataType.simpleString()} — UPDATE preserves column "
-                f"types; add an explicit CAST(... AS "
-                f"{f_old.dataType.simpleString()}) to the SET expression"
-            )
-    _validate_constraints(updated, _tip_constraints(spark, table))
-    for _ in range(3):
-        files = _write_data_files(updated, table)
-        try:
-            # state-DEPENDENT: computed from versions[-1] — claim exactly
-            # the next number so a racer forces a recompute
-            return _commit(
-                updated, table, "update", files,
-                schema=df.schema,
-                expected_version=versions[-1] + 1,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, files)
-            versions = list_versions(spark, table)
-            df = snapshot_read(spark, table, versions[-1])
-            updated = df.select(
-                *[
-                    F.when(hit, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                    for c in df.columns
-                ]
-            )
-            # The racer's commit may have appended rows or added constraints
-            # since the pre-race validation: re-run the type-drift check and
-            # CHECK validation on the RECOMPUTED frame, or a retry could
-            # commit rows the first pass never saw, unvalidated.
-            for f_old, f_new in zip(df.schema.fields, updated.schema.fields):
-                if f_old.dataType != f_new.dataType:
-                    raise ValueError(
-                        f"UPDATE SET expression changes column {f_old.name!r} "
-                        f"from {f_old.dataType.simpleString()} to "
-                        f"{f_new.dataType.simpleString()} — UPDATE preserves "
-                        f"column types; add an explicit CAST(... AS "
-                        f"{f_old.dataType.simpleString()}) to the SET "
-                        f"expression"
-                    )
-            _validate_constraints(updated, _tip_constraints(spark, table))
-            continue
-    raise SnapshotConflictError(
-        f"update on {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        # recomputed from each attempt's tip: rows a racer appended are
+        # updated, type-checked and validated like the rest
+        df = _read_data_files(
+            spark, StructType.fromJson(tip["schema"]), tip["files"], tip
+        )
+        for col in set_exprs:
+            if col not in df.columns:
+                raise ValueError(
+                    f"UPDATE of unknown column {col!r} ({df.columns})"
+                )
+        updated = df.select(
+            *[
+                F.when(hit, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in df.columns
+            ]
+        )
+        # UPDATE never changes a column's type: the when/otherwise
+        # coercion can silently widen a SET column (int col = double
+        # expr); refuse — the caller CASTs explicitly if a type change is
+        # intended
+        _check_types(
+            df.schema, updated.schema, "UPDATE SET expression",
+            "UPDATE preserves column types; add an explicit "
+            "CAST(... AS {t}) to the SET expression",
+        )
+        _validate_constraints(updated, tip.get("constraints") or {})
+        return _rewrite(
+            spark, table, "update", tip_v, tip, write, [], updated,
+            schema=df.schema,
+        )
+
+    return _commit_loop(spark, table, "update", compose)
 
 
 def snapshot_delete_dv(
@@ -3065,13 +2755,10 @@ def snapshot_delete_dv(
             pred = pred & F.expr(extra_condition)
     else:
         pred = F.expr(predicate)
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        schema = StructType.fromJson(manifest["schema"])
-        files = manifest["files"]
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        schema = StructType.fromJson(tip["schema"])
+        files = tip["files"]
         # scan_files is what we OPEN to find matches; the commit always
         # references the FULL file list — pruning must never leak into
         # the manifest
@@ -3079,26 +2766,14 @@ def snapshot_delete_dv(
         if column is not None:
             # whole-file skipping: a file whose [min, max] for `column`
             # cannot intersect [lo, hi] cannot hold a matching row
-            stats = manifest.get("file_stats") or {}
-
-            def may_match(f: str) -> bool:
-                row = stats.get(f, {}).get(column)
-                if row is None:
-                    return True
-                if row[0] is None:  # stats say the file is empty
-                    return False
-                try:
-                    return row[0] <= hi and lo <= row[1]
-                except TypeError:
-                    return True
-            scan_files = [f for f in files if may_match(f)]
+            scan_files, _ = _split_by_range(tip, column, lo, hi)
         if not scan_files:
-            return versions[-1]
+            return tip_v
         # scan WITH row positions, existing vectors already subtracted —
         # a row deleted twice must not be recorded twice. Column-mapped
         # tables read by PHYSICAL name and rename back so the user's
         # predicate binds to logical columns.
-        mapping = manifest.get("column_mapping") or {}
+        mapping = tip.get("column_mapping") or {}
         back = {p: l for l, p in mapping.items() if p != l}
         tagged = (
             spark.read.schema(_physical_schema(schema, mapping))
@@ -3113,7 +2788,7 @@ def snapshot_delete_dv(
         )
         if back:
             tagged = tagged.withColumnsRenamed(back)
-        prior = _dv_union_df(spark, manifest)
+        prior = _dv_union_df(spark, tip)
         if prior is not None:
             cond = (tagged["__dv_file"] == prior["file"]) & (
                 tagged["__dv_pos"] == prior["pos"]
@@ -3122,9 +2797,9 @@ def snapshot_delete_dv(
         matched = tagged.filter(F.coalesce(pred, F.lit(False))).select(
             F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
         )
-        new_sidecars = _write_data_files(matched, table, subdir=_DV_DIR)
+        new_sidecars = write(matched, subdir=_DV_DIR)
         if not new_sidecars:  # nothing matched: no commit
-            return versions[-1]
+            return tip_v
         # per-file dead counts come from the just-written sidecars — a
         # deleted-rows-sized read — NOT a second evaluation of the
         # matched plan (which would re-run the full table scan + anti-join)
@@ -3136,13 +2811,12 @@ def snapshot_delete_dv(
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        prev_dv = manifest.get("dv") or {}
-        prev_card = prev_dv.get("cardinality") or {}
+        prev_dv = tip.get("dv") or {}
         # sidecar "file" values are normalized paths; manifest files may
         # carry a scheme — key cardinality by the MANIFEST spelling so
         # _commit inheritance (keyed on manifest file names) works
         norm_to_manifest = {_norm_uri(f): f for f in files}
-        card = dict(prev_card)
+        card = dict(prev_dv.get("cardinality") or {})
         for nf, n in new_card.items():
             mf = norm_to_manifest.get(nf, nf)
             card[mf] = card.get(mf, 0) + n
@@ -3150,24 +2824,12 @@ def snapshot_delete_dv(
             "sidecars": (prev_dv.get("sidecars") or []) + new_sidecars,
             "cardinality": card,
         }
-        placeholder = spark.createDataFrame([], schema)
-        try:
-            return _commit(
-                placeholder,
-                table,
-                "delete_dv",
-                files,
-                manifest.get("file_stats"),
-                expected_version=versions[-1] + 1,
-                dv=dv,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, new_sidecars)
-            continue
-    raise SnapshotConflictError(
-        f"delete_dv on {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+        return _commit(
+            spark, table, "delete_dv", files, schema, tip_v, tip,
+            file_stats=tip.get("file_stats"), dv=dv,
+        )
+
+    return _commit_loop(spark, table, "delete_dv", compose)
 
 
 def snapshot_zorder(
@@ -3217,12 +2879,9 @@ def snapshot_zorder(
         raise ValueError("zorder takes 1-4 columns")
     if bits * len(zorder_cols) > 62:
         raise ValueError("bits * n_cols must fit a signed 64-bit Z-value")
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        schema = StructType.fromJson(manifest["schema"])
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        schema = StructType.fromJson(tip["schema"])
         dtype_of = {f.name: f.dataType.simpleString() for f in schema.fields}
         orderable = {
             name
@@ -3259,9 +2918,9 @@ def snapshot_zorder(
                 # correctness — stats are re-collected from actual values
                 col = col.cast("timestamp")
             return col.cast("double")  # timestamp → epoch seconds
-        if not manifest["files"]:
-            return versions[-1]
-        df = _read_data_files(spark, schema, manifest["files"], manifest)
+        if not tip["files"]:
+            return tip_v
+        df = _read_data_files(spark, schema, tip["files"], tip)
         n_buckets = 1 << bits
         probs = [i / n_buckets for i in range(1, n_buckets)]
         # one distributed GK pass for ALL columns' boundaries; decimals
@@ -3327,7 +2986,7 @@ def snapshot_zorder(
         fs, _, jvm = _fs(spark, table)
         total_bytes = sum(
             fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getLen()
-            for f in manifest["files"]
+            for f in tip["files"]
         )
         n_out = max(1, -(-total_bytes // target_file_bytes))
         packed = (
@@ -3336,29 +2995,13 @@ def snapshot_zorder(
             .sortWithinPartitions("_zval")
             .drop("_zval")
         )
-        new_files = _write_data_files(packed, table, tip_manifest=manifest)
-        prev_stats = manifest.get("file_stats") or {}
-        stats_cols = sorted(set(_prev_stats_cols(prev_stats)) | set(zorder_cols))
-        file_stats = _collect_file_stats(
-            new_files, stats_cols, manifest.get("column_mapping") or {}
+        # stats for the zorder columns too, so the scans it exists for prune
+        return _rewrite(
+            spark, table, "optimize", tip_v, tip, write, [], packed,
+            stats_cols=zorder_cols,
         )
-        placeholder = spark.createDataFrame([], schema)
-        try:
-            return _commit(
-                placeholder,
-                table,
-                "optimize",
-                new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, new_files)
-            continue
-    raise SnapshotConflictError(
-        f"zorder on {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+
+    return _commit_loop(spark, table, "optimize", compose)
 
 
 def snapshot_purge_dv(spark: SparkSession, table: str) -> int:
@@ -3370,52 +3013,22 @@ def snapshot_purge_dv(spark: SparkSession, table: str) -> int:
     when a file's dead fraction makes the read-side anti-join more
     expensive than one rewrite. No-op (current version) on a clean
     table."""
-    for _ in range(3):
-        versions = list_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot manifests under {table}")
-        manifest = _read_manifest(spark, table, versions[-1])
-        card = (manifest.get("dv") or {}).get("cardinality") or {}
-        dirty = [f for f in manifest["files"] if f in card]
+
+    def compose(tip_v: int, tip: dict, write) -> int:
+        card = (tip.get("dv") or {}).get("cardinality") or {}
+        dirty = [f for f in tip["files"] if f in card]
         if not dirty:
-            return versions[-1]
-        carried = [f for f in manifest["files"] if f not in card]
-        schema = StructType.fromJson(manifest["schema"])
-        compacted = _read_data_files(spark, schema, dirty, manifest)
-        new_files = _write_data_files(compacted, table, tip_manifest=manifest)
-        prev_stats = manifest.get("file_stats") or {}
-        stats_cols = _prev_stats_cols(prev_stats)
-        new_stats = (
-            _collect_file_stats(
-                new_files, stats_cols, manifest.get("column_mapping") or {}
-            )
-            if stats_cols
-            else None
+            return tip_v
+        carried = [f for f in tip["files"] if f not in card]
+        compacted = _read_data_files(
+            spark, StructType.fromJson(tip["schema"]), dirty, tip
         )
-        file_stats = None
-        if prev_stats:
-            file_stats = {
-                **{f: prev_stats[f] for f in carried if f in prev_stats},
-                **(new_stats or {}),
-            }
-        placeholder = spark.createDataFrame([], schema)
-        try:
-            return _commit(
-                placeholder,
-                table,
-                "purge_dv",
-                carried + new_files,
-                file_stats,
-                expected_version=versions[-1] + 1,
-                dv={"sidecars": [], "cardinality": {}},
-            )
-        except SnapshotConflictError:
-            _delete_files(spark, new_files)
-            continue
-    raise SnapshotConflictError(
-        f"purge_dv on {table} lost 3 consecutive races — retry under lower "
-        f"write concurrency"
-    )
+        return _rewrite(
+            spark, table, "purge_dv", tip_v, tip, write, carried, compacted,
+            dv={"sidecars": [], "cardinality": {}},
+        )
+
+    return _commit_loop(spark, table, "purge_dv", compose)
 
 
 def snapshot_clone(
@@ -3459,4 +3072,5 @@ def snapshot_clone(
                 "column_mapping", "retired_physical"):
         if m.get(key):
             manifest[key] = m[key]
-    return _try_commit(spark, target_table, manifest, expected_version=1)
+    # creates the table: claims v1 directly (a racer raises)
+    return _try_commit(spark, target_table, manifest, 1)

@@ -343,6 +343,31 @@ def test_concurrent_writers_serialize_without_lost_updates(spark, tmp_path, seed
         _assert_same_frames(got, model, f"seed={seed} version={v}")
         checked += 1
     assert checked == len(versions) - 1
+    # every lost race or rejected attempt reclaimed what it wrote: no data
+    # file or deletion-vector sidecar on disk is untracked
+    assert not _untracked_files(spark, table, versions)
+
+
+def _untracked_files(spark, table: str, versions: list[int]) -> list[str]:
+    """Parquet files under ``data/`` and ``_dv/`` that no manifest of
+    ``versions`` references (data files or deletion-vector sidecars)."""
+    import os
+
+    tracked = set()
+    for v in versions:
+        m = snap._read_manifest(spark, table, v)
+        for f in m["files"] + ((m.get("dv") or {}).get("sidecars") or []):
+            tracked.add("/" + f[5:].lstrip("/") if f.startswith("file:") else f)
+    untracked = []
+    for sub in ("data", "_dv"):
+        for root, _d, files in os.walk(os.path.join(table, sub)):
+            for f in files:
+                path = os.path.join(root, f)
+                if (f.endswith(".parquet") or f.startswith("part-")) and (
+                    path not in tracked
+                ):
+                    untracked.append(path)
+    return untracked
 
 
 def _assert_same_frames(got: pd.DataFrame, model: pd.DataFrame, step: str):
@@ -366,7 +391,6 @@ def test_metadata_races_abort_or_serialize(spark, tmp_path, seed):
     (a mapping the files don't satisfy would throw or NULL here), final
     content is exactly init ∪ committed appends with the appended
     values, aborted appends leave neither rows nor orphan files."""
-    import os
     import threading
 
     n_appends, n_flips = 6, 6
@@ -470,11 +494,4 @@ def test_metadata_races_abort_or_serialize(spark, tmp_path, seed):
     assert not ({k for k, _ in got} & aborted_ks)
 
     # aborted appends reclaimed their files: nothing on disk untracked
-    tracked = set()
-    for v in versions:
-        for f in snap._read_manifest(spark, table, v)["files"]:
-            tracked.add("/" + f[5:].lstrip("/") if f.startswith("file:") else f)
-    for root, _d, files in os.walk(os.path.join(table, "data")):
-        for f in files:
-            if f.endswith(".parquet") or f.startswith("part-"):
-                assert os.path.join(root, f) in tracked, f
+    assert not _untracked_files(spark, table, versions)

@@ -474,9 +474,9 @@ def _racing_merge_setup(spark, table, racer_delta):
     state = {"fired": False}
     counts = {"writes": 0}
 
-    def counting_write(df, table_):
+    def counting_write(df, table_, **kw):
         counts["writes"] += 1
-        return real_write(df, table_)
+        return real_write(df, table_, **kw)
 
     def racing_claim(spark_, table_, manifest, v):
         if not state["fired"] and manifest.get("operation") == "merge":
@@ -2105,6 +2105,106 @@ def test_dv_delete_ranged_form_prunes_files(spark, table):
         snapshot_delete_dv(spark, table, "k = 1", column="p", lo=0, hi=0)
     with pytest.raises(ValueError, match="exactly one"):
         snapshot_delete_dv(spark, table)
+
+
+def _stats_rewrite(spark, table, writer):
+    from bookstore_aws_lakehouse_spark.sources import snapshots as snap
+
+    delta = spark.createDataFrame([(3, -1.0), (100, 2.0)], "k int, v double")
+    if writer == "merge":
+        return snap.snapshot_merge(delta, table, ["k"])
+    if writer == "merge_when":
+        return snap.snapshot_merge_when(
+            delta, table, ["k"], when_matched_update={"v": "s.v"}
+        )
+    if writer == "delete_where":
+        return snap.snapshot_delete_where(spark, table, "k = 3")
+    return snap.snapshot_update(spark, table, {"v": "v + 1.0"}, where="k = 3")
+
+
+@pytest.mark.parametrize("writer", ["merge", "merge_when", "delete_where", "update"])
+def test_full_rewrites_keep_file_stats(spark, table, writer):
+    """Stats continuity through the FULL-rewrite writers: every file of
+    the new tip carries stats for the column the table tracks, so range
+    scans and ranged deletes stay file-pruned after a merge / update /
+    predicate delete."""
+    from bookstore_aws_lakehouse_spark.sources import snapshots as snap
+
+    base = spark.range(0, 80).select(
+        F.col("id").cast("int").alias("k"), (F.col("id") * 1.5).alias("v")
+    )
+    snap.snapshot_overwrite(
+        base.repartitionByRange(8, "k").sortWithinPartitions("k"),
+        table,
+        stats_cols=["k"],
+    )
+    v = _stats_rewrite(spark, table, writer)
+    m = snap._read_manifest(spark, table, v)
+    assert v == 2 and m["files"]
+    stats = m.get("file_stats") or {}
+    assert all("k" in stats.get(f, {}) for f in m["files"]), stats
+
+
+@pytest.mark.parametrize(
+    "lo_h, hi_h, want",
+    [
+        (-48, -1, False),  # disjoint, before the file's range
+        (24, 40, False),  # disjoint, after it
+        (-5, 2, True),  # overlaps the low end
+        (5, 6, True),  # inside
+        (23, 23, True),  # boundary equality on the max
+        (-10, 50, True),  # covers the whole file
+    ],
+)
+def test_range_may_match_normalizes_temporal_probes(lo_h, hi_h, want):
+    """The shared range-pruning predicate on a TIMESTAMP stats row —
+    stored in the manifest as canonical ISO strings — probed with
+    datetimes: disjoint ranges prune, overlapping ones keep the file, an
+    empty file always prunes and a missing stats row never does. Raw
+    datetimes compared against the ISO strings would raise TypeError and
+    fall back to opening every file."""
+    import datetime as dt
+
+    from bookstore_aws_lakehouse_spark.sources.snapshots import (
+        _range_may_match,
+        _stat_norm,
+    )
+
+    base = dt.datetime(2026, 3, 1, tzinfo=dt.timezone.utc)
+    at = lambda h: base + dt.timedelta(hours=h)  # noqa: E731
+    row = [_stat_norm(at(0)), _stat_norm(at(23)), False]
+    assert _range_may_match(row, at(lo_h), at(hi_h)) is want
+    assert _range_may_match([None, None, True], at(lo_h), at(hi_h)) is False
+    assert _range_may_match(None, at(lo_h), at(hi_h)) is True
+
+
+def test_dv_delete_ranged_form_prunes_temporal_stats(spark, table):
+    """The ranged deletion-vector delete on a TIMESTAMP column never
+    opens a file whose stats exclude the range: the out-of-range file is
+    removed from disk and the delete still succeeds."""
+    import datetime as dt
+    import os
+
+    from bookstore_aws_lakehouse_spark.sources.snapshots import (
+        _read_manifest,
+        snapshot_delete_dv,
+    )
+
+    start = dt.datetime(2026, 3, 1)
+    rows = [(i, start + dt.timedelta(hours=i)) for i in range(40)]
+    snapshot_overwrite(
+        spark.createDataFrame(rows, "k int, ts timestamp")
+        .repartitionByRange(4, "ts")
+        .sortWithinPartitions("ts"),
+        table,
+        stats_cols=["ts"],
+    )
+    m = _read_manifest(spark, table, 1)
+    last = max(m["files"], key=lambda f: m["file_stats"][f]["ts"][1])
+    os.remove(last[5:] if last.startswith("file:") else last)
+    lo, hi = start, start + dt.timedelta(hours=2)
+    v = snapshot_delete_dv(spark, table, column="ts", lo=lo, hi=hi)
+    assert sum(_read_manifest(spark, table, v)["dv"]["cardinality"].values()) == 3
 
 
 def test_merge_refuses_type_drifted_delta(spark, table):
