@@ -360,9 +360,10 @@ def _validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
 # manifest must be threaded through EVERY commit path or it is silently
 # lost on the next commit of that path:
 #   _commit (every writer commits through it inside _commit_loop):
-#     file_stats (explicit arg — _rewrite composes the carried files'
-#     entries with re-collected ones for every copy-on-write op, and
-#     append carries them the same way); file_blooms, constraints, dv,
+#     file_stats (explicit arg — _rewrite_stats composes the carried
+#     files' entries with re-collected ones for every copy-on-write op
+#     through _rewrite, and for append and the partitioned merge and its
+#     rebase directly); file_blooms, constraints, dv,
 #     txn, column_mapping, retired_physical (inherited from the loop's
 #     tip unless the writer passes them explicitly)
 #   hand-built manifests (explicit copy lists — grep these when adding a
@@ -538,23 +539,33 @@ def _commit_loop(
 
 
 def _rewrite_stats(
-    tip: dict, carried: list[str], new_files: list[str], stats_cols=()
+    tip: dict,
+    carried: list[str],
+    new_files: list[str],
+    stats_cols=(),
+    cache: dict | None = None,
 ) -> dict | None:
     """``file_stats`` for a commit of ``carried + new_files`` against
     ``tip``: the tip's entries for the carried files, plus footer stats
     for the new files on every column the tip tracks and ``stats_cols`` —
     so a stats-pruned table keeps whole-file skipping across every
-    rewrite instead of silently losing it."""
+    rewrite instead of silently losing it. ``cache`` (one dict per set
+    of new files, keyed by column tuple) lets a writer that commits the
+    same files against several tips — append's retries, the partitioned
+    merge's rebase — read their footers once."""
     prev_stats = tip.get("file_stats") or {}
     cols = _prev_stats_cols(prev_stats)
     cols += [c for c in stats_cols if c not in cols]
-    new_stats = (
-        _collect_file_stats(new_files, cols, tip.get("column_mapping") or {})
-        if cols
-        else None
-    )
+    cache = {} if cache is None else cache
+    key = tuple(cols)
+    if key not in cache:
+        cache[key] = (
+            _collect_file_stats(new_files, cols, tip.get("column_mapping") or {})
+            if cols
+            else None
+        )
     carried_stats = {f: prev_stats[f] for f in carried if f in prev_stats}
-    return {**carried_stats, **(new_stats or {})} or None
+    return {**carried_stats, **(cache[key] or {})} or None
 
 
 def _rewrite(
@@ -568,7 +579,6 @@ def _rewrite(
     df: DataFrame | None,
     schema: StructType | None = None,
     stats_cols=(),
-    on_lost_race=None,
     **commit_kw,
 ) -> int:
     """The copy-on-write step of every rewriting writer, run inside its
@@ -578,31 +588,23 @@ def _rewrite(
     commit ``carried + new files`` against the tip. A full rewrite
     carries nothing; ``df`` None rewrites nothing (every file carried).
     ``schema`` defaults to the tip's (``df``'s for a new table);
-    ``commit_kw`` passes through to ``_commit``.
-    ``on_lost_race(new_files)`` gets one chance to commit the written
-    files onto a newer tip without recomputing (the partitioned merge's
-    rebase); None lets the loop reclaim them and recompute."""
+    ``commit_kw`` passes through to ``_commit``. A lost race propagates:
+    the loop reclaims the new files and recomputes."""
     tip = tip or {}
     new_files = write(df, tip_manifest=tip) if df is not None else []
     if schema is None:
         schema = StructType.fromJson(tip["schema"]) if tip else df.schema
-    try:
-        return _commit(
-            spark,
-            table,
-            operation,
-            carried + new_files,
-            schema,
-            tip_v,
-            tip,
-            file_stats=_rewrite_stats(tip, carried, new_files, stats_cols),
-            **commit_kw,
-        )
-    except _LostRace:
-        version = on_lost_race(new_files) if on_lost_race else None
-        if version is None:
-            raise  # the loop reclaims new_files and recomputes
-        return version
+    return _commit(
+        spark,
+        table,
+        operation,
+        carried + new_files,
+        schema,
+        tip_v,
+        tip,
+        file_stats=_rewrite_stats(tip, carried, new_files, stats_cols),
+        **commit_kw,
+    )
 
 
 def _check_types(old: StructType, new: StructType, what: str, hint: str) -> None:
@@ -1035,6 +1037,7 @@ def snapshot_append(
     cons_seen = tip_pre.get("constraints") or {}
     _validate_constraints(df, cons_seen)
     new_files = _write_data_files(df, table, tip_manifest=tip_pre)
+    new_stats: dict = {}  # new_files' footer stats, reused by every retry
     map_pre = tip_pre.get("column_mapping") or {}
     ret_pre = tip_pre.get("retired_physical") or []
 
@@ -1075,7 +1078,7 @@ def snapshot_append(
             # verbatim; the new files get stats on the columns the tip
             # tracks (_rewrite_stats), so a stats-pruned table keeps
             # whole-file skipping across appends
-            file_stats=_rewrite_stats(tip, prev, new_files),
+            file_stats=_rewrite_stats(tip, prev, new_files, cache=new_stats),
             txn=txn,
             # a racing ADD CONSTRAINT binds our delta too: rows this
             # append never validated must not ride in unchecked
@@ -1419,6 +1422,7 @@ def _try_rebase_partitioned(
     base_files: list[str],
     touched: list[str],
     new_files: list[str],
+    new_stats: dict,
     stats_cols: list[str],
     partition_col: str,
     values: list,
@@ -1430,7 +1434,8 @@ def _try_rebase_partitioned(
     provably DISJOINT from this merge, re-point the already-written
     ``new_files`` at the new tip instead of recomputing the whole
     anti-join + rewrite. Disjointness is decided from manifests alone
-    (no data I/O):
+    (no data I/O), and ``new_files``' footer stats come from the
+    ``_rewrite_stats`` cache ``new_stats`` the first commit filled:
 
     1. every racer op is in ``_REBASEABLE_OPS`` (no overwrite);
     2. the tip still references every file this merge rewrote
@@ -1469,7 +1474,9 @@ def _try_rebase_partitioned(
         rebased = [f for f in tip["files"] if f not in touched_set]
         return _commit(
             spark, table, "merge", rebased + new_files, schema, tip_v, tip,
-            file_stats=_rewrite_stats(tip, rebased, new_files, stats_cols),
+            file_stats=_rewrite_stats(
+                tip, rebased, new_files, stats_cols, new_stats
+            ),
         )
 
     return _commit_loop(
@@ -1566,25 +1573,32 @@ def snapshot_merge_partitioned(
             schema, merged.schema, "merge delta",
             "CAST the delta to the table's types first",
         )
-
-        def rebase(new_files: list[str]) -> int | None:
+        new_files = write(clustered(merged), tip_manifest=tip)
+        new_stats: dict = {}  # new_files' footer stats, shared with the rebase
+        try:
+            return _commit(
+                spark, table, "merge", carried + new_files, schema, tip_v, tip,
+                file_stats=_rewrite_stats(
+                    tip, carried, new_files, all_stats_cols, new_stats
+                ),
+                # racing ADD CONSTRAINT: re-check the delta at claim time
+                # (the rebase never sees one — constraint ops are not in
+                # _REBASEABLE_OPS, so those races recompute through here)
+                delta=df, constraints_validated=cons_seen,
+            )
+        except _LostRace:
             # computed against a superseded snapshot. If every racing
             # commit is provably disjoint (kept our touched files, added
             # nothing in our partition values), rebase the already-written
             # files onto the new tip — no recompute, no data I/O
-            return _try_rebase_partitioned(
+            version = _try_rebase_partitioned(
                 spark, table, tip_v, tip["files"], touched, new_files,
-                all_stats_cols, partition_col, values, want_null, schema,
+                new_stats, all_stats_cols, partition_col, values, want_null,
+                schema,
             )
-
-        return _rewrite(
-            spark, table, "merge", tip_v, tip, write, carried, clustered(merged),
-            stats_cols=all_stats_cols, on_lost_race=rebase,
-            # racing ADD CONSTRAINT: re-check the delta at claim time (the
-            # rebase path never sees one — constraint ops are not in
-            # _REBASEABLE_OPS, so those races recompute through here)
-            delta=df, constraints_validated=cons_seen,
-        )
+            if version is None:
+                raise  # the loop reclaims new_files and recomputes
+            return version
 
     return _commit_loop(spark, table, "merge", compose, create=True)
 
