@@ -398,90 +398,6 @@ def q_engine_dispatch_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @golden(
-    "upsert_partitioned_roundtrip",
-    """
-    WITH base AS (
-      SELECT o_orderkey, strftime(o_orderdate, '%Y-%m') AS o_month,
-             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-      FROM orders WHERE o_orderkey % 10 <> 0
-    ),
-    delta AS (
-      SELECT o_orderkey, strftime(o_orderdate, '%Y-%m') AS o_month,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) + CAST(10.00 AS DECIMAL(4,2)) AS DECIMAL(18,2)) AS price
-      FROM orders WHERE o_orderdate >= TIMESTAMP '2001-06-01'
-    ),
-    merged AS (
-      SELECT o_orderkey, o_month, price FROM delta
-      UNION ALL
-      SELECT b.o_orderkey, b.o_month, b.price FROM base b
-      WHERE NOT EXISTS (SELECT 1 FROM delta d WHERE d.o_orderkey = b.o_orderkey)
-    )
-    SELECT o_month, count(*) AS n_orders, CAST(sum(price) AS DOUBLE) AS total_price
-    FROM merged GROUP BY o_month
-    """,
-)
-def q_upsert_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-pruned MERGE round-trip (sources/writers.py::
-    upsert_parquet_partitioned — the parquet-native Delta/Iceberg MERGE
-    stand-in, SURVEY §1.5): seed a month-partitioned orders mart missing
-    every 10th key, then merge a delta covering the last three months that
-    both UPDATES surviving keys (price+10.00, exact decimal) and INSERTS
-    the missing ones, and read the mart back. Only the delta's three month
-    directories are rewritten (dynamic partitionOverwriteMode; the month
-    is functionally dependent on the key so no key can move partitions).
-    The oracle replays the merge relationally: delta ∪ (base ▷ delta
-    keys). Decimal arithmetic end-to-end so sums are exact and the final
-    double cast is bit-identical across engines. The mart lives under one
-    tempdir removed before returning (result localCheckpoint-pinned), so
-    repeated driver/bench runs don't accumulate /tmp state."""
-    import shutil
-
-    from bookstore_aws_lakehouse_spark.sources.writers import (
-        upsert_parquet_partitioned,
-        write_parquet,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    month = F.date_format("o_orderdate", "yyyy-MM").alias("o_month")
-    price = F.col("o_totalprice").cast("decimal(18,2)")
-    base = orders.filter(F.col("o_orderkey") % 10 != 0).select(
-        "o_orderkey", month, price.alias("price")
-    )
-    delta = orders.filter(F.col("o_orderdate") >= "2001-06-01").select(
-        "o_orderkey",
-        month,
-        # re-narrow after the add: the +decimal(4,2) widens to (19,2), and
-        # a mart holding mixed decimal widths across files fails the
-        # vectorized reader's schema check on read-back
-        (price + F.lit("10.00").cast("decimal(4,2)"))
-        .cast("decimal(18,2)")
-        .alias("price"),
-    )
-    root = tempfile.mkdtemp(prefix="blhs_upsert_")
-    try:
-        mart = f"{root}/orders_mart"
-        # cluster by month before the partitioned write: unclustered,
-        # every task writes a file into every month directory (~2,500
-        # tiny files at sf0.1); clustered (explicit count — AQE would
-        # serialize the write into one task), one-ish file per month
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        write_parquet(
-            base.repartition(n, "o_month"), mart, partition_by=["o_month"]
-        )
-        upsert_parquet_partitioned(
-            delta, mart, key_cols=["o_orderkey"], partition_col="o_month"
-        )
-        back = read_parquet(spark, mart)
-        out = back.groupBy("o_month").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("price").cast("double").alias("total_price"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@golden(
     "compact_roundtrip",
     """
     SELECT l_returnflag, l_linestatus, count(*) AS cnt,
@@ -551,10 +467,10 @@ def q_snapshot_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     can actually run): seed version 1 missing every 7th customer, merge a
     delta that UPDATES the surviving BUILDING customers (bal+100, exact
     decimal) and INSERTS the missing ones, read the LATEST snapshot back,
-    aggregate. Unlike the staging-swap upsert, the merge commits a new
-    manifest and never deletes version 1's files — snapshot isolation is
-    separately proven in tests/test_snapshots.py. The oracle replays the
-    merge relationally. Tempdir removed before returning."""
+    aggregate. Unlike an in-place directory rewrite, the merge commits a
+    new manifest and never deletes version 1's files — snapshot isolation
+    is separately proven in tests/test_snapshots.py. The oracle replays
+    the merge relationally. Tempdir removed before returning."""
     import shutil
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
@@ -636,7 +552,7 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @golden(
-    "snapshot_merge_partitioned_roundtrip",
+    "snapshot_merge_pruned_roundtrip",
     """
     WITH base AS (
       SELECT o_orderkey, strftime(o_orderdate, '%Y-%m') AS o_month,
@@ -658,21 +574,22 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM merged GROUP BY o_month
     """,
 )
-def q_snapshot_merge_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_snapshot_merge_pruned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-pruned MERGE on the snapshot table (sources/snapshots.py::
-    snapshot_merge_partitioned — manifest file stats from parquet footers
-    decide which committed files a delta can touch; provably-disjoint
-    files carry into the new manifest with zero I/O, the Iceberg
-    metadata-pruning model): seed a month-clustered orders snapshot
-    missing every 5th key, merge a 2-month delta (updates price+5.00
-    exact-decimal, inserts the missing keys), read the latest snapshot.
+    snapshot_merge with ``partition_col`` — manifest file stats from
+    parquet footers decide which committed files a delta can touch;
+    provably-disjoint files carry into the new manifest with zero I/O,
+    the Iceberg metadata-pruning model): seed a month-clustered orders
+    snapshot missing every 5th key, merge a 2-month delta (updates
+    price+5.00 exact-decimal, inserts the missing keys), read the latest
+    snapshot.
     The oracle replays the merge relationally; the carried-file identity
     and zero-row-file exclusion are asserted in tests/test_snapshots.py.
     Tempdir removed before returning (result localCheckpoint-pinned)."""
     import shutil
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge_partitioned,
+        snapshot_merge,
         snapshot_read,
     )
 
@@ -692,8 +609,8 @@ def q_snapshot_merge_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> 
     root = tempfile.mkdtemp(prefix="blhs_snapp_")
     try:
         table = f"{root}/orders_snap"
-        snapshot_merge_partitioned(base, table, key_cols=["o_orderkey"], partition_col="o_month")
-        snapshot_merge_partitioned(delta, table, key_cols=["o_orderkey"], partition_col="o_month")
+        snapshot_merge(base, table, key_cols=["o_orderkey"], partition_col="o_month")
+        snapshot_merge(delta, table, key_cols=["o_orderkey"], partition_col="o_month")
         out = snapshot_read(spark, table).groupBy("o_month").agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.sum("price").cast("double").alias("total_price"),
@@ -726,7 +643,7 @@ def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge_partitioned,
+        snapshot_merge,
         snapshot_scan,
     )
 
@@ -739,7 +656,7 @@ def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="blhs_snapscan_")
     try:
         table = f"{root}/orders_snap"
-        snapshot_merge_partitioned(
+        snapshot_merge(
             base, table, key_cols=["o_orderkey"], partition_col="o_month"
         )
         out = (
@@ -1069,7 +986,7 @@ def q_snapshot_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_delete,
-        snapshot_merge_partitioned,
+        snapshot_merge,
         snapshot_read,
     )
 
@@ -1082,7 +999,7 @@ def q_snapshot_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="blhs_snapdel_")
     try:
         table = f"{root}/orders_snap"
-        snapshot_merge_partitioned(
+        snapshot_merge(
             base, table, key_cols=["o_orderkey"], partition_col="o_month"
         )
         snapshot_delete(
@@ -1213,7 +1130,7 @@ def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_changes,
         snapshot_delete,
-        snapshot_merge_partitioned,
+        snapshot_merge,
     )
 
     cust = load_table(spark, sf_dir, "customer")
@@ -1231,10 +1148,10 @@ def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="blhs_snapcdc_")
     try:
         table = f"{root}/customer_snap"
-        snapshot_merge_partitioned(
+        snapshot_merge(
             base, table, key_cols=["c_custkey"], partition_col="c_mktsegment"
         )
-        snapshot_merge_partitioned(
+        snapshot_merge(
             delta, table, key_cols=["c_custkey"], partition_col="c_mktsegment"
         )
         snapshot_delete(
@@ -1428,7 +1345,7 @@ def q_snapshot_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_delete,
-        snapshot_merge_partitioned,
+        snapshot_merge,
         snapshot_read,
     )
 
@@ -1443,7 +1360,7 @@ def q_snapshot_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     root = tempfile.mkdtemp(prefix="blhs_snapivm_")
     try:
         table = f"{root}/orders_snap"
-        v1 = snapshot_merge_partitioned(
+        v1 = snapshot_merge(
             base, table, key_cols=["o_orderkey"], partition_col="o_month"
         )
         # the stored mart, pinned as of v1 (localCheckpoint = "the mart
@@ -1466,7 +1383,7 @@ def q_snapshot_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
             "o_month",
             F.lit(100.00).cast("decimal(18,2)").alias("price"),
         )
-        snapshot_merge_partitioned(
+        snapshot_merge(
             updated.unionByName(added),
             table,
             key_cols=["o_orderkey"],
@@ -1670,7 +1587,7 @@ def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str) -> Da
     )
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_delete,
-        snapshot_merge_partitioned,
+        snapshot_merge,
         snapshot_read,
     )
 
@@ -1686,7 +1603,7 @@ def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str) -> Da
     try:
         table = f"{root}/orders_mv_src"
         mart = f"{root}/orders_mv_mart"
-        snapshot_merge_partitioned(
+        snapshot_merge(
             base, table, key_cols=["o_orderkey"], partition_col="o_orderpriority"
         )
         materialized_rollup_build(
@@ -1697,7 +1614,7 @@ def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str) -> Da
         updated = base.filter(F.col("o_orderkey") % 5 == 0).withColumn(
             "price", (F.col("price") + F.lit(7.50)).cast("decimal(18,2)")
         )
-        snapshot_merge_partitioned(
+        snapshot_merge(
             updated, table, key_cols=["o_orderkey"],
             partition_col="o_orderpriority",
         )
@@ -2773,7 +2690,7 @@ def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_merge_partitioned,
+        snapshot_merge,
         snapshot_read,
         snapshot_replace_where,
     )
@@ -2787,7 +2704,7 @@ def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="blhs_snaprw_")
     try:
         table = f"{root}/orders_snap"
-        snapshot_merge_partitioned(
+        snapshot_merge(
             base, table, key_cols=["o_orderkey"], partition_col="o_month"
         )
         m0 = _read_manifest(spark, table, 1)

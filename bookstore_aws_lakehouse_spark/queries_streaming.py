@@ -248,47 +248,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @golden(
-    "stream_continuous_rollup",
-    f"""
-    SELECT CAST(floor(epoch_ns(ts) / {NS_PER_HOUR}.0) AS BIGINT) * {NS_PER_HOUR} AS window_start_ns,
-           count(*) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY window_start_ns
-    """,
-)
-def q_stream_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally-maintained rollup end-to-end (streaming/jobs.py::
-    continuous_hourly_aggregate): the hourly tumbling aggregation streamed
-    through foreachBatch into a day-partitioned parquet mart via the
-    partition-pruned upsert, then the MART itself is read back and
-    verified against the batch SQL answer — the full continuous-aggregate
-    path (watermark, update-mode micro-batches, dynamic partition
-    overwrite) earns a value-level oracle row, not just unit tests. Fresh
-    mart + checkpoint per invocation keeps repeat runs idempotent; both
-    live under ONE tempdir that is removed before returning (the result
-    is localCheckpoint-pinned first), so repeated driver runs don't
-    accumulate /tmp directories."""
-    import shutil
-    import tempfile
-
-    from bookstore_aws_lakehouse_spark.streaming.jobs import continuous_hourly_aggregate
-
-    root = tempfile.mkdtemp(prefix="blhs_cagg_")
-    try:
-        continuous_hourly_aggregate(
-            spark, sf_dir, f"{root}/mart", checkpoint=f"{root}/ckpt"
-        )
-        df = spark.read.parquet(f"{root}/mart").select(
-            "window_start_ns", "n_events", "total_value"
-        )
-        # pin the result blocks before the backing files disappear
-        return df.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@golden(
     "stream_sliding_windows_4panes",
     f"""
     WITH panes AS (
@@ -341,7 +300,7 @@ def q_stream_snapshot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous aggregate with a snapshot-table sink end-to-end
     (streaming/jobs.py::continuous_aggregate_snapshot): the hourly
     tumbling aggregation streamed through foreachBatch into the
-    manifest-versioned table via the file-pruned partitioned MERGE —
+    manifest-versioned table via the MERGE file-pruned on day_no —
     every micro-batch is an isolated, time-travelable commit; concurrent
     readers never see a half-merged mart. The final snapshot is read
     back and must equal the batch SQL answer. One tempdir (table +

@@ -10,5 +10,4 @@ from bookstore_aws_lakehouse_spark.sources.writers import (  # noqa: F401
     write_csv,
     save_as_table,
     save_as_bucketed_table,
-    upsert_parquet,
 )

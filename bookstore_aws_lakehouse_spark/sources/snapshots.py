@@ -10,13 +10,12 @@ s3a:// behave identically):
       data/tx-<uuid>/part-*.parquet     -- immutable data files, one dir per commit
       _manifests/v<N>.json              -- commit N: file list + schema + op metadata
 
-Semantics this buys over bare parquet directories (and over the
-staging-swap ``upsert_parquet``):
+Semantics this buys over bare parquet directories:
 
 - **Snapshot isolation**: a reader pins one manifest; writers never delete
   or rewrite a committed data file, so concurrent reads see a consistent
-  version even while a MERGE commits. (The staging-swap upsert deletes the
-  files a concurrent reader's plan references.)
+  version even while a MERGE commits. (Rewriting a bare directory in
+  place deletes the files a concurrent reader's plan references.)
 - **Time travel**: every version stays readable until ``vacuum``.
 - **Atomic commit with conflict detection**: a manifest claims
   ``v<N>.json`` by an exclusive create (``_claim_version``). Every writer
@@ -26,13 +25,12 @@ staging-swap ``upsert_parquet``):
   the new tip a bounded number of times, any other failure reclaims them
   and raises. Writers differ only in their compose step — append and
   overwrite recompose a manifest over files written once; rewriting
-  writers recompute. Partitioned merges additionally resolve conflict
-  CLASSES: a merge provably disjoint from every racing commit (the
-  racers kept all files this merge rewrote, and every file they added is
-  stats-excluded from this merge's partition values) REBASES its
-  already-written files onto the new tip without recomputing the merge
-  — only overlapping writers pay the recompute
-  (``_try_rebase_partitioned``).
+  writers recompute. Merges additionally resolve conflict CLASSES: a
+  merge provably disjoint from every racing commit (the racers kept all
+  files this merge rewrote, and every file they added is stats-excluded
+  from this merge's partition values) REBASES its already-written files
+  onto the new tip without recomputing the merge — only overlapping
+  writers pay the recompute (``_try_rebase``).
 - **Logical operations**: append = old files ∪ new files; overwrite = new
   files only; every copy-on-write op (merge, delete, update, optimize,
   ...) = carried files ∪ a rewrite of the rest (``_rewrite``), with
@@ -356,6 +354,32 @@ def _validate_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
             )
 
 
+def _checked_written(
+    spark: SparkSession,
+    schema: StructType,
+    files: list[str],
+    tip: dict,
+    constraints: dict[str, str],
+):
+    """Validate freshly written, uncommitted ``files`` against
+    ``constraints`` (reclaiming them on a violation) and return the
+    ``_commit`` ``delta`` function that reads them back. Checking the
+    files, not the frame they were written from, checks exactly the rows
+    that commit: a nondeterministic frame evaluated twice could differ.
+    An unconstrained table reads nothing back."""
+
+    def written() -> DataFrame:
+        return _read_data_files(spark, schema, files, tip)
+
+    if constraints:
+        try:
+            _validate_constraints(written(), constraints)
+        except SnapshotConstraintError:
+            _delete_files(spark, files)
+            raise
+    return written
+
+
 # MANIFEST FACT KEYS — the carry checklist. Any new key added to a
 # manifest must be threaded through EVERY commit path or it is silently
 # lost on the next commit of that path:
@@ -407,10 +431,12 @@ def _commit(
     actually written with — inheriting the tip's instead would let a
     racing rename land a mapping the files don't satisfy (logical names
     resolving to physical columns the parquet lacks).
-    ``delta`` / ``constraints_validated``: the rows this commit adds and
-    the constraint set the caller validated them against; when the
-    inherited tip constraints differ (a racing ADD CONSTRAINT), ``delta``
-    is re-validated before claiming so no unchecked rows ride in.
+    ``delta`` / ``constraints_validated``: a zero-argument function
+    returning exactly the rows this commit adds (never a re-evaluation
+    that could differ from them), and the constraint set the caller
+    validated them against; when the inherited tip constraints differ (a
+    racing ADD CONSTRAINT), ``delta()`` is re-validated before claiming
+    so no unchecked rows ride in.
     ``extra``: operation metadata stored verbatim in the manifest."""
     tip = tip or {}
     if constraints is None:
@@ -418,7 +444,7 @@ def _commit(
         # unless explicitly replacing them (snapshot_add/drop_constraint)
         constraints = tip.get("constraints") or {}
         if delta is not None and constraints != constraints_validated:
-            _validate_constraints(delta, constraints)  # raises on violation
+            _validate_constraints(delta(), constraints)  # raises on violation
     if file_blooms is None:
         # bloom entries are PER-FILE facts about immutable files — any
         # entry whose file this commit still references stays valid
@@ -925,11 +951,11 @@ def snapshot_overwrite(
         if int((tip_pre.get("txn") or {}).get(txn_app_id, -1)) >= txn[1]:
             return versions[-1]
     cons_seen = tip_pre.get("constraints") or {}
-    _validate_constraints(df, cons_seen)
     mapping = tip_pre.get("column_mapping") or {}
     files = _write_data_files(
         df, table, schema_replacing=True, tip_manifest=tip_pre
     )
+    written = _checked_written(spark, df.schema, files, tip_pre, cons_seen)
     stats = (
         _collect_file_stats(files, stats_cols, mapping) if stats_cols else None
     )
@@ -948,7 +974,7 @@ def snapshot_overwrite(
         return _commit(
             spark, table, "overwrite", files, df.schema, tip_v, tip,
             file_stats=stats, app=app, txn=txn, column_mapping=mapping,
-            delta=df, constraints_validated=cons_seen,
+            delta=written, constraints_validated=cons_seen,
         )
 
     return _commit_loop(
@@ -1010,8 +1036,8 @@ def snapshot_append(
     new columns require ``merge_schema=True`` (they commit as nullable;
     ``snapshot_read`` pins the manifest schema, so historic files read
     back NULL for them with no rewrite), and type changes always raise.
-    Active CHECK constraints validate against the delta before any file
-    is written.
+    Active CHECK constraints validate the written files before the
+    commit; a violation reclaims them.
 
     Idempotent writes (Delta's ``txnAppId``/``txnVersion``): with
     ``txn_app_id`` + ``txn_version``, the append is applied AT MOST ONCE
@@ -1035,8 +1061,8 @@ def snapshot_append(
     if txn is not None and versions and applied(tip_pre):
         return versions[-1]  # already applied: exactly-once no-op
     cons_seen = tip_pre.get("constraints") or {}
-    _validate_constraints(df, cons_seen)
     new_files = _write_data_files(df, table, tip_manifest=tip_pre)
+    written = _checked_written(spark, df.schema, new_files, tip_pre, cons_seen)
     new_stats: dict = {}  # new_files' footer stats, reused by every retry
     map_pre = tip_pre.get("column_mapping") or {}
     ret_pre = tip_pre.get("retired_physical") or []
@@ -1082,7 +1108,7 @@ def snapshot_append(
             txn=txn,
             # a racing ADD CONSTRAINT binds our delta too: rows this
             # append never validated must not ride in unchecked
-            delta=df, constraints_validated=cons_seen,
+            delta=written, constraints_validated=cons_seen,
         )
 
     return _commit_loop(
@@ -1213,8 +1239,9 @@ def snapshot_scan(
     is an optimization, never a semantics change. This is what plain
     parquet directories can't do: Spark's scan prunes row groups inside
     files it opens, but only a table format's metadata can skip whole
-    files before planning. Record stats via
-    ``snapshot_merge_partitioned(..., stats_cols=[column])``."""
+    files before planning. Record stats via ``stats_cols=[column]`` on
+    ``snapshot_overwrite`` or ``snapshot_merge``; every later rewrite
+    keeps them."""
     versions = list_versions(spark, table)
     if not versions:
         raise FileNotFoundError(f"no snapshot manifests under {table}")
@@ -1233,46 +1260,237 @@ def snapshot_scan(
     return _read_data_files(spark, schema, files, manifest).filter(pred)
 
 
-def snapshot_merge(df: DataFrame, table: str, key_cols: list[str]) -> int:
-    """MERGE (upsert) with snapshot isolation: current snapshot anti-joined
-    against the delta's keys (null-safe, same relational core as
-    ``upsert_parquet``), unioned with the delta, committed as a fresh file
-    set. No staging swap, no deletion — concurrent readers of version N
-    are untouched while N+1 commits; failed merges leave no visible state.
+#: ceiling on distinct partition values one merge's delta may touch — far
+#: above any sane daily batch (a decade of daily partitions is ~3,650)
+#: while keeping the driver-side collect bounded
+MAX_MERGE_PARTITIONS = 10_000
 
-    At 100 TB the full-rewrite shape belongs on a partitioned variant
-    (rewrite only touched partitions, as ``upsert_parquet_partitioned``
-    does); the manifest protocol is identical — only ``files`` shrinks to
-    the touched partitions' files plus carried-over untouched ones."""
-    from bookstore_aws_lakehouse_spark.sources.writers import _anti_join_null_safe
 
+def _anti_join_null_safe(
+    existing: DataFrame, delta: DataFrame, keys: list[str]
+) -> DataFrame:
+    """``existing`` rows whose key matches no ``delta`` row, compared with
+    NULL-SAFE equality: a plain ``on=keys`` join never matches NULL keys,
+    so a NULL-keyed row would survive every merge and duplicate on each
+    re-delivery."""
+    import functools
+
+    right = delta.select(*[F.col(k).alias(f"_dk_{k}") for k in keys]).distinct()
+    cond = functools.reduce(
+        lambda a, b: a & b,
+        [existing[k].eqNullSafe(right[f"_dk_{k}"]) for k in keys],
+    )
+    return existing.join(right, on=cond, how="left_anti")
+
+
+#: racer operations a merge can rebase across: each leaves every
+#: untouched base file's CONTENT in place (append/merge/delete rewrite or
+#: add files elsewhere; optimize rewrites byte-identical data). An
+#: "overwrite" replaces table state wholesale — the base the merge
+#: composed against is meaningless and a recompute is mandatory.
+_REBASEABLE_OPS = frozenset({"append", "merge", "delete", "optimize"})
+
+
+def _try_rebase(
+    spark: SparkSession,
+    table: str,
+    base_version: int,
+    base_files: list[str],
+    touched: list[str],
+    new_files: list[str],
+    new_stats: dict,
+    stats_cols: list[str],
+    partition_col: str | None,
+    values: list,
+    want_null: bool,
+    schema: StructType,
+) -> int | None:
+    """Conflict-class resolution for a merge that lost its version race:
+    if every racing commit since ``base_version`` is provably DISJOINT
+    from this merge, re-point the already-written ``new_files`` at the
+    new tip instead of recomputing the whole anti-join + rewrite.
+    Disjointness is decided from manifests alone (no data I/O), and
+    ``new_files``' footer stats come from the ``_rewrite_stats`` cache
+    ``new_stats`` the first commit filled:
+
+    1. every racer op is in ``_REBASEABLE_OPS`` (no overwrite);
+    2. the tip still references every file this merge rewrote
+       (``touched``) — no racer touched the same files; and
+    3. every file the racers ADDED (tip ∖ base) carries ``partition_col``
+       stats proving it holds none of this merge's partition values —
+       with partition_col functionally dependent on the merge keys
+       (the documented contract), no racer row can collide with a delta
+       key. Files without stats fail the test (conservative), and so
+       does every added file of a merge without ``partition_col``.
+
+    The rebased manifest is (tip ∖ touched) ∪ new_files — racer rewrites
+    of files this merge only CARRIED adopt the racer's version. Returns
+    the committed version, or None when the conflict is not provably
+    disjoint (caller recomputes). Follow-on races re-run the same proof
+    against each newer tip, through the commit loop."""
+    touched_set = set(touched)
+
+    def compose(tip_v: int, tip: dict, write) -> int | None:
+        if tip_v <= base_version:  # racer vanished (vacuum?) — recompute
+            return None
+        racers = [
+            _read_manifest(spark, table, v)
+            for v in list_versions(spark, table)
+            if base_version < v < tip_v
+        ] + [tip]
+        if any(m["operation"] not in _REBASEABLE_OPS for m in racers):
+            return None
+        tip_files = set(tip["files"])
+        if not touched_set <= tip_files:
+            return None
+        tip_stats = tip.get("file_stats") or {}
+        for f in tip_files - set(base_files):
+            row = tip_stats.get(f, {}).get(partition_col)
+            if row is None or _file_may_contain(row, values, want_null):
+                return None
+        rebased = [f for f in tip["files"] if f not in touched_set]
+        return _commit(
+            spark, table, "merge", rebased + new_files, schema, tip_v, tip,
+            file_stats=_rewrite_stats(
+                tip, rebased, new_files, stats_cols, new_stats
+            ),
+        )
+
+    return _commit_loop(
+        spark, table, "merge", compose, attempts=_MAX_COMMIT_RETRIES
+    )
+
+
+def snapshot_merge(
+    df: DataFrame,
+    table: str,
+    key_cols: list[str],
+    partition_col: str | None = None,
+    stats_cols: list[str] | None = None,
+) -> int:
+    """MERGE (upsert) with snapshot isolation, the engine's one keyed
+    upsert: tip rows whose key matches a delta row (null-safe) are
+    replaced by the delta's rows, every other row is kept, and the result
+    commits as a new version (creating the table if needed). No deletion
+    of committed files — concurrent readers of version N are untouched
+    while N+1 commits; a failed merge leaves no visible state.
+
+    ``partition_col`` makes the merge FILE-PRUNED, the 100 TB shape: only
+    data files whose footer stats could hold one of the delta's
+    ``partition_col`` values are rewritten; every provably-disjoint file
+    is CARRIED into the new manifest untouched (same path, zero I/O) —
+    the Iceberg/Delta metadata-pruning model, with the stats collected
+    from parquet footers at commit time (``_collect_file_stats``). New
+    files are written hash-clustered on ``partition_col`` so each value
+    lands in one file and stat ranges stay tight; it remains a normal
+    data column (no hive layout). CONTRACT: ``partition_col`` must be
+    functionally dependent on the keys — a key that moves between
+    partitions would leave its old copy in a carried file. A file without
+    stats counts as touched, so missing stats (remote FS, exotic types)
+    degrade the merge to a full rewrite, never to a wrong answer. Without
+    ``partition_col`` every file is touched: a full rewrite.
+
+    ``stats_cols`` adds columns to record per-file stats for
+    (``snapshot_scan`` pruning) on top of the ones the tip tracks.
+
+    The delta is pinned (``localCheckpoint``) before anything reads it,
+    so the CHECK constraints validate exactly the rows that commit. A
+    lost commit race first tries to rebase the written files onto the
+    new tip (``_try_rebase``) and recomputes only when that is not
+    provably safe."""
     spark = df.sparkSession
+    keys = list(key_cols)
+    # one evaluation feeds the partition values, the keys, the union and
+    # the constraint check
+    df = df.localCheckpoint()
     cons_seen = _tip_constraints(spark, table)
     _validate_constraints(df, cons_seen)
-    keys = list(key_cols)
+    # EXPLICIT partition count: a bare repartition(col) is AQE-coalescable
+    # — small commits would collapse into one file holding every partition
+    # value, and file-level stat ranges would never prune. With the count
+    # pinned, each value's hash bucket stays its own file; the small-file
+    # cost on tiny commits is what snapshot_optimize handles at scale.
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def clustered(d: DataFrame) -> DataFrame:
+        if partition_col is None:
+            return d
+        return d.repartition(n_buckets, partition_col)
+
+    all_stats_cols = [
+        c for c in dict.fromkeys([partition_col, *(stats_cols or [])]) if c
+    ]
+    values: list = []
+    want_null = False
+    if partition_col is not None:
+        cap = MAX_MERGE_PARTITIONS
+        parts = [
+            r[0]
+            for r in df.select(partition_col).distinct().limit(cap + 1).collect()
+        ]
+        if len(parts) > cap:
+            raise ValueError(
+                f"snapshot_merge: delta touches more than {cap} distinct "
+                f"'{partition_col}' values — key-grade cardinality; "
+                f"partition by a coarser derived column or merge without "
+                f"partition_col."
+            )
+        values = [p for p in parts if p is not None]
+        want_null = any(p is None for p in parts)
 
     def compose(tip_v: int, tip: dict | None, write) -> int:
-        merged, schema = df, None
-        if tip is not None:
-            existing = _read_data_files(
-                spark, StructType.fromJson(tip["schema"]), tip["files"], tip
+        if tip is None:  # a new table: the delta is the whole content
+            return _rewrite(
+                spark, table, "merge", tip_v, tip, write, [], clustered(df),
+                stats_cols=all_stats_cols,
             )
-            keep = _anti_join_null_safe(existing, df.select(*keys), keys)
+        prev_stats = tip.get("file_stats") or {}
+        touched, carried = [], []
+        for f in tip["files"]:
+            # no partition column, no stats row: the file is touched
+            row = prev_stats.get(f, {}).get(partition_col)
+            if row is not None and not _file_may_contain(row, values, want_null):
+                carried.append(f)
+            else:
+                touched.append(f)
+        schema = StructType.fromJson(tip["schema"])
+        if touched:
+            existing = _read_data_files(spark, schema, touched, tip)
+            keep = _anti_join_null_safe(existing, df, keys)
             merged = keep.unionByName(df.select(keep.columns))
-            # the files are written from `merged`, so the manifest must
-            # carry MERGED's schema — which must equal the table's
-            schema = existing.schema
-            _check_types(
-                schema, merged.schema, "merge delta",
-                "CAST the delta to the table's types first",
-            )
-        return _rewrite(
-            spark, table, "merge", tip_v, tip, write, [], merged, schema=schema,
-            # a racing ADD CONSTRAINT is re-checked against the delta at
-            # claim time (the racer's own commit validated the kept rows;
-            # the delta is the unvalidated remainder)
-            delta=df, constraints_validated=cons_seen,
+        else:
+            merged = df.select(*schema.names)
+        _check_types(
+            schema, merged.schema, "merge delta",
+            "CAST the delta to the table's types first",
         )
+        new_files = write(clustered(merged), tip_manifest=tip)
+        new_stats: dict = {}  # new_files' footer stats, shared with the rebase
+        try:
+            return _commit(
+                spark, table, "merge", carried + new_files, schema, tip_v, tip,
+                file_stats=_rewrite_stats(
+                    tip, carried, new_files, all_stats_cols, new_stats
+                ),
+                # racing ADD CONSTRAINT: re-check the delta at claim time
+                # (the racer's own commit validated the kept rows; the
+                # rebase never sees one — constraint ops are not in
+                # _REBASEABLE_OPS, so those races recompute through here)
+                delta=lambda: df, constraints_validated=cons_seen,
+            )
+        except _LostRace:
+            # computed against a superseded snapshot. If every racing
+            # commit is provably disjoint (kept our touched files, added
+            # nothing in our partition values), rebase the already-written
+            # files onto the new tip — no recompute, no data I/O
+            version = _try_rebase(
+                spark, table, tip_v, tip["files"], touched, new_files,
+                new_stats, all_stats_cols, partition_col, values, want_null,
+                schema,
+            )
+            if version is None:
+                raise  # the loop reclaims new_files and recomputes
+            return version
 
     return _commit_loop(spark, table, "merge", compose, create=True)
 
@@ -1405,202 +1623,6 @@ def snapshot_merge_when(
         )
 
     return _commit_loop(spark, table, "merge", compose)
-
-
-#: racer operations a partitioned merge can rebase across: each leaves
-#: every untouched base file's CONTENT in place (append/merge/delete
-#: rewrite or add files elsewhere; optimize rewrites byte-identical data).
-#: An "overwrite" replaces table state wholesale — the base the merge
-#: composed against is meaningless and a recompute is mandatory.
-_REBASEABLE_OPS = frozenset({"append", "merge", "delete", "optimize"})
-
-
-def _try_rebase_partitioned(
-    spark: SparkSession,
-    table: str,
-    base_version: int,
-    base_files: list[str],
-    touched: list[str],
-    new_files: list[str],
-    new_stats: dict,
-    stats_cols: list[str],
-    partition_col: str,
-    values: list,
-    want_null: bool,
-    schema: StructType,
-) -> int | None:
-    """Conflict-class resolution for a partitioned merge that lost its
-    version race: if every racing commit since ``base_version`` is
-    provably DISJOINT from this merge, re-point the already-written
-    ``new_files`` at the new tip instead of recomputing the whole
-    anti-join + rewrite. Disjointness is decided from manifests alone
-    (no data I/O), and ``new_files``' footer stats come from the
-    ``_rewrite_stats`` cache ``new_stats`` the first commit filled:
-
-    1. every racer op is in ``_REBASEABLE_OPS`` (no overwrite);
-    2. the tip still references every file this merge rewrote
-       (``touched``) — no racer touched the same files; and
-    3. every file the racers ADDED (tip ∖ base) carries ``partition_col``
-       stats proving it holds none of this merge's partition values —
-       with partition_col functionally dependent on the merge keys
-       (the documented contract), no racer row can collide with a delta
-       key. Files without stats fail the test (conservative).
-
-    The rebased manifest is (tip ∖ touched) ∪ new_files — racer rewrites
-    of files this merge only CARRIED adopt the racer's version. Returns
-    the committed version, or None when the conflict is not provably
-    disjoint (caller recomputes). Follow-on races re-run the same proof
-    against each newer tip, through the commit loop."""
-    touched_set = set(touched)
-
-    def compose(tip_v: int, tip: dict, write) -> int | None:
-        if tip_v <= base_version:  # racer vanished (vacuum?) — recompute
-            return None
-        racers = [
-            _read_manifest(spark, table, v)
-            for v in list_versions(spark, table)
-            if base_version < v < tip_v
-        ] + [tip]
-        if any(m["operation"] not in _REBASEABLE_OPS for m in racers):
-            return None
-        tip_files = set(tip["files"])
-        if not touched_set <= tip_files:
-            return None
-        tip_stats = tip.get("file_stats") or {}
-        for f in tip_files - set(base_files):
-            row = tip_stats.get(f, {}).get(partition_col)
-            if row is None or _file_may_contain(row, values, want_null):
-                return None
-        rebased = [f for f in tip["files"] if f not in touched_set]
-        return _commit(
-            spark, table, "merge", rebased + new_files, schema, tip_v, tip,
-            file_stats=_rewrite_stats(
-                tip, rebased, new_files, stats_cols, new_stats
-            ),
-        )
-
-    return _commit_loop(
-        spark, table, "merge", compose, attempts=_MAX_COMMIT_RETRIES
-    )
-
-
-def snapshot_merge_partitioned(
-    df: DataFrame,
-    table: str,
-    key_cols: list[str],
-    partition_col: str,
-    stats_cols: list[str] | None = None,
-) -> int:
-    """File-pruned MERGE — the 100 TB evolution of ``snapshot_merge``:
-    only data files whose footer stats could hold one of the delta's
-    ``partition_col`` values are rewritten; every provably-disjoint file
-    is CARRIED FORWARD into the new manifest untouched (same file path,
-    zero I/O). A daily delta against a mart of years rewrites a handful
-    of files and commits in O(delta), exactly the Iceberg/Delta
-    metadata-pruning model — here the "manifest stats" are collected from
-    parquet row-group footers at commit time (``_collect_file_stats``).
-
-    Data files are written hash-clustered on ``partition_col``
-    (``repartition(partition_col)``) so each partition value lands in one
-    file and file stat ranges stay tight; ``partition_col`` remains a
-    normal data column (no hive layout), so reads need no basePath
-    tricks and Catalyst still gets min/max row-group skipping on it.
-
-    CONTRACT (same as ``upsert_parquet_partitioned``): ``partition_col``
-    must be functionally dependent on the keys — a key that moves
-    between partitions would leave its old copy in a carried file. When
-    stats are unavailable (remote FS, exotic types), every file is
-    treated as touched: the merge degrades to ``snapshot_merge``'s full
-    rewrite, never to a wrong answer."""
-    from bookstore_aws_lakehouse_spark.sources.writers import (
-        MAX_UPSERT_PARTITIONS,
-        _anti_join_null_safe,
-    )
-
-    spark = df.sparkSession
-    cons_seen = _tip_constraints(spark, table)
-    _validate_constraints(df, cons_seen)
-    keys = list(key_cols)
-    df = df.localCheckpoint()  # evaluated for values, keys, and the union
-    # EXPLICIT partition count: a bare repartition(col) is AQE-coalescable
-    # — small commits would collapse into one file holding every partition
-    # value, and file-level stat ranges would never prune. With the count
-    # pinned, each value's hash bucket stays its own file; the small-file
-    # cost on tiny commits is what compact_parquet / a size-tiered write
-    # policy handles at scale.
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    clustered = lambda d: d.repartition(n_buckets, partition_col)  # noqa: E731
-    # stats recorded for the partition column plus any extra columns the
-    # caller wants scan-time pruning on (snapshot_scan)
-    all_stats_cols = [partition_col] + [
-        c for c in (stats_cols or []) if c != partition_col
-    ]
-    cap = MAX_UPSERT_PARTITIONS
-    parts = [
-        r[0] for r in df.select(partition_col).distinct().limit(cap + 1).collect()
-    ]
-    if len(parts) > cap:
-        raise ValueError(
-            f"snapshot_merge_partitioned: delta touches more than {cap} "
-            f"distinct '{partition_col}' values — key-grade cardinality; "
-            f"partition by a coarser derived column or use snapshot_merge."
-        )
-    values = [p for p in parts if p is not None]
-    want_null = any(p is None for p in parts)
-
-    def compose(tip_v: int, tip: dict | None, write) -> int:
-        if tip is None:  # a new table: the delta is the whole content
-            return _rewrite(
-                spark, table, "merge", tip_v, tip, write, [], clustered(df),
-                stats_cols=all_stats_cols,
-            )
-        prev_stats = tip.get("file_stats") or {}
-        touched, carried = [], []
-        for f in tip["files"]:
-            row = prev_stats.get(f, {}).get(partition_col)
-            if row is not None and not _file_may_contain(row, values, want_null):
-                carried.append(f)
-            else:
-                touched.append(f)
-        schema = StructType.fromJson(tip["schema"])
-        if touched:
-            existing = _read_data_files(spark, schema, touched, tip)
-            keep = _anti_join_null_safe(existing, df.select(*keys), keys)
-            merged = keep.unionByName(df.select(keep.columns))
-        else:
-            merged = df.select(*schema.names)
-        _check_types(
-            schema, merged.schema, "merge delta",
-            "CAST the delta to the table's types first",
-        )
-        new_files = write(clustered(merged), tip_manifest=tip)
-        new_stats: dict = {}  # new_files' footer stats, shared with the rebase
-        try:
-            return _commit(
-                spark, table, "merge", carried + new_files, schema, tip_v, tip,
-                file_stats=_rewrite_stats(
-                    tip, carried, new_files, all_stats_cols, new_stats
-                ),
-                # racing ADD CONSTRAINT: re-check the delta at claim time
-                # (the rebase never sees one — constraint ops are not in
-                # _REBASEABLE_OPS, so those races recompute through here)
-                delta=df, constraints_validated=cons_seen,
-            )
-        except _LostRace:
-            # computed against a superseded snapshot. If every racing
-            # commit is provably disjoint (kept our touched files, added
-            # nothing in our partition values), rebase the already-written
-            # files onto the new tip — no recompute, no data I/O
-            version = _try_rebase_partitioned(
-                spark, table, tip_v, tip["files"], touched, new_files,
-                new_stats, all_stats_cols, partition_col, values, want_null,
-                schema,
-            )
-            if version is None:
-                raise  # the loop reclaims new_files and recomputes
-            return version
-
-    return _commit_loop(spark, table, "merge", compose, create=True)
 
 
 def snapshot_scan_multi(
@@ -1748,7 +1770,7 @@ def snapshot_replace_where(
             replacement,
             # a racing ADD CONSTRAINT binds the replacement rows (survivor
             # rows were validated by the constraint-add's full-table pass)
-            delta=df, constraints_validated=cons_seen,
+            delta=lambda: df, constraints_validated=cons_seen,
         )
 
     return _commit_loop(spark, table, "replace_where", compose)
@@ -2679,9 +2701,8 @@ def snapshot_update(
     full rewrite through the normal path, so active CHECK constraints
     validate the UPDATED table content before it replaces the tip —
     an UPDATE cannot sneak a violating value past ADD CONSTRAINT. For
-    key-addressed upserts prefer :func:`snapshot_merge` /
-    :func:`snapshot_merge_partitioned` (file-pruned); this is the
-    predicate-addressed form."""
+    key-addressed upserts prefer :func:`snapshot_merge` (file-pruned
+    with ``partition_col``); this is the predicate-addressed form."""
     hit = (
         F.coalesce(F.expr(where), F.lit(False)) if where is not None else F.lit(True)
     )

@@ -6,16 +6,14 @@ default (SURVEY §7.1.6): the mart should be columnar (parquet), and loads
 should be idempotent (``overwrite``), not accumulate duplicates every cron
 run. CSV remains available for reference parity / export.
 
-Table-format note (SURVEY §1.5): the production answer to the upsert
-functions below is a lakehouse table format — Delta's / Iceberg's
-``MERGE INTO`` with ACID commits, snapshot isolation, and time travel.
-This environment ships neither the ``delta-spark`` package nor any
-delta/iceberg runtime jar, and is offline (``spark.jars.packages`` cannot
-fetch), so the parquet-native ``upsert_parquet[_partitioned]`` path is
-the deliberate stand-in: same call-site contract, null-safe keys,
-partition-pruned rewrites. With the format jars present, each upsert
-call-site becomes a single MERGE statement and the staging-swap logic
-disappears.
+Table-format note (SURVEY §1.5): keyed upserts, ACID commits, snapshot
+isolation and time travel are a lakehouse table format's job — Delta's /
+Iceberg's ``MERGE INTO``. This environment ships neither the
+``delta-spark`` package nor any delta/iceberg runtime jar, and is
+offline, so ``sources/snapshots.py`` is the in-repo table format and
+``snapshot_merge`` is the one MERGE. This module keeps the plain
+directory sinks and ``compact_parquet``, the small-file maintenance of a
+bare parquet location.
 """
 
 from __future__ import annotations
@@ -24,11 +22,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: ceiling on distinct partition values a partitioned upsert's delta may
-#: touch — far above any sane daily batch (a decade of daily partitions is
-#: ~3,650) while keeping the driver-side collect bounded
-MAX_UPSERT_PARTITIONS = 10_000
 
 
 def write_parquet(
@@ -59,8 +52,8 @@ def write_csv(
 
 
 def compact_parquet(df_path: str, spark, target_partitions: int | None = None) -> int:
-    """Small-file compaction (the maintenance job every streaming/upsert
-    sink eventually needs — thousands of tiny files destroy scan
+    """Small-file compaction (the maintenance job every streaming or
+    incremental sink eventually needs — thousands of tiny files destroy scan
     performance via per-file open cost and starved row-group sizes).
     Rewrites the location to ``target_partitions`` files (default: sized
     by data volume at ~96 MB per file) through a same-filesystem staging
@@ -82,7 +75,7 @@ def compact_parquet(df_path: str, spark, target_partitions: int | None = None) -
         target_partitions, *pcols
     ) if pcols else df.repartition(target_partitions)
     # a partitioned location stays partitioned: a flat rewrite beside
-    # later dynamic-partition upserts would mix layouts and break reads
+    # later partitioned writes would mix layouts and break reads
     w = writer.write.mode("overwrite")
     if pcols:
         w = w.partitionBy(*pcols)
@@ -120,8 +113,8 @@ def _hive_partition_cols(spark, path: str) -> list[str]:
 def _fs_path_exists(spark, path: str) -> bool:
     """Existence check through the Hadoop FileSystem API, so s3a:// /
     hdfs:// / file:// paths all answer correctly — ``os.path.exists`` is
-    silently False for every non-local URI, which would turn an
-    incremental merge into a daily full truncate on object storage."""
+    silently False for every non-local URI, which would make an
+    incremental store start from scratch on every run on object storage."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -142,7 +135,7 @@ def _fs_swap_into(spark, staging: str, path: str) -> None:
     """Replace ``path`` with ``staging`` through the Hadoop FileSystem
     API (delete + rename) so file:// , hdfs:// and s3a:// all work —
     shutil handles only local paths, which would strand an object-store
-    merge after its staging write. Not atomic on object stores (rename
+    compaction after its staging write. Not atomic on object stores (rename
     there is copy+delete); Delta/Iceberg commit protocols are the real
     answer when the jars are available."""
     jvm = spark._jvm
@@ -152,178 +145,6 @@ def _fs_swap_into(spark, staging: str, path: str) -> None:
     fs.delete(dst, True)
     if not fs.rename(src, dst):
         raise OSError(f"rename {staging} -> {path} failed on {fs.getUri()}")
-
-
-def _key_join_null_safe(
-    existing: DataFrame, delta_keys: DataFrame, keys: Sequence[str], how: str
-) -> DataFrame:
-    """existing ⋈ delta_keys on all key columns with NULL-SAFE equality:
-    a plain ``on=keys`` join never matches NULL keys, so under anti-join a
-    NULL-keyed row would survive every merge and duplicate on each
-    re-delivery (and under semi-join a moved NULL key would go unseen)."""
-    import functools
-
-    right = delta_keys.select(*[F.col(k).alias(f"_dk_{k}") for k in keys]).distinct()
-    cond = functools.reduce(
-        lambda a, b: a & b,
-        [existing[k].eqNullSafe(right[f"_dk_{k}"]) for k in keys],
-    )
-    return existing.join(right, on=cond, how=how)
-
-
-def _anti_join_null_safe(existing: DataFrame, delta_keys: DataFrame, keys: Sequence[str]) -> DataFrame:
-    return _key_join_null_safe(existing, delta_keys, keys, "left_anti")
-
-
-def upsert_parquet(
-    df: DataFrame,
-    path: str,
-    key_cols: Sequence[str],
-) -> None:
-    """Idempotent key-based upsert into a parquet location — the
-    no-extra-dependency stand-in for Delta/Iceberg ``MERGE`` (with those
-    formats installed this whole function is one ``MERGE INTO``; the
-    call-site contract is identical). New rows replace existing rows with
-    the same key (NULL keys included — the anti-join is null-safe);
-    unrelated rows are preserved.
-
-    Mechanics: anti-join existing data against the incoming keys, union,
-    rewrite. The rewrite goes through a SAME-FILESYSTEM staging directory
-    (the union plan reads the very files the overwrite deletes), then the
-    Hadoop FS API swaps it in — local and remote (s3a://, hdfs://) paths
-    behave identically. At scale, partition the location and rewrite only
-    affected partitions (see ``upsert_parquet_partitioned``).
-    """
-    spark = df.sparkSession
-    keys = list(key_cols)
-    if _fs_path_exists(spark, path):
-        # pin the delta: it feeds both the anti-join keys and the union,
-        # and a nondeterministic delta evaluated twice would drop rows
-        # (same hazard upsert_parquet_partitioned documents)
-        df = df.localCheckpoint()
-        if df.isEmpty():
-            return  # no-op: skip the full rewrite AND the swap window
-        existing = spark.read.parquet(path)
-        keep = _anti_join_null_safe(existing, df.select(*keys), keys)
-        merged = keep.unionByName(df)
-        staging = _staging_sibling(path)
-        pcols = _hive_partition_cols(spark, path)
-        w = merged.write.mode("overwrite")
-        if pcols:
-            # a partitioned mart stays partitioned through a full rewrite
-            w = w.partitionBy(*pcols)
-        w.parquet(staging)
-        _fs_swap_into(spark, staging, path)
-    else:
-        if df.isEmpty():
-            return  # a schema-less empty directory would poison later reads
-        df.write.mode("overwrite").parquet(path)
-
-
-def upsert_parquet_partitioned(
-    df: DataFrame,
-    path: str,
-    key_cols: Sequence[str],
-    partition_col: str,
-    check_key_moves: bool = False,
-) -> None:
-    """Partition-pruned MERGE stand-in: rewrite ONLY the partitions the
-    delta touches, leaving every other partition's files untouched on
-    disk. This is the shape that survives 100 TB — a daily delta hitting
-    3 of 3,000 date partitions rewrites 0.1% of the mart, not all of it
-    (``upsert_parquet`` above rewrites the whole location).
-
-    Mechanics: collect the delta's distinct partition values (bounded by
-    the partition count, not the data), read the existing mart pruned to
-    those partitions (PartitionFilters — only affected directories are
-    scanned), anti-join on the keys (null-safe), union the delta, and
-    write with dynamic partitionOverwriteMode so Spark replaces exactly
-    the partitions present in the result. The merged result is pinned
-    with localCheckpoint() first because the write deletes the very
-    files the plan reads (at cluster scale: a reliable checkpoint dir or
-    a staging table).
-
-    CONTRACT: ``partition_col`` must be functionally dependent on the
-    keys (e.g. a date derived from the keyed window). If a key can MOVE
-    between partitions, its old copy lives in a partition the delta does
-    not touch and survives the merge — use the full-rewrite
-    ``upsert_parquet`` for that shape. ``check_key_moves=True`` audits
-    this contract: it scans the UNTOUCHED partitions' key columns for any
-    incoming key and raises before writing anything. That scan reads the
-    whole mart's key columns — an audit/backfill tool, not a default
-    (the default trusts the contract and stays partition-pruned).
-    """
-    spark = df.sparkSession
-    keys = list(key_cols)
-    # pin the delta once: it is otherwise evaluated three times below
-    # (partition collect, key anti-join, union)
-    df = df.localCheckpoint()
-    if not _fs_path_exists(spark, path):
-        if df.isEmpty():
-            return  # a schema-less empty directory would poison later reads
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        return
-    # the distinct-partition collect is bounded by the delta's partition
-    # count, not its rows — but an unbounded-cardinality partition column
-    # (someone partitioning by a key) would OOM the driver here. Cap it:
-    # LIMIT cap+1 bounds what the driver can ever receive, and tripping
-    # the cap is a misuse signal, not a size problem to accommodate.
-    cap = MAX_UPSERT_PARTITIONS
-    parts = [
-        r[0] for r in df.select(partition_col).distinct().limit(cap + 1).collect()
-    ]
-    if len(parts) > cap:
-        raise ValueError(
-            f"upsert_parquet_partitioned: delta touches more than {cap} "
-            f"distinct '{partition_col}' values — that is key-grade "
-            f"cardinality, not a partition column. Partition by a coarser "
-            f"derived column (e.g. a date) or use upsert_parquet."
-        )
-    if not parts:
-        return  # empty delta: nothing to merge
-    # isin() is null-unsafe: a NULL partition value in the delta would
-    # select NO existing rows while dynamic overwrite still replaces the
-    # null partition — deleting every unrelated key in it. Build the
-    # pruning predicate null-safely.
-    non_null = [p for p in parts if p is not None]
-    cond = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if any(p is None for p in parts):
-        cond = cond | F.col(partition_col).isNull()
-    if check_key_moves:
-        # untouched partitions = NOT(cond) with NULL folded to "untouched"
-        outside = spark.read.parquet(path).filter(
-            ~F.coalesce(cond, F.lit(False))
-        )
-        moved = _key_join_null_safe(
-            outside.select(*keys), df.select(*keys), keys, "left_semi"
-        )
-        hit = moved.limit(1).collect()
-        if hit:
-            raise ValueError(
-                f"upsert_parquet_partitioned: incoming key {hit[0].asDict()} "
-                f"already exists in a partition the delta does not touch — "
-                f"'{partition_col}' is not functionally dependent on "
-                f"{keys}; the old copy would survive the merge. Use "
-                f"upsert_parquet (full rewrite) for keys that move."
-            )
-    existing = spark.read.parquet(path).filter(cond)
-    keep = _anti_join_null_safe(existing, df.select(*keys), keys)
-    merged = keep.unionByName(df.select(keep.columns)).localCheckpoint()
-    (
-        # repartition on the partition column first: a partitionBy write
-        # otherwise emits one file per (task × partition-value) pair —
-        # a 32-task merge touching 80 months writes ~2,500 tiny files.
-        # EXPLICIT count (AQE would coalesce this small shuffle into one
-        # task and serialize all the directory writes): parallelism keeps
-        # the cores busy, clustering keeps files-per-partition ~1
-        merged.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), partition_col
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
 
 
 def save_as_bucketed_table(

@@ -242,75 +242,6 @@ def stateful_user_stats(stream: DataFrame, timeout: str = "NoTimeout") -> DataFr
     )
 
 
-def continuous_hourly_aggregate(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str,
-    watermark: str = "30 minutes",
-    checkpoint: str | None = None,
-) -> None:
-    """Incrementally-maintained rollup (continuous aggregate): the hourly
-    tumbling aggregation streamed through ``foreachBatch`` into a
-    key-upserted parquet mart, PARTITIONED BY DAY and merged with the
-    partition-pruned upsert — each micro-batch rewrites only the day
-    directories its windows touch, so a mart holding years of history
-    pays per-batch cost proportional to the batch, not the mart. The
-    lakehouse upgrade of the reference's nightly recompute-everything
-    cron; with Delta/Iceberg the merge becomes MERGE INTO and readers
-    get snapshot isolation.
-    """
-    from bookstore_aws_lakehouse_spark.sources.writers import upsert_parquet_partitioned
-
-    agged = _hourly_delta(spark, sf_dir, watermark)
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        upsert_parquet_partitioned(
-            batch_df, out_path, ["window_start_ns"], "day_no"
-        )
-
-    _run_update_sink(agged, merge_batch, checkpoint, "blhs_ckpt_cagg_")
-
-
-def _hourly_delta(spark: SparkSession, sf_dir: str, watermark: str) -> DataFrame:
-    """The one hourly-rollup projection BOTH continuous sinks share:
-    tumbling 1-hour aggregate over the events stream, window start as
-    epoch-ns, day_no derived for partition pruning. One definition —
-    the parquet and snapshot sinks can't silently diverge."""
-    ns_per_day = 86_400_000_000_000
-    stream = read_events_stream(spark, sf_dir)
-    agged = tumbling_agg(stream, window="1 hour", watermark=watermark).select(
-        (F.unix_micros(F.col("window.start")) * 1000).alias("window_start_ns"),
-        "n_events",
-        "total_value",
-    )
-    return agged.withColumn(
-        "day_no", F.expr(f"window_start_ns div {ns_per_day}")
-    )
-
-
-def _run_update_sink(agged: DataFrame, batch_fn, checkpoint, prefix: str) -> None:
-    """Run an update-mode foreachBatch sink with availableNow; a caller
-    checkpoint persists for recovery, a default one is removed after the
-    run (same leak rule as run_available_now — a mkdtemp'd path is
-    returned nowhere, so it could never be reused anyway)."""
-    import shutil
-
-    own = checkpoint is None
-    ckpt = checkpoint or tempfile.mkdtemp(prefix=prefix)
-    try:
-        query = (
-            agged.writeStream.outputMode("update")
-            .foreachBatch(batch_fn)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if own:
-            shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def snapshot_sink_batch(
     table: str,
     maintenance_every: int | None = None,
@@ -319,9 +250,9 @@ def snapshot_sink_batch(
 ):
     """foreachBatch body for the snapshot sink, factored out so the
     maintenance policy is testable batch-by-batch (exactly how Spark
-    drives it): MERGE the micro-batch via the file-pruned partitioned
-    merge, then — when ``maintenance_every`` is set and the version count
-    crosses a multiple of it — run the table's upkeep inline:
+    drives it): MERGE the micro-batch, file-pruned on ``day_no``, then —
+    when ``maintenance_every`` is set and the version count crosses a
+    multiple of it — run the table's upkeep inline:
     ``snapshot_optimize`` bin-packs the accumulated per-batch small files
     (clustered on ``day_no`` so file stats stay prunable) and
     ``checkpoint_history`` rolls the per-version summaries up so history
@@ -341,14 +272,14 @@ def snapshot_sink_batch(
         checkpoint_history,
         list_versions,
         snapshot_bloom_index,
-        snapshot_merge_partitioned,
+        snapshot_merge,
         snapshot_optimize,
     )
 
     def merge_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return  # no empty commits: keep the version history meaningful
-        snapshot_merge_partitioned(
+        snapshot_merge(
             batch_df, table, key_cols=["window_start_ns"], partition_col="day_no"
         )
         if maintenance_every:
@@ -374,28 +305,52 @@ def continuous_aggregate_snapshot(
     target_file_bytes: int = 128 << 20,
     bloom_col: str | None = None,
 ) -> None:
-    """The continuous aggregate with a SNAPSHOT-TABLE sink
-    (sources/snapshots.py): each micro-batch MERGEs into the
-    manifest-versioned table via the file-pruned partitioned merge, so
-    (a) dashboard readers keep a consistent version while batches
-    commit — the property the directory-upsert variant above cannot give
-    without a table format — and (b) every batch leaves a time-travelable
-    commit (one version per micro-batch, vacuumable). This is exactly the
-    foreachBatch→MERGE INTO pattern Delta documents, running on the
-    in-repo manifest format. With ``maintenance_every`` the sink also
-    self-maintains: every N-th version it bin-packs its accumulated
-    small files and checkpoints the history log (see
-    ``snapshot_sink_batch``); ``bloom_col`` forwards to the maintenance
-    cycle's bloom re-index so point lookups stay file-skipping."""
-    agged = _hourly_delta(spark, sf_dir, watermark)
-    _run_update_sink(
-        agged,
-        snapshot_sink_batch(
-            table, maintenance_every, target_file_bytes, bloom_col
-        ),
-        checkpoint,
-        "blhs_ckpt_caggsnap_",
-    )
+    """Incrementally-maintained rollup (continuous aggregate) with a
+    SNAPSHOT-TABLE sink (sources/snapshots.py): the hourly tumbling
+    aggregation (window start as epoch-ns, ``day_no`` derived for file
+    pruning) streamed through an update-mode ``foreachBatch``; each
+    micro-batch MERGEs into the manifest-versioned table, file-pruned on
+    ``day_no``, so a table holding years of history pays per-batch cost
+    proportional to the batch, (a) dashboard readers keep a consistent
+    version while batches commit, and (b) every batch leaves a
+    time-travelable commit (one version per micro-batch, vacuumable).
+    This is the foreachBatch→MERGE INTO pattern Delta documents, running
+    on the in-repo manifest format — the lakehouse upgrade of the
+    reference's nightly recompute-everything cron. With
+    ``maintenance_every`` the sink also self-maintains: every N-th
+    version it bin-packs its accumulated small files and checkpoints the
+    history log (see ``snapshot_sink_batch``); ``bloom_col`` forwards to
+    the maintenance cycle's bloom re-index so point lookups stay
+    file-skipping. A caller ``checkpoint`` persists for recovery; a
+    default one is removed after the run (same leak rule as
+    run_available_now)."""
+    import shutil
+
+    ns_per_day = 86_400_000_000_000
+    stream = read_events_stream(spark, sf_dir)
+    agged = tumbling_agg(stream, window="1 hour", watermark=watermark).select(
+        (F.unix_micros(F.col("window.start")) * 1000).alias("window_start_ns"),
+        "n_events",
+        "total_value",
+    ).withColumn("day_no", F.expr(f"window_start_ns div {ns_per_day}"))
+    own = checkpoint is None
+    ckpt = checkpoint or tempfile.mkdtemp(prefix="blhs_ckpt_caggsnap_")
+    try:
+        query = (
+            agged.writeStream.outputMode("update")
+            .foreachBatch(
+                snapshot_sink_batch(
+                    table, maintenance_every, target_file_bytes, bloom_col
+                )
+            )
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        query.awaitTermination()
+    finally:
+        if own:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def stream_stream_join(

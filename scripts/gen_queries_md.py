@@ -18,7 +18,11 @@ def _row(name: str) -> str:
     return f"| `{name}` | {MODULE[name]} | {first} |"
 
 
-def main() -> None:
+_OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
+
+
+def render() -> str:
+    """QUERIES.md's content for the live registry."""
     load_all()
     lines = [
         "# QUERIES — every registry entry, its module, and what it proves",
@@ -32,10 +36,14 @@ def main() -> None:
     ]
     for name in sorted(GOLDEN):
         lines.append(_row(name))
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {len(GOLDEN)} entries to {out}")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    text = render()
+    with open(_OUT, "w") as f:
+        f.write(text)
+    print(f"wrote {len(GOLDEN)} entries to {_OUT}")
 
 
 if __name__ == "__main__":

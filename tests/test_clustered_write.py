@@ -134,57 +134,41 @@ def test_zorder_value_interleaves_bits(spark):
 
 
 def test_upsert_and_compact_preserve_hive_layout(spark, tmp_path):
-    """A hive-partitioned mart must SURVIVE the full-rewrite upsert and
-    compaction with its layout intact — a flat rewrite beside later
-    dynamic-partition writes mixes layouts and breaks reads."""
+    """A hive-partitioned mart must SURVIVE compaction with its layout
+    intact — a flat rewrite beside later partitioned writes mixes
+    layouts and breaks reads."""
     import os
 
     from bookstore_aws_lakehouse_spark.sources.writers import (
         compact_parquet,
-        upsert_parquet,
-        upsert_parquet_partitioned,
+        write_parquet,
     )
 
     path = str(tmp_path / "mart")
     df = spark.createDataFrame(
         [(k, k % 3, float(k)) for k in range(30)], "k int, day int, v double"
     )
-    df.write.partitionBy("day").parquet(path)
+    write_parquet(df, path, partition_by=["day"])
 
     def layout():
         return sorted(
             d for d in os.listdir(path) if d.startswith("day=")
         ), any(f.endswith(".parquet") for f in os.listdir(path))
 
-    # full-rewrite upsert keeps the partition dirs, adds no root files
-    upsert_parquet(
-        spark.createDataFrame([(1, 1, 99.0), (100, 0, 1.0)], "k int, day int, v double"),
-        path,
-        ["k"],
-    )
-    dirs, root_files = layout()
-    assert dirs == ["day=0", "day=1", "day=2"] and not root_files
-    # compaction too
     compact_parquet(path, spark, target_partitions=1)
     dirs, root_files = layout()
     assert dirs == ["day=0", "day=1", "day=2"] and not root_files
-    # and the partitioned upsert still composes on top
-    upsert_parquet_partitioned(
-        spark.createDataFrame([(2, 2, -1.0)], "k int, day int, v double"),
+    # a later partitioned append still composes on top
+    write_parquet(
+        spark.createDataFrame([(100, 2, -1.0)], "k int, day int, v double"),
         path,
-        ["k"],
-        "day",
+        mode="append",
+        partition_by=["day"],
     )
     got = spark.read.parquet(path)
     assert got.count() == 31
-    assert got.filter("k = 1").head().v == 99.0
-    assert got.filter("k = 2").head().v == -1.0
-    # empty delta: untouched no-op (no rewrite, no swap window)
-    before = sorted(os.listdir(path))
-    upsert_parquet(
-        spark.createDataFrame([], "k int, day int, v double"), path, ["k"]
-    )
-    assert sorted(os.listdir(path)) == before
+    assert got.filter("k = 1").head().v == 1.0
+    assert got.filter("k = 100").head().day == 2
 
 
 def test_events_stream_symlink_is_absolute(spark, tmp_path):

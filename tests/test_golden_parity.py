@@ -59,3 +59,21 @@ def test_duplicate_registration_raises():
             raise AssertionError("never built")
 
     assert GOLDEN[name] is before
+
+
+def test_queries_md_matches_registry():
+    """QUERIES.md is generated from the registry: a row added, removed or
+    re-documented without regenerating it fails here."""
+    import importlib.util
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "gen_queries_md", os.path.join(root, "scripts", "gen_queries_md.py")
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with open(os.path.join(root, "QUERIES.md")) as f:
+        on_disk = f.read()
+    assert on_disk == gen.render(), (
+        "QUERIES.md is stale: run python scripts/gen_queries_md.py"
+    )

@@ -59,7 +59,38 @@ def test_random_op_sequences_match_model(spark, tmp_path, seed):
     ops = ["append", "delete_dv", "delete_dv_ranged", "delete_cow",
            "optimize", "purge_dv", "rename", "rename_back",
            "replace_where", "restore", "update"]
+    # merge steps draw from their own stream, so `rng` draws the same
+    # ops and values for a seed as it did before merges were added
+    mrng = random.Random(seed + 1)
+    merge_key = 1_000_000
     for step in range(14):
+        if mrng.random() < 0.3:
+            # a key upsert in either form: update current keys (keeping
+            # their g, the partitioned form's contract) and insert new ones
+            pairs = list(zip(model["k"], model["g"]))
+            picked = mrng.sample(pairs, min(len(pairs), mrng.randint(1, 4)))
+            rows = [
+                (int(k), int(g), round(mrng.uniform(0, 100), 3))
+                for k, g in picked
+            ] + [
+                (merge_key + i, mrng.randint(0, 9), round(mrng.uniform(0, 100), 3))
+                for i in range(mrng.randint(1, 3))
+            ]
+            merge_key += 1000
+            partition_col = mrng.choice([None, "g"])
+            snap.snapshot_merge(
+                spark.createDataFrame(rows, schema()), table, ["k"],
+                partition_col=partition_col,
+            )
+            delta = pd.DataFrame(rows, columns=["k", "g", val_col])
+            model = pd.concat(
+                [model[~model["k"].isin(delta["k"])], delta], ignore_index=True
+            )
+            history[snap.list_versions(spark, table)[-1]] = model.copy()
+            _assert_same(
+                spark, table, model,
+                f"seed={seed} step={step} op=merge({partition_col})",
+            )
         op = rng.choice(ops)
         if op == "append":
             rows = mk_rows(rng.randint(1, 15), next_key)
@@ -170,6 +201,11 @@ def _apply_op(model: pd.DataFrame, e: dict) -> pd.DataFrame:
         sel = out["k"].between(e["lo"], e["hi"]) & (out["g"] == e["g"])
         out.loc[sel, "v"] = out.loc[sel, "v"] + 1.0
         return out
+    if e["op"] == "merge":
+        delta = pd.DataFrame(e["rows"], columns=["k", "g", "v"])
+        return pd.concat(
+            [model[~model["k"].isin(delta["k"])], delta], ignore_index=True
+        )
     if e["op"] == "replace_where":
         return pd.concat(
             [
@@ -221,8 +257,12 @@ def test_concurrent_writers_serialize_without_lost_updates(spark, tmp_path, seed
 
     def writer(tid: int) -> None:
         rng = random.Random(seed * 101 + tid)
-        # appended keys live in a per-thread block far above the init
-        # stratum keys; 5 ops × 1000 stride never crosses blocks
+        # merges draw from their own stream: `rng`'s op draws per seed
+        # are the ones the fuzz made before merges were added
+        mrng = random.Random(seed * 101 + tid + 50_000)
+        # appended and merged keys live in a per-thread block far above
+        # the init stratum keys; 5 ops and 5 merges × 1000 stride never
+        # cross blocks
         next_k = 100_000 * (tid + 1)
 
         def own(lo_i, hi_i):  # i-th..j-th key of this thread's stratum
@@ -235,6 +275,24 @@ def test_concurrent_writers_serialize_without_lost_updates(spark, tmp_path, seed
                      "update", "replace_where", "optimize", "purge_dv",
                      "zorder"]
                 )
+                if mrng.random() < 0.4:
+                    # a merge into this thread's stratum, file-pruned on
+                    # g: it races the other threads' commits, so the
+                    # rebase runs under real contention
+                    lo_i = mrng.randint(0, 10)
+                    rows = [
+                        (tid + n_threads * i, tid, round(mrng.uniform(0, 100), 3))
+                        for i in range(lo_i, lo_i + mrng.randint(1, 3))
+                    ] + [(next_k, tid, round(mrng.uniform(0, 100), 3))]
+                    next_k += 1_000
+                    try:
+                        v = snap.snapshot_merge(
+                            spark.createDataFrame(rows, schema), table, ["k"],
+                            partition_col="g",
+                        )
+                        logs[tid].append({"op": "merge", "rows": rows, "version": v})
+                    except snap.SnapshotConflictError:
+                        pass  # lost every race: committed nothing
                 try:
                     if op == "append":
                         rows = [

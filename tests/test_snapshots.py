@@ -42,12 +42,27 @@ def test_overwrite_append_and_time_travel(spark, table):
     assert h == {1: "overwrite", 2: "append", 3: "overwrite"}
 
 
-def test_merge_upserts_and_preserves_prior_snapshot(spark, table):
-    snapshot_overwrite(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), table)
-    v = snapshot_merge(_df(spark, [(2, "B!"), (4, "d")]), table, key_cols=["k"])
+@pytest.mark.parametrize("partition_col", [None, "p"])
+def test_merge_upserts_and_preserves_prior_snapshot(spark, table, partition_col):
+    def rows(kv):  # p is a function of the key, as the merge contract asks
+        return spark.createDataFrame(
+            [(k, k % 2, v) for k, v in kv], "k int, p int, v string"
+        )
+
+    snapshot_overwrite(
+        rows([(1, "a"), (2, "b"), (3, "c")]), table,
+        stats_cols=[partition_col] if partition_col else None,
+    )
+    delta = rows([(2, "B!"), (4, "d")])
+    v = snapshot_merge(delta, table, key_cols=["k"], partition_col=partition_col)
     assert v == 2
     got = {r.k: r.v for r in snapshot_read(spark, table).collect()}
     assert got == {1: "a", 2: "B!", 3: "c", 4: "d"}
+    # idempotent: re-applying the same delta leaves the content unchanged
+    snapshot_merge(delta, table, key_cols=["k"], partition_col=partition_col)
+    assert sorted(snapshot_read(spark, table).collect()) == sorted(
+        snapshot_read(spark, table, version=2).collect()
+    )
     # snapshot isolation: version 1 still answers exactly as committed
     old = {r.k: r.v for r in snapshot_read(spark, table, version=1).collect()}
     assert old == {1: "a", 2: "b", 3: "c"}
@@ -69,8 +84,8 @@ def test_merge_null_safe_keys(spark, table):
 
 
 def test_reader_pinned_to_old_version_survives_merge(spark, table):
-    """The staging-swap upsert deletes files a concurrent reader's plan
-    references; the snapshot table must not."""
+    """Rewriting a bare parquet directory in place deletes files a
+    concurrent reader's plan references; the snapshot table must not."""
     snapshot_overwrite(_df(spark, [(i, str(i)) for i in range(100)]), table)
     pinned = snapshot_read(spark, table, version=1)  # plan built, not run
     snapshot_merge(_df(spark, [(5, "five")]), table, key_cols=["k"])
@@ -139,7 +154,7 @@ def test_missing_table_raises(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# snapshot_merge_partitioned: file-pruned merge with footer stats
+# snapshot_merge: file-pruned merge with footer stats
 # ---------------------------------------------------------------------------
 
 
@@ -150,20 +165,19 @@ def _pdf(spark, rows):
 def test_partitioned_merge_values_and_file_pruning(spark, table):
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_merge_partitioned,
     )
 
     base = _pdf(
         spark,
         [(1, "a", "x1"), (2, "a", "x2"), (3, "b", "x3"), (4, "c", "x4")],
     )
-    snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snapshot_merge(base, table, key_cols=["k"], partition_col="p")
     m1 = _read_manifest(spark, table, 1)
     assert m1.get("file_stats"), "footer stats must be collected locally"
 
     # delta touches ONLY partition 'a': update k=2, insert k=5
     delta = _pdf(spark, [(2, "a", "X2!"), (5, "a", "x5")])
-    snapshot_merge_partitioned(delta, table, key_cols=["k"], partition_col="p")
+    snapshot_merge(delta, table, key_cols=["k"], partition_col="p")
     got = {r.k: r.v for r in snapshot_read(spark, table).collect()}
     assert got == {1: "x1", 2: "X2!", 3: "x3", 4: "x4", 5: "x5"}
 
@@ -178,31 +192,46 @@ def test_partitioned_merge_values_and_file_pruning(spark, table):
 
 
 def test_partitioned_merge_null_partition(spark, table):
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge_partitioned,
-    )
-
+    """A delta touching the NULL partition replaces its key there and
+    keeps the NULL partition's unrelated keys (k=3)."""
     base = spark.createDataFrame(
-        [(1, None, "null-old"), (2, "a", "x2")], "k int, p string, v string"
+        [(1, None, "null-old"), (2, "a", "x2"), (3, None, "null-other")],
+        "k int, p string, v string",
     )
-    snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snapshot_merge(base, table, key_cols=["k"], partition_col="p")
     delta = spark.createDataFrame(
         [(1, None, "null-new")], "k int, p string, v string"
     )
-    snapshot_merge_partitioned(delta, table, key_cols=["k"], partition_col="p")
+    snapshot_merge(delta, table, key_cols=["k"], partition_col="p")
     got = {r.k: r.v for r in snapshot_read(spark, table).collect()}
-    assert got == {1: "null-new", 2: "x2"}
+    assert got == {1: "null-new", 2: "x2", 3: "null-other"}
+
+
+def test_partitioned_merge_caps_partition_cardinality(spark, table, monkeypatch):
+    """A key-grade partition column (unbounded cardinality) must raise a
+    clear error before collecting anything unbounded to the driver, and
+    leave the table unchanged. The cap is monkeypatched low so the test
+    stays fast."""
+    from bookstore_aws_lakehouse_spark.sources import snapshots as snap
+
+    seed = spark.createDataFrame([(0, 0, "v")], "k long, p long, v string")
+    snapshot_merge(seed, table, key_cols=["k"], partition_col="p")
+    monkeypatch.setattr(snap, "MAX_MERGE_PARTITIONS", 5)
+    delta = spark.range(10).selectExpr("id AS k", "id AS p", "'x' AS v")
+    with pytest.raises(ValueError, match="distinct 'p' values"):
+        snapshot_merge(delta, table, key_cols=["k"], partition_col="p")
+    assert list_versions(spark, table) == [1]
+    # under the cap still works
+    small = spark.range(3).selectExpr("id AS k", "id AS p", "'y' AS v")
+    snapshot_merge(small, table, key_cols=["k"], partition_col="p")
+    assert snapshot_read(spark, table).filter("v = 'y'").count() == 3
 
 
 def test_partitioned_merge_without_stats_degrades_to_full(spark, table):
     """A table seeded by snapshot_overwrite has no file_stats: every file
     is treated as touched — full rewrite, correct values."""
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge_partitioned,
-    )
-
     snapshot_overwrite(_pdf(spark, [(1, "a", "x1"), (3, "b", "x3")]), table)
-    snapshot_merge_partitioned(
+    snapshot_merge(
         _pdf(spark, [(1, "a", "X1!")]), table, key_cols=["k"], partition_col="p"
     )
     got = {r.k: r.v for r in snapshot_read(spark, table).collect()}
@@ -210,14 +239,10 @@ def test_partitioned_merge_without_stats_degrades_to_full(spark, table):
 
 
 def test_partitioned_merge_time_travel_preserved(spark, table):
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge_partitioned,
-    )
-
-    snapshot_merge_partitioned(
+    snapshot_merge(
         _pdf(spark, [(1, "a", "v1")]), table, key_cols=["k"], partition_col="p"
     )
-    snapshot_merge_partitioned(
+    snapshot_merge(
         _pdf(spark, [(1, "a", "v2")]), table, key_cols=["k"], partition_col="p"
     )
     assert {r.v for r in snapshot_read(spark, table, version=1).collect()} == {"v1"}
@@ -228,7 +253,6 @@ def test_snapshot_scan_prunes_files_by_stats(spark, table):
     """Scan planning: a range predicate on a stats column must open only
     the files whose [min,max] can intersect — checked via inputFiles()."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge_partitioned,
         snapshot_scan,
     )
 
@@ -236,7 +260,7 @@ def test_snapshot_scan_prunes_files_by_stats(spark, table):
     # and disjoint (m correlates with the clustering column)
     rows = [(i, f"p{i // 8}", i * 10) for i in range(64)]
     df = spark.createDataFrame(rows, "k int, p string, m int")
-    snapshot_merge_partitioned(
+    snapshot_merge(
         df, table, key_cols=["k"], partition_col="p", stats_cols=["m"]
     )
     full = snapshot_read(spark, table)
@@ -306,7 +330,6 @@ def test_partitioned_merge_sequence_equals_dict_replay(spark, tmp_path_factory, 
     carried-file paths. The partition value per key is pinned (k % 3's
     letter) to honor the functional-dependency contract."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge_partitioned,
         snapshot_read,
     )
 
@@ -320,7 +343,7 @@ def test_partitioned_merge_sequence_equals_dict_replay(spark, tmp_path_factory, 
         for k, _p, v in batch:
             rows[k] = (k, letters[k % 3], v)
         df = spark.createDataFrame(list(rows.values()), "k int, p string, v string")
-        snapshot_merge_partitioned(df, table, key_cols=["k"], partition_col="p")
+        snapshot_merge(df, table, key_cols=["k"], partition_col="p")
         for k, p, v in rows.values():
             replay[k] = (p, v)
     got = {r.k: (r.p, r.v) for r in snapshot_read(spark, table).collect()}
@@ -467,7 +490,7 @@ def _racing_merge_setup(spark, table, racer_delta):
         spark,
         [(1, "a", "a1"), (2, "b", "b2"), (3, "d", "d3")],
     )
-    snap.snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snap.snapshot_merge(base, table, key_cols=["k"], partition_col="p")
 
     real_claim = snap._claim_version
     real_write = snap._write_data_files
@@ -481,7 +504,7 @@ def _racing_merge_setup(spark, table, racer_delta):
     def racing_claim(spark_, table_, manifest, v):
         if not state["fired"] and manifest.get("operation") == "merge":
             state["fired"] = True  # guard BEFORE the recursive merge below
-            snap.snapshot_merge_partitioned(
+            snap.snapshot_merge(
                 racer_delta, table_, key_cols=["k"], partition_col="p"
             )
         return real_claim(spark_, table_, manifest, v)
@@ -518,7 +541,7 @@ def test_partitioned_merge_rebases_provably_disjoint_racer(
     counts, restore = _racing_merge_setup(spark, table, racer)
     try:
         ours = _pdf(spark, [(2, "b", "B2!"), (4, "b", "b4")])
-        v = snap.snapshot_merge_partitioned(
+        v = snap.snapshot_merge(
             ours, table, key_cols=["k"], partition_col="p"
         )
     finally:
@@ -536,7 +559,7 @@ def test_partitioned_merge_rebases_provably_disjoint_racer(
     m3 = snap._read_manifest(spark, table, 3)
     assert m3.get("file_stats"), "rebase must compose stats, not drop them"
     later = _pdf(spark, [(1, "a", "A1!")])
-    snap.snapshot_merge_partitioned(later, table, key_cols=["k"], partition_col="p")
+    snap.snapshot_merge(later, table, key_cols=["k"], partition_col="p")
     m4 = snap._read_manifest(spark, table, 4)
     assert set(m3["files"]) & set(m4["files"]), "stats lost: nothing carried"
 
@@ -552,7 +575,7 @@ def test_partitioned_merge_recomputes_overlapping_racer(spark, table):
     counts, restore = _racing_merge_setup(spark, table, racer)
     try:
         ours = _pdf(spark, [(2, "b", "OURS"), (4, "b", "b4")])
-        v = snap.snapshot_merge_partitioned(
+        v = snap.snapshot_merge(
             ours, table, key_cols=["k"], partition_col="p"
         )
     finally:
@@ -571,7 +594,7 @@ def test_partitioned_merge_recomputes_across_overwrite_racer(spark, table):
     from bookstore_aws_lakehouse_spark.sources import snapshots as snap
 
     base = _pdf(spark, [(1, "a", "a1"), (2, "b", "b2")])
-    snap.snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snap.snapshot_merge(base, table, key_cols=["k"], partition_col="p")
 
     real_claim = snap._claim_version
     state = {"fired": False}
@@ -585,7 +608,7 @@ def test_partitioned_merge_recomputes_across_overwrite_racer(spark, table):
     snap._claim_version = racing_claim
     try:
         ours = _pdf(spark, [(2, "b", "OURS")])
-        v = snap.snapshot_merge_partitioned(
+        v = snap.snapshot_merge(
             ours, table, key_cols=["k"], partition_col="p"
         )
     finally:
@@ -594,6 +617,36 @@ def test_partitioned_merge_recomputes_across_overwrite_racer(spark, table):
     got = {r.k: r.v for r in snapshot_read(spark, table).collect()}
     # merge applied to the OVERWRITTEN state, not the stale base
     assert got == {2: "OURS", 9: "wiped"}
+
+
+def test_partitioned_merge_recomputes_when_racer_dropped_touched_file(spark, table):
+    """A DELETE racer that dropped a file this merge rewrote adds no file,
+    so only the rebase's touched-files check sees the conflict: a rebase
+    would resurrect the racer's deleted rows (k=3) from the merge's
+    rewrite."""
+    from bookstore_aws_lakehouse_spark.sources import snapshots as snap
+
+    base = _pdf(spark, [(1, "a", "a1"), (2, "b", "b2"), (3, "b", "b3")])
+    snap.snapshot_merge(base, table, key_cols=["k"], partition_col="p")
+
+    real_claim = snap._claim_version
+    state = {"fired": False}
+
+    def racing_claim(spark_, table_, manifest, v):
+        if not state["fired"] and manifest.get("operation") == "merge":
+            state["fired"] = True
+            snap.snapshot_delete(spark, table_, "p", "b", "b")
+        return real_claim(spark_, table_, manifest, v)
+
+    snap._claim_version = racing_claim
+    try:
+        ours = _pdf(spark, [(2, "b", "OURS")])
+        v = snap.snapshot_merge(ours, table, key_cols=["k"], partition_col="p")
+    finally:
+        snap._claim_version = real_claim
+    assert v == 3
+    got = {r.k: r.v for r in snapshot_read(spark, table).collect()}
+    assert got == {1: "a1", 2: "OURS"}
 
 
 # ---------------------------------------------------------------------------
@@ -669,7 +722,7 @@ def test_snapshot_delete_prunes_carries_and_keeps_nulls(spark, table):
          (3, "d", "d3"), (6, None, "n6")],
         "k int, p string, v string",
     )
-    snap.snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snap.snapshot_merge(base, table, key_cols=["k"], partition_col="p")
     m1 = snap._read_manifest(spark, table, 1)
 
     v = snap.snapshot_delete(spark, table, "p", "b", "b", "k % 2 = 0")
@@ -700,7 +753,7 @@ def test_snapshot_delete_whole_file_drops_from_manifest(spark, table):
     from bookstore_aws_lakehouse_spark.sources import snapshots as snap
 
     base = _pdf(spark, [(1, "a", "a1"), (2, "b", "b2")])
-    snap.snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snap.snapshot_merge(base, table, key_cols=["k"], partition_col="p")
     snap.snapshot_delete(spark, table, "p", "b", "b")
     got = {r.k: r.v for r in snapshot_read(spark, table).collect()}
     assert got == {1: "a1"}
@@ -808,9 +861,9 @@ def test_snapshot_changes_feed(spark, table):
     from bookstore_aws_lakehouse_spark.sources import snapshots as snap
 
     base = _pdf(spark, [(1, "a", "x1"), (2, "b", "x2"), (3, "d", "x3")])
-    snap.snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snap.snapshot_merge(base, table, key_cols=["k"], partition_col="p")
     delta = _pdf(spark, [(2, "b", "X2!"), (4, "b", "x4")])
-    snap.snapshot_merge_partitioned(delta, table, key_cols=["k"], partition_col="p")
+    snap.snapshot_merge(delta, table, key_cols=["k"], partition_col="p")
     snap.snapshot_delete(spark, table, "p", "d", "d")
 
     got = {
@@ -1191,6 +1244,53 @@ def test_constraints_enforced_on_all_writers(spark, table):
     snapshot_append(spark.createDataFrame([(5, -2)], "k int, amt int"), table)
     got = {r.k: r.amt for r in snapshot_read(spark, table).collect()}
     assert got == {1: 10, 2: 20, 4: None, 5: -2}
+
+
+@pytest.mark.parametrize(
+    "writer", ["merge", "merge_partitioned", "append", "overwrite"]
+)
+def test_constraints_check_the_committed_rows(
+    spark, table, tmp_path, monkeypatch, writer
+):
+    """CHECK constraints validate exactly the rows a writer commits, not
+    a second evaluation of the delta: here the delta's ``v`` comes from a
+    nondeterministic UDF that turns negative once the real check has run
+    (the patched check touches a flag file the UDF reads). Every writer
+    must commit the rows it checked."""
+    import os
+
+    from pyspark.sql.types import IntegerType
+
+    from bookstore_aws_lakehouse_spark.sources import snapshots as snap
+
+    snapshot_overwrite(
+        spark.createDataFrame([(0, 0, 10)], "k int, p int, v int"), table
+    )
+    snap.snapshot_add_constraint(spark, table, "nonneg", "v >= 0")
+    flag = str(tmp_path / "checked")
+    real_validate = snap._validate_constraints
+
+    def validate_then_flip(df, constraints):
+        real_validate(df, constraints)
+        open(flag, "w").close()
+
+    monkeypatch.setattr(snap, "_validate_constraints", validate_then_flip)
+    flips = F.udf(
+        lambda: -1 if os.path.exists(flag) else 1, IntegerType()
+    ).asNondeterministic()
+    delta = spark.createDataFrame(
+        [(k, k % 2) for k in (1, 2, 3)], "k int, p int"
+    ).withColumn("v", flips())
+    if writer == "append":
+        snapshot_append(delta, table)
+    elif writer == "overwrite":
+        snapshot_overwrite(delta, table)
+    else:
+        partition_col = "p" if writer == "merge_partitioned" else None
+        snapshot_merge(delta, table, ["k"], partition_col=partition_col)
+    assert os.path.exists(flag), "the constraint check never ran"
+    got = {r.k: r.v for r in snapshot_read(spark, table).collect() if r.k}
+    assert got == {1: 1, 2: 1, 3: 1}
 
 
 def test_materialized_rollup_build_refresh_lifecycle(spark, table, tmp_path):
@@ -1948,14 +2048,13 @@ def test_replace_where_swaps_exactly_the_range(spark, table):
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_delete_dv,
-        snapshot_merge_partitioned,
         snapshot_replace_where,
     )
 
     base = spark.createDataFrame(
         [(k, k // 10, float(k)) for k in range(100)], "k int, p bigint, v double"
     )
-    snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snapshot_merge(base, table, key_cols=["k"], partition_col="p")
     snapshot_delete_dv(spark, table, "k = 55")  # MoR-dead inside the range
     m0 = _read_manifest(spark, table, 2)
     stats = m0.get("file_stats") or {}
@@ -2096,13 +2195,12 @@ def test_dv_delete_ranged_form_prunes_files(spark, table):
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_delete_dv,
-        snapshot_merge_partitioned,
     )
 
     base = spark.createDataFrame(
         [(k, k // 25, float(k)) for k in range(100)], "k int, p bigint, v double"
     )
-    snapshot_merge_partitioned(base, table, key_cols=["k"], partition_col="p")
+    snapshot_merge(base, table, key_cols=["k"], partition_col="p")
     v = snapshot_delete_dv(spark, table, column="p", lo=1, hi=1,
                            extra_condition="k % 2 = 0")
     m = _read_manifest(spark, table, v)
@@ -2226,11 +2324,6 @@ def test_merge_refuses_type_drifted_delta(spark, table):
     Both merge forms refuse with a CAST hint instead."""
     import pytest
 
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_merge,
-        snapshot_merge_partitioned,
-    )
-
     snapshot_overwrite(
         spark.createDataFrame([(1, 10)], "k int, v int"), table
     )
@@ -2239,7 +2332,7 @@ def test_merge_refuses_type_drifted_delta(spark, table):
             spark.createDataFrame([(1, 1.5)], "k int, v double"), table, ["k"]
         )
     with pytest.raises(ValueError, match="CAST"):
-        snapshot_merge_partitioned(
+        snapshot_merge(
             spark.createDataFrame([(1, 1.5)], "k int, v double"),
             table,
             key_cols=["k"],

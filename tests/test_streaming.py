@@ -27,48 +27,6 @@ def test_sliding_windows_overlap(spark, sf_smoke):
     assert out.agg(F.sum("n_events")).collect()[0][0] == 2 * total_events
 
 
-def test_continuous_aggregate_equals_batch(spark, sf_smoke, tmp_path):
-    """foreachBatch-upserted continuous aggregate must equal the batch
-    hourly rollup after processing all data."""
-    from bookstore_aws_lakehouse_spark.registry import load_all
-    from bookstore_aws_lakehouse_spark.streaming.jobs import continuous_hourly_aggregate
-
-    out = str(tmp_path / "hourly_mart")
-    continuous_hourly_aggregate(spark, sf_smoke, out)
-    got = {
-        r["window_start_ns"]: (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(out).collect()
-    }
-    g, _ = load_all()
-    want = {
-        r["window_start_ns"]: (r["n_events"], r["total_value"])
-        for r in g["events_hourly_tumbling"](spark, sf_smoke).collect()
-    }
-    assert got == want
-
-
-def test_checkpoint_recovery_is_exactly_once(spark, sf_smoke, tmp_path):
-    """Restarting the continuous aggregate against the SAME checkpoint must
-    process nothing new (the source offset log remembers completed files)
-    and leave the mart byte-identical — the exactly-once contract."""
-    from bookstore_aws_lakehouse_spark.streaming.jobs import continuous_hourly_aggregate
-
-    out = str(tmp_path / "mart")
-    ckpt = str(tmp_path / "ckpt")
-    continuous_hourly_aggregate(spark, sf_smoke, out, checkpoint=ckpt)
-    first = sorted(
-        (r["window_start_ns"], r["n_events"], r["total_value"])
-        for r in spark.read.parquet(out).collect()
-    )
-    # second run, same checkpoint: no new input files → no reprocessing
-    continuous_hourly_aggregate(spark, sf_smoke, out, checkpoint=ckpt)
-    second = sorted(
-        (r["window_start_ns"], r["n_events"], r["total_value"])
-        for r in spark.read.parquet(out).collect()
-    )
-    assert first == second
-
-
 def test_continuous_aggregate_snapshot_commits_and_vacuums(spark, sf_smoke, tmp_path):
     """Streaming → snapshot-table sink: every micro-batch lands as a
     'merge' commit; vacuum bounds history without changing the answer."""

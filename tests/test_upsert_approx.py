@@ -1,144 +1,31 @@
-"""Idempotent upsert sink + approximate-aggregate accuracy."""
+"""Parquet sink maintenance (compaction swap) + approximate-aggregate accuracy."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
-
-from bookstore_aws_lakehouse_spark.sources.writers import upsert_parquet
-
-
-def test_upsert_parquet(spark):
-    path = tempfile.mkdtemp(prefix="blhs_up_") + "/t"
-    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
-    upsert_parquet(base, path, ["k"])
-    # update one key, insert one key
-    delta = spark.createDataFrame([(2, "B2"), (4, "d")], ["k", "v"])
-    upsert_parquet(delta, path, ["k"])
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
-    # idempotent: re-applying the same delta changes nothing
-    upsert_parquet(delta, path, ["k"])
-    again = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert again == got
-
-
-def test_upsert_parquet_partitioned_rewrites_only_touched_partitions(spark):
-    """Partition-pruned MERGE at sf0.1: a delta touching one
-    o_orderstatus partition must leave every other partition's files
-    byte-identical on disk (same names, sizes, mtimes) — the 100 TB
-    contract that upserts cost O(touched partitions), not O(mart)."""
-    import os
-
-    from bookstore_aws_lakehouse_spark.sources.writers import (
-        upsert_parquet_partitioned,
-    )
-
-    path = tempfile.mkdtemp(prefix="blhs_upp_") + "/mart"
-    orders = spark.read.parquet("/root/testdata/sf0.1/orders.parquet").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    upsert_parquet_partitioned(orders, path, ["o_orderkey"], "o_orderstatus")
-    n0 = spark.read.parquet(path).count()
-
-    def files_of(status):
-        d = f"{path}/o_orderstatus={status}"
-        return {
-            f: (os.path.getsize(f"{d}/{f}"), os.path.getmtime(f"{d}/{f}"))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    statuses = [r[0] for r in spark.read.parquet(path).select("o_orderstatus").distinct().collect()]
-    touched = statuses[0]
-    untouched_before = {s: files_of(s) for s in statuses if s != touched}
-
-    some_keys = [
-        r["o_orderkey"]
-        for r in orders.filter(F.col("o_orderstatus") == touched).limit(5).collect()
-    ]
-    delta = spark.createDataFrame(
-        [(k, touched, -1.0) for k in some_keys]
-        + [(10**9 + 1, touched, -2.0)],  # one brand-new key
-        ["o_orderkey", "o_orderstatus", "o_totalprice"],
-    )
-    upsert_parquet_partitioned(delta, path, ["o_orderkey"], "o_orderstatus")
-
-    back = spark.read.parquet(path)
-    assert back.count() == n0 + 1
-    assert back.filter(F.col("o_totalprice") == -1.0).count() == 5
-    assert back.filter(F.col("o_orderkey") == 10**9 + 1).count() == 1
-    for s, before in untouched_before.items():
-        assert files_of(s) == before, f"partition {s} was rewritten"
-
-
-def test_upsert_partitioned_key_move_contract_edge(spark, tmp_path):
-    """The documented contract edge (writers.py): a key whose partition
-    value CHANGES leaves its old copy in an untouched partition. Default
-    mode exhibits exactly that (characterized here so a behavior change
-    is loud); check_key_moves=True must detect the move and refuse
-    before writing anything."""
-    import pytest
-
-    from bookstore_aws_lakehouse_spark.sources.writers import (
-        upsert_parquet_partitioned,
-    )
-
-    path = str(tmp_path / "mart")
-    base = spark.createDataFrame(
-        [(1, "d1", 10.0), (2, "d1", 20.0), (3, "d2", 30.0)],
-        ["k", "day", "v"],
-    )
-    upsert_parquet_partitioned(base, path, ["k"], "day")
-
-    # key 1 moves from partition d1 to d2: contract violation
-    moved = spark.createDataFrame([(1, "d2", 11.0)], ["k", "day", "v"])
-
-    with pytest.raises(ValueError, match="not functionally dependent"):
-        upsert_parquet_partitioned(moved, path, ["k"], "day", check_key_moves=True)
-    # the refusal happened BEFORE any write: mart unchanged
-    assert {(r["k"], r["day"], r["v"]) for r in spark.read.parquet(path).collect()} == {
-        (1, "d1", 10.0),
-        (2, "d1", 20.0),
-        (3, "d2", 30.0),
-    }
-
-    # default (pruned, trusting) mode: the old copy survives — documented
-    upsert_parquet_partitioned(moved, path, ["k"], "day")
-    rows = {(r["k"], r["day"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert (1, "d2", 11.0) in rows
-    assert (1, "d1", 10.0) in rows  # the stale copy the contract warns about
-
-    # a delta that RESPECTS the contract passes the audit
-    ok = spark.createDataFrame([(4, "d1", 40.0)], ["k", "day", "v"])
-    upsert_parquet_partitioned(ok, path, ["k"], "day", check_key_moves=True)
-    assert (4, "d1", 40.0) in {
-        (r["k"], r["day"], r["v"]) for r in spark.read.parquet(path).collect()
-    }
 
 
 def test_upsert_and_compact_swap_via_hadoop_fs(spark, tmp_path):
-    """The rewrite path stages NEXT TO the destination and swaps via the
+    """Compaction stages NEXT TO the destination and swaps via the
     Hadoop FileSystem API (delete+rename) — no /tmp staging, no shutil:
     the same code path a remote (s3a/hdfs) mart would take. Verifies no
-    staging directory is left behind and data survives both swaps."""
+    staging directory is left behind and the data survives the swap."""
     import os
 
-    from bookstore_aws_lakehouse_spark.sources.writers import compact_parquet
+    from bookstore_aws_lakehouse_spark.sources.writers import (
+        compact_parquet,
+        write_parquet,
+    )
 
     path = str(tmp_path / "t")
-    base = spark.createDataFrame([(i, f"v{i}") for i in range(100)], ["k", "v"])
-    upsert_parquet(base, path, ["k"])
-    delta = spark.createDataFrame([(5, "V5"), (200, "v200")], ["k", "v"])
-    upsert_parquet(delta, path, ["k"])
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got[5] == "V5" and got[200] == "v200" and len(got) == 101
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(101)], ["k", "v"])
+    write_parquet(base.repartition(4), path)
     n = compact_parquet(path, spark, target_partitions=1)
     assert n == 1
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert len(files) == 1
-    assert len(spark.read.parquet(path).collect()) == 101
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {i: f"v{i}" for i in range(101)}
     # no stranded staging siblings
     siblings = [d for d in os.listdir(tmp_path) if "__staging_" in d]
     assert siblings == [], siblings
@@ -185,81 +72,3 @@ def test_save_as_table_and_read_json(spark, tmp_path):
     df.write.json(jpath)
     back = read_json(spark, jpath, schema="id long, v string")
     assert {r["id"] for r in back.collect()} == {1, 2}
-
-
-def test_upsert_partitioned_null_partition_preserves_unrelated_keys(spark, tmp_path):
-    """A delta touching the NULL partition must not delete the other keys
-    living there: isin() is null-unsafe, so the pruning predicate needs an
-    explicit isNull branch."""
-    from bookstore_aws_lakehouse_spark.sources.writers import upsert_parquet_partitioned
-
-    path = str(tmp_path / "mart")
-    base = spark.createDataFrame(
-        [(1, None, "a"), (2, None, "b"), (3, "p1", "c")],
-        "k long, part string, v string",
-    )
-    upsert_parquet_partitioned(base, path, ["k"], "part")
-    delta = spark.createDataFrame([(1, None, "A2")], "k long, part string, v string")
-    upsert_parquet_partitioned(delta, path, ["k"], "part")
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "A2", 2: "b", 3: "c"}
-
-
-def test_upsert_null_key_is_idempotent(spark, tmp_path):
-    """NULL key values must merge like any other key (null-safe anti-join)
-    — re-delivering the same NULL-keyed row may not duplicate it."""
-    from bookstore_aws_lakehouse_spark.sources.writers import (
-        upsert_parquet,
-        upsert_parquet_partitioned,
-    )
-
-    p1 = str(tmp_path / "flat")
-    upsert_parquet(spark.createDataFrame([(None, "v1"), (1, "a")], "k long, v string"), p1, ["k"])
-    upsert_parquet(spark.createDataFrame([(None, "v2")], "k long, v string"), p1, ["k"])
-    got = {r["k"]: r["v"] for r in spark.read.parquet(p1).collect()}
-    assert got == {None: "v2", 1: "a"}
-
-    p2 = str(tmp_path / "parted")
-    base = spark.createDataFrame([(None, "d1", "v1"), (1, "d1", "a")], "k long, part string, v string")
-    upsert_parquet_partitioned(base, p2, ["k"], "part")
-    upsert_parquet_partitioned(
-        spark.createDataFrame([(None, "d1", "v2")], "k long, part string, v string"),
-        p2, ["k"], "part",
-    )
-    got = {r["k"]: r["v"] for r in spark.read.parquet(p2).collect()}
-    assert got == {None: "v2", 1: "a"}
-
-
-def test_upsert_partitioned_empty_first_delta_is_noop(spark, tmp_path):
-    """An empty delta before the mart exists must not create a schema-less
-    directory that poisons every later read."""
-    from bookstore_aws_lakehouse_spark.sources.writers import upsert_parquet_partitioned
-
-    path = str(tmp_path / "mart")
-    empty = spark.createDataFrame([], "k long, part string, v string")
-    upsert_parquet_partitioned(empty, path, ["k"], "part")
-    real = spark.createDataFrame([(1, "p", "x")], "k long, part string, v string")
-    upsert_parquet_partitioned(real, path, ["k"], "part")  # must not crash
-    assert spark.read.parquet(path).count() == 1
-
-
-def test_upsert_partitioned_caps_partition_cardinality(spark, tmp_path, monkeypatch):
-    """A key-grade partition column (unbounded cardinality) must raise a
-    clear error before collecting anything unbounded to the driver —
-    not OOM it. The cap is monkeypatched low so the test stays fast."""
-    import pytest
-
-    from bookstore_aws_lakehouse_spark.sources import writers
-    from bookstore_aws_lakehouse_spark.sources.writers import upsert_parquet_partitioned
-
-    path = str(tmp_path / "mart")
-    seed = spark.createDataFrame([(0, 0, "v")], "k long, part long, v string")
-    upsert_parquet_partitioned(seed, path, ["k"], "part")
-    monkeypatch.setattr(writers, "MAX_UPSERT_PARTITIONS", 5)
-    delta = spark.range(10).selectExpr("id AS k", "id AS part", "'x' AS v")
-    with pytest.raises(ValueError, match="distinct 'part' values"):
-        upsert_parquet_partitioned(delta, path, ["k"], "part")
-    # under the cap still works
-    small = spark.range(3).selectExpr("id AS k", "id AS part", "'y' AS v")
-    upsert_parquet_partitioned(small, path, ["k"], "part")
-    assert spark.read.parquet(path).filter("v = 'y'").count() == 3
