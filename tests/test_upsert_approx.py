@@ -1,4 +1,4 @@
-"""Parquet sink maintenance (compaction swap) + approximate-aggregate accuracy."""
+"""Parquet sink maintenance (compaction swap), partitioned upsert into a snapshot table, and approximate-aggregate accuracy."""
 
 from __future__ import annotations
 
@@ -29,6 +29,27 @@ def test_upsert_and_compact_swap_via_hadoop_fs(spark, tmp_path):
     # no stranded staging siblings
     siblings = [d for d in os.listdir(tmp_path) if "__staging_" in d]
     assert siblings == [], siblings
+
+
+def test_upsert_partitioned_null_partition_preserves_unrelated_keys(spark, tmp_path):
+    """A partitioned upsert touching the NULL partition must not delete the
+    other keys living there: isin() is null-unsafe, so the pruning
+    predicate needs an explicit isNull branch."""
+    from bookstore_aws_lakehouse_spark.sources.snapshots import (
+        snapshot_merge,
+        snapshot_read,
+    )
+
+    path = str(tmp_path / "mart")
+    base = spark.createDataFrame(
+        [(1, None, "a"), (2, None, "b"), (3, "p1", "c")],
+        "k long, part string, v string",
+    )
+    snapshot_merge(base, path, key_cols=["k"], partition_col="part")
+    delta = spark.createDataFrame([(1, None, "A2")], "k long, part string, v string")
+    snapshot_merge(delta, path, key_cols=["k"], partition_col="part")
+    got = {r["k"]: r["v"] for r in snapshot_read(spark, path).collect()}
+    assert got == {1: "A2", 2: "b", 3: "c"}
 
 
 def test_approx_count_distinct_accuracy(spark, sf_oracle):
