@@ -9,7 +9,11 @@ catalog; temp views over parquet locations (tests/driver) or
 
 from __future__ import annotations
 
+import threading
+import weakref
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import __version__ as _PYSPARK_VERSION, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -47,18 +51,35 @@ TABLES: tuple[str, ...] = (
 #: stranding it — bounded by the number of distinct tables.
 _TABLE_CACHE_ATTR = "_blhs_table_cache"
 
+#: the conf ``load_events`` reads the events file under (see its NOTE)
+_NANOS_AS_LONG = ("spark.sql.legacy.parquet.nanosAsLong", "true")
+#: memo key of ``load_events``' epoch-ns plan, distinct from the raw read
+_EVENTS_NS = "events@ns"
+
+
+#: guards the creation of per-session state (the table memo, the view
+#: record), so concurrent first users of a session all get the same one
+_SESSION_STATE_GUARD = threading.Lock()
+
+
+def _table_cache(spark: SparkSession) -> dict:
+    """The session's table memo, created on first use."""
+    with _SESSION_STATE_GUARD:
+        cache = getattr(spark, _TABLE_CACHE_ATTR, None)
+        if cache is None:
+            cache = {}
+            try:
+                setattr(spark, _TABLE_CACHE_ATTR, cache)
+            except Exception:
+                pass  # exotic session proxy refusing attributes: cache per call
+        return cache
+
 
 def _cached_read(spark: SparkSession, sf_dir: str, name: str, path: str, build):
     """Fingerprint-validated memo lookup: returns the cached plan when the
     file fingerprint still matches, else rebuilds via ``build()`` and
     replaces the entry in place."""
-    cache = getattr(spark, _TABLE_CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        try:
-            setattr(spark, _TABLE_CACHE_ATTR, cache)
-        except Exception:
-            pass  # exotic session proxy refusing attributes: cache per call
+    cache = _table_cache(spark)
     fp = _file_fingerprint(path)
     key = (sf_dir, name)
     hit = cache.get(key)
@@ -132,7 +153,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
 
     def build() -> DataFrame:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(*_NANOS_AS_LONG)
         df = spark.read.parquet(path)
         ts_type = df.schema["ts"].dataType
         if not isinstance(ts_type, LongType):
@@ -146,19 +167,74 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return df
 
-    # distinct from the raw 'events' entry; fingerprint-validated the same way
-    return _cached_read(spark, sf_dir, "events@ns", path, build)
+    return _cached_read(spark, sf_dir, _EVENTS_NS, path, build)
+
+
+def _is_memoized(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    """Whether the session's memo holds ``name`` as the file now on disk."""
+    hit = _table_cache(spark).get((sf_dir, _EVENTS_NS if name == "events" else name))
+    return hit is not None and hit[0] == _file_fingerprint(f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    return {
-        name: load_events(spark, sf_dir)
-        if name == "events"  # ts normalized to epoch-ns bigint (any precision)
-        else load_table(spark, sf_dir, name)
-        for name in names
-    }
+    """Scan ``names`` (``events`` through :func:`load_events`, the rest
+    through :func:`load_table`), one thread per table not yet memoized.
+
+    A cold read is one small parquet schema-inference job, bound by
+    latency rather than cores, so the cold reads overlap; a memo hit
+    costs a stat and stays on the caller's thread. Each worker inherits
+    the caller's job group and description. The conf ``load_events``
+    reads under is set before the threads start, so every table is read
+    under the same conf whatever the thread timing; the session's table
+    memo is created under a lock, so no entry is lost to a race."""
+
+    def read(name: str) -> DataFrame:
+        if name == "events":  # ts normalized to epoch-ns bigint (any precision)
+            return load_events(spark, sf_dir)
+        return load_table(spark, sf_dir, name)
+
+    cold = [n for n in dict.fromkeys(names) if not _is_memoized(spark, sf_dir, n)]
+    if len(cold) > 1:
+        if "events" in cold:
+            spark.conf.set(*_NANOS_AS_LONG)
+        # pyspark 4 takes the session and then carries its tags as well;
+        # 3.5 takes the target alone
+        if int(_PYSPARK_VERSION.split(".")[0]) >= 4:
+            worker = inheritable_thread_target(spark)(read)
+        else:
+            worker = inheritable_thread_target(read)
+        with ThreadPoolExecutor(max_workers=len(cold)) as pool:
+            list(pool.map(worker, cold))
+    return {name: read(name) for name in names}
+
+
+class _Views:
+    """Which ``sf_dir`` a session's ten table views point at (None: unknown
+    or mixed), and the lock that keeps them still while a query is
+    analysed against them."""
+
+    __slots__ = ("lock", "sf_dir")
+
+    def __init__(self) -> None:
+        self.lock = threading.RLock()
+        self.sf_dir: str | None = None
+
+
+#: keyed on the live session object (weakly): ``id()`` can be reused after
+#: a stopped session is collected, and temp views are per session
+_VIEWS: "weakref.WeakKeyDictionary[SparkSession, _Views]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _views(spark: SparkSession) -> _Views:
+    with _SESSION_STATE_GUARD:
+        state = _VIEWS.get(spark)
+        if state is None:
+            state = _VIEWS[spark] = _Views()
+        return state
 
 
 def register_views(
@@ -169,11 +245,38 @@ def register_views(
     Reference S4 (external catalog table): Catalyst resolves view names
     against the session catalog exactly like Spectrum resolves the external
     schema against Glue.
-    """
-    dfs = load_tables(spark, sf_dir, names)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
+
+    Always re-checks the files: one regenerated since the last read gets
+    a fresh plan (the memo is fingerprint-validated). Records which ``sf_dir`` the
+    session's views now point at, for :func:`analyze_sql`; a partial
+    registration over another ``sf_dir`` clears the record."""
+    state = _views(spark)
+    with state.lock:
+        dfs = load_tables(spark, sf_dir, names)
+        for name, df in dfs.items():
+            df.createOrReplaceTempView(name)
+        if set(TABLES) <= dfs.keys():
+            state.sf_dir = sf_dir
+        elif state.sf_dir != sf_dir:
+            state.sf_dir = None
     return dfs
+
+
+def analyze_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
+    """``spark.sql(query)`` with the table names resolved over ``sf_dir``.
+
+    The views are registered once per (session, ``sf_dir``): this
+    re-registers only when the session's views point elsewhere (another
+    ``sf_dir``, or never registered). The query is analysed under the
+    session's view lock, so the returned DataFrame is bound to
+    ``sf_dir``'s tables even while a client over another ``sf_dir``
+    re-points the views. A fixture regenerated in place is picked up by
+    an explicit :func:`register_views` (``Engine.refresh``), not here."""
+    state = _views(spark)
+    with state.lock:
+        if state.sf_dir != sf_dir:
+            register_views(spark, sf_dir)
+        return spark.sql(query)
 
 
 #: the reference's four dashboard queries (`external-table-queries.sql:13-42`,

@@ -5,6 +5,7 @@
     eng = Engine(sf_dir="/root/testdata/sf0.01")
     eng.table("lineitem")            # DataFrame over the lake
     eng.sql("SELECT count(*) FROM lineitem")
+    eng.refresh()                    # after regenerating a fixture in place
     eng.run("topk_books")            # any registered golden query
     eng.run_etl("/tmp/mart")         # the star-schema E-T-L
     eng.query_names()                # what's available
@@ -17,12 +18,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bookstore_aws_lakehouse_spark.catalog import load_table, register_views
+from bookstore_aws_lakehouse_spark.catalog import (
+    analyze_sql,
+    load_table,
+    register_views,
+)
 from bookstore_aws_lakehouse_spark.registry import load_all
 from bookstore_aws_lakehouse_spark.session import get_spark
 
 
 class Engine:
+    """One lake directory (``sf_dir``) on a SparkSession.
+
+    ``sql()`` resolves table names against the session's temp views, which
+    are registered once per (session, ``sf_dir``) and re-pointed only when
+    another ``Engine`` on the session uses a different ``sf_dir``. Each
+    query is analysed under the session's view lock, so several client
+    threads, and several ``Engine``s with different ``sf_dir``s, can share
+    one session. A fixture regenerated in place is not noticed by
+    ``sql()``: call ``refresh()`` to re-read it.
+    """
+
     def __init__(
         self,
         spark: SparkSession | None = None,
@@ -38,12 +54,15 @@ class Engine:
         return load_table(self.spark, self.sf_dir, name)
 
     def sql(self, query: str) -> DataFrame:
-        # re-register each call: load_table is fingerprint-memoized, so
-        # this costs os.stat checks — and it means a fixture regeneration
-        # (or another Engine on the same session pointing at a different
-        # sf_dir) can never leave .sql() running against stale views
+        # the DataFrame is bound to this Engine's tables at analysis, so
+        # other Engines may re-point the views afterwards; a fixture
+        # regenerated in place is re-read only by refresh()
+        return analyze_sql(self.spark, self.sf_dir, query)
+
+    def refresh(self) -> None:
+        """Re-read this Engine's tables and re-point the session's views at
+        them: the explicit step after a fixture is regenerated in place."""
         register_views(self.spark, self.sf_dir)
-        return self.spark.sql(query)
 
     # -- registered queries ------------------------------------------------
     def query_names(self) -> list[str]:

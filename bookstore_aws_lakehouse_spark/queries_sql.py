@@ -6,37 +6,15 @@ optimize → execute pipeline in one engine.
 
 These queries prove the *SQL surface*: identical semantics to the
 DataFrame-API golden set, expressed as SQL text resolved by name against
-``register_views``.
+the views ``catalog.analyze_sql`` registers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bookstore_aws_lakehouse_spark.catalog import register_views
+from bookstore_aws_lakehouse_spark.catalog import analyze_sql
 from bookstore_aws_lakehouse_spark.registry import golden
-
-
-import weakref
-
-# keyed on the live session object (weakly) — id() can be reused after a
-# stopped session is garbage-collected, which would silently skip
-# register_views on the successor session. The value is the sf_dir the
-# views CURRENTLY point at: view names are global per session, so a set
-# of ever-registered dirs would wrongly skip re-registration when the
-# caller switches back to an earlier sf_dir.
-_VIEWS_READY: "weakref.WeakKeyDictionary[SparkSession, str]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    # register the 10 fixture views once per (session, sf_dir) switch, not
-    # per query — re-registration re-reads every table's parquet footers
-    if _VIEWS_READY.get(spark) != sf_dir:
-        register_views(spark, sf_dir)
-        _VIEWS_READY[spark] = sf_dir
-    return spark.sql(sql)
 
 
 # The flagship as SQL text (reference `external-table-queries.sql:13-19`
@@ -58,7 +36,7 @@ _SQL_TOP100 = """
 def q_sql_top100_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship via the SQL entry point — the identical SQL string is the
     oracle (ANSI subset runs unchanged on both engines)."""
-    return _sql(spark, sf_dir, _SQL_TOP100)
+    return analyze_sql(spark, sf_dir, _SQL_TOP100)
 
 
 _SQL_DRILLDOWN = """
@@ -76,7 +54,7 @@ _SQL_DRILLDOWN = """
 @golden("sql_drilldown", _SQL_DRILLDOWN)
 def q_sql_drilldown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drill-down (reference `external-table-queries.sql:29-34`) via SQL."""
-    return _sql(spark, sf_dir, _SQL_DRILLDOWN)
+    return analyze_sql(spark, sf_dir, _SQL_DRILLDOWN)
 
 
 _SQL_COUNT_DISTINCT = """
@@ -94,7 +72,7 @@ def q_sql_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count(DISTINCT ...) — beyond the reference's aggregate set (SURVEY
     §2.4 notes its absence). Spark plans distinct-aggs as an Expand +
     two-phase aggregate; still one scan."""
-    return _sql(spark, sf_dir, _SQL_COUNT_DISTINCT)
+    return analyze_sql(spark, sf_dir, _SQL_COUNT_DISTINCT)
 
 
 _SQL_EXISTS = """
@@ -112,7 +90,7 @@ _SQL_EXISTS = """
 def q_sql_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS subquery — Catalyst rewrites it to a left-semi
     join (same plan the DataFrame semi_join operator produces)."""
-    return _sql(spark, sf_dir, _SQL_EXISTS)
+    return analyze_sql(spark, sf_dir, _SQL_EXISTS)
 
 
 _SQL_CAST_CASE = """
@@ -132,7 +110,7 @@ def q_sql_cast_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits (DECIMAL(22,6)) while DuckDB's returns a full-precision
     double — same SQL text, different doubles (verified). sum/count is
     bit-identical on both."""
-    return _sql(spark, sf_dir, _SQL_CAST_CASE)
+    return analyze_sql(spark, sf_dir, _SQL_CAST_CASE)
 
 
 _SQL_SCALAR_SUBQUERY = """
@@ -148,7 +126,7 @@ def q_sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     it into the filter (broadcast of a single value). The 2x multiplier
     keeps the threshold away from any row's exact value, so double-epsilon
     differences in the avg cannot flip a comparison."""
-    return _sql(spark, sf_dir, _SQL_SCALAR_SUBQUERY)
+    return analyze_sql(spark, sf_dir, _SQL_SCALAR_SUBQUERY)
 
 
 _SQL_GROUPING_SETS = """
@@ -164,7 +142,7 @@ _SQL_GROUPING_SETS = """
 def q_sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (the general form of rollup/cube): one scan
     expands to all requested granularities."""
-    return _sql(spark, sf_dir, _SQL_GROUPING_SETS)
+    return analyze_sql(spark, sf_dir, _SQL_GROUPING_SETS)
 
 
 _SQL_STRING_FUNCS = """
@@ -186,7 +164,7 @@ _SQL_STRING_FUNCS = """
 def q_sql_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-function surface (SURVEY §2.7 beyond-reference): string ops +
     conditional functions, identical ANSI semantics on both engines."""
-    return _sql(spark, sf_dir, _SQL_STRING_FUNCS)
+    return analyze_sql(spark, sf_dir, _SQL_STRING_FUNCS)
 
 
 _SQL_ORDERS_BY_MONTH = """
@@ -204,7 +182,7 @@ def q_sql_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar date functions on proper (ms) timestamps — year/month
     extraction is timezone-stable here: session TZ is UTC and the fixture
     stores UTC instants."""
-    return _sql(spark, sf_dir, _SQL_ORDERS_BY_MONTH)
+    return analyze_sql(spark, sf_dir, _SQL_ORDERS_BY_MONTH)
 
 
 _SQL_PERCENTILES = """
@@ -224,7 +202,7 @@ def q_sql_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles). The approximate sibling for 100 TB is approx_percentile
     (KLL/GK sketch, mergeable) — tested for accuracy separately since
     sketches can't hash-match."""
-    return _sql(spark, sf_dir, _SQL_PERCENTILES)
+    return analyze_sql(spark, sf_dir, _SQL_PERCENTILES)
 
 
 _SQL_STATS = """
@@ -242,7 +220,7 @@ def q_sql_stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates (stddev/variance/correlation). These
     accumulate in partition order, so results are rounded (4/2/6 dp) —
     the documented tolerance, same policy as embedding_standardize."""
-    return _sql(spark, sf_dir, _SQL_STATS)
+    return analyze_sql(spark, sf_dir, _SQL_STATS)
 
 
 _SQL_COND_AGGS = """
@@ -260,7 +238,7 @@ _SQL_COND_AGGS = """
 def q_sql_conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional/boolean aggregates (count_if, bool_or, bool_and) —
     the same names and semantics on both engines."""
-    return _sql(spark, sf_dir, _SQL_COND_AGGS)
+    return analyze_sql(spark, sf_dir, _SQL_COND_AGGS)
 
 
 _SQL_ROLLUP_GROUPING = """
@@ -281,7 +259,7 @@ def q_sql_rollup_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP with GROUPING() markers — distinguishes subtotal rows from
     rows whose key is genuinely NULL (the correctness-critical detail the
     coalesce-only variant glosses over)."""
-    return _sql(spark, sf_dir, _SQL_ROLLUP_GROUPING)
+    return analyze_sql(spark, sf_dir, _SQL_ROLLUP_GROUPING)
 
 
 _SQL_INTERVALS = """
@@ -299,7 +277,7 @@ def q_sql_interval_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval arithmetic on timestamps (+ INTERVAL literal, boundary
     comparison) — identical ANSI behavior on both engines; the filter
     keeps the result small and pushdown-eligible."""
-    return _sql(spark, sf_dir, _SQL_INTERVALS)
+    return analyze_sql(spark, sf_dir, _SQL_INTERVALS)
 
 
 _SQL_STRING_AGG = """
@@ -367,7 +345,7 @@ def q_sql_correlated_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated aggregate subquery (per-nation max) — Catalyst
     decorrelates it into an aggregate + join, the same plan the window
     formulation produces; TPC-H Q2's core shape."""
-    return _sql(spark, sf_dir, _SQL_CORRELATED_MAX)
+    return analyze_sql(spark, sf_dir, _SQL_CORRELATED_MAX)
 
 
 _SQL_GRID_COMPLETION = """
@@ -390,7 +368,7 @@ def q_sql_grid_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-joined to actual counts, zeros filled — the BI pattern that
     keeps dashboard axes complete when a cell has no data. The cross
     join multiplies two TINY dimension domains, never facts."""
-    return _sql(spark, sf_dir, _SQL_GRID_COMPLETION)
+    return analyze_sql(spark, sf_dir, _SQL_GRID_COMPLETION)
 
 
 _SQL_LATERAL_TOPN = """
@@ -415,7 +393,7 @@ def q_sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame twin is operators/windows.py::top_n_per_group
     (window_topn_per_group). Deterministic tiebreak on c_name because
     per-group LIMIT without a total order is engine-dependent."""
-    return _sql(spark, sf_dir, _SQL_LATERAL_TOPN)
+    return analyze_sql(spark, sf_dir, _SQL_LATERAL_TOPN)
 
 
 def _dashboard_catalog_sql() -> str:

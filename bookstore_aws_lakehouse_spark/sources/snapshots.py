@@ -1744,8 +1744,13 @@ def snapshot_replace_where(
     identity (zero I/O); only boundary files that straddle the range are
     read (DV-aware) and rewritten without their in-range rows. With a
     range-clustered layout the replaced partition's files are dropped
-    wholesale and the rewrite set is empty or tiny."""
+    wholesale and the rewrite set is empty or tiny.
+
+    ``df`` is pinned (``localCheckpoint``) first, so the range check and
+    the CHECK constraints see exactly the rows that commit."""
     spark = df.sparkSession
+    # one evaluation feeds the range check, the constraint check and the write
+    df = df.localCheckpoint()
     pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
     if df.filter(~F.coalesce(pred, F.lit(False))).limit(1).count():
         raise ValueError(

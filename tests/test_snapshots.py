@@ -1247,7 +1247,8 @@ def test_constraints_enforced_on_all_writers(spark, table):
 
 
 @pytest.mark.parametrize(
-    "writer", ["merge", "merge_partitioned", "append", "overwrite"]
+    "writer",
+    ["merge", "merge_partitioned", "append", "overwrite", "replace_where"],
 )
 def test_constraints_check_the_committed_rows(
     spark, table, tmp_path, monkeypatch, writer
@@ -1285,6 +1286,8 @@ def test_constraints_check_the_committed_rows(
         snapshot_append(delta, table)
     elif writer == "overwrite":
         snapshot_overwrite(delta, table)
+    elif writer == "replace_where":
+        snap.snapshot_replace_where(delta, table, "k", 1, 3)
     else:
         partition_col = "p" if writer == "merge_partitioned" else None
         snapshot_merge(delta, table, ["k"], partition_col=partition_col)
