@@ -20,42 +20,68 @@ from pyspark.sql import DataFrame
 
 
 def _estimated_scan_splits(df: DataFrame) -> int | None:
-    """Estimate the scan's task count from the plan's file listing — no
+    """The scan's task count, computed from the plan's file listing — no
     ``.rdd`` access (which would de-optimize the DataFrame through the
-    legacy Python-RDD conversion just to count partitions).
+    legacy Python-RDD conversion just to count partitions) and no job.
 
-    This APPROXIMATES Spark's ``FilePartition`` packing arithmetic: files
-    are padded by ``openCostInBytes``, the split size is
-    ``min(maxPartitionBytes, max(openCostInBytes, totalBytes/parallelism))``,
-    and splits are greedily binned into partitions of at most that size —
-    so many tiny files pack into few partitions, and small totals shrink
-    the split size toward one-per-core. The greedy first-fit-in-order
-    packing means the real count can differ slightly from
-    ``ceil(total/maxSplit)`` (it is an estimate, not the scheduler);
-    callers only use it as a coarse under-parallelism signal. Returns
-    None when no estimate can be made (no file sources in the plan,
-    non-local URIs we can't stat) — callers treat that as "leave the
-    DataFrame untouched"."""
+    For splittable local files (parquet) this is Spark's own planning
+    arithmetic, ``FilePartition.maxSplitBytes`` followed by
+    ``FilePartition.getFilePartitions``:
+
+    * ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+      Σ(size + openCostInBytes) / minPartitionNum))``, where
+      ``minPartitionNum`` is ``spark.sql.files.minPartitionNum`` when set,
+      else the session's leaf-node default parallelism;
+    * each file is cut into chunks of at most ``maxSplitBytes``;
+    * the chunks, largest first, are packed into partitions: a partition
+      is closed when ``current + chunk > maxSplitBytes``, and each chunk
+      adds ``chunk + openCostInBytes`` to the current one.
+
+    Not modelled: non-splittable files (gzip/bzip-compressed text, whose
+    files Spark never cuts) and the re-binning Spark does when
+    ``spark.sql.files.maxPartitionNum`` is set and exceeded. Returns None
+    when no count can be made (no file sources in the plan, non-local
+    URIs we can't stat) — callers treat that as "leave the DataFrame
+    untouched"."""
     files = df.inputFiles()
     if not files:
         return None
     # session-resolved bytes values (handles "128m"-style conf strings)
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    jspark = df.sparkSession._jsparkSession
+    conf = jspark.sessionState().conf()
     max_pb = int(conf.filesMaxPartitionBytes())
     open_cost = int(conf.filesOpenCostInBytes())
-    parallelism = max(1, df.sparkSession.sparkContext.defaultParallelism)
-    total_padded = 0
+    min_num = conf.filesMinPartitionNum()
+    # both are validated positive by Spark's conf checks
+    if min_num.isDefined():
+        min_partitions = int(min_num.get())
+    else:
+        min_partitions = int(jspark.leafNodeDefaultParallelism())
+    sizes = []
     for uri in files:
         path = uri[5:] if uri.startswith("file:") else uri
         if "://" in path:  # remote FS: stat via os would lie
             return None
         try:
-            size = os.path.getsize(path)
+            sizes.append(os.path.getsize(path))
         except OSError:
             return None
-        total_padded += size + open_cost
-    max_split = min(max_pb, max(open_cost, total_padded // parallelism))
-    return max(1, -(-total_padded // max(1, max_split)))  # ceil-div
+    total_padded = sum(sizes) + len(sizes) * open_cost
+    max_split = min(max_pb, max(open_cost, total_padded // min_partitions))
+    chunks = sorted(
+        (
+            min(max_split, size - off)
+            for size in sizes
+            for off in range(0, size, max_split)
+        ),
+        reverse=True,
+    )
+    partitions, current = 0, 0
+    for chunk in chunks:
+        if current and current + chunk > max_split:
+            partitions, current = partitions + 1, 0
+        current += chunk + open_cost
+    return partitions + 1 if current else partitions
 
 
 def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:

@@ -5,8 +5,6 @@ DataFrame through the legacy Python-RDD conversion)."""
 
 from __future__ import annotations
 
-import pathlib
-
 
 def test_under_split_input_is_repartitioned(spark, tmp_path):
     from bookstore_aws_lakehouse_spark.operators.scale import ensure_parallelism
@@ -41,12 +39,12 @@ def test_post_shuffle_plan_untouched(spark, sf_smoke):
 def test_split_estimate_counts_bytes_not_files(spark, tmp_path):
     """One big file must estimate to many splits — a file-count probe
     would wrongly flag it as under-split and pay a pointless shuffle.
-    The estimate mirrors FilePartition's arithmetic: split size is
-    ``min(maxPartitionBytes, max(openCost, totalPadded/parallelism))``,
-    so a file smaller than parallelism×maxPartitionBytes still fans out
-    to ~one split per core (the real scheduler shrinks maxSplitBytes via
+    A file smaller than parallelism×maxPartitionBytes still fans out to
+    ~one split per core (the real scheduler shrinks maxSplitBytes via
     bytesPerCore — the old ceil(size/maxPartitionBytes) underestimated
-    exactly this case)."""
+    exactly this case). The expected count is the one Spark's planner
+    gives for the same scan: the JVM plan's partition count, with no
+    Python-RDD conversion and no job."""
     from bookstore_aws_lakehouse_spark.operators.scale import _estimated_scan_splits
 
     p = str(tmp_path / "big_file")
@@ -54,16 +52,23 @@ def test_split_estimate_counts_bytes_not_files(spark, tmp_path):
         "id", "repeat(uuid(), 4) AS pad"
     ).coalesce(1).write.parquet(p)
     df = spark.read.parquet(p)
-    size = sum(f.stat().st_size for f in pathlib.Path(p).glob("*.parquet"))
-    conf = spark._jsparkSession.sessionState().conf()
-    max_pb = int(conf.filesMaxPartitionBytes())
-    open_cost = int(conf.filesOpenCostInBytes())
-    parallelism = max(1, spark.sparkContext.defaultParallelism)
-    total_padded = size + open_cost
-    max_split = min(max_pb, max(open_cost, total_padded // parallelism))
     est = _estimated_scan_splits(df)
-    assert est == max(1, -(-total_padded // max_split))
+    assert est == df._jdf.rdd().getNumPartitions()
     assert est > 1  # one big file must never look like one task
+
+
+def test_split_estimate_packs_small_files(spark, tmp_path):
+    """Many small files pack the way FilePartition bins them: chunks,
+    largest first, each padded by openCostInBytes, into partitions of at
+    most maxSplitBytes. Dividing the padded total by maxSplitBytes
+    instead counts the last file's padding as data and overshoots."""
+    from bookstore_aws_lakehouse_spark.operators.scale import _estimated_scan_splits
+
+    p = str(tmp_path / "small_files")
+    spark.range(10_000).repartition(8).write.parquet(p)
+    df = spark.read.parquet(p)
+    assert len(df.inputFiles()) == 8
+    assert _estimated_scan_splits(df) == df._jdf.rdd().getNumPartitions()
 
 
 def test_no_rdd_access_in_package():
