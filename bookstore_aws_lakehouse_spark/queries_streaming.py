@@ -404,100 +404,3 @@ def q_stream_snapshot_source_tail(spark: SparkSession, sf_dir: str) -> DataFrame
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-@golden(
-    "stream_snapshot_native_sink",
-    """
-    SELECT strftime(o_orderdate, '%Y-%m') AS o_month,
-           count(*) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-           CAST(1 AS BOOLEAN) AS batch_tracked
-    FROM orders
-    WHERE o_orderdate BETWEEN DATE '1997-04-01' AND DATE '1997-06-30'
-    GROUP BY o_month
-    """,
-)
-def q_stream_snapshot_native_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The format QUARTET closed: lakesnap as BOTH streaming source and
-    native streaming SINK (sources/pyds.py::SnapshotStreamWriter —
-    ``writeStream.format("lakesnap")``, no foreachBatch). Three monthly
-    appends stream out of table A and into table B through Spark's
-    streaming writer hooks; every micro-batch commits with its batch id
-    in the manifest (app.stream_sink — the Delta transactional-sink
-    pattern), which is what makes checkpoint-recovery replays
-    exactly-once (pinned in tests/test_pyds.py). ``batch_tracked`` is
-    the contract flag; the aggregate over table B must equal the batch
-    relational answer."""
-    import shutil
-    import tempfile as _tempfile
-
-    from bookstore_aws_lakehouse_spark.sources.pyds import (
-        register_snapshot_datasource,
-    )
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        _read_manifest,
-        list_versions,
-        snapshot_append,
-        snapshot_overwrite,
-        snapshot_read,
-    )
-    from bookstore_aws_lakehouse_spark.catalog import load_table as _lt
-
-    orders = _lt(spark, sf_dir, "orders")
-    months = [
-        ("1997-04-01", "1997-04-30"),
-        ("1997-05-01", "1997-05-31"),
-        ("1997-06-01", "1997-06-30"),
-    ]
-    root = _tempfile.mkdtemp(prefix="blhs_natsink_")
-    try:
-        src_table = f"{root}/orders_src"
-        dst_table = f"{root}/orders_dst"
-        for i, (lo, hi) in enumerate(months):
-            slice_df = orders.filter(F.col("o_orderdate").between(lo, hi)).select(
-                "o_orderkey",
-                F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
-                F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-            )
-            if i == 0:
-                snapshot_overwrite(slice_df, src_table)
-            else:
-                snapshot_append(slice_df, src_table)
-        register_snapshot_datasource(spark)
-        q = (
-            spark.readStream.format("lakesnap")
-            .option("path", src_table)
-            .load()
-            .writeStream.format("lakesnap")
-            .option("path", dst_table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        q.awaitTermination()
-        tip = _read_manifest(
-            spark, dst_table, list_versions(spark, dst_table)[-1]
-        )
-        batch_tracked = (
-            (tip.get("app") or {}).get("stream_sink", {}).get("last_batch_id")
-            is not None
-        )
-        out = (
-            snapshot_read(spark, dst_table)
-            .groupBy("o_month")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("price").cast("double").alias("total_price"),
-            )
-            .select(
-                "o_month",
-                "n_orders",
-                "total_price",
-                F.lit(batch_tracked).alias("batch_tracked"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

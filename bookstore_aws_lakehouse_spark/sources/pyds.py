@@ -21,10 +21,15 @@ function in the read path at all. What the integration buys over
 - **Arrow batches**: ``read`` yields pyarrow RecordBatches straight from
   the parquet reader — the vectorized path, no Python row objects.
 
-Local-filesystem scope (the sandbox's reality): manifests and data are
-read with plain ``open``/pyarrow — the Python DS API runs in Python
-workers with no JVM FileSystem handle. On a cluster the package must be
-shipped to executors (cloudpickle serializes the reader by reference).
+The format is read-only: batch read and stream read. Writes go through
+the engine's snapshot functions (``snapshot_append``, ``snapshot_merge``,
+...), whose ``_claim_version`` is the one code path that publishes a
+manifest; ``snapshot_merge`` under ``foreachBatch`` is the streaming sink.
+
+Local-filesystem scope: manifests and data are read with plain
+``open``/pyarrow — the Python DS API runs in Python workers with no JVM
+FileSystem handle. On a cluster the package must be shipped to executors
+(cloudpickle serializes the reader by reference).
 """
 
 from __future__ import annotations
@@ -36,9 +41,7 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     EqualNullSafe,
     EqualTo,
@@ -49,9 +52,10 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from bookstore_aws_lakehouse_spark.sources.snapshots import _stat_norm
 
 FORMAT_NAME = "lakesnap"
 
@@ -62,19 +66,24 @@ def _local(path: str) -> str:
     return path
 
 
-def _read_manifest_local(table: str, version: int | None) -> dict:
-    mdir = os.path.join(_local(table), "_manifests")
-    versions = sorted(
+def _versions_local(table: str) -> list[int]:
+    """Committed versions of ``table``, ascending, from its manifest
+    file names."""
+    return sorted(
         int(f[1:-5])
-        for f in os.listdir(mdir)
+        for f in os.listdir(os.path.join(_local(table), "_manifests"))
         if f.startswith("v") and f.endswith(".json")
     )
+
+
+def _read_manifest_local(table: str, version: int | None) -> dict:
+    versions = _versions_local(table)
     if not versions:
         raise FileNotFoundError(f"no snapshot manifests under {table}")
     v = versions[-1] if version is None else version
     if v not in versions:
         raise ValueError(f"version {v} not in {table} (have {versions})")
-    with open(os.path.join(mdir, f"v{v}.json")) as f:
+    with open(os.path.join(_local(table), "_manifests", f"v{v}.json")) as f:
         return json.load(f)
 
 
@@ -119,34 +128,6 @@ def _bounds_for(filters: Sequence[Filter]) -> dict[str, dict]:
             if e is not None:
                 e["hi"] = f.value if e["hi"] is None else min(e["hi"], f.value)
     return out
-
-
-def _stat_norm(v):
-    """Canonical JSON-portable form for a stats/probe value — mirror of
-    sources/snapshots.py::_stat_norm (this module is self-contained by
-    design); keep the two definitions bit-identical. Timestamps/dates
-    become fixed-width UTC-naive ISO strings whose lexicographic order
-    equals chronological order. A NAIVE datetime is treated as
-    HOST-LOCAL via ``time.mktime`` — the exact PySpark
-    ``TimestampType.toInternal`` semantic, including its ``tm_isdst=-1``
-    DST resolution — see the snapshots.py twin for the full rationale."""
-    import datetime as _dt
-    import time as _time
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            # the TimestampType.toInternal twin: int(mktime) seconds +
-            # carried microseconds
-            v = _dt.datetime.fromtimestamp(
-                int(_time.mktime(v.timetuple())), _dt.timezone.utc
-            ) + _dt.timedelta(microseconds=v.microsecond)
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.isoformat(timespec="microseconds")
-    if isinstance(v, _dt.date):
-        return _dt.datetime(v.year, v.month, v.day).isoformat(
-            timespec="microseconds"
-        )
-    return v
 
 
 def _file_may_match(stats_entry: dict, bounds: dict[str, dict]) -> bool:
@@ -318,13 +299,6 @@ class SnapshotDataSource(DataSource):
         # defined below; resolved at call time
         return SnapshotStreamReader(dict(self.options))
 
-    def writer(self, schema: StructType, overwrite: bool) -> "SnapshotWriter":
-        return SnapshotWriter(dict(self.options), schema, overwrite)
-
-    def streamWriter(self, schema: StructType, overwrite: bool):
-        # defined below; resolved at call time
-        return SnapshotStreamWriter(dict(self.options), schema, overwrite)
-
 
 def register_snapshot_datasource(spark) -> None:
     """Register ``format("lakesnap")`` on the session (idempotent) and
@@ -386,19 +360,11 @@ class SnapshotStreamReader(DataSourceStreamReader):
             self._mcache[v] = m
         return m
 
-    def _versions(self) -> list[int]:
-        mdir = os.path.join(_local(self._table), "_manifests")
-        return sorted(
-            int(f[1:-5])
-            for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
     def initialOffset(self) -> dict:
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        vs = self._versions()
+        vs = _versions_local(self._table)
         tip = vs[-1] if vs else self._start
         if self._max_versions is not None and self._last_end is not None:
             tip = min(tip, self._last_end + self._max_versions)
@@ -409,7 +375,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         v0, v1 = start["version"], end["version"]
         if v1 <= v0:
             return []
-        have = set(self._versions())
+        have = set(_versions_local(self._table))
         base_files: set[str] = set()
         if v0:
             if v0 not in have:
@@ -503,288 +469,3 @@ class SnapshotStreamReader(DataSourceStreamReader):
         v = end.get("version")
         if v is not None:
             self._last_end = max(v, self._last_end or v)
-
-
-# ---- batch writer: df.write.format("lakesnap") ----------------------------
-
-
-@dataclass
-class _WroteFile(WriterCommitMessage):
-    path: str
-    num_rows: int
-
-
-class SnapshotWriter(DataSourceArrowWriter):
-    """Arrow-batch writer completing the format trio (read / readStream /
-    write): each task streams its RecordBatches into ONE parquet file
-    under an uncommitted tx dir and reports the path; ``commit`` — on
-    the driver, exactly once, only if every task succeeded — composes
-    and atomically claims the next manifest version (append = previous
-    files ∪ new, overwrite = new only), i.e. the snapshot commit
-    protocol expressed through Spark's own two-phase writer hooks. A
-    failed job never publishes: ``abort`` deletes the orphan files and
-    no manifest references them."""
-
-    def __init__(self, options: dict, schema: StructType, overwrite: bool) -> None:
-        import uuid as _uuid
-
-        self._table = _local(options["path"])
-        self._schema = schema
-        self._overwrite = overwrite
-        self._tx = f"{self._table.rstrip('/')}/data/tx-{_uuid.uuid4().hex[:12]}"
-        try:
-            tip = _read_manifest_local(self._table, None)
-        except (FileNotFoundError, OSError, ValueError):
-            tip = {}
-        mapping = tip.get("column_mapping") or {}
-        retired = set(tip.get("retired_physical") or [])
-        # overwrite replaces schema + files: renamed-frozen physical
-        # names may be re-used as logical names (see _write_data_files)
-        other_phys = (
-            set() if overwrite else {p for l, p in mapping.items() if l != p}
-        )
-        clash = [
-            c
-            for c in schema.fieldNames()
-            if c not in mapping and (c in retired or c in other_phys)
-        ]
-        if clash:
-            raise ValueError(
-                f"column name(s) {clash} collide with physical column names "
-                f"in {self._table}'s data files (retired or renamed-frozen); "
-                f"pick different names"
-            )
-        # plan-time mapping: the files are written with THESE physical
-        # names; overwrite's committed mapping must describe them (not a
-        # racer's claim-time mapping the files don't satisfy)
-        self._mapping = mapping
-        # files store PHYSICAL names (frozen at column birth)
-        self._physical_renames = {
-            l: p
-            for l, p in mapping.items()
-            if l != p and l in schema.fieldNames()
-        }
-
-    def write(self, iterator):
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(self._tx, exist_ok=True)
-        path = os.path.join(self._tx, f"part-{_uuid.uuid4().hex[:12]}.parquet")
-        writer = None
-        n = 0
-        for batch in iterator:
-            if self._physical_renames:
-                batch = batch.rename_columns(
-                    [
-                        self._physical_renames.get(c, c)
-                        for c in batch.schema.names
-                    ]
-                )
-            if writer is None:
-                writer = pq.ParquetWriter(path, batch.schema)
-            writer.write_table(pa.Table.from_batches([batch]))
-            n += batch.num_rows
-        if writer is None:
-            # empty task: no file, no manifest entry (the API requires a
-            # message object either way)
-            return _WroteFile(path="", num_rows=0)
-        writer.close()
-        if n == 0:
-            os.remove(path)
-            return _WroteFile(path="", num_rows=0)
-        return _WroteFile(path=path, num_rows=n)
-
-    def commit(self, messages) -> None:
-        import time as _time
-
-        files = sorted(
-            "file:" + m.path for m in messages if m is not None and m.path
-        )
-        mdir = os.path.join(self._table, "_manifests")
-        os.makedirs(mdir, exist_ok=True)
-        for _ in range(50):
-            versions = sorted(
-                int(f[1:-5])
-                for f in os.listdir(mdir)
-                if f.startswith("v") and f.endswith(".json")
-            )
-            prev: list[str] = []
-            if versions:
-                with open(os.path.join(mdir, f"v{versions[-1]}.json")) as f:
-                    tip = json.load(f)
-                # the format writer has no engine to validate CHECK
-                # expressions with — refuse rather than silently skip
-                # enforcement (use snapshot_append/merge on constrained
-                # tables)
-                if tip.get("constraints"):
-                    SnapshotWriter.abort(self, messages)
-                    raise ValueError(
-                        f"table has CHECK constraints "
-                        f"{sorted(tip['constraints'])}; the lakesnap format "
-                        f"writer cannot validate them — write via "
-                        f"snapshot_append/snapshot_merge instead"
-                    )
-                if not self._overwrite:
-                    tip_fields = {
-                        (fl["name"], json.dumps(fl["type"], sort_keys=True))
-                        for fl in tip["schema"]["fields"]
-                    }
-                    new_fields = {
-                        (fl["name"], json.dumps(fl["type"], sort_keys=True))
-                        for fl in json.loads(self._schema.json())["fields"]
-                    }
-                    if tip_fields != new_fields:
-                        SnapshotWriter.abort(self, messages)
-                        raise ValueError(
-                            "append schema differs from the table schema; "
-                            "the format writer does not evolve schemas — "
-                            "use snapshot_append(merge_schema=True)"
-                        )
-                    prev = tip["files"]
-            v = (versions[-1] + 1) if versions else 1
-            manifest = {
-                "operation": "overwrite" if self._overwrite else "append",
-                "files": prev + files,
-                "schema": json.loads(self._schema.json()),
-                "committed_at_unix": round(_time.time(), 3),
-                "version": v,
-            }
-            if versions:
-                # logical-namespace facts persist across any commit;
-                # per-file facts (stats/blooms/deletion vectors) ride with
-                # the files this commit still references — on append that
-                # is every previous file, on overwrite none
-                for key in ("column_mapping", "retired_physical", "txn"):
-                    # table-level facts persist across ANY commit — txn
-                    # watermarks especially: dropping them would let an
-                    # idempotent append re-apply after a DS write
-                    if tip.get(key):
-                        manifest[key] = tip[key]
-                if self._overwrite:
-                    # commit the mapping the files were WRITTEN with,
-                    # pruned to the written schema (engine _commit's
-                    # overwrite rule): inheriting the claim-time tip's
-                    # would let a rename racing this job install a
-                    # mapping the parquet files don't satisfy, and an
-                    # overwrite that drops a renamed column must drop
-                    # its stale {gone_logical: physical} entry too
-                    names = set(self._schema.fieldNames())
-                    pruned = {
-                        l: p for l, p in self._mapping.items() if l in names
-                    }
-                    if pruned:
-                        manifest["column_mapping"] = pruned
-                    elif manifest.get("column_mapping"):
-                        del manifest["column_mapping"]
-                if not self._overwrite:
-                    for key in ("file_stats", "file_blooms"):
-                        if tip.get(key):
-                            manifest[key] = tip[key]
-                    if tip.get("dv"):
-                        manifest["dv"] = tip["dv"]
-            if getattr(self, "_txn", None):
-                # the streaming sink's batch id rides the tip-inherited
-                # txn map (vacuum-proof exactly-once)
-                app_id, tv = self._txn
-                merged = dict(manifest.get("txn") or {})
-                merged[app_id] = max(int(tv), int(merged.get(app_id, tv)))
-                manifest["txn"] = merged
-            if getattr(self, "_app", None):
-                manifest["app"] = self._app
-            # atomic claim+publish, same protocol as the engine's
-            # _claim_version: open("x") + dump would make the version
-            # name visible before its payload — a concurrent reader
-            # could open a half-written tip. Write-temp + link(2) is
-            # atomic and fails EEXIST on a lost race.
-            import uuid as _uuid
-
-            target = os.path.join(mdir, f"v{v}.json")
-            tmp = f"{target}.tmp-{_uuid.uuid4().hex[:12]}"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, sort_keys=True)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, target)
-                return
-            except FileExistsError:
-                continue  # lost the race: recompose against the new tip
-            finally:
-                os.unlink(tmp)
-        raise RuntimeError("snapshot write lost 50 consecutive version races")
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and m.path and os.path.exists(m.path):
-                os.remove(m.path)
-
-
-# ---- streaming writer: df.writeStream.format("lakesnap") ------------------
-
-
-class SnapshotStreamWriter(SnapshotWriter, DataSourceStreamArrowWriter):
-    """Streaming sink completing the format QUARTET (read / readStream /
-    write / writeStream): every micro-batch commits through the same
-    two-phase protocol as the batch writer, and each committed manifest
-    records the batch id it came from (``app.stream_sink.last_batch_id``
-    — the Delta transactional-sink pattern via this format's app
-    metadata). EXACTLY-ONCE across restarts falls out: when checkpoint
-    recovery REPLAYS a batch whose id is already recorded in the
-    manifest history, ``commit`` deletes the replay's files and returns
-    without a new version — rows are never appended twice.
-
-    Contract: one streaming query per table (batch ids are per-query;
-    Delta's multi-writer form keys them by txnAppId). ``outputMode``
-    append → each batch appends; complete → each batch replaces the
-    table (both replay-guarded)."""
-
-    _TXN_APP_ID = "lakesnap.stream_sink"
-
-    def _last_committed_batch(self) -> int | None:
-        """Highest batch id ever committed, from the TIP manifest's
-        tip-inherited ``txn`` map — one read, immune to vacuum dropping
-        old manifests (the app-metadata scan it replaces was O(versions)
-        per batch AND forgot ids once their manifest was vacuumed).
-        Falls back to the legacy full scan for pre-upgrade tables whose
-        tip predates the txn recording."""
-        mdir = os.path.join(self._table, "_manifests")
-        if not os.path.isdir(mdir):
-            return None
-        try:
-            tip = _read_manifest_local(self._table, None)
-        except (FileNotFoundError, OSError, ValueError):
-            return None
-        b = (tip.get("txn") or {}).get(self._TXN_APP_ID)
-        if b is not None:
-            return int(b)
-        last = None
-        for name in os.listdir(mdir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                with open(os.path.join(mdir, name)) as f:
-                    b = (json.load(f).get("app") or {}).get("stream_sink", {}).get(
-                        "last_batch_id"
-                    )
-            except (OSError, ValueError):
-                continue
-            if b is not None and (last is None or b > last):
-                last = b
-        return last
-
-    def commit(self, messages, batchId: int) -> None:  # type: ignore[override]
-        last = self._last_committed_batch()
-        if last is not None and last >= batchId:
-            # checkpoint-recovery replay of an already-committed batch:
-            # drop the rewritten files, publish nothing (exactly-once)
-            SnapshotWriter.abort(self, messages)
-            return
-        self._app = {"stream_sink": {"last_batch_id": batchId}}
-        self._txn = (self._TXN_APP_ID, batchId)
-        SnapshotWriter.commit(self, messages)
-
-    def abort(self, messages, batchId: int) -> None:  # type: ignore[override]
-        SnapshotWriter.abort(self, messages)

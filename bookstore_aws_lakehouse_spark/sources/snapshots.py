@@ -144,8 +144,8 @@ def _claim_version(spark: SparkSession, table: str, manifest: dict, v: int) -> b
     local filesystem the payload is therefore written to a temp name and
     hard-linked into place: ``link(2)`` is atomic, fails EEXIST when the
     version is already claimed, and readers can only ever observe a
-    complete manifest. (Same protocol as the DataSource writer; Delta on
-    HDFS gets this from atomic no-overwrite rename.)"""
+    complete manifest. (Delta on HDFS gets this from atomic no-overwrite
+    rename.)"""
     manifest["version"] = v
     payload = json.dumps(manifest, sort_keys=True).encode("utf-8")
     target_str = _manifest_path(table, v)
@@ -391,12 +391,10 @@ def _checked_written(
 #     txn, column_mapping, retired_physical (inherited from the loop's
 #     tip unless the writer passes them explicitly)
 #   hand-built manifests (explicit copy lists — grep these when adding a
-#     key): snapshot_restore (txn merges by max), snapshot_clone
-#     (deliberately omits txn — a fork is a new writer identity), and the
-#     DataSource writer pyds.SnapshotWriter.commit (append carries
-#     per-file facts + table facts; overwrite carries table facts only).
-# The review that added this list found three keys dropped exactly this
-# way (dv in drop_constraint, txn in the DS writer and restore).
+#     key): snapshot_restore (txn merges by max) and snapshot_clone
+#     (deliberately omits txn — a fork is a new writer identity).
+# The review that added this list found keys dropped exactly this way
+# (dv in drop_constraint, txn in restore).
 
 
 def _commit(
@@ -670,9 +668,8 @@ def _stat_norm(v):
     probe in a DST transition hour must land exactly where the filter
     does. Footer stats are never naive (pyarrow returns tz-aware UTC for
     Spark's TIMESTAMP_MICROS), so this branch only ever sees user probe
-    values.
-    Mirrored in sources/pyds.py (self-contained by design) — keep the
-    two definitions bit-identical."""
+    values. The ``lakesnap`` reader (sources/pyds.py) prunes with this
+    same function."""
     import datetime as _dt
     import time as _time
 
@@ -1617,6 +1614,8 @@ def snapshot_merge_when(
             tgt.schema, merged.schema, "MERGE UPDATE expression",
             "add an explicit CAST(... AS {t})",
         )
+        # pinned: the constraint check and the write see one evaluation
+        merged = merged.localCheckpoint()
         _validate_constraints(merged, tip.get("constraints") or {})
         return _rewrite(
             spark, table, "merge", tip_v, tip, write, [], merged, schema=tgt.schema
@@ -2740,6 +2739,8 @@ def snapshot_update(
             "UPDATE preserves column types; add an explicit "
             "CAST(... AS {t}) to the SET expression",
         )
+        # pinned: the constraint check and the write see one evaluation
+        updated = updated.localCheckpoint()
         _validate_constraints(updated, tip.get("constraints") or {})
         return _rewrite(
             spark, table, "update", tip_v, tip, write, [], updated,

@@ -150,80 +150,6 @@ def test_stream_source_tails_appends_exactly_once(spark, tmp_path):
         run()
 
 
-def test_format_writer_append_overwrite_and_guards(spark, tmp_path):
-    """df.write.format('lakesnap'): two-phase commit through Spark's own
-    writer hooks — append composes prev ∪ new, overwrite replaces, time
-    travel works across both; the writer refuses constrained tables (it
-    has no engine to validate CHECK exprs) and schema-drifted appends."""
-    import pytest as _pytest
-
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        history,
-        snapshot_add_constraint,
-    )
-
-    table = str(tmp_path / "t")
-    register_snapshot_datasource(spark)
-    df = spark.range(0, 50).select(
-        F.col("id").cast("int").alias("k"), (F.col("id") % 3).alias("v")
-    )
-    df.write.format("lakesnap").option("path", table).mode("append").save()
-    spark.createDataFrame([(999, 7)], "k int, v bigint").write.format(
-        "lakesnap"
-    ).option("path", table).mode("append").save()
-    assert snapshot_read(spark, table).count() == 51
-    ops = [r.operation for r in history(spark, table).sort("version").collect()]
-    assert ops == ["append", "append"]
-
-    # schema drift on append is refused (and leaves no orphan version)
-    with _pytest.raises(Exception, match="merge_schema"):
-        spark.createDataFrame([(1, 2.5)], "k int, v double").write.format(
-            "lakesnap"
-        ).option("path", table).mode("append").save()
-    assert snapshot_read(spark, table).count() == 51
-
-    spark.createDataFrame([(1, 1)], "k int, v bigint").write.format(
-        "lakesnap"
-    ).option("path", table).mode("overwrite").save()
-    assert snapshot_read(spark, table).count() == 1
-    assert snapshot_read(spark, table, 2).count() == 51  # time travel
-
-    # constrained tables are engine-write-only
-    snapshot_add_constraint(spark, table, "pos", "v >= 0")
-    with _pytest.raises(Exception, match="CHECK constraints"):
-        spark.createDataFrame([(5, 5)], "k int, v bigint").write.format(
-            "lakesnap"
-        ).option("path", table).mode("append").save()
-
-
-def test_format_writer_recomposes_after_version_race(spark, tmp_path):
-    """The writer's commit loop: when an interloper claims the version the
-    writer composed, the writer recomposes against the NEW tip — the
-    racer's files are never dropped from an append's manifest."""
-    import json
-    import os
-
-    table = str(tmp_path / "t")
-    register_snapshot_datasource(spark)
-    spark.createDataFrame([(1, 1)], "k int, v bigint").write.format(
-        "lakesnap"
-    ).option("path", table).mode("append").save()
-    # interloper hand-claims v2 referencing a phantom file
-    mdir = f"{table}/_manifests"
-    with open(os.path.join(mdir, "v1.json")) as f:
-        m1 = json.load(f)
-    racer = dict(m1, version=2, files=m1["files"] + ["file:/racer.parquet"])
-    with open(os.path.join(mdir, "v2.json"), "x") as f:
-        json.dump(racer, f)
-    spark.createDataFrame([(2, 2)], "k int, v bigint").write.format(
-        "lakesnap"
-    ).option("path", table).mode("append").save()
-    with open(os.path.join(mdir, "v3.json")) as f:
-        m3 = json.load(f)
-    assert "file:/racer.parquet" in m3["files"]  # racer's state preserved
-    assert len(m3["files"]) == 3
-
-
 def test_stream_reader_refuses_vacuumed_start_version(spark, tmp_path):
     """failOnDataLoss contract (planner-level, no streaming query): when
     the checkpointed start version's manifest has been vacuumed, the
@@ -307,88 +233,6 @@ def test_format_read_conforms_numeric_evolved_columns(spark, tmp_path):
     assert (row.sn, row.ax) == (99, 1.5)
 
 
-def test_stream_writer_appends_exactly_once(spark, tmp_path):
-    """writeStream.format('lakesnap'): each micro-batch commits through
-    the two-phase protocol with its batch id recorded in the manifest
-    (app.stream_sink); checkpoint resume appends only new batches, and a
-    direct replay of an already-committed batch publishes nothing."""
-    import json as _json
-    import os
-
-    from bookstore_aws_lakehouse_spark.sources.pyds import SnapshotStreamWriter
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = str(tmp_path / "src")
-    table = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    register_snapshot_datasource(spark)
-
-    def add_file(name: str, k: int, v: str) -> None:
-        # the file STREAM source lists plain files (it does not recurse
-        # into df.write.parquet directories) — write single files
-        pq.write_table(
-            pa.table({"k": pa.array([k], pa.int32()), "v": [v]}),
-            f"{src}/{name}",
-        )
-
-    add_file("f1.parquet", 1, "a")
-
-    def run():
-        q = (
-            spark.readStream.schema("k int, v string")
-            .parquet(src)
-            .writeStream.format("lakesnap")
-            .option("path", table)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted((r.k, r.v) for r in snapshot_read(spark, table).collect())
-
-    assert run() == [(1, "a")]
-    add_file("f2.parquet", 2, "b")
-    assert run() == [(1, "a"), (2, "b")]  # resume appends only the new file
-    assert run() == [(1, "a"), (2, "b")]  # nothing new: no duplicates
-
-    # the tip manifest records the batch id it came from
-    mdir = f"{table}/_manifests"
-    vs = sorted(int(f[1:-5]) for f in os.listdir(mdir))
-    with open(f"{mdir}/v{vs[-1]}.json") as f:
-        tip = _json.load(f)
-    last_bid = tip["app"]["stream_sink"]["last_batch_id"]
-    assert last_bid >= 1
-
-    # direct replay of an already-committed batch: files dropped, no
-    # version published (exactly-once across checkpoint recovery)
-    from pyspark.sql.types import StructType
-
-    w = SnapshotStreamWriter(
-        {"path": table}, StructType.fromDDL("k int, v string"), False
-    )
-    msg = w.write(iter(
-        spark.createDataFrame([(9, "z")], "k int, v string")
-        .toArrow()
-        .to_batches()
-    ))
-    w.commit([msg], last_bid)  # replayed id -> must be a no-op
-    assert sorted(int(f[1:-5]) for f in os.listdir(mdir)) == vs
-    assert not os.path.exists(msg.path)  # replay's file reclaimed
-    # and a NEW batch id still goes through
-    msg2 = w.write(iter(
-        spark.createDataFrame([(9, "z")], "k int, v string")
-        .toArrow()
-        .to_batches()
-    ))
-    w.commit([msg2], last_bid + 1)
-    got = sorted((r.k, r.v) for r in snapshot_read(spark, table).collect())
-    assert got == [(1, "a"), (2, "b"), (9, "z")]
-
-
 def test_pyds_reads_subtract_deletion_vectors(spark, tmp_path):
     """The lakesnap DataSource applies deletion vectors at the Arrow
     layer: batch read equals the engine's snapshot_read, per version."""
@@ -450,18 +294,10 @@ def test_stream_reader_refuses_dv_delete_history(spark, tmp_path):
 
 def test_pyds_roundtrips_column_mapping_and_facts(spark, tmp_path):
     """Mapped tables through the DataSource: reads translate
-    physical→logical at the Arrow layer; a DS append writes physical
-    names and carries the tip's per-file facts (stats/dv) and the
-    mapping forward instead of silently dropping them."""
-    from bookstore_aws_lakehouse_spark.sources.pyds import (
-        register_snapshot_datasource,
-    )
+    physical→logical at the Arrow layer and subtract the deletion
+    vectors."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        _read_manifest,
-        list_versions,
         snapshot_delete_dv,
-        snapshot_overwrite,
-        snapshot_read,
         snapshot_rename_column,
     )
 
@@ -477,19 +313,6 @@ def test_pyds_roundtrips_column_mapping_and_facts(spark, tmp_path):
     ds = spark.read.format("lakesnap").option("path", table).load()
     assert ds.columns == ["k", "price"]
     assert ds.count() == 90 and ds.filter("price < 10").count() == 0
-    (
-        spark.range(100, 110)
-        .selectExpr("id as k", "cast(id as double) as price")
-        .write.format("lakesnap")
-        .mode("append")
-        .option("path", table)
-        .save()
-    )
-    m = _read_manifest(spark, table, list_versions(spark, table)[-1])
-    assert m["column_mapping"]["price"] == "amount"
-    assert m.get("dv") and m.get("file_stats")
-    got = snapshot_read(spark, table)
-    assert got.count() == 100 and got.filter("price < 10").count() == 0
 
 
 def test_stream_reader_max_versions_per_trigger(spark, tmp_path):
@@ -592,112 +415,6 @@ def test_stream_initial_snapshot_subtracts_deletion_vectors(spark, tmp_path):
         for batch in rdr.read(p):
             rows.extend(pa.Table.from_batches([batch]).column("k").to_pylist())
     assert sorted(rows) == list(range(10, 50))
-
-
-def test_ds_writer_carries_txn_watermarks(spark, tmp_path):
-    """A DataSource append between idempotent engine appends must not
-    drop the txn watermark map — the replay still no-ops after it."""
-    from bookstore_aws_lakehouse_spark.sources.pyds import (
-        register_snapshot_datasource,
-    )
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_overwrite,
-        snapshot_read,
-    )
-
-    register_snapshot_datasource(spark)
-    table = str(tmp_path / "t")
-    d = spark.createDataFrame([(1, "a")], "k int, v string")
-    snapshot_overwrite(d, table)
-    snapshot_append(d, table, txn_app_id="loader", txn_version=3)
-    d.write.format("lakesnap").mode("append").option("path", table).save()
-    assert snapshot_read(spark, table).count() == 3
-    snapshot_append(d, table, txn_app_id="loader", txn_version=3)  # replay
-    assert snapshot_read(spark, table).count() == 3  # still at-most-once
-
-
-def test_pyds_overwrite_prunes_stale_column_mapping(spark, tmp_path):
-    """A DataSource overwrite that drops a renamed column must prune its
-    {gone_logical: physical} mapping entry like the engine's _commit
-    does — a stranded entry later blocks unrelated new column names via
-    the clash guards (ADVICE r9 #3)."""
-    from bookstore_aws_lakehouse_spark.sources.pyds import (
-        register_snapshot_datasource,
-    )
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        _read_manifest,
-        list_versions,
-        snapshot_append,
-        snapshot_overwrite,
-        snapshot_read,
-        snapshot_rename_column,
-    )
-
-    register_snapshot_datasource(spark)
-    table = str(tmp_path / "t")
-    snapshot_overwrite(
-        spark.range(0, 5).selectExpr("id as k", "cast(id as double) as amount"),
-        table,
-    )
-    snapshot_rename_column(spark, table, "amount", "price")
-    # DS overwrite with a schema that drops the renamed column entirely
-    (
-        spark.range(0, 5)
-        .selectExpr("id as k", "id * 2 as total")
-        .write.format("lakesnap")
-        .mode("overwrite")
-        .option("path", table)
-        .save()
-    )
-    m = _read_manifest(spark, table, list_versions(spark, table)[-1])
-    assert "price" not in (m.get("column_mapping") or {})
-    # and the physical name is usable again by a later engine-side append
-    snapshot_append(
-        spark.range(5, 7).selectExpr("id as k", "id * 2 as total"), table
-    )
-    assert snapshot_read(spark, table).count() == 7
-
-
-def test_pyds_overwrite_racing_rename_commits_write_time_mapping(
-    spark, tmp_path
-):
-    """Protocol-level race: a rename landing between the DS writer's plan
-    (physical names frozen into the tasks) and its driver-side commit
-    must not install the racer's mapping — the parquet files satisfy the
-    PLAN-time mapping, so that is what the manifest must carry (engine
-    snapshot_overwrite rule)."""
-    import pyarrow as pa
-
-    from bookstore_aws_lakehouse_spark.sources.pyds import SnapshotWriter
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        _read_manifest,
-        list_versions,
-        snapshot_overwrite,
-        snapshot_read,
-        snapshot_rename_column,
-    )
-    from pyspark.sql.types import StructType
-
-    table = str(tmp_path / "t")
-    snapshot_overwrite(
-        spark.createDataFrame([(1, 10.0)], "k int, amount double"), table
-    )
-    snapshot_rename_column(spark, table, "amount", "price")  # phys: amount
-    schema = StructType.fromDDL("k int, price double")
-    w = SnapshotWriter({"path": table}, schema, overwrite=True)
-    msg = w.write(
-        iter([pa.record_batch({"k": pa.array([7], pa.int32()),
-                               "price": pa.array([70.0])})])
-    )
-    # the race: a rename commits between the task writes and the commit
-    snapshot_rename_column(spark, table, "price", "cost")
-    w.commit([msg])
-    tip = _read_manifest(spark, table, list_versions(spark, table)[-1])
-    mapping = tip.get("column_mapping") or {}
-    assert mapping.get("price") == "amount"  # write-time mapping
-    assert "cost" not in mapping             # racer's rename superseded
-    out = snapshot_read(spark, table).collect()
-    assert [(r.k, r.price) for r in out] == [(7, 70.0)]  # not NULL
 
 
 def test_reader_prunes_files_on_timestamp_filters(spark, tmp_path):

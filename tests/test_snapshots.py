@@ -1248,7 +1248,15 @@ def test_constraints_enforced_on_all_writers(spark, table):
 
 @pytest.mark.parametrize(
     "writer",
-    ["merge", "merge_partitioned", "append", "overwrite", "replace_where"],
+    [
+        "merge",
+        "merge_partitioned",
+        "merge_when",
+        "append",
+        "overwrite",
+        "replace_where",
+        "update",
+    ],
 )
 def test_constraints_check_the_committed_rows(
     spark, table, tmp_path, monkeypatch, writer
@@ -1267,6 +1275,14 @@ def test_constraints_check_the_committed_rows(
     snapshot_overwrite(
         spark.createDataFrame([(0, 0, 10)], "k int, p int, v int"), table
     )
+    if writer == "update":
+        # the update rewrites existing rows: give it the delta's keys
+        snapshot_append(
+            spark.createDataFrame(
+                [(k, k % 2, 10) for k in (1, 2, 3)], "k int, p int, v int"
+            ),
+            table,
+        )
     snap.snapshot_add_constraint(spark, table, "nonneg", "v >= 0")
     flag = str(tmp_path / "checked")
     real_validate = snap._validate_constraints
@@ -1288,6 +1304,13 @@ def test_constraints_check_the_committed_rows(
         snapshot_overwrite(delta, table)
     elif writer == "replace_where":
         snap.snapshot_replace_where(delta, table, "k", 1, 3)
+    elif writer == "update":
+        spark.udf.register("flips", flips)
+        snap.snapshot_update(spark, table, {"v": "flips()"})
+    elif writer == "merge_when":
+        snap.snapshot_merge_when(
+            delta, table, ["k"], when_matched_update={"v": "s.v"}
+        )
     else:
         partition_col = "p" if writer == "merge_partitioned" else None
         snapshot_merge(delta, table, ["k"], partition_col=partition_col)
@@ -1933,18 +1956,14 @@ def test_rename_refuses_constrained_and_colliding_names(spark, table):
 
 def test_drop_column_retires_physical_name(spark, table):
     """DROP is metadata-only; re-adding the same logical name is refused
-    (it would resurrect historic bytes) in BOTH write paths."""
+    (it would resurrect historic bytes)."""
     import pytest
 
-    from bookstore_aws_lakehouse_spark.sources.pyds import (
-        register_snapshot_datasource,
-    )
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_drop_column,
     )
 
-    register_snapshot_datasource(spark)
     snapshot_overwrite(
         spark.createDataFrame([(1, 10.0, "x")], "k int, amount double, tag string"),
         table,
@@ -1960,14 +1979,6 @@ def test_drop_column_retires_physical_name(spark, table):
             spark.createDataFrame([(2, 1.0, "y")], "k int, amount double, tag string"),
             table,
             merge_schema=True,
-        )
-    with pytest.raises(Exception, match="retired"):
-        (
-            spark.createDataFrame([(2, 1.0, "y")], "k int, amount double, tag string")
-            .write.format("lakesnap")
-            .mode("append")
-            .option("path", table)
-            .save()
         )
 
 
@@ -2468,31 +2479,6 @@ def test_commit_io_errors_surface_not_retried_as_races(spark, tmp_path):
         snapshot_overwrite(spark.createDataFrame([(2,)], "k int"), table)
     # the real error, not an exhausted retry loop of 50 lost races
     assert not isinstance(ei.value, snap.SnapshotConflictError)
-
-
-def test_stream_sink_batch_id_survives_vacuum(spark, tmp_path):
-    """The exactly-once batch id rides the tip-inherited txn map: after
-    maintenance commits and VACUUM drop the batch's own manifest, the
-    sink still refuses to re-apply the batch."""
-    from pyspark.sql.types import StructType
-
-    from bookstore_aws_lakehouse_spark.sources.pyds import SnapshotStreamWriter
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_optimize,
-        vacuum,
-    )
-
-    table = str(tmp_path / "t")
-    d = spark.createDataFrame([(1, "a")], "k int, v string")
-    snapshot_overwrite(d, table)
-    snapshot_append(
-        d, table, txn_app_id="lakesnap.stream_sink", txn_version=9
-    )  # engine-side stand-in for a committed micro-batch 9
-    snapshot_optimize(spark, table, target_file_bytes=1)  # no-op metadata-ish
-    snapshot_append(d, table)
-    vacuum(spark, table, keep_last=1)
-    w = SnapshotStreamWriter({"path": table}, StructType.fromDDL("k int, v string"), False)
-    assert w._last_committed_batch() == 9
 
 
 def test_txn_overwrite_is_exactly_once(spark, table):
@@ -3092,9 +3078,6 @@ def test_stat_norm_canonical_ordering():
 
 
 def _stat_norm_canonical_ordering_body(dt):
-    from bookstore_aws_lakehouse_spark.sources.pyds import (
-        _stat_norm as pyds_norm,
-    )
     from bookstore_aws_lakehouse_spark.sources.snapshots import _stat_norm
 
     aware = dt.datetime(2026, 8, 15, 4, 30, 0, 500, tzinfo=dt.timezone.utc)
@@ -3110,9 +3093,6 @@ def _stat_norm_canonical_ordering_body(dt):
     ]
     canon = [_stat_norm(v) for v in seq]
     assert canon == sorted(canon)
-    # mirror contract: the pyds copy is bit-identical in behavior
-    for v in seq + [dt.date(2026, 8, 15), aware, 7, 1.5, "x", None]:
-        assert pyds_norm(v) == _stat_norm(v)
     assert _stat_norm(None) is None and _stat_norm(7) == 7
 
 
@@ -3126,7 +3106,7 @@ def test_stat_norm_naive_datetime_is_host_local():
     import os
     import time
 
-    from bookstore_aws_lakehouse_spark.sources import pyds, snapshots
+    from bookstore_aws_lakehouse_spark.sources.snapshots import _stat_norm
 
     old_tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
@@ -3139,12 +3119,9 @@ def test_stat_norm_naive_datetime_is_host_local():
             tzinfo=None
         )
         assert want == dt.datetime(2024, 1, 1, 17, 0, 0)  # UTC-5
-        for mod in (snapshots, pyds):
-            assert mod._stat_norm(naive) == want.isoformat(
-                timespec="microseconds"
-            )
-            # a tz-aware twin of the same instant normalizes identically
-            assert mod._stat_norm(naive.astimezone()) == mod._stat_norm(naive)
+        assert _stat_norm(naive) == want.isoformat(timespec="microseconds")
+        # a tz-aware twin of the same instant normalizes identically
+        assert _stat_norm(naive.astimezone()) == _stat_norm(naive)
         # DST-ambiguous local time (ADVICE r10): 2024-11-03 01:30 EST/EDT
         # exists twice; mktime (tm_isdst=-1) and astimezone (fold=0) may
         # pick different instants — the normalizer must land EXACTLY where
@@ -3153,10 +3130,7 @@ def test_stat_norm_naive_datetime_is_host_local():
         want_fold = dt.datetime.fromtimestamp(
             int(time.mktime(fold.timetuple())), dt.timezone.utc
         ).replace(tzinfo=None) + dt.timedelta(microseconds=250)
-        for mod in (snapshots, pyds):
-            assert mod._stat_norm(fold) == want_fold.isoformat(
-                timespec="microseconds"
-            )
+        assert _stat_norm(fold) == want_fold.isoformat(timespec="microseconds")
     finally:
         if old_tz is None:
             os.environ.pop("TZ", None)
