@@ -1945,7 +1945,7 @@ def q_snapshot_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_delete_where,
+        snapshot_delete,
         snapshot_overwrite,
         snapshot_read,
         snapshot_restore,
@@ -1959,7 +1959,7 @@ def q_snapshot_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         table = f"{root}/orders_restore"
         snapshot_overwrite(base, table)
-        snapshot_delete_where(spark, table, "o_orderkey % 2 = 0")
+        snapshot_delete(spark, table, extra_condition="o_orderkey % 2 = 0")
         snapshot_restore(spark, table, 1)
 
         def agg(v: int):
@@ -2011,7 +2011,7 @@ def q_snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         history,
         list_versions,
         snapshot_append,
-        snapshot_delete_where,
+        snapshot_delete,
         snapshot_overwrite,
         snapshot_read,
         snapshot_restore,
@@ -2030,7 +2030,7 @@ def q_snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             table,
         )
-        snapshot_delete_where(spark, table, "o_orderkey % 2 = 0")
+        snapshot_delete(spark, table, extra_condition="o_orderkey % 2 = 0")
         snapshot_restore(spark, table, 2)
         hist = history(spark, table).select("version", "operation")
         counts = None
@@ -2752,7 +2752,7 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem committed orderkey-clustered (the natural arrival layout,
     where per-file [min,max] on every OTHER key spans the whole domain),
     then Z-order-rewritten on (l_partkey, l_suppkey). The aggregation
-    runs through snapshot_scan_multi — BOTH ranges prune at file level,
+    runs through snapshot_scan(ranges=...) — BOTH ranges prune at file level,
     so the skip factors multiply — and must equal the plain
     doubly-filtered answer the oracle computes; the multi-dimensional
     file-skip contract itself (each probe opens strictly fewer files
@@ -2763,7 +2763,7 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_overwrite,
-        snapshot_scan_multi,
+        snapshot_scan,
         snapshot_zorder,
     )
 
@@ -2784,10 +2784,10 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, table, ["l_partkey", "l_suppkey"], target_file_bytes=256_000
         )
         out = (
-            snapshot_scan_multi(
+            snapshot_scan(
                 spark,
                 table,
-                {"l_partkey": (100, 160), "l_suppkey": (2, 40)},
+                ranges={"l_partkey": (100, 160), "l_suppkey": (2, 40)},
             )
             .groupBy("l_partkey")
             .agg(
@@ -2825,20 +2825,21 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, user_id). Temporal stats ride the manifest as canonical
     fixed-width ISO strings (INT64-micros parquet footers →
     ``_stat_norm``); the scan probes with PYTHON DATETIME bounds through
-    ``snapshot_scan_multi``, exercising the probe-normalization path
-    end-to-end. The driver-checked ``pruned`` flag asserts the scan
+    ``snapshot_scan(ranges=...)``, exercising the probe-normalization
+    path end-to-end. The driver-checked ``pruned`` flag asserts the scan
     opened strictly fewer files than the table holds, recomputed here
-    from the manifest with the same intersect rule the scan uses; result
-    values must equal the plain doubly-filtered oracle."""
+    from the manifest with the scan's own file selection
+    (``_select_files``); result values must equal the plain
+    doubly-filtered oracle."""
     import datetime as _dt
     import shutil
 
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
-        _stat_norm,
+        _select_files,
         list_versions,
         snapshot_overwrite,
-        snapshot_scan_multi,
+        snapshot_scan,
         snapshot_zorder,
     )
 
@@ -2870,24 +2871,13 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             target_file_bytes=max(4_000, total_bytes // 12),
         )
         m = _read_manifest(spark, table, list_versions(spark, table)[-1])
-        stats = m.get("file_stats") or {}
-        probes = {"ts": (_stat_norm(lo), _stat_norm(hi)), "user_id": (10, 40)}
-
-        def _may_intersect(f: str) -> bool:
-            for col, (plo, phi) in probes.items():
-                row = stats.get(f, {}).get(col)
-                if row is None:
-                    continue
-                fmin, fmax = row[0], row[1]
-                if fmin is None or not (fmin <= phi and plo <= fmax):
-                    return False
-            return True
-
-        opened = [f for f in m["files"] if _may_intersect(f)]
+        opened, _ = _select_files(
+            m, {"ts": {"lo": lo, "hi": hi}, "user_id": {"lo": 10, "hi": 40}}
+        )
         pruned = len(m["files"]) >= 4 and len(opened) < len(m["files"])
         out = (
-            snapshot_scan_multi(
-                spark, table, {"ts": (lo, hi), "user_id": (10, 40)}
+            snapshot_scan(
+                spark, table, ranges={"ts": (lo, hi), "user_id": (10, 40)}
             )
             .groupBy("user_id")
             .agg(

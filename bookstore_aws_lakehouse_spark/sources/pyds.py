@@ -55,7 +55,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from bookstore_aws_lakehouse_spark.sources.snapshots import _stat_norm
+from bookstore_aws_lakehouse_spark.sources.snapshots import _select_files
 
 FORMAT_NAME = "lakesnap"
 
@@ -99,7 +99,8 @@ class _FilePartition(InputPartition):
 
 
 def _bounds_for(filters: Sequence[Filter]) -> dict[str, dict]:
-    """Distill pushed filters into per-column prune questions:
+    """Distill pushed filters into the per-column bounds
+    ``snapshots._select_files`` prunes on:
     {col: {"values": [...] | None, "lo": x | None, "hi": y | None}}.
     Only top-level single-part columns participate (nested paths are
     never pruned on)."""
@@ -108,17 +109,14 @@ def _bounds_for(filters: Sequence[Filter]) -> dict[str, dict]:
     def ent(col) -> dict | None:
         if len(col) != 1:
             return None
-        return out.setdefault(col[0], {"values": [], "lo": None, "hi": None})
+        return out.setdefault(col[0], {"values": None, "lo": None, "hi": None})
 
     for f in filters:
-        if isinstance(f, (EqualTo, EqualNullSafe)):
+        if isinstance(f, (EqualTo, EqualNullSafe, In)):
             e = ent(f.attribute)
-            if e is not None:
-                e["values"].append(f.value)
-        elif isinstance(f, In):  # In.value is the tuple of values
-            e = ent(f.attribute)
-            if e is not None:
-                e["values"].extend(f.value)
+            if e is not None:  # In.value is the tuple of values
+                vals = list(f.value) if isinstance(f, In) else [f.value]
+                e["values"] = (e["values"] or []) + vals
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
             e = ent(f.attribute)
             if e is not None:
@@ -128,37 +126,6 @@ def _bounds_for(filters: Sequence[Filter]) -> dict[str, dict]:
             if e is not None:
                 e["hi"] = f.value if e["hi"] is None else min(e["hi"], f.value)
     return out
-
-
-def _file_may_match(stats_entry: dict, bounds: dict[str, dict]) -> bool:
-    """Conservative: a file survives unless some column's stats PROVE the
-    pushed predicate can't match. Missing stats for a column → survive.
-    Probe values are normalized to the stats' canonical form
-    (timestamps/dates ride the manifest as ISO strings)."""
-    for col, b in bounds.items():
-        row = stats_entry.get(col)
-        if row is None:
-            continue
-        lo, hi, has_null = row
-        if lo is None:
-            # min None = empty file OR a non-empty file whose column is
-            # entirely NULL. A pushed null-probe (EqualNullSafe(col, NULL)
-            # → None in values) MATCHES an all-NULL column, so only prune
-            # when no probe asks for NULL or the file provably has none.
-            if has_null and any(v is None for v in b["values"]):
-                continue
-            return False
-        try:
-            if b["values"]:
-                if not any(lo <= _stat_norm(v) <= hi for v in b["values"]):
-                    return False
-            if b["lo"] is not None and hi < _stat_norm(b["lo"]):
-                return False
-            if b["hi"] is not None and lo > _stat_norm(b["hi"]):
-                return False
-        except TypeError:  # cross-type compare: be conservative
-            continue
-    return True
 
 
 class SnapshotReader(DataSourceReader):
@@ -183,13 +150,7 @@ class SnapshotReader(DataSourceReader):
         return iter(filters)
 
     def partitions(self) -> Sequence[InputPartition]:
-        stats = self._manifest.get("file_stats") or {}
-        kept = [
-            f
-            for f in self._manifest["files"]
-            if not self._bounds
-            or _file_may_match(stats.get(f, {}), self._bounds)
-        ]
+        kept, _ = _select_files(self._manifest, self._bounds)
         return [_FilePartition(_local(f)) for f in kept]
 
     def read(self, partition: _FilePartition):

@@ -52,6 +52,7 @@ upgrade of that sink.
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 import uuid
@@ -117,6 +118,20 @@ def list_versions(spark: SparkSession, table: str) -> list[int]:
             except ValueError:
                 continue
     return sorted(versions)
+
+
+def _resolve(
+    spark: SparkSession, table: str, version: int | None = None
+) -> tuple[int, dict]:
+    """``(version, manifest)`` of one committed snapshot (default: the
+    tip) — the version lookup every reader pins its scan to."""
+    versions = list_versions(spark, table)
+    if not versions:
+        raise FileNotFoundError(f"no snapshot manifests under {table}")
+    v = versions[-1] if version is None else version
+    if v not in versions:
+        raise ValueError(f"version {v} not in {table} (have {versions})")
+    return v, _read_manifest(spark, table, v)
 
 
 class SnapshotConflictError(RuntimeError):
@@ -237,13 +252,11 @@ def _write_data_files(
     if subdir == _DATA_DIR:
         # column mapping: files store physical names (frozen at column
         # birth); a never-renamed column's physical IS its logical name.
-        # Callers that already hold the tip manifest pass it and save a
-        # metadata read per commit.
-        if tip_manifest is not None:
-            mapping = tip_manifest.get("column_mapping") or {}
-            retired = tip_manifest.get("retired_physical") or []
-        else:
-            mapping, retired = _tip_column_mapping(spark, table)
+        # Every data write passes the tip it composes against; None is a
+        # new table, which has no mapping (a racer that creates it first
+        # holds v1, so the claim loses and the retry sees the real tip).
+        mapping = (tip_manifest or {}).get("column_mapping") or {}
+        retired = (tip_manifest or {}).get("retired_physical") or []
         # a NEW column (absent from the mapping) must not collide with a
         # retired physical name (would resurrect dropped data) NOR with
         # the in-use physical name of a RENAMED column (its physical
@@ -750,50 +763,77 @@ def _collect_file_stats(
     return out
 
 
-def _file_may_contain(stats_row, values: list, want_null: bool) -> bool:
-    """Conservative pruning predicate: can this file hold any of the
-    delta's partition values? Unknown stats → True (rewrite, stay
-    correct)."""
-    lo, hi, has_null = stats_row
-    if want_null and has_null:
+def _stats_may_match(row, b: dict) -> bool:
+    """Can a file whose ``[min, max, has_null]`` stats row for a column
+    is ``row`` hold a value meeting the bound ``b``? Conservative: no
+    stats or a cross-type compare keep the file. Probes meet the stats in
+    their canonical form (``_stat_norm``: temporal stats are ISO strings
+    in the manifest)."""
+    if row is None:
         return True
-    if lo is None:  # empty file
-        return False
-    for v in values:
-        try:
-            if lo <= _stat_norm(v) <= hi:
-                return True
-        except TypeError:  # cross-type compare: be conservative
-            return True
-    return False
-
-
-def _range_may_match(stats_row, lo, hi) -> bool:
-    """Conservative range-pruning predicate: can a file whose stats row
-    for a column is ``stats_row`` hold a value in ``[lo, hi]``? No stats
-    → True (must read); stats of an empty file → False. The probes meet
-    the stats in their canonical form (``_stat_norm``: temporal stats
-    are ISO strings in the manifest); a cross-type compare → True."""
-    if stats_row is None:
-        return True
-    fmin, fmax, _null = stats_row
-    if fmin is None:
+    fmin, fmax, has_null = row
+    values, lo, hi = b.get("values"), b.get("lo"), b.get("hi")
+    if (
+        has_null
+        and lo is None
+        and hi is None
+        and any(v is None for v in values or ())
+    ):
+        return True  # a NULL probe meets the file's NULLs
+    if fmin is None:  # empty or all-NULL: no non-null value to match
         return False
     try:
-        return fmin <= _stat_norm(hi) and _stat_norm(lo) <= fmax
+        return (
+            (lo is None or _stat_norm(lo) <= fmax)
+            and (hi is None or fmin <= _stat_norm(hi))
+            and (
+                values is None
+                or any(
+                    v is not None and fmin <= _stat_norm(v) <= fmax
+                    for v in values
+                )
+            )
+        )
     except TypeError:
         return True
 
 
-def _split_by_range(tip: dict, column: str, lo, hi) -> tuple[list, list]:
-    """(touched, carried): the tip files whose stats say ``column`` may
-    land in ``[lo, hi]``, and the provably disjoint rest."""
-    stats = tip.get("file_stats") or {}
+def _select_files(
+    manifest: dict, bounds: dict, blooms: dict | None = None
+) -> tuple[list, list]:
+    """The one file-selection step of every snapshot read and write:
+    ``(touched, carried)`` — the manifest's files that may hold a row
+    matching ``bounds``, and the rest, which the stats PROVE cannot.
+
+    ``bounds`` maps a column to ``{"values": [...], "lo": x, "hi": y}``,
+    every key optional: ``values`` is an IN list (a ``None`` in it is a
+    NULL probe, matching exactly the files that hold NULLs) and
+    ``lo``/``hi`` an inclusive range, open-ended when absent. A file is
+    touched when it may match on EVERY bounded column; no bounds touch
+    every file. ``blooms`` maps a column to the bloom bit positions of
+    each of its ``values`` per ``(m, k)`` config (``_point_lookup_files``
+    computes them); a file whose bloom entry proves every value absent is
+    carried too."""
+    stats = manifest.get("file_stats") or {}
+    file_blooms = manifest.get("file_blooms") or {}
     touched, carried = [], []
-    for f in tip["files"]:
-        row = stats.get(f, {}).get(column)
-        (touched if _range_may_match(row, lo, hi) else carried).append(f)
+    for f in manifest["files"]:
+        may = all(
+            _stats_may_match(stats.get(f, {}).get(c), b)
+            for c, b in bounds.items()
+        ) and all(
+            _bloom_may_contain(file_blooms[f][c], by_cfg)
+            for c, by_cfg in (blooms or {}).items()
+            if c in file_blooms.get(f, {})
+        )
+        (touched if may else carried).append(f)
     return touched, carried
+
+
+def _between(column: str, lo, hi):
+    """``column BETWEEN lo AND hi`` — the row filter every ranged read and
+    delete applies on top of its file selection."""
+    return (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
 
 
 # ---- column mapping: metadata-only RENAME / DROP COLUMN -------------------
@@ -816,19 +856,6 @@ def _split_by_range(tip: dict, column: str, lo, hi) -> tuple[list, list]:
 # renames back.
 
 
-def _tip_column_mapping(spark: SparkSession, table: str) -> tuple[dict, list]:
-    """(column_mapping, retired_physical) at the tip; ({}, []) for a new
-    or never-renamed table."""
-    try:
-        versions = list_versions(spark, table)
-        if not versions:
-            return {}, []
-        m = _read_manifest(spark, table, versions[-1])
-    except Exception:
-        return {}, []
-    return m.get("column_mapping") or {}, m.get("retired_physical") or []
-
-
 def _physical_schema(schema: StructType, mapping: dict) -> StructType:
     if not mapping:
         return schema
@@ -839,49 +866,6 @@ def _physical_schema(schema: StructType, mapping: dict) -> StructType:
             )
             for f in schema.fields
         ]
-    )
-
-
-def snapshot_detail(spark: SparkSession, table: str) -> DataFrame:
-    """``DESCRIBE DETAIL`` — one row of table facts from metadata alone
-    (no data I/O, no Spark job for the file stats): version, operation,
-    file count and total bytes, dead-row count and sidecar count
-    (deletion vectors), active constraint / bloom-index / column-mapping
-    presence, and the commit timestamp. The at-a-glance health check an
-    operator runs before deciding on OPTIMIZE / purge / vacuum."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    m = _read_manifest(spark, table, versions[-1])
-    fs, _, jvm = _fs(spark, table)
-    size = 0
-    for f in m["files"]:
-        try:
-            size += fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getLen()
-        except Exception:
-            size = -1
-            break
-    dv = m.get("dv") or {}
-    row = {
-        "version": versions[-1],
-        "num_versions": len(versions),
-        "operation": m.get("operation"),
-        "num_files": len(m["files"]),
-        "size_bytes": size,
-        "num_deleted_rows": sum((dv.get("cardinality") or {}).values()),
-        "num_dv_sidecars": len(dv.get("sidecars") or []),
-        "num_constraints": len(m.get("constraints") or {}),
-        "num_stats_files": len(m.get("file_stats") or {}),
-        "num_bloom_files": len(m.get("file_blooms") or {}),
-        "column_mapped": bool(m.get("column_mapping")),
-        "committed_at_unix": float(m.get("committed_at_unix") or 0.0),
-    }
-    return spark.createDataFrame(
-        [tuple(row.values())],
-        ", ".join(
-            f"{k} {'string' if k == 'operation' else 'boolean' if k == 'column_mapped' else 'double' if k == 'committed_at_unix' else 'bigint'}"
-            for k in row
-        ),
     )
 
 
@@ -1205,13 +1189,7 @@ def snapshot_read(
     parquet read — pushdown, pruning and the vectorized reader all apply;
     an empty snapshot returns an empty DataFrame with the manifest's
     schema (a zero-file parquet read has no schema to infer)."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
+    _, manifest = _resolve(spark, table, version)
     schema = StructType.fromJson(manifest["schema"])
     # pin the schema from the manifest: mixed historic widths across
     # commits must resolve to the COMMITTED schema, not scan-order luck;
@@ -1222,10 +1200,12 @@ def snapshot_read(
 def snapshot_scan(
     spark: SparkSession,
     table: str,
-    column: str,
-    lo,
-    hi,
+    column: str | None = None,
+    lo=None,
+    hi=None,
     version: int | None = None,
+    *,
+    ranges: dict[str, tuple] | None = None,
 ) -> DataFrame:
     """Stats-pruned range scan — Iceberg-style scan planning on the
     manifest: files whose recorded [min, max] for ``column`` cannot
@@ -1238,22 +1218,29 @@ def snapshot_scan(
     files it opens, but only a table format's metadata can skip whole
     files before planning. Record stats via ``stats_cols=[column]`` on
     ``snapshot_overwrite`` or ``snapshot_merge``; every later rewrite
-    keeps them."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
-    stats = manifest.get("file_stats") or {}
-    files = [
-        f
-        for f in manifest["files"]
-        if _range_may_match(stats.get(f, {}).get(column), lo, hi)
-    ]
+    keeps them.
+
+    ``ranges={col: (lo, hi), ...}`` (instead of ``column``/``lo``/``hi``)
+    scans on SEVERAL column ranges at once, ANDed — the consumer the
+    Z-ordered layout exists for: a file is opened only when its stats
+    intersect EVERY range, so pruning factors multiply across
+    dimensions (a linear clustering can only ever serve one)."""
+    if (column is None) == (ranges is None):
+        raise ValueError(
+            "pass exactly one of: column/lo/hi, or ranges={col: (lo, hi)}"
+        )
+    if ranges is None:
+        ranges = {column: (lo, hi)}
+    elif not ranges:
+        raise ValueError("ranges must name at least one column")
+    _, manifest = _resolve(spark, table, version)
+    files, _ = _select_files(
+        manifest, {c: {"lo": lo, "hi": hi} for c, (lo, hi) in ranges.items()}
+    )
     schema = StructType.fromJson(manifest["schema"])
-    pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
+    pred = functools.reduce(
+        lambda a, b: a & b, [_between(c, lo, hi) for c, (lo, hi) in ranges.items()]
+    )
     return _read_data_files(spark, schema, files, manifest).filter(pred)
 
 
@@ -1270,8 +1257,6 @@ def _anti_join_null_safe(
     NULL-SAFE equality: a plain ``on=keys`` join never matches NULL keys,
     so a NULL-keyed row would survive every merge and duplicate on each
     re-delivery."""
-    import functools
-
     right = delta.select(*[F.col(k).alias(f"_dk_{k}") for k in keys]).distinct()
     cond = functools.reduce(
         lambda a, b: a & b,
@@ -1297,9 +1282,7 @@ def _try_rebase(
     new_files: list[str],
     new_stats: dict,
     stats_cols: list[str],
-    partition_col: str | None,
-    values: list,
-    want_null: bool,
+    bounds: dict,
     schema: StructType,
 ) -> int | None:
     """Conflict-class resolution for a merge that lost its version race:
@@ -1313,12 +1296,14 @@ def _try_rebase(
     1. every racer op is in ``_REBASEABLE_OPS`` (no overwrite);
     2. the tip still references every file this merge rewrote
        (``touched``) — no racer touched the same files; and
-    3. every file the racers ADDED (tip ∖ base) carries ``partition_col``
-       stats proving it holds none of this merge's partition values —
-       with partition_col functionally dependent on the merge keys
-       (the documented contract), no racer row can collide with a delta
-       key. Files without stats fail the test (conservative), and so
-       does every added file of a merge without ``partition_col``.
+    3. every file the racers ADDED (tip ∖ base) is carried by
+       ``_select_files`` under the merge's ``bounds`` — its
+       ``partition_col`` stats prove it holds none of this merge's
+       partition values. With partition_col functionally dependent on
+       the merge keys (the documented contract), no racer row can
+       collide with a delta key. Files without stats fail the test
+       (conservative), and so does every added file of a merge without
+       ``partition_col`` (empty ``bounds`` touch every file).
 
     The rebased manifest is (tip ∖ touched) ∪ new_files — racer rewrites
     of files this merge only CARRIED adopt the racer's version. Returns
@@ -1340,11 +1325,9 @@ def _try_rebase(
         tip_files = set(tip["files"])
         if not touched_set <= tip_files:
             return None
-        tip_stats = tip.get("file_stats") or {}
-        for f in tip_files - set(base_files):
-            row = tip_stats.get(f, {}).get(partition_col)
-            if row is None or _file_may_contain(row, values, want_null):
-                return None
+        added = {**tip, "files": sorted(tip_files - set(base_files))}
+        if _select_files(added, bounds)[0]:
+            return None
         rebased = [f for f in tip["files"] if f not in touched_set]
         return _commit(
             spark, table, "merge", rebased + new_files, schema, tip_v, tip,
@@ -1417,8 +1400,9 @@ def snapshot_merge(
     all_stats_cols = [
         c for c in dict.fromkeys([partition_col, *(stats_cols or [])]) if c
     ]
-    values: list = []
-    want_null = False
+    # the file selection of every attempt and of the rebase proof; no
+    # partition column, no bounds: every file is touched
+    bounds: dict = {}
     if partition_col is not None:
         cap = MAX_MERGE_PARTITIONS
         parts = [
@@ -1432,8 +1416,7 @@ def snapshot_merge(
                 f"partition by a coarser derived column or merge without "
                 f"partition_col."
             )
-        values = [p for p in parts if p is not None]
-        want_null = any(p is None for p in parts)
+        bounds = {partition_col: {"values": parts}}
 
     def compose(tip_v: int, tip: dict | None, write) -> int:
         if tip is None:  # a new table: the delta is the whole content
@@ -1441,15 +1424,7 @@ def snapshot_merge(
                 spark, table, "merge", tip_v, tip, write, [], clustered(df),
                 stats_cols=all_stats_cols,
             )
-        prev_stats = tip.get("file_stats") or {}
-        touched, carried = [], []
-        for f in tip["files"]:
-            # no partition column, no stats row: the file is touched
-            row = prev_stats.get(f, {}).get(partition_col)
-            if row is not None and not _file_may_contain(row, values, want_null):
-                carried.append(f)
-            else:
-                touched.append(f)
+        touched, carried = _select_files(tip, bounds)
         schema = StructType.fromJson(tip["schema"])
         if touched:
             existing = _read_data_files(spark, schema, touched, tip)
@@ -1482,8 +1457,7 @@ def snapshot_merge(
             # files onto the new tip — no recompute, no data I/O
             version = _try_rebase(
                 spark, table, tip_v, tip["files"], touched, new_files,
-                new_stats, all_stats_cols, partition_col, values, want_null,
-                schema,
+                new_stats, all_stats_cols, bounds, schema,
             )
             if version is None:
                 raise  # the loop reclaims new_files and recomputes
@@ -1525,8 +1499,6 @@ def snapshot_merge_when(
     with the same optimistic-concurrency retry as ``snapshot_merge``.
     Reference: Delta Lake's MERGE (public API semantics), rebuilt
     relationally."""
-    import functools
-
     spark = source.sparkSession
     keys = list(key_cols)
     upd = dict(when_matched_update or {})
@@ -1624,47 +1596,6 @@ def snapshot_merge_when(
     return _commit_loop(spark, table, "merge", compose)
 
 
-def snapshot_scan_multi(
-    spark: SparkSession,
-    table: str,
-    ranges: dict[str, tuple],
-    version: int | None = None,
-) -> DataFrame:
-    """Stats-pruned scan on SEVERAL column ranges at once — the consumer
-    the Z-ordered layout exists for: a file is opened only when its
-    recorded [min, max] intersects EVERY predicate's range, so pruning
-    factors multiply across dimensions (on a Z-ordered table each
-    predicate independently removes most files; a linear clustering can
-    only ever serve one). Result is exactly
-    ``snapshot_read(...).filter(AND of all ranges)`` — files without
-    stats are conservatively included, pruning is never a semantics
-    change. ``ranges`` maps column -> (lo, hi), both inclusive."""
-    if not ranges:
-        raise ValueError("ranges must name at least one column")
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
-    stats = manifest.get("file_stats") or {}
-    files = [
-        f
-        for f in manifest["files"]
-        if all(
-            _range_may_match(stats.get(f, {}).get(c), lo, hi)
-            for c, (lo, hi) in ranges.items()
-        )
-    ]
-    schema = StructType.fromJson(manifest["schema"])
-    pred = None
-    for column, (lo, hi) in ranges.items():
-        c = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
-        pred = c if pred is None else pred & c
-    return _read_data_files(spark, schema, files, manifest).filter(pred)
-
-
 def _prev_stats_cols(prev_stats: dict) -> list[str]:
     """Union of columns any file in a manifest has stats for — rewrites
     re-collect the same columns so pruning survives the operation."""
@@ -1679,36 +1610,44 @@ def _prev_stats_cols(prev_stats: dict) -> list[str]:
 def snapshot_delete(
     spark: SparkSession,
     table: str,
-    column: str,
-    lo,
-    hi,
+    column: str | None = None,
+    lo=None,
+    hi=None,
     extra_condition=None,
 ) -> int:
-    """Row-level DELETE with stats-pruned file rewrite — the
-    ``DELETE FROM t WHERE column BETWEEN lo AND hi [AND extra]`` analog:
-    files whose manifest stats prove ``column`` never lands in
-    ``[lo, hi]`` are CARRIED into the new version untouched (zero I/O,
-    same path); only files that may hold a matching row are read and
-    rewritten without the deleted rows. SQL semantics: a NULL ``column``
-    (or a NULL ``extra_condition``) never matches the predicate, so those
-    rows are kept. The rewrite is a narrow filter over the touched files
-    (no shuffle), so each surviving file keeps its clustering and its
-    re-collected stats stay tight; files rewritten to zero rows drop out
-    of the manifest entirely. Prior versions remain readable (time
-    travel) until ``vacuum``. Conflicts recompute against the new tip
-    (delete predicates are ranges, not value lists, so the partitioned-
-    merge rebase proof doesn't apply as-is)."""
-    pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
-    if extra_condition is not None:
-        extra = (
-            F.expr(extra_condition)
-            if isinstance(extra_condition, str)
-            else extra_condition
-        )
-        pred = pred & extra
+    """Row-level copy-on-write DELETE — the ``DELETE FROM t WHERE column
+    BETWEEN lo AND hi [AND extra]`` analog, stats-pruned: files whose
+    manifest stats prove ``column`` never lands in ``[lo, hi]`` are
+    CARRIED into the new version untouched (zero I/O, same path); only
+    files that may hold a matching row are read and rewritten without
+    the deleted rows. Without ``column``, ``extra_condition`` (a SQL
+    string or a Column) is the whole predicate and every file counts as
+    touched — the ``DELETE FROM t WHERE <any predicate>`` form. SQL
+    semantics: a NULL ``column`` (or a NULL ``extra_condition``) never
+    matches the predicate, so those rows are kept. The rewrite is a
+    narrow filter over the touched files (no shuffle), so each surviving
+    file keeps its clustering and its re-collected stats stay tight;
+    files rewritten to zero rows drop out of the manifest entirely.
+    Prior versions remain readable (time travel) until ``vacuum``.
+    Conflicts recompute against the new tip (delete predicates are
+    ranges, not value lists, so the partitioned-merge rebase proof
+    doesn't apply as-is)."""
+    if column is None and extra_condition is None:
+        raise ValueError("pass column/lo/hi, extra_condition, or both")
+    extra = (
+        F.expr(extra_condition)
+        if isinstance(extra_condition, str)
+        else extra_condition
+    )
+    if column is None:
+        pred, bounds = extra, {}
+    else:
+        pred = _between(column, lo, hi)
+        pred = pred if extra is None else pred & extra
+        bounds = {column: {"lo": lo, "hi": hi}}
 
     def compose(tip_v: int, tip: dict, write) -> int:
-        touched, carried = _split_by_range(tip, column, lo, hi)
+        touched, carried = _select_files(tip, bounds)
         survivors = None
         if touched:
             # the shared read path applies any deletion vectors on the
@@ -1750,7 +1689,7 @@ def snapshot_replace_where(
     spark = df.sparkSession
     # one evaluation feeds the range check, the constraint check and the write
     df = df.localCheckpoint()
-    pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
+    pred = _between(column, lo, hi)
     if df.filter(~F.coalesce(pred, F.lit(False))).limit(1).count():
         raise ValueError(
             f"replaceWhere data contains rows outside {column} BETWEEN "
@@ -1761,7 +1700,7 @@ def snapshot_replace_where(
     _validate_constraints(df, cons_seen)
 
     def compose(tip_v: int, tip: dict, write) -> int:
-        touched, carried = _split_by_range(tip, column, lo, hi)
+        touched, carried = _select_files(tip, {column: {"lo": lo, "hi": hi}})
         schema = StructType.fromJson(tip["schema"])
         replacement = df.select(*schema.names)
         if touched:
@@ -1923,13 +1862,7 @@ def snapshot_files(
     tiny (OPTIMIZE?), which carry vectors (purge?), whether the
     clustering actually produced disjoint ranges (zorder verification) —
     all answered without touching data bytes."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    m = _read_manifest(spark, table, v)
+    _, m = _resolve(spark, table, version)
     stats = m.get("file_stats") or {}
     card = (m.get("dv") or {}).get("cardinality") or {}
     try:
@@ -2088,13 +2021,7 @@ def snapshot_count(
     distributed count when any file is non-local or unreadable (remote
     object stores want a ranged footer fetch this sandbox can't do) —
     callers always get the exact answer either way."""
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    m = _read_manifest(spark, table, v)
+    v, m = _resolve(spark, table, version)
     files = m["files"]
     # merge-on-read deletes stay metadata-only too: the manifest records
     # the dead-row count per file, so COUNT = footer rows - cardinality
@@ -2368,14 +2295,17 @@ def snapshot_bloom_index(
 
 
 def _bloom_may_contain(entry: dict, positions_by_cfg: dict) -> bool:
-    """Probe one file's bloom entry with the precomputed positions for
-    its (m, k) config. Unknown config (not precomputed) → conservative
+    """Probe one file's bloom entry: may it hold ANY of the values whose
+    bit positions for its (m, k) config are precomputed (one position
+    list per value)? Unknown config (not precomputed) → conservative
     True."""
-    pos = positions_by_cfg.get((entry["m"], entry["k"]))
-    if pos is None:
+    per_value = positions_by_cfg.get((entry["m"], entry["k"]))
+    if per_value is None:
         return True
     bits = bytes.fromhex(entry["bits"])
-    return all(bits[p >> 3] & (1 << (p & 7)) for p in pos)
+    return any(
+        all(bits[p >> 3] & (1 << (p & 7)) for p in pos) for pos in per_value
+    )
 
 
 def _point_lookup_files(
@@ -2383,28 +2313,20 @@ def _point_lookup_files(
 ) -> tuple[list[str], list[str], StructType, dict]:
     """Scan planning for a point/IN lookup (``values``: one value or a
     list): (files to read, all tip files, pinned schema, manifest). Pruning
-    composes BOTH metadata layers — min/max stats (range check) and the
-    bloom index (membership check, a file survives if ANY value may be
-    present); a file must survive both to be read, and files missing
-    either layer pass that layer conservatively."""
+    composes BOTH metadata layers through ``_select_files`` — min/max
+    stats (range check) and the bloom index (membership check, a file
+    survives if ANY value may be present); a file must survive both to be
+    read, and files missing either layer pass that layer conservatively."""
     if not isinstance(values, (list, tuple)):
         values = [values]
-    versions = list_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {table}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {table} (have {versions})")
-    manifest = _read_manifest(spark, table, v)
+    _, manifest = _resolve(spark, table, version)
     schema = StructType.fromJson(manifest["schema"])
     if column not in schema.names:
         raise ValueError(f"column {column!r} not in table schema {schema.names}")
     dtype = schema[column].dataType
-    stats = manifest.get("file_stats") or {}
-    blooms = manifest.get("file_blooms") or {}
     cfgs = {
         (e[column]["m"], e[column]["k"])
-        for e in blooms.values()
+        for e in (manifest.get("file_blooms") or {}).values()
         if column in e
     }
     # one local job per distinct (m, k) config — normally exactly one —
@@ -2424,28 +2346,12 @@ def _point_lookup_files(
             .head()
         )
         positions_by_cfg[(m, k)] = [list(p) for p in row["p"]]
-
-    def keep(f: str) -> bool:
-        st = stats.get(f, {}).get(column)
-        if st is not None and not _file_may_contain(st, list(values), False):
-            return False
-        entry = blooms.get(f, {}).get(column)
-        if entry is not None and not any(
-            _bloom_may_contain(
-                entry,
-                {cfg: plist[i] for cfg, plist in positions_by_cfg.items()},
-            )
-            for i in range(len(values))
-        ):
-            return False
-        return True
-
-    return (
-        [f for f in manifest["files"] if keep(f)],
-        manifest["files"],
-        schema,
+    files, _ = _select_files(
         manifest,
+        {column: {"values": list(values)}},
+        blooms={column: positions_by_cfg},
     )
+    return files, manifest["files"], schema, manifest
 
 
 def snapshot_point_lookup(
@@ -2461,37 +2367,23 @@ def snapshot_point_lookup(
     equality filter runs on the survivors (so the result is exactly the
     filtered read — pruning is an optimization, never a semantics
     change). The 100 TB shape: a needle-in-haystack key probe touches
-    O(matching files + false positives) instead of every file."""
-    if value is None:
-        raise ValueError("point lookup value must be non-null (use stats' "
-                         "has_null via snapshot_scan for IS NULL probes)")
-    files, _all, schema, manifest = _point_lookup_files(
-        spark, table, column, value, version
-    )
-    pred = F.col(column) == F.lit(value).cast(schema[column].dataType)
-    return _read_data_files(spark, schema, files, manifest).filter(pred)
+    O(matching files + false positives) instead of every file.
 
-
-def snapshot_in_lookup(
-    spark: SparkSession,
-    table: str,
-    column: str,
-    values: list,
-    version: int | None = None,
-) -> DataFrame:
-    """``SELECT * FROM t WHERE column IN (...)`` with whole-file skipping:
-    the multi-needle sibling of :func:`snapshot_point_lookup` — a file is
-    read iff stats/bloom say it may hold ANY of the values (all probe
-    positions come from ONE local hashing job). The batched-key-fetch
-    shape: resolving a 100-key worklist against a 100 TB table touches
-    the union of the keys' files, not the table."""
-    vals = [v for v in values]
-    if not vals or any(v is None for v in vals):
-        raise ValueError("IN lookup needs a non-empty list of non-null values")
+    A list ``value`` is ``WHERE column IN (...)``: a file is read iff
+    stats/bloom say it may hold ANY of the values (all probe positions
+    come from ONE local hashing job) — the batched-key-fetch shape, where
+    a 100-key worklist touches the union of the keys' files."""
+    values = list(value) if isinstance(value, (list, tuple)) else [value]
+    if not values or any(v is None for v in values):
+        raise ValueError(
+            "point lookup needs non-null value(s); for IS NULL use "
+            "snapshot_read(...).filter(F.col(column).isNull())"
+        )
     files, _all, schema, manifest = _point_lookup_files(
-        spark, table, column, vals, version
+        spark, table, column, values, version
     )
-    pred = F.col(column).isin([v for v in vals])
+    dtype = schema[column].dataType
+    pred = F.col(column).isin([F.lit(v).cast(dtype) for v in values])
     return _read_data_files(spark, schema, files, manifest).filter(pred)
 
 
@@ -2668,31 +2560,6 @@ def snapshot_drop_column(spark: SparkSession, table: str, col: str) -> int:
     return _commit_loop(spark, table, "drop_column", compose)
 
 
-def snapshot_delete_where(
-    spark: SparkSession, table: str, predicate: str
-) -> int:
-    """``DELETE FROM t WHERE predicate`` for ARBITRARY predicates: keeps
-    the complement (NULL-predicate rows are KEPT, SQL DELETE semantics)
-    and commits it as a full rewrite. This is the general-but-unpruned
-    path — when the predicate is a range on a stats-covered column, use
-    :func:`snapshot_delete`, which rewrites only the files whose stats
-    can match and carries the rest by identity. Constraints and carried
-    bloom entries inherit via the normal commit path (rewritten files
-    are unindexed until re-index)."""
-
-    def compose(tip_v: int, tip: dict, write) -> int:
-        existing = _read_data_files(
-            spark, StructType.fromJson(tip["schema"]), tip["files"], tip
-        )
-        kept = existing.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        return _rewrite(
-            spark, table, "delete", tip_v, tip, write, [], kept,
-            schema=existing.schema,
-        )
-
-    return _commit_loop(spark, table, "delete", compose)
-
-
 def snapshot_update(
     spark: SparkSession,
     table: str,
@@ -2766,9 +2633,9 @@ def snapshot_delete_dv(
     (file, row-position) pairs plus one manifest, so the write cost is
     proportional to the rows DELETED, not the rows kept. At 100 TB this
     is the difference between a kilobyte commit and re-writing every
-    touched gigabyte; the copy-on-write forms (:func:`snapshot_delete`,
-    :func:`snapshot_delete_where`) stay the right tool when a delete
-    guts whole files. SQL semantics: a NULL predicate never matches.
+    touched gigabyte; the copy-on-write :func:`snapshot_delete` stays
+    the right tool when a delete guts whole files. SQL semantics: a
+    NULL predicate never matches.
 
     Readers subtract the vectors in the shared read path
     (``_read_data_files``); ``snapshot_count`` stays metadata-only
@@ -2791,7 +2658,7 @@ def snapshot_delete_dv(
             "pass exactly one of: predicate=<sql>, or column/lo/hi"
         )
     if column is not None:
-        pred = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
+        pred = _between(column, lo, hi)
         if extra_condition is not None:
             pred = pred & F.expr(extra_condition)
     else:
@@ -2807,7 +2674,7 @@ def snapshot_delete_dv(
         if column is not None:
             # whole-file skipping: a file whose [min, max] for `column`
             # cannot intersect [lo, hi] cannot hold a matching row
-            scan_files, _ = _split_by_range(tip, column, lo, hi)
+            scan_files, _ = _select_files(tip, {column: {"lo": lo, "hi": hi}})
         if not scan_files:
             return tip_v
         # scan WITH row positions, existing vectors already subtracted —
@@ -3093,15 +2960,9 @@ def snapshot_clone(
     delete files the clone still references (the source doesn't know its
     readers) — deep-copy first if the source's retention is shorter than
     the clone's life."""
-    versions = list_versions(spark, source_table)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot manifests under {source_table}")
+    v, m = _resolve(spark, source_table, version)
     if list_versions(spark, target_table):
         raise ValueError(f"clone target {target_table} already exists")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {source_table} (have {versions})")
-    m = _read_manifest(spark, source_table, v)
     manifest = {
         "operation": "clone",
         "cloned_from": {"table": source_table, "version": v},

@@ -188,19 +188,56 @@ def test_file_may_match_all_null_column_with_null_probe(spark):
     """An all-NULL column stats row is [None, None, True] — identical min
     to an empty file. A pushed null probe (EqualNullSafe(col, NULL) →
     None in values) matches exactly those files, so they must SURVIVE
-    pruning; an empty file ([None, None, False]) never matches anything."""
-    from bookstore_aws_lakehouse_spark.sources.pyds import _file_may_match
+    the reader's pruning (``snapshots._select_files``); an empty file
+    ([None, None, False]) never matches anything."""
+    from bookstore_aws_lakehouse_spark.sources.snapshots import _select_files
+
+    def may_match(stats_entry: dict, bounds: dict) -> bool:
+        m = {"files": ["f"], "file_stats": {"f": stats_entry}}
+        return _select_files(m, bounds)[0] == ["f"]
 
     all_null = {"k": [None, None, True]}
     empty = {"k": [None, None, False]}
     null_probe = {"k": {"values": [None], "lo": None, "hi": None}}
     value_probe = {"k": {"values": [5], "lo": None, "hi": None}}
-    assert _file_may_match(all_null, null_probe)  # must keep
-    assert not _file_may_match(all_null, value_probe)  # = 5 can't match NULLs
-    assert not _file_may_match(empty, null_probe)  # empty matches nothing
-    assert not _file_may_match(empty, value_probe)
-    # normal file with a null probe: conservative keep (range check TypeErrors)
-    assert _file_may_match({"k": [1, 9, True]}, null_probe)
+    assert may_match(all_null, null_probe)  # must keep
+    assert not may_match(all_null, value_probe)  # = 5 can't match NULLs
+    assert not may_match(empty, null_probe)  # empty matches nothing
+    assert not may_match(empty, value_probe)
+    # a file holding NULLs meets the null probe whatever its range
+    assert may_match({"k": [1, 9, True]}, null_probe)
+
+
+def test_reader_and_engine_select_the_same_files(spark, tmp_path):
+    """One range, three planners — the lakesnap reader's pushed
+    ``>=``/``<=`` filters, ``snapshot_scan`` and the ranged
+    ``snapshot_delete_dv`` — pick the same files, a strict non-empty
+    subset of the table: the file-selection decision lives in one place.
+    The range straddles two files' interiors, so every selected file
+    holds a matching row and gains a deletion vector."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
+
+    from bookstore_aws_lakehouse_spark.sources.snapshots import (
+        _norm_uri,
+        _read_manifest,
+        snapshot_delete_dv,
+        snapshot_scan,
+    )
+
+    table = str(tmp_path / "t")
+    _mk(spark, table)
+    lo, hi = 150, 260
+    r = SnapshotReader({"path": table}, snapshot_read(spark, table).schema)
+    r.pushFilters([GreaterThanOrEqual(("k",), lo), LessThanOrEqual(("k",), hi)])
+    via_reader = {p.path for p in r.partitions()}
+    via_scan = {
+        _norm_uri(f) for f in snapshot_scan(spark, table, "k", lo, hi).inputFiles()
+    }
+    v = snapshot_delete_dv(spark, table, column="k", lo=lo, hi=hi)
+    m = _read_manifest(spark, table, v)
+    via_dv = {_norm_uri(f) for f in m["dv"]["cardinality"]}
+    assert via_reader == via_scan == via_dv
+    assert 0 < len(via_dv) < len(m["files"])
 
 
 def test_format_read_conforms_numeric_evolved_columns(spark, tmp_path):

@@ -1087,7 +1087,7 @@ def test_in_lookup_prunes_union_of_files(spark, table):
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _point_lookup_files,
         snapshot_bloom_index,
-        snapshot_in_lookup,
+        snapshot_point_lookup,
     )
 
     df = (
@@ -1102,12 +1102,14 @@ def test_in_lookup_prunes_union_of_files(spark, table):
     kept, all_files, _, _m = _point_lookup_files(spark, table, "k", [10, 390], None)
     assert len(all_files) == 8
     assert 2 <= len(kept) < len(all_files)
-    got = sorted(r.k for r in snapshot_in_lookup(spark, table, "k", [10, 390]).collect())
+    got = sorted(
+        r.k for r in snapshot_point_lookup(spark, table, "k", [10, 390]).collect()
+    )
     assert got == [10, 390]
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="non-null"):
-        snapshot_in_lookup(spark, table, "k", [])
+        snapshot_point_lookup(spark, table, "k", [])
 
 
 def test_incremental_rollup_composes_across_versions(spark, table):
@@ -1381,7 +1383,7 @@ def test_delete_where_and_update_predicate_forms(spark, table):
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         SnapshotConstraintError,
         snapshot_add_constraint,
-        snapshot_delete_where,
+        snapshot_delete,
         snapshot_update,
     )
 
@@ -1390,7 +1392,7 @@ def test_delete_where_and_update_predicate_forms(spark, table):
         spark.createDataFrame(rows, "k int, tag string, amt int"), table
     )
     # NULL tag -> predicate NULL -> row KEPT by delete
-    snapshot_delete_where(spark, table, "tag = 'b'")
+    snapshot_delete(spark, table, extra_condition="tag = 'b'")
     got = sorted(r.k for r in snapshot_read(spark, table).collect())
     assert got == [1, 3, 4]
 
@@ -1424,10 +1426,10 @@ def test_forgotten_key_leaves_no_bytes_after_vacuum(spark, table):
         table,
     )
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_delete_where,
+        snapshot_delete,
     )
 
-    snapshot_delete_where(spark, table, f"payload = '{secret}'")
+    snapshot_delete(spark, table, extra_condition=f"payload = '{secret}'")
     # pre-vacuum: the old version still serves the secret (time travel)
     assert snapshot_read(spark, table, 1).filter(
         F.col("payload") == secret
@@ -1670,7 +1672,7 @@ def test_snapshot_count_matches_scan_per_version(spark, table):
     every version, including after deletes (rewritten file sets)."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_count,
-        snapshot_delete_where,
+        snapshot_delete,
     )
 
     snapshot_overwrite(
@@ -1679,7 +1681,7 @@ def test_snapshot_count_matches_scan_per_version(spark, table):
     snapshot_append(
         spark.range(1000, 1300).select(F.col("id").cast("int").alias("k")), table
     )
-    snapshot_delete_where(spark, table, "k % 3 = 0")
+    snapshot_delete(spark, table, extra_condition="k % 3 = 0")
     for v in (1, 2, 3):
         assert snapshot_count(spark, table, v) == snapshot_read(
             spark, table, v
@@ -2103,29 +2105,6 @@ def test_replace_where_swaps_exactly_the_range(spark, table):
         )
 
 
-def test_snapshot_detail_reports_table_facts(spark, table):
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        snapshot_delete_dv,
-        snapshot_detail,
-        snapshot_rename_column,
-    )
-
-    snapshot_overwrite(
-        spark.range(0, 100).selectExpr("id as k", "cast(id as double) as v"),
-        table,
-        stats_cols=["k"],
-    )
-    snapshot_delete_dv(spark, table, "k < 7")
-    snapshot_rename_column(spark, table, "v", "value")
-    d = snapshot_detail(spark, table).head().asDict()
-    assert d["version"] == 3 and d["num_versions"] == 3
-    assert d["operation"] == "rename_column"
-    assert d["num_deleted_rows"] == 7 and d["num_dv_sidecars"] >= 1
-    assert d["num_files"] >= 1 and d["size_bytes"] > 0
-    assert d["column_mapped"] is True
-    assert d["num_stats_files"] == d["num_files"]
-
-
 # ---- review-pass regressions (r11 code review findings) -------------------
 
 
@@ -2243,7 +2222,7 @@ def _stats_rewrite(spark, table, writer):
             delta, table, ["k"], when_matched_update={"v": "s.v"}
         )
     if writer == "delete_where":
-        return snap.snapshot_delete_where(spark, table, "k = 3")
+        return snap.snapshot_delete(spark, table, extra_condition="k = 3")
     return snap.snapshot_update(spark, table, {"v": "v + 1.0"}, where="k = 3")
 
 
@@ -2282,25 +2261,133 @@ def test_full_rewrites_keep_file_stats(spark, table, writer):
     ],
 )
 def test_range_may_match_normalizes_temporal_probes(lo_h, hi_h, want):
-    """The shared range-pruning predicate on a TIMESTAMP stats row —
-    stored in the manifest as canonical ISO strings — probed with
-    datetimes: disjoint ranges prune, overlapping ones keep the file, an
-    empty file always prunes and a missing stats row never does. Raw
-    datetimes compared against the ISO strings would raise TypeError and
-    fall back to opening every file."""
+    """The shared file selection (``_select_files``) on a TIMESTAMP stats
+    row — stored in the manifest as canonical ISO strings — probed with a
+    datetime range: disjoint ranges prune, overlapping ones keep the
+    file, an all-NULL file always prunes and a missing stats row never
+    does. Raw datetimes compared against the ISO strings would raise
+    TypeError and fall back to opening every file."""
+    bounds = {"ts": {"lo": _at(lo_h), "hi": _at(hi_h)}}
+    row = [_iso(0), _iso(23), False]
+    assert _selects({"ts": row}, bounds) is want
+    assert _selects({"ts": [None, None, True]}, bounds) is False
+    assert _selects(None, bounds) is True
+
+
+def _at(hours: int):
     import datetime as dt
 
-    from bookstore_aws_lakehouse_spark.sources.snapshots import (
-        _range_may_match,
-        _stat_norm,
+    return dt.datetime(2026, 3, 1, tzinfo=dt.timezone.utc) + dt.timedelta(
+        hours=hours
     )
 
-    base = dt.datetime(2026, 3, 1, tzinfo=dt.timezone.utc)
-    at = lambda h: base + dt.timedelta(hours=h)  # noqa: E731
-    row = [_stat_norm(at(0)), _stat_norm(at(23)), False]
-    assert _range_may_match(row, at(lo_h), at(hi_h)) is want
-    assert _range_may_match([None, None, True], at(lo_h), at(hi_h)) is False
-    assert _range_may_match(None, at(lo_h), at(hi_h)) is True
+
+def _selects(stats: dict | None, bounds: dict) -> bool:
+    """Does ``_select_files`` touch the one file of a manifest whose
+    stats entry is ``stats`` (None: the file has no stats)?"""
+    from bookstore_aws_lakehouse_spark.sources.snapshots import _select_files
+
+    m = {"files": ["f"], "file_stats": {} if stats is None else {"f": stats}}
+    touched, carried = _select_files(m, bounds)
+    assert touched + carried == ["f"]
+    return touched == ["f"]
+
+
+def _iso(hours: int) -> str:
+    from bookstore_aws_lakehouse_spark.sources.snapshots import _stat_norm
+
+    return _stat_norm(_at(hours))
+
+
+_K19 = {"k": [1, 9, False]}
+_NULL_PROBE = {"k": {"values": [None]}}
+
+
+@pytest.mark.parametrize(
+    "stats, bounds, want",
+    [
+        # the lakesnap reader's null-probe cases
+        pytest.param({"k": [None, None, True]}, _NULL_PROBE, True,
+                     id="all-null-file-null-probe"),
+        pytest.param({"k": [None, None, True]}, {"k": {"values": [5]}}, False,
+                     id="all-null-file-value-probe"),
+        pytest.param({"k": [None, None, False]}, _NULL_PROBE, False,
+                     id="empty-file-null-probe"),
+        pytest.param({"k": [None, None, False]}, {"k": {"values": [5]}}, False,
+                     id="empty-file-value-probe"),
+        pytest.param({"k": [1, 9, True]}, _NULL_PROBE, True,
+                     id="file-with-nulls-null-probe"),
+        pytest.param(_K19, _NULL_PROBE, False, id="null-free-file-null-probe"),
+        pytest.param(_K19, {"k": {"values": [None, 5]}}, True,
+                     id="null-and-value-probe"),
+        # missing stats keep the file
+        pytest.param(None, {"k": {"values": [5]}}, True, id="no-stats-entry"),
+        pytest.param({"j": [1, 9, False]}, {"k": {"lo": 50}}, True,
+                     id="no-stats-for-column"),
+        pytest.param({"k": [None, None, False]}, {"k": {"lo": 0, "hi": 9}},
+                     False, id="empty-file-range"),
+        pytest.param({"k": [None, None, True]}, {"k": {"lo": 0, "hi": 9}},
+                     False, id="all-null-file-range"),
+        # a probe of another type keeps the file
+        pytest.param(_K19, {"k": {"values": ["x"]}}, True,
+                     id="cross-type-value"),
+        pytest.param(_K19, {"k": {"lo": "a"}}, True, id="cross-type-lo"),
+        # temporal probes meet ISO-string stats in canonical form
+        pytest.param({"ts": [_iso(0), _iso(23), False]},
+                     {"ts": {"lo": _at(24), "hi": _at(40)}}, False,
+                     id="temporal-disjoint"),
+        pytest.param({"ts": [_iso(0), _iso(23), False]},
+                     {"ts": {"values": [_at(23)]}}, True,
+                     id="temporal-boundary-value"),
+        # open-ended ranges
+        pytest.param(_K19, {"k": {"lo": 10}}, False, id="lo-only-above"),
+        pytest.param(_K19, {"k": {"lo": 9}}, True, id="lo-only-boundary"),
+        pytest.param(_K19, {"k": {"hi": 0}}, False, id="hi-only-below"),
+        pytest.param(_K19, {"k": {"hi": 1}}, True, id="hi-only-boundary"),
+        # values and a range on one column are ANDed per column
+        pytest.param(_K19, {"k": {"values": [5], "lo": 10}}, False,
+                     id="values-and-range-range-prunes"),
+        pytest.param(_K19, {"k": {"values": [12], "lo": 6}}, False,
+                     id="values-and-range-value-prunes"),
+        pytest.param(_K19, {"k": {"values": []}}, False, id="empty-in-list"),
+        pytest.param(_K19, {}, True, id="no-bounds"),
+        # every bounded column must allow a match
+        pytest.param({"k": [1, 9, False], "j": [100, 200, False]},
+                     {"k": {"lo": 1, "hi": 5}, "j": {"lo": 300}}, False,
+                     id="two-columns-one-prunes"),
+        pytest.param({"k": [1, 9, False], "j": [100, 200, False]},
+                     {"k": {"lo": 1, "hi": 5}, "j": {"hi": 150}}, True,
+                     id="two-columns-both-match"),
+    ],
+)
+def test_select_files_edge_cases(stats, bounds, want):
+    """The one file-selection predicate every snapshot read and write
+    shares, row by row: NULL probes match exactly the files holding
+    NULLs, empty files match nothing, missing stats and cross-type
+    compares keep the file."""
+    assert _selects(stats, bounds) is want
+
+
+def test_select_files_bloom_layer():
+    """A bloom entry proving every probed value absent carries the file;
+    a file without an entry, or an entry of an uncomputed (m, k) config,
+    stays touched."""
+    from bookstore_aws_lakehouse_spark.sources.snapshots import _select_files
+
+    bits = bytearray(1)
+    bits[0] = 0b0000_0101  # positions 0 and 2 set
+    entry = {"m": 8, "k": 1, "bits": bits.hex()}
+    m = {
+        "files": ["hit", "miss", "bare", "other_cfg"],
+        "file_blooms": {
+            "hit": {"k": entry},
+            "miss": {"k": {**entry, "bits": "00"}},
+            "other_cfg": {"k": {**entry, "m": 16, "bits": "0000"}},
+        },
+    }
+    bounds = {"k": {"values": [1, 2]}}
+    touched, carried = _select_files(m, bounds, blooms={"k": {(8, 1): [[1], [2]]}})
+    assert touched == ["hit", "bare", "other_cfg"] and carried == ["miss"]
 
 
 def test_dv_delete_ranged_form_prunes_temporal_stats(spark, table):
@@ -2409,7 +2496,8 @@ def test_merge_when_delete_by_keylist_source(spark, table):
 
 
 def test_delete_where_detects_racing_append(spark, table, monkeypatch):
-    """snapshot_delete_where is state-dependent: a commit that lands
+    """A predicate delete (snapshot_delete without a range) is
+    state-dependent: a commit that lands
     between its read and its claim must force a recompute, never be
     silently erased from the file list."""
     from bookstore_aws_lakehouse_spark.sources import snapshots as snap
@@ -2431,7 +2519,7 @@ def test_delete_where_detects_racing_append(spark, table, monkeypatch):
         return files
 
     monkeypatch.setattr(snap, "_write_data_files", racing_write)
-    snap.snapshot_delete_where(spark, table, "k < 5")
+    snap.snapshot_delete(spark, table, extra_condition="k < 5")
     got = {r.k for r in snapshot_read(spark, table).collect()}
     assert got == {5, 6, 7, 8, 9, 100}  # racer's row survived the delete
 
@@ -2797,12 +2885,12 @@ def test_zorder_skewed_and_negative_distributions(spark, table):
 
 
 def test_scan_multi_prunes_on_every_dimension(spark, table):
-    """snapshot_scan_multi: file pruning factors multiply across
+    """snapshot_scan(ranges=...): file pruning factors multiply across
     predicates on a Z-ordered table, and the result equals the plain
     doubly-filtered read."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
-        snapshot_scan_multi,
+        snapshot_scan,
         snapshot_zorder,
     )
 
@@ -2837,8 +2925,8 @@ def test_scan_multi_prunes_on_every_dimension(spark, table):
     only_b = surviving({"l_suppkey": (2, 40)})
     assert only_a < n and only_b < n
     assert both <= min(only_a, only_b)
-    got = snapshot_scan_multi(
-        spark, table, {"l_partkey": (100, 160), "l_suppkey": (2, 40)}
+    got = snapshot_scan(
+        spark, table, ranges={"l_partkey": (100, 160), "l_suppkey": (2, 40)}
     )
     want = snapshot_read(spark, table).filter(
         "l_partkey between 100 and 160 and l_suppkey between 2 and 40"
@@ -3020,14 +3108,14 @@ _range = st.tuples(
 def test_scan_multi_pruning_never_changes_semantics(
     spark, tmp_path_factory, rows, ra, rb, use_c
 ):
-    """Property: snapshot_scan_multi over ANY data layout and range set
+    """Property: snapshot_scan(ranges=...) over ANY data layout and range set
     equals the plain read + conjunctive filter — file pruning on
     recorded stats (including NULLable and all-NULL columns) is a pure
     optimization, never a semantics change."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_overwrite,
         snapshot_read,
-        snapshot_scan_multi,
+        snapshot_scan,
         snapshot_zorder,
     )
 
@@ -3048,7 +3136,7 @@ def test_scan_multi_pruning_never_changes_semantics(
         map(tuple, snapshot_read(spark, table).filter(pred).collect())
     )
     got = sorted(
-        map(tuple, snapshot_scan_multi(spark, table, ranges).collect())
+        map(tuple, snapshot_scan(spark, table, ranges=ranges).collect())
     )
     assert got == want
 
@@ -3143,7 +3231,7 @@ def test_zorder_on_timestamp_column_prunes_and_preserves(spark, table):
     """OPTIMIZE ZORDER BY (ts, user_id) on an events fact — the single
     most common real Z-order shape (time + entity). Temporal file stats
     ride the manifest as canonical ISO strings; datetime probes through
-    snapshot_scan_multi must (a) return exactly read+filter — including
+    snapshot_scan(ranges=...) must (a) return exactly read+filter — including
     a lo==hi probe equal to one row's timestamp, the boundary-equality
     case a sloppier normalization would mis-prune — and (b) skip files
     on BOTH dimensions."""
@@ -3153,7 +3241,7 @@ def test_zorder_on_timestamp_column_prunes_and_preserves(spark, table):
         _read_manifest,
         _stat_norm,
         snapshot_read,
-        snapshot_scan_multi,
+        snapshot_scan,
         snapshot_zorder,
     )
 
@@ -3180,8 +3268,8 @@ def test_zorder_on_timestamp_column_prunes_and_preserves(spark, table):
     # a band fully inside the lower half of the time domain — a probe
     # straddling the global median can never prune a 2-dim Z layout
     lo_ts, hi_ts = all_ts[len(all_ts) // 3], all_ts[(len(all_ts) * 43) // 100]
-    got = snapshot_scan_multi(
-        spark, table, {"ts": (lo_ts, hi_ts), "user_id": (5, 40)}
+    got = snapshot_scan(
+        spark, table, ranges={"ts": (lo_ts, hi_ts), "user_id": (5, 40)}
     )
     exp = snapshot_read(spark, table).filter(
         (F.col("ts") >= F.lit(lo_ts))
@@ -3211,7 +3299,7 @@ def test_zorder_on_timestamp_column_prunes_and_preserves(spark, table):
     # return that row (a file whose min/max equals the probe must not be
     # pruned by string-form skew)
     pin = all_ts[len(all_ts) // 4]
-    got_pin = snapshot_scan_multi(spark, table, {"ts": (pin, pin)}).collect()
+    got_pin = snapshot_scan(spark, table, ranges={"ts": (pin, pin)}).collect()
     exp_pin = (
         snapshot_read(spark, table).filter(F.col("ts") == F.lit(pin)).collect()
     )
@@ -3262,7 +3350,7 @@ def test_scan_multi_temporal_pruning_never_changes_semantics(
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_overwrite,
         snapshot_read,
-        snapshot_scan_multi,
+        snapshot_scan,
         snapshot_zorder,
     )
 
@@ -3290,7 +3378,7 @@ def test_scan_multi_temporal_pruning_never_changes_semantics(
         map(tuple, snapshot_read(spark, table).filter(pred).collect())
     )
     got = sorted(
-        map(tuple, snapshot_scan_multi(spark, table, ranges).collect())
+        map(tuple, snapshot_scan(spark, table, ranges=ranges).collect())
     )
     assert got == want
 
