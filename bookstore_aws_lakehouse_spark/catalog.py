@@ -9,14 +9,17 @@ catalog; temp views over parquet locations (tests/driver) or
 
 from __future__ import annotations
 
+import os
+import stat
 import threading
 import weakref
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import unquote, urlparse
 
 from pyspark import __version__ as _PYSPARK_VERSION, inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, TimestampNTZType
 
 #: every driver-generated fixture table (TESTDATA.md)
 TABLES: tuple[str, ...] = (
@@ -51,8 +54,6 @@ TABLES: tuple[str, ...] = (
 #: stranding it — bounded by the number of distinct tables.
 _TABLE_CACHE_ATTR = "_blhs_table_cache"
 
-#: the conf ``load_events`` reads the events file under (see its NOTE)
-_NANOS_AS_LONG = ("spark.sql.legacy.parquet.nanosAsLong", "true")
 #: memo key of ``load_events``' epoch-ns plan, distinct from the raw read
 _EVENTS_NS = "events@ns"
 
@@ -91,23 +92,24 @@ def _cached_read(spark: SparkSession, sf_dir: str, name: str, path: str, build):
 
 
 def _file_fingerprint(path: str) -> tuple:
-    """(mtime_ns, size) of a local parquet file/dir — the cache-busting
-    component of a table-cache key. Directories fingerprint their direct
-    entries (a rewritten parquet dir changes part files). Non-stat-able
-    paths (remote URIs) return a constant: those cache without
-    invalidation, as before."""
-    import os
-
+    """(mtime_ns, size) of a local parquet file/dir: the cache-busting
+    component of a table-memo key and of ``Engine.sql``'s result cache.
+    ``path`` is a plain path or a ``file:`` URI, as
+    ``DataFrame.inputFiles()`` returns. Directories fingerprint their
+    direct entries (a rewritten parquet dir changes part files).
+    Non-stat-able paths (remote URIs) return ``("nostat",)``: the table
+    memo keeps those without invalidation, the result cache never
+    stores them."""
+    if path.startswith("file:"):
+        path = unquote(urlparse(path).path)
     try:
         st = os.stat(path)
-        if os.path.isdir(path):
-            parts = tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in os.scandir(path)
-                )
-            )
-            return (st.st_mtime_ns, parts)
+        if stat.S_ISDIR(st.st_mode):
+            parts = []
+            for e in os.scandir(path):
+                est = e.stat()
+                parts.append((e.name, est.st_mtime_ns, est.st_size))
+            return (st.st_mtime_ns, tuple(sorted(parts)))
         return (st.st_mtime_ns, st.st_size)
     except OSError:
         return ("nostat",)
@@ -125,6 +127,49 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _cached_read(spark, sf_dir, name, path, lambda: spark.read.parquet(path))
 
 
+def _read_events(spark: SparkSession, path: str) -> DataFrame:
+    """The events file as stored, except that a TIMESTAMP(NANOS) ``ts``
+    arrives as its raw bigint epoch-ns.
+
+    Spark's parquet reader rejects nanosecond timestamps when it infers
+    the schema, and accepts them as bigint when the read names that
+    type. So the pyarrow footer decides (no Spark call): a nanosecond
+    ``ts`` is read under the footer's schema with ``ts`` declared bigint,
+    anything else is inferred as usual. A footer pyarrow cannot open (a
+    remote URI, a missing file) leaves the read, and its error, to Spark.
+    No session conf is set."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    try:
+        footer = pq.read_schema(path)
+    except (OSError, ValueError):
+        return spark.read.parquet(path)
+    ts = footer.field("ts")
+    if not (pa.types.is_timestamp(ts.type) and ts.type.unit == "ns"):
+        return spark.read.parquet(path)
+    schema = footer.set(footer.get_field_index("ts"), ts.with_type(pa.int64()))
+    return spark.read.schema(from_arrow_schema(schema)).parquet(path)
+
+
+def _epoch_ns(ts_type) -> Column:
+    """``ts`` (as :func:`_read_events` delivers it) as bigint epoch-ns.
+
+    Neither timestamp branch reads the session time zone: a
+    TIMESTAMP_NTZ counts microseconds from the naive epoch, as DuckDB's
+    ``epoch_ns`` does, and ``unix_micros`` of a TIMESTAMP is an instant."""
+    if isinstance(ts_type, LongType):
+        return F.col("ts")
+    if isinstance(ts_type, TimestampNTZType):
+        micros = F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
+        )
+    else:
+        micros = F.unix_micros(F.col("ts"))
+    return micros * F.lit(1000)
+
+
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan the ``events`` table and deliver ``ts`` as **bigint
     epoch-nanoseconds** regardless of how the file stores it.
@@ -132,40 +177,20 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture generator has shipped ``ts`` both as parquet
     TIMESTAMP(NANOS) (rounds 1-3) and as ``timestamp[us]`` (round 4+), so
     this loader is schema-adaptive rather than assuming one precision:
-
-    - TIMESTAMP(NANOS) file: Spark's vectorized reader rejects nanos by
-      default; the ``nanosAsLong`` opt-in surfaces it as bigint epoch-ns
-      directly.
-    - µs-precision file (TIMESTAMP / TIMESTAMP_NTZ): project
-      ``unix_micros(ts) * 1000``. The session zone is pinned to UTC first
-      so a TIMESTAMP_NTZ → TIMESTAMP cast is an exact micros passthrough,
-      matching DuckDB's naive-as-UTC ``epoch_ns(ts)`` oracle semantics.
+    a TIMESTAMP(NANOS) file is read with ``ts`` as bigint (see
+    :func:`_read_events`), a µs-precision file (TIMESTAMP or
+    TIMESTAMP_NTZ) is converted by :func:`_epoch_ns`.
 
     Downstream code sees one contract — integer nanos: exact,
-    timezone-free, and identical on every engine.
-    NOTE: this read sets two SESSION-GLOBAL confs and leaves them set
-    (``spark.sql.legacy.parquet.nanosAsLong``, UTC session timezone) —
-    required for correct ns-timestamp handling of the fixture, and
-    restoring them mid-session would change the semantics of the lazy
-    plans built here. A caller embedding this library in a session with
-    a different timezone policy should use a dedicated session.
+    timezone-free, and identical on every engine. The read sets no
+    session conf, so the caller's time zone and ``nanosAsLong`` stay as
+    they were.
     """
     path = f"{sf_dir}/events.parquet"
 
     def build() -> DataFrame:
-        spark.conf.set(*_NANOS_AS_LONG)
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if not isinstance(ts_type, LongType):
-            # timestamp-typed file: convert to the epoch-ns bigint contract
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            df = df.withColumn(
-                "ts",
-                (F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)).cast(
-                    "bigint"
-                ),
-            )
-        return df
+        df = _read_events(spark, path)
+        return df.withColumn("ts", _epoch_ns(df.schema["ts"].dataType))
 
     return _cached_read(spark, sf_dir, _EVENTS_NS, path, build)
 
@@ -185,10 +210,9 @@ def load_tables(
     A cold read is one small parquet schema-inference job, bound by
     latency rather than cores, so the cold reads overlap; a memo hit
     costs a stat and stays on the caller's thread. Each worker inherits
-    the caller's job group and description. The conf ``load_events``
-    reads under is set before the threads start, so every table is read
-    under the same conf whatever the thread timing; the session's table
-    memo is created under a lock, so no entry is lost to a race."""
+    the caller's job group and description. No read sets a session
+    conf; the session's table memo is created under a lock, so no entry
+    is lost to a race."""
 
     def read(name: str) -> DataFrame:
         if name == "events":  # ts normalized to epoch-ns bigint (any precision)
@@ -197,8 +221,6 @@ def load_tables(
 
     cold = [n for n in dict.fromkeys(names) if not _is_memoized(spark, sf_dir, n)]
     if len(cold) > 1:
-        if "events" in cold:
-            spark.conf.set(*_NANOS_AS_LONG)
         # pyspark 4 takes the session and then carries its tags as well;
         # 3.5 takes the target alone
         if int(_PYSPARK_VERSION.split(".")[0]) >= 4:

@@ -29,12 +29,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from bookstore_aws_lakehouse_spark.catalog import _epoch_ns, _read_events
+
+
 def _events_schema(ts_type) -> StructType:
     """Explicit source schema (streams never infer). ``ts``'s type depends
-    on the fixture's parquet precision — TIMESTAMP(NANOS) files arrive as
-    epoch-ns long via the ``nanosAsLong`` opt-in, ``timestamp[us]`` files
-    as a timestamp type — so the caller passes the type a batch read of
-    the same file reports (see ``read_events_stream``)."""
+    on the fixture's parquet precision — TIMESTAMP(NANOS) files are read
+    as epoch-ns long, ``timestamp[us]`` files as a timestamp type — so
+    the caller passes the type a batch read of the same file reports (see
+    ``read_events_stream``)."""
     return StructType(
         [
             StructField("event_id", LongType()),
@@ -73,30 +76,18 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streams never infer). Normalizes to the batch contract — ``ts`` as
     epoch-ns bigint plus ``event_time`` (timestamp from exact integer
     microseconds) for watermarks/windows — whatever precision the file
-    stores (see catalog.load_events)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # probe the file's ts type with a batch footer read so the stream
-    # schema matches exactly (ns file → long; µs file → timestamp[_ntz])
-    ts_type = (
-        spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-    )
+    stores, with the conversion ``catalog.load_events`` uses. Sets no
+    session conf."""
+    # the stream schema's ts type is what a batch read of the file reports
+    # (ns file → bigint; µs file → timestamp[_ntz])
+    ts_type = _read_events(spark, f"{sf_dir}/events.parquet").schema["ts"].dataType
     stream = (
         spark.readStream.schema(_events_schema(ts_type))
         .format("parquet")
         .load(_events_stream_dir(sf_dir))
     )
-    if isinstance(ts_type, LongType):
-        return stream.withColumn(
-            "event_time", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    # µs-precision file: pin UTC so NTZ→LTZ cast is an exact passthrough,
-    # then rebuild the epoch-ns bigint ts next to the event_time column
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return stream.withColumn(
-        "event_time", F.col("ts").cast("timestamp")
-    ).withColumn(
-        "ts",
-        (F.unix_micros(F.col("event_time")) * F.lit(1000)).cast("bigint"),
+    return stream.withColumn("ts", _epoch_ns(ts_type)).withColumn(
+        "event_time", F.timestamp_micros(F.expr("ts div 1000"))
     )
 
 

@@ -1,10 +1,37 @@
-"""Engine facade smoke."""
+"""Engine facade smoke, its result cache, and the catalog loaders."""
 
 from __future__ import annotations
 
+import itertools
+import os
+import shutil
+
 import pytest
 
+from bookstore_aws_lakehouse_spark.catalog import DASHBOARD_VIEWS
 from bookstore_aws_lakehouse_spark.engine import Engine
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, action):
+    """``(action(), number of Spark jobs it ran)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"test_engine_{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _lake_copy(sf_dir, tmp_path) -> str:
+    out = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, out)
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -186,3 +213,266 @@ def test_parallel_load_tables_matches_serial_reads(spark, sf_smoke):
         (sf_smoke, catalog._EVENTS_NS if n == "events" else n)
         for n in catalog.TABLES
     )
+
+
+def test_repeated_bounded_query_runs_no_job(spark, sf_smoke):
+    """A repeated dashboard request is served from the Engine's result
+    cache: no Spark job, DuckDB's answer, and nothing in Spark's
+    CacheManager."""
+    from tests.oracle import compare, duckdb_connection
+    from tests.test_cache_residue import _cache_is_empty, _clear_cache
+
+    _clear_cache(spark)
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = DASHBOARD_VIEWS["dash_top10_countries"]
+    first, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    assert jobs > 0
+    again, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    assert jobs == 0
+    assert again == first
+    con = duckdb_connection(sf_smoke)
+    try:
+        compare(e.sql(sql), con, sql, "dash_top10_countries")
+    finally:
+        con.close()
+    assert _cache_is_empty(spark)
+
+
+def test_rewritten_file_misses_with_and_without_refresh(spark, sf_smoke, tmp_path):
+    """A file rewritten in place makes the next sql() run its job, before
+    and after refresh(); after refresh() the new rows come back."""
+    import pyarrow.parquet as pq
+
+    sf_dir = _lake_copy(sf_smoke, tmp_path)
+    e = Engine(spark=spark, sf_dir=sf_dir)
+    sql = "SELECT count(*) FROM nation"
+    assert e.sql(sql).collect()[0][0] == 25
+    path = f"{sf_dir}/nation.parquet"
+    pq.write_table(pq.read_table(path).slice(0, 5), path)
+    _, jobs = _jobs(spark, lambda: e.sql(sql))
+    assert jobs > 0
+    pq.write_table(pq.read_table(path).slice(0, 3), path)
+    e.refresh()
+    rows, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    assert jobs > 0
+    assert rows[0][0] == 3
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT current_timestamp() AS t",
+        "SELECT now() AS t",
+        "SELECT current_date() AS d",
+        "SELECT count(*) FROM nation WHERE n_regionkey <"
+        " (SELECT count(*) FROM region WHERE current_date() > DATE'2000-01-01')",
+    ],
+)
+def test_clock_queries_never_hit(spark, sf_smoke, sql):
+    """Spark calls the clock functions deterministic; sql() still never
+    serves their results again."""
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    e.sql(sql).collect()
+    _, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    assert jobs > 0
+
+
+def test_scalar_subquery_misses_after_its_file_is_rewritten(spark, sf_smoke, tmp_path):
+    """inputFiles() leaves out the files a scalar subquery reads; a
+    rewrite of one still makes the query run again, even when it lives
+    in another directory than the files inputFiles() names."""
+    import pyarrow.parquet as pq
+
+    other = tmp_path / "other"
+    other.mkdir()
+    path = str(other / "region.parquet")
+    shutil.copy(f"{sf_smoke}/region.parquet", path)
+    spark.read.parquet(path).createOrReplaceTempView("t_other_region")
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = (
+        "SELECT count(*) FROM nation"
+        " WHERE n_regionkey < (SELECT count(*) FROM t_other_region)"
+    )
+    assert e.sql(sql).collect()[0][0] == 25
+    pq.write_table(pq.read_table(path).slice(0, 2), path)
+    _, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    assert jobs > 0
+    spark.read.parquet(path).createOrReplaceTempView("t_other_region")
+    assert e.sql(sql).collect()[0][0] == 10
+    spark.catalog.dropTempView("t_other_region")
+
+
+def test_file_added_beside_the_inputs_misses(spark, sf_smoke, tmp_path):
+    """A part file added to a table directory changes the directory's
+    fingerprint: once Spark re-lists the directory, the next request runs
+    again and counts the new file."""
+    import pyarrow.parquet as pq
+
+    table = tmp_path / "nation_parts"
+    table.mkdir()
+    shutil.copy(f"{sf_smoke}/nation.parquet", table / "part-0.parquet")
+    spark.read.parquet(str(table)).createOrReplaceTempView("t_nation_parts")
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = "SELECT count(*) FROM t_nation_parts"
+    assert e.sql(sql).collect()[0][0] == 25
+    pq.write_table(
+        pq.read_table(table / "part-0.parquet").slice(0, 5), table / "part-1.parquet"
+    )
+    spark.catalog.refreshTable("t_nation_parts")
+    rows, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    assert jobs > 0
+    assert rows[0][0] == 30
+    spark.catalog.dropTempView("t_nation_parts")
+
+
+def test_session_conf_change_misses(spark, sf_smoke):
+    """A request under another session time zone runs again; back under
+    the first one, the stored result is served."""
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = "SELECT count(*) FROM nation"
+    e.sql(sql).collect()
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        _, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert jobs > 0
+    _, jobs = _jobs(spark, lambda: e.sql(sql).collect())
+    assert jobs == 0
+
+
+def test_two_engines_never_share_results(spark, sf_smoke):
+    sql = "SELECT count(*) FROM lineitem"
+    a, b = Engine(spark=spark, sf_dir=sf_smoke), Engine(spark=spark, sf_dir=sf_smoke)
+    a.sql(sql).collect()
+    _, jobs = _jobs(spark, lambda: b.sql(sql).collect())
+    assert jobs > 0
+    _, jobs = _jobs(spark, lambda: a.sql(sql).collect())
+    assert jobs == 0
+
+
+def test_result_cache_under_thread_stress(spark, sf_smoke, monkeypatch):
+    """Eight client threads (more than the cores) share one Engine whose
+    cache holds about three results, under a short switch interval, so
+    stores and evictions interleave: every answer matches DuckDB, and the
+    cache's byte count is the sum over the entries it holds."""
+    import sys
+    import threading
+
+    from bookstore_aws_lakehouse_spark import engine as engine_mod
+    from tests.oracle import duckdb_connection
+
+    queries = [
+        f"SELECT n_regionkey, count(*) AS n FROM nation WHERE n_nationkey >= {k}"
+        " GROUP BY n_regionkey ORDER BY n_regionkey LIMIT 5"
+        for k in range(6)
+    ]
+    con = duckdb_connection(sf_smoke)
+    try:
+        want = {q: con.execute(q).fetchall() for q in queries}
+    finally:
+        con.close()
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    e.sql(queries[0])
+    monkeypatch.setattr(engine_mod, "_RESULT_CACHE_BYTES", 3 * e._results_bytes)
+    errors: list[BaseException] = []
+
+    def client(c: int) -> None:
+        try:
+            for _ in range(3):
+                for q in queries[c % 6:] + queries[: c % 6]:
+                    assert [tuple(r) for r in e.sql(q).collect()] == want[q], q
+        except BaseException as exc:
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(c,)) for c in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert e._results_bytes == sum(r.nbytes for r in e._results.values())
+    assert e._results_bytes <= engine_mod._RESULT_CACHE_BYTES
+    assert 0 < len(e._results) < len(queries)
+
+
+def test_unbounded_query_stays_lazy(spark, sf_smoke):
+    """A query with no row bound is not run inside sql()."""
+    import pyarrow.parquet as pq
+
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    e.refresh()  # any cold table read happens here
+    df, jobs = _jobs(spark, lambda: e.sql("SELECT * FROM lineitem"))
+    assert jobs == 0
+    assert df.count() == pq.read_metadata(f"{sf_smoke}/lineitem.parquet").num_rows
+
+
+@pytest.mark.parametrize("ts_type", ["us", "us_utc", "ns"])
+def test_event_loaders_leave_session_conf_alone(spark, sf_smoke, tmp_path, ts_type):
+    """Under a non-UTC session, load_tables, load_events and
+    read_events_stream change no session conf and deliver ts as DuckDB's
+    epoch_ns(ts), whether the file stores naive micros or UTC micros. A
+    nanosecond file keeps its sub-microsecond part, which DuckDB reads
+    away, so that case is checked against the file's own integers."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from bookstore_aws_lakehouse_spark.catalog import load_events, load_tables
+    from bookstore_aws_lakehouse_spark.streaming.jobs import (
+        read_events_stream,
+        run_available_now,
+    )
+
+    sf_dir = _lake_copy(sf_smoke, tmp_path)
+    path = f"{sf_dir}/events.parquet"
+    table = pq.read_table(path)
+    i = table.schema.get_field_index("ts")
+    if ts_type == "us":
+        want = duckdb.sql(
+            f"SELECT event_id, epoch_ns(ts) FROM read_parquet('{path}')"
+            " ORDER BY event_id"
+        ).fetchall()
+    else:
+        ns = pc.add(table["ts"].cast(pa.timestamp("ns")).cast(pa.int64()), 7)
+        if ts_type == "us_utc":
+            ts = table["ts"].cast(pa.timestamp("us", tz="UTC"))
+        else:
+            ts = ns.cast(pa.timestamp("ns"))
+        os.remove(path)
+        pq.write_table(table.set_column(i, "ts", ts), path)
+        if ts_type == "us_utc":
+            want = duckdb.sql(
+                f"SELECT event_id, epoch_ns(ts) FROM read_parquet('{path}')"
+                " ORDER BY event_id"
+            ).fetchall()
+        else:
+            want = sorted(zip(table["event_id"].to_pylist(), ns.to_pylist()))
+
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        before = spark.conf.getAll
+        events = load_tables(spark, sf_dir, ("events", "nation"))["events"]
+        assert load_events(spark, sf_dir) is events
+        stream = read_events_stream(spark, sf_dir)
+        run_available_now(
+            stream.select("event_id", "ts"), f"t_events_{ts_type}", output_mode="append"
+        )
+        assert spark.conf.getAll == before
+        got = events.select("event_id", "ts").orderBy("event_id").collect()
+        assert [tuple(r) for r in got] == want
+        streamed = spark.table(f"t_events_{ts_type}").orderBy("event_id").collect()
+        assert [tuple(r) for r in streamed] == want
+    finally:
+        spark.conf.set(key, old)
