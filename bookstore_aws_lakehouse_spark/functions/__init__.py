@@ -2,7 +2,6 @@
 
 from bookstore_aws_lakehouse_spark.functions.scalar import (  # noqa: F401
     exact_sum,
-    exact_avg,
     null_if_in,
 )
 from bookstore_aws_lakehouse_spark.functions.vector import (  # noqa: F401

@@ -1,6 +1,6 @@
 """Scalar expression helpers.
 
-``exact_sum`` / ``exact_avg`` encode the engine's determinism policy for
+``exact_sum`` encodes the engine's determinism policy for
 money-like doubles: floating-point summation is order-dependent, and at
 cluster scale partition order is nondeterministic — two runs of the same
 query can differ in the last ulps, and an oracle comparison will flag it.
@@ -24,17 +24,6 @@ def exact_sum(col: Column | str, scale: int = 2) -> Column:
     (Spark's non-ANSI overflow behavior)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(28,{scale})")).cast("double")
-
-
-def exact_avg(col: Column | str, scale: int = 2) -> Column:
-    """Order-independent AVG: exact decimal sum / count, divided in double
-    (identical bit pattern on any engine that does the same). The count
-    is over the CASTED column, so a value the cast cannot represent can
-    never be dropped from the numerator while still inflating the
-    divisor."""
-    c = F.col(col) if isinstance(col, str) else col
-    casted = c.cast(f"decimal(28,{scale})")
-    return F.sum(casted).cast("double") / F.count(casted)
 
 
 def null_if_in(col: Column | str, tokens: tuple[str, ...]) -> Column:

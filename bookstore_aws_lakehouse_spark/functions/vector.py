@@ -50,48 +50,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb))
 
 
-def make_cosine_similarity_pandas():
-    """Arrow-vectorized pandas_udf alternative to ``cosine_similarity`` —
-    the pattern to reach for when vector math outgrows higher-order
-    functions (e.g. matrix ops needing BLAS). Batches arrive as pandas
-    Series of numpy arrays; numpy does the arithmetic per batch.
-
-    The JVM path above is preferred for plain dot products (no Python
-    round-trip); tests/test_vector.py proves both produce equal results.
-    Returned from a factory so importing this module never requires Arrow.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # NOTE: hints written as real objects, not strings — this module has
-    # `from __future__ import annotations`, which would stringify inline
-    # hints and break pandas_udf's signature inference
-    def cosine_pandas(a, b):
-        # NULL-vector rows and empty batches must mirror the JVM path:
-        # np.stack would crash on a None element or a zero-length batch,
-        # and a NaN result would flip IS NULL semantics vs the `when`
-        # with no `otherwise` (NULL on zero norms)
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        mask = np.array(
-            [x is not None for x in a.to_numpy()]
-        ) & np.array([x is not None for x in b.to_numpy()])
-        out = np.full(len(a), np.nan)
-        if mask.any():
-            va = np.stack(a.to_numpy()[mask]).astype("float64")
-            vb = np.stack(b.to_numpy()[mask]).astype("float64")
-            dots = (va * vb).sum(axis=1)
-            norms = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out[mask] = np.where(norms > 0, dots / norms, np.nan)
-        # NaN -> None so Spark surfaces NULL, matching cosine_similarity
-        return pd.Series(out).where(lambda v: v == v, None)
-
-    cosine_pandas.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(cosine_pandas, "double")
-
-
 def make_cosine_similarity_exact_pandas():
     """Arrow-vectorized cosine that is BIT-IDENTICAL to the JVM
     ``cosine_similarity`` (and to the DuckDB ``list_dot_product`` oracle):

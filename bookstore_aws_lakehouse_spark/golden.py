@@ -9,7 +9,7 @@ Registry contract (mirrors ``__spark_entry__.py``):
   registers them). Omitted only for non-SQL-expressible ops.
 
 Determinism policy (SURVEY §7.3): every top-k has a total order (tiebreak on
-a key column); money-double aggregates go through ``exact_sum``/``exact_avg``
+a key column); money-double aggregates go through ``exact_sum``
 (decimal — order-independent); every computed column is aliased identically
 in both the Spark plan and the SQL.
 

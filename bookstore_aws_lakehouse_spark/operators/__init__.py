@@ -26,10 +26,9 @@ from bookstore_aws_lakehouse_spark.operators.joins import (  # noqa: F401
     semi_join,
     anti_join,
 )
-from bookstore_aws_lakehouse_spark.operators.sort import sort_by, top_k  # noqa: F401
+from bookstore_aws_lakehouse_spark.operators.sort import top_k  # noqa: F401
 from bookstore_aws_lakehouse_spark.operators.windows import (  # noqa: F401
     top_n_per_group,
-    running_agg,
 )
 from bookstore_aws_lakehouse_spark.operators.setops import (  # noqa: F401
     union_all_by_name,

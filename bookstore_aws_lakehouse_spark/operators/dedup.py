@@ -193,22 +193,6 @@ def _minhash_wide(
     return hashed.groupBy(id_col).agg(*mins)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """MinHash signature rows: (id, seed, minhash) — long form of
-    ``_minhash_wide`` (stack the n min-columns)."""
-    wide = _minhash_wide(df, id_col, text_col, num_hashes, shingle_k)
-    stack_args = ", ".join(f"{s}, minhash_{s}" for s in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {stack_args}) AS (seed, minhash)"
-    )
-
-
 def minhash_band_pairs(
     df: DataFrame,
     id_col: str,

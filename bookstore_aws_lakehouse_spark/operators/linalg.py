@@ -624,20 +624,3 @@ def pc_project(
             s = F.round(s, round_dp)
         scores.append(s)
     return out.select(F.col(id_col), F.array(*scores).alias("reduced"))
-
-
-def dim_means(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64
-) -> list[float]:
-    """Per-dimension means as a Python list (one aggregation job; the
-    driver read is ``dim`` doubles — bounded by the embedding width).
-    Prefer reading the ``mean`` column off a pinned ``covariance_rows``
-    frame when a covariance is computed anyway — this standalone scan is
-    for means-only callers."""
-    row = df.agg(
-        *[
-            F.avg(F.col(vec_col).cast("array<double>")[i]).alias(f"m{i}")
-            for i in range(dim)
-        ]
-    ).first()
-    return [row[f"m{i}"] for i in range(dim)]

@@ -30,8 +30,3 @@ def intersect_rows(a: DataFrame, b: DataFrame) -> DataFrame:
 def except_rows(a: DataFrame, b: DataFrame) -> DataFrame:
     """Set difference (EXCEPT DISTINCT)."""
     return a.subtract(b)
-
-
-def except_all_rows(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bag difference (EXCEPT ALL — multiplicity-aware)."""
-    return a.exceptAll(b)

@@ -65,16 +65,6 @@ def cms_build(
     return rows.groupBy("row", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge Count-Min sketches built with the SAME (depth, width): counter
-    grids sum cell-wise. O(depth·width) per sketch — never touches rows."""
-    it = iter(sketches)
-    out = next(it)
-    for s in it:
-        out = out.unionByName(s)
-    return out.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     sketch: DataFrame,
     probes: DataFrame,

@@ -20,12 +20,6 @@ def _order_cols(order_by: Sequence[tuple[str, bool]]) -> list[Column]:
     return [F.col(c).desc() if desc else F.col(c).asc() for c, desc in order_by]
 
 
-def sort_by(df: DataFrame, order_by: Sequence[tuple[str, bool]]) -> DataFrame:
-    """O1 — total sort; ``order_by`` is [(column, descending?)]. Range
-    exchange + per-partition sort; only use when the full order matters."""
-    return df.orderBy(*_order_cols(order_by))
-
-
 def top_k(
     df: DataFrame,
     order_by: Sequence[tuple[str, bool]],

@@ -32,10 +32,6 @@ def tokenize(col: Column | str) -> Column:
     return F.split(c, " ")
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
 def chunk_sliding_windows(
     df,
     id_col: str,

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bookstore_aws_lakehouse_spark.operators.sort import _order_cols
@@ -42,30 +42,3 @@ def top_n_per_group(
         df.withColumn(rank_name, F.row_number().over(w))
         .filter(F.col(rank_name) <= n)
     )
-
-
-def running_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[tuple[str, bool]],
-    agg: Column,
-    name: str,
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """Cumulative aggregate (rows unbounded-preceding → current) per group.
-
-    ``tiebreak`` (ascending) pins the frame order under ties — without it
-    the cumulative value of tied rows is partition-order dependent, the
-    same determinism rule top_n_per_group enforces."""
-    if not partition_by:
-        raise ValueError(
-            "running_agg: empty partition_by funnels the whole dataset "
-            "through one task"
-        )
-    order = _order_cols(order_by) + [F.col(c).asc() for c in tiebreak]
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(name, agg.over(w))

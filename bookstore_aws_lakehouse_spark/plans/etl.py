@@ -27,25 +27,12 @@ from bookstore_aws_lakehouse_spark.operators.projection import (
     drop_null_keys,
     expand_delimited,
     null_normalize,
-    select_columns,
 )
 from bookstore_aws_lakehouse_spark.plans.pipeline import Pipeline, fan_out
 
 #: columns whose NULL after cleaning drops the row (reference default subset,
 #: `workflow/Transformer.py:23`)
 KEY_COLUMNS = ("customer_id", "isbn", "book_rating", "country", "state", "city")
-
-RAW_COLUMNS = (
-    "customer_id",
-    "isbn",
-    "book_rating",
-    "location",
-    "age",
-    "book_title",
-    "book_author",
-    "year_of_publication",
-    "publisher",
-)
 
 
 def build_raw_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,48 +1,22 @@
-"""Named-transform registry + pipeline runner (SURVEY §2.11: C1, C2).
+"""Pipeline runner (SURVEY §2.11: C2).
 
-Reference C1: a string → transformer-class registry with dispatch that
-raises on unknown names (`workflow/Transformer.py:105-123`). Idiomatic
-Spark version: a dict of named ``DataFrame -> DataFrame`` callables chained
-with ``DataFrame.transform`` — each step appends logical-plan nodes, and
-Catalyst optimizes the *whole* composed plan (e.g. collapsing adjacent
-Projects from separate steps into one).
+``DataFrame -> DataFrame`` callables chained with ``DataFrame.transform`` —
+each step appends logical-plan nodes, and Catalyst optimizes the *whole*
+composed plan (e.g. collapsing adjacent Projects from separate steps into
+one). The reference's C1 name registry, which raises on unknown names
+(`workflow/Transformer.py:105-123`), is ``registry.golden`` plus
+``Engine.run``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 
 Transform = Callable[[DataFrame], DataFrame]
-
-#: global named-transform registry (C1 analog)
-TRANSFORMS: dict[str, Callable[..., DataFrame]] = {}
-
-
-def register_transform(name: str) -> Callable[[Callable[..., DataFrame]], Callable[..., DataFrame]]:
-    """Decorator: publish a transform under ``name`` (C1 registry entry)."""
-
-    def deco(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
-        TRANSFORMS[name] = fn
-        return fn
-
-    return deco
-
-
-def get_transform(name: str, **kwargs) -> Transform:
-    """Dispatch by name; raises ValueError on unknown type exactly like the
-    reference registry (`workflow/Transformer.py:120-123`). ``kwargs`` are
-    bound, yielding a unary ``DataFrame -> DataFrame``."""
-    try:
-        fn = TRANSFORMS[name]
-    except KeyError:
-        raise ValueError(
-            f"Invalid transformer type: {name!r}; known: {sorted(TRANSFORMS)}"
-        ) from None
-    return partial(fn, **kwargs) if kwargs else fn
 
 
 @dataclass
@@ -57,10 +31,8 @@ class Pipeline:
 
     steps: list[Transform] = field(default_factory=list)
 
-    def then(self, step: Transform | str, **kwargs) -> "Pipeline":
-        if isinstance(step, str):
-            step = get_transform(step, **kwargs)
-        elif kwargs:
+    def then(self, step: Transform, **kwargs) -> "Pipeline":
+        if kwargs:
             step = partial(step, **kwargs)
         return Pipeline(self.steps + [step])
 

@@ -11,7 +11,6 @@ locations whose empty state/country must clean to NULL and drop the row).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,7 +24,7 @@ from bookstore_aws_lakehouse_spark.plans.etl import (
     ratings_fact,
     top100_books,
 )
-from bookstore_aws_lakehouse_spark.registry import golden
+from bookstore_aws_lakehouse_spark.registry import golden, scratch
 from bookstore_aws_lakehouse_spark.sources.readers import read_csv, read_parquet
 from bookstore_aws_lakehouse_spark.sources.writers import write_csv, write_parquet
 
@@ -158,26 +157,28 @@ NATION_DDL = "n_nationkey int, n_name string, n_regionkey int"
 
 
 @golden("scan_csv", "SELECT * FROM nation")
-def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_scan_csv(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """S2/S5 — CSV written with headers then read back with an explicit
     schema (the production path: no inference pass; covers Redshift
     ``COPY ... IGNOREHEADER`` semantics)."""
-    scratch = os.path.join(tempfile.mkdtemp(prefix="blhs_csv_"), "nation_csv")
-    write_csv(load_table(spark, sf_dir, "nation"), scratch)
-    return read_csv(spark, scratch, schema=NATION_DDL)
+    loc = f"{root}/nation_csv"
+    write_csv(load_table(spark, sf_dir, "nation"), loc)
+    return read_csv(spark, loc, schema=NATION_DDL)
 
 
 @golden("scan_jsonl", "SELECT * FROM nation")
-def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_scan_jsonl(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """JSONL scan (beyond-reference source format; the lingua franca of
     LLM training corpora): write nation as JSON lines, read back with an
     explicit schema — no inference pass, same discipline as the CSV path
     (inference on JSONL is a full extra scan at 100 TB)."""
     from bookstore_aws_lakehouse_spark.sources.readers import read_json
 
-    scratch = os.path.join(tempfile.mkdtemp(prefix="blhs_jsonl_"), "nation_jsonl")
-    load_table(spark, sf_dir, "nation").write.mode("overwrite").json(scratch)
-    return read_json(spark, scratch, schema=NATION_DDL)
+    loc = f"{root}/nation_jsonl"
+    load_table(spark, sf_dir, "nation").write.mode("overwrite").json(loc)
+    return read_json(spark, loc, schema=NATION_DDL)
 
 
 @golden(
@@ -208,14 +209,15 @@ def q_sql_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @golden("scan_orc", "SELECT * FROM nation")
-def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_scan_orc(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """ORC scan (beyond-reference; Spark-native columnar alternative):
     write nation as ORC, scan it back. Same vectorized-reader/pushdown
     machinery as parquet — the format a warehouse migration most often
     brings along."""
-    scratch = os.path.join(tempfile.mkdtemp(prefix="blhs_orc_"), "nation_orc")
-    load_table(spark, sf_dir, "nation").write.mode("overwrite").orc(scratch)
-    return spark.read.orc(scratch)
+    loc = f"{root}/nation_orc"
+    load_table(spark, sf_dir, "nation").write.mode("overwrite").orc(loc)
+    return spark.read.orc(loc)
 
 
 @golden(
@@ -226,7 +228,8 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_sink_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """S3 — partitioned parquet sink + re-scan: writes the fact projection
     hive-partitioned by l_returnflag (so the re-read gets partition
     pruning), reads it back, aggregates. Verifies values survive the
@@ -234,9 +237,9 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"
     )
-    scratch = os.path.join(tempfile.mkdtemp(prefix="blhs_sink_"), "fact")
-    write_parquet(li, scratch, partition_by=["l_returnflag"])
-    back = read_parquet(spark, scratch)
+    loc = f"{root}/fact"
+    write_parquet(li, loc, partition_by=["l_returnflag"])
+    back = read_parquet(spark, loc)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("l_quantity").alias("sum_qty")
     )
@@ -347,7 +350,8 @@ def _mart_summary(df: DataFrame, table: str, cols: list[str]) -> DataFrame:
 
 
 @golden("engine_dispatch_etl", _ENGINE_DISPATCH_SQL)
-def q_engine_dispatch_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_engine_dispatch_etl(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """C1+C3 (SURVEY §2.11) driver proof: construct the ``Engine`` facade
     on the live session (wiring the registry via ``load_all`` — C1
     dispatch), run the scheduled-batch ETL entry (``engine.run_etl``, the
@@ -364,7 +368,7 @@ def q_engine_dispatch_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bookstore_aws_lakehouse_spark.engine import Engine
 
     eng = Engine(spark=spark, sf_dir=sf_dir)
-    out = os.path.join(tempfile.mkdtemp(prefix="blhs_mart_"), "mart")
+    out = f"{root}/mart"
     eng.run_etl(out, min_ratings=ETL_MIN_RATINGS)
 
     summaries = [
@@ -406,7 +410,8 @@ def q_engine_dispatch_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_compact_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Small-file compaction round-trip (sources/writers.py::
     compact_parquet — the OPTIMIZE / rewrite_data_files maintenance job
     every streaming/upsert sink needs): deliberately fragment the fact
@@ -414,28 +419,20 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     miniature), compact the location, and verify the data survives the
     staging-write + FS-swap bit-exactly via aggregation against the
     un-fragmented oracle. The file-count reduction itself is asserted in
-    tests/test_etl.py (counts aren't SQL-expressible). Tempdir removed
-    before returning; result localCheckpoint-pinned."""
-    import shutil
-
+    tests/test_etl.py (counts aren't SQL-expressible)."""
     from bookstore_aws_lakehouse_spark.sources.writers import compact_parquet
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"
     )
-    root = tempfile.mkdtemp(prefix="blhs_compact_")
-    try:
-        loc = f"{root}/fact"
-        li.repartition(64).write.mode("overwrite").parquet(loc)
-        compact_parquet(loc, spark)
-        back = read_parquet(spark, loc)
-        out = back.groupBy("l_returnflag", "l_linestatus").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    loc = f"{root}/fact"
+    li.repartition(64).write.mode("overwrite").parquet(loc)
+    compact_parquet(loc, spark)
+    back = read_parquet(spark, loc)
+    return back.groupBy("l_returnflag", "l_linestatus").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+    )
 
 
 @golden(
@@ -461,7 +458,8 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM merged GROUP BY c_mktsegment
     """,
 )
-def q_snapshot_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_merge_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """MERGE on the manifest-versioned snapshot table (sources/
     snapshots.py::snapshot_merge — the Delta-MERGE analog this sandbox
     can actually run): seed version 1 missing every 7th customer, merge a
@@ -470,9 +468,7 @@ def q_snapshot_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Unlike an in-place directory rewrite, the merge commits a
     new manifest and never deletes version 1's files — snapshot isolation
     is separately proven in tests/test_snapshots.py. The oracle replays
-    the merge relationally. Tempdir removed before returning."""
-    import shutil
-
+    the merge relationally."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_merge,
         snapshot_overwrite,
@@ -489,18 +485,13 @@ def q_snapshot_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         (bal + F.lit("100.00").cast("decimal(5,2)")).cast("decimal(18,2)").alias("bal"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snap_")
-    try:
-        table = f"{root}/customer_snap"
-        snapshot_overwrite(base, table)
-        snapshot_merge(delta, table, key_cols=["c_custkey"])
-        out = snapshot_read(spark, table).groupBy("c_mktsegment").agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("bal").cast("double").alias("total_bal"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/customer_snap"
+    snapshot_overwrite(base, table)
+    snapshot_merge(delta, table, key_cols=["c_custkey"])
+    return snapshot_read(spark, table).groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_customers"),
+        F.sum("bal").cast("double").alias("total_bal"),
+    )
 
 
 @golden(
@@ -513,15 +504,14 @@ def q_snapshot_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n_regionkey > 2
     """,
 )
-def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_time_travel(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Time travel on the snapshot table: commit version 1 (regions 0-2),
     OVERWRITE with version 2 (regions 3-4), then read BOTH versions by
     number and tag each row with the version it came from. Version 1's
     rows remain readable after the overwrite because the new manifest
     references a disjoint file set — the property bare parquet overwrite
     destroys. The oracle recomputes both versions' content directly."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_overwrite,
         snapshot_read,
@@ -532,23 +522,18 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     v1 = joined.filter(F.col("n_regionkey") <= 2).select("n_name", "r_name")
     v2 = joined.filter(F.col("n_regionkey") > 2).select("n_name", "r_name")
-    root = tempfile.mkdtemp(prefix="blhs_tt_")
-    try:
-        table = f"{root}/nation_snap"
-        snapshot_overwrite(v1, table)
-        snapshot_overwrite(v2, table)
-        out = (
-            snapshot_read(spark, table, version=1)
-            .select(F.lit(1).alias("version"), "n_name", "r_name")
-            .unionByName(
-                snapshot_read(spark, table, version=2).select(
-                    F.lit(2).alias("version"), "n_name", "r_name"
-                )
+    table = f"{root}/nation_snap"
+    snapshot_overwrite(v1, table)
+    snapshot_overwrite(v2, table)
+    return (
+        snapshot_read(spark, table, version=1)
+        .select(F.lit(1).alias("version"), "n_name", "r_name")
+        .unionByName(
+            snapshot_read(spark, table, version=2).select(
+                F.lit(2).alias("version"), "n_name", "r_name"
             )
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 @golden(
@@ -574,7 +559,8 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM merged GROUP BY o_month
     """,
 )
-def q_snapshot_merge_pruned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_merge_pruned_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """File-pruned MERGE on the snapshot table (sources/snapshots.py::
     snapshot_merge with ``partition_col`` — manifest file stats from
     parquet footers decide which committed files a delta can touch;
@@ -584,10 +570,7 @@ def q_snapshot_merge_pruned_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     price+5.00 exact-decimal, inserts the missing keys), read the latest
     snapshot.
     The oracle replays the merge relationally; the carried-file identity
-    and zero-row-file exclusion are asserted in tests/test_snapshots.py.
-    Tempdir removed before returning (result localCheckpoint-pinned)."""
-    import shutil
-
+    and zero-row-file exclusion are asserted in tests/test_snapshots.py."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_merge,
         snapshot_read,
@@ -606,18 +589,13 @@ def q_snapshot_merge_pruned_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
         .cast("decimal(18,2)")
         .alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapp_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_merge(base, table, key_cols=["o_orderkey"], partition_col="o_month")
-        snapshot_merge(delta, table, key_cols=["o_orderkey"], partition_col="o_month")
-        out = snapshot_read(spark, table).groupBy("o_month").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("price").cast("double").alias("total_price"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_snap"
+    snapshot_merge(base, table, key_cols=["o_orderkey"], partition_col="o_month")
+    snapshot_merge(delta, table, key_cols=["o_orderkey"], partition_col="o_month")
+    return snapshot_read(spark, table).groupBy("o_month").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("price").cast("double").alias("total_price"),
+    )
 
 
 @golden(
@@ -631,7 +609,8 @@ def q_snapshot_merge_pruned_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     GROUP BY o_month
     """,
 )
-def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Stats-pruned range scan on the snapshot table (sources/
     snapshots.py::snapshot_scan — Iceberg-style scan planning): commit
     orders month-clustered with manifest stats, then range-scan one year
@@ -640,8 +619,6 @@ def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping plain parquet directories can't do; the skip itself is
     asserted via inputFiles() in tests/test_snapshots.py). The result
     must equal the plain filtered aggregation the oracle computes."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_merge,
         snapshot_scan,
@@ -653,23 +630,18 @@ def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapscan_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_merge(
-            base, table, key_cols=["o_orderkey"], partition_col="o_month"
+    table = f"{root}/orders_snap"
+    snapshot_merge(
+        base, table, key_cols=["o_orderkey"], partition_col="o_month"
+    )
+    return (
+        snapshot_scan(spark, table, "o_month", "1996-01", "1996-12")
+        .groupBy("o_month")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("price").cast("double").alias("total_price"),
         )
-        out = (
-            snapshot_scan(spark, table, "o_month", "1996-01", "1996-12")
-            .groupBy("o_month")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("price").cast("double").alias("total_price"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 @golden(
@@ -683,7 +655,8 @@ def q_snapshot_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_partkey
     """,
 )
-def q_clustered_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_clustered_sink_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Range-clustered layout round-trip (sources/writers.py::
     write_parquet_clustered — repartitionByRange + sortWithinPartitions):
     the fact projection is rewritten clustered on l_partkey, then read
@@ -693,25 +666,18 @@ def q_clustered_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes almost every row group — the layout that makes hot-column
     predicates cheap at 100 TB. Values must match the unclustered oracle
     exactly."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.writers import write_parquet_clustered
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="blhs_clustered_")
-    try:
-        loc = f"{root}/fact_clustered"
-        write_parquet_clustered(li, loc, ["l_partkey"], num_files=16)
-        back = read_parquet(spark, loc).filter(F.col("l_partkey").between(100, 199))
-        out = back.groupBy("l_partkey").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    loc = f"{root}/fact_clustered"
+    write_parquet_clustered(li, loc, ["l_partkey"], num_files=16)
+    back = read_parquet(spark, loc).filter(F.col("l_partkey").between(100, 199))
+    return back.groupBy("l_partkey").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+    )
 
 
 @golden(
@@ -726,7 +692,8 @@ def q_clustered_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer GROUP BY c_mktsegment
     """,
 )
-def q_snapshot_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_files(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Per-file metadata table (sources/snapshots.py::snapshot_files —
     Iceberg's ``t.files`` / file-granular DESCRIBE DETAIL): commit
     customers one file per market segment (deterministic layout:
@@ -737,8 +704,6 @@ def q_snapshot_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one). NO DATA I/O: the operator answers from manifest and
     parquet footers only; the oracle recomputes each file's expected
     numbers relationally from the base table."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_append,
         snapshot_delete_dv,
@@ -753,30 +718,24 @@ def q_snapshot_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = sorted(
         r[0] for r in cust.select("c_mktsegment").distinct().collect()
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapfiles_")
-    try:
-        table = f"{root}/cust_snap"
-        snapshot_overwrite(
-            cust.filter(F.col("c_mktsegment") == segs[0]).coalesce(1),
-            table,
-            stats_cols=["c_mktsegment"],
+    table = f"{root}/cust_snap"
+    snapshot_overwrite(
+        cust.filter(F.col("c_mktsegment") == segs[0]).coalesce(1),
+        table,
+        stats_cols=["c_mktsegment"],
+    )
+    for seg in segs[1:]:
+        # appends inherit the tip's stats columns (stats continuity)
+        snapshot_append(
+            cust.filter(F.col("c_mktsegment") == seg).coalesce(1), table
         )
-        for seg in segs[1:]:
-            # appends inherit the tip's stats columns (stats continuity)
-            snapshot_append(
-                cust.filter(F.col("c_mktsegment") == seg).coalesce(1), table
-            )
-        snapshot_delete_dv(spark, table, "c_custkey % 10 = 0")
-        # snapshot_files materializes driver-side from footers/manifest —
-        # the result frame holds no reference to the tempdir's files
-        return snapshot_files(spark, table).select(
-            F.col("stats")["c_mktsegment"][0].alias("segment"),
-            "num_rows",
-            "num_live_rows",
-            "has_deletion_vector",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    snapshot_delete_dv(spark, table, "c_custkey % 10 = 0")
+    return snapshot_files(spark, table).select(
+        F.col("stats")["c_mktsegment"][0].alias("segment"),
+        "num_rows",
+        "num_live_rows",
+        "has_deletion_vector",
+    )
 
 
 @golden(
@@ -790,7 +749,8 @@ def q_snapshot_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_partkey, l_suppkey
     """,
 )
-def q_zorder_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_zorder_sink_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Z-ordered layout round-trip (sources/writers.py::
     write_parquet_zordered — Morton interleaving of two columns, the
     OPTIMIZE ZORDER analog): the fact projection rewritten z-ordered on
@@ -799,28 +759,21 @@ def q_zorder_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-order bounds per-file/row-group ranges on both (spread contrast
     asserted from footers in tests/test_clustered_write.py). Values must
     match the unordered oracle exactly."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.writers import write_parquet_zordered
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="blhs_zorder_")
-    try:
-        loc = f"{root}/fact_z"
-        write_parquet_zordered(li, loc, "l_partkey", "l_suppkey", num_files=16)
-        back = read_parquet(spark, loc).filter(
-            F.col("l_partkey").between(200, 299)
-            & F.col("l_suppkey").between(10, 29)
-        )
-        out = back.groupBy("l_partkey", "l_suppkey").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    loc = f"{root}/fact_z"
+    write_parquet_zordered(li, loc, "l_partkey", "l_suppkey", num_files=16)
+    back = read_parquet(spark, loc).filter(
+        F.col("l_partkey").between(200, 299)
+        & F.col("l_suppkey").between(10, 29)
+    )
+    return back.groupBy("l_partkey", "l_suppkey").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+    )
 
 
 @golden(
@@ -830,7 +783,8 @@ def q_zorder_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation
     """,
 )
-def q_scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_scan_csv_permissive(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """PERMISSIVE CSV ingestion with corrupt-record capture (S2/S5
     robustness): the nation table written as headerless CSV plus a
     planted file of TWO malformed lines (a non-integer key and a
@@ -839,41 +793,36 @@ def q_scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     count both — the posture a 100 TB bulk load needs (one bad line in a
     billion must not kill the night's run). The planted-corruption count
     is a constant of the query, so the oracle is exact."""
-    import shutil
-
-    root = tempfile.mkdtemp(prefix="blhs_csvperm_")
+    loc = f"{root}/nation_csv"
+    (
+        load_table(spark, sf_dir, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey")
+        .write.option("header", "false")
+        .mode("overwrite")
+        .csv(loc)
+    )
+    with open(f"{loc}/part-bad.csv", "w") as f:
+        f.write("notanint,BROKENLAND,0\n7,TOO,MANY,COLUMNS,5\n")
+    schema = NATION_DDL + ", _corrupt string"
+    df = (
+        spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt")
+        .csv(loc)
+        # Spark refuses plans that reference ONLY the corrupt column
+        # (the raw line isn't retained after parsing); caching the
+        # parsed frame is the documented pattern for auditing it
+        .cache()
+    )
     try:
-        loc = f"{root}/nation_csv"
-        (
-            load_table(spark, sf_dir, "nation")
-            .select("n_nationkey", "n_name", "n_regionkey")
-            .write.option("header", "false")
-            .mode("overwrite")
-            .csv(loc)
+        out = df.agg(
+            F.count(F.when(F.col("_corrupt").isNull(), 1)).cast("bigint").alias("n_good"),
+            F.count("_corrupt").cast("bigint").alias("n_corrupt"),
         )
-        with open(f"{loc}/part-bad.csv", "w") as f:
-            f.write("notanint,BROKENLAND,0\n7,TOO,MANY,COLUMNS,5\n")
-        schema = NATION_DDL + ", _corrupt string"
-        df = (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt")
-            .csv(loc)
-            # Spark refuses plans that reference ONLY the corrupt column
-            # (the raw line isn't retained after parsing); caching the
-            # parsed frame is the documented pattern for auditing it
-            .cache()
-        )
-        try:
-            out = df.agg(
-                F.count(F.when(F.col("_corrupt").isNull(), 1)).cast("bigint").alias("n_good"),
-                F.count("_corrupt").cast("bigint").alias("n_corrupt"),
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            df.unpersist()
+        # pinned here: the cached parse is released before @scratch pins
+        return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        df.unpersist()
 
 
 @golden(
@@ -885,7 +834,8 @@ def q_scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
 )
-def q_scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_scan_text_lines(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Raw-text source format (spark.read.text — the line-per-record
     ingest shape of unprocessed LLM corpora): the documents' text dumped
     as plain .txt (one doc per line; the fixture corpus contains no
@@ -893,23 +843,16 @@ def q_scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free aggregates (file/partition ordering is not stable, so the
     oracle checks totals and the distinct-content count, not row
     order)."""
-    import shutil
-
-    root = tempfile.mkdtemp(prefix="blhs_text_")
-    try:
-        loc = f"{root}/corpus_txt"
-        load_table(spark, sf_dir, "documents").select("text").write.mode(
-            "overwrite"
-        ).text(loc)
-        back = spark.read.text(loc)
-        out = back.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            F.sum(F.length("value")).cast("bigint").alias("total_chars"),
-            F.count_distinct(F.md5("value")).cast("bigint").alias("n_distinct"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    loc = f"{root}/corpus_txt"
+    load_table(spark, sf_dir, "documents").select("text").write.mode(
+        "overwrite"
+    ).text(loc)
+    back = spark.read.text(loc)
+    return back.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_lines"),
+        F.sum(F.length("value")).cast("bigint").alias("total_chars"),
+        F.count_distinct(F.md5("value")).cast("bigint").alias("n_distinct"),
+    )
 
 
 N_BINARY_DOCS = 50
@@ -922,7 +865,8 @@ N_BINARY_DOCS = 50
     FROM documents WHERE doc_id < {N_BINARY_DOCS}
     """,
 )
-def q_scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_scan_binary_files(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """binaryFile source format — the multimodal ingest path (images/
     audio land as opaque files; Spark reads (path, modificationTime,
     length, content) with content as binary): a sample of documents
@@ -930,34 +874,25 @@ def q_scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered from the filename, content fingerprinted. The oracle
     recomputes length+md5 from the table — bytes must survive the file
     round-trip exactly. (ASCII corpus: byte length == char length.)"""
-    import shutil
-
-    root = tempfile.mkdtemp(prefix="blhs_bin_")
-    try:
-        loc = f"{root}/blobs"
-        import os
-
-        os.makedirs(loc)
-        sample = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < N_BINARY_DOCS)
-            .select("doc_id", "text")
-            .collect()  # bounded: N_BINARY_DOCS tiny docs — test scaffolding,
-        )  # not the operator under test (that's the binaryFile scan)
-        for row in sample:
-            with open(f"{loc}/doc_{row.doc_id}.bin", "wb") as f:
-                f.write(row.text.encode("utf-8"))
-        back = spark.read.format("binaryFile").load(loc)
-        out = back.select(
-            F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            F.col("length").cast("bigint").alias("n_bytes"),
-            F.md5("content").alias("content_md5"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    loc = f"{root}/blobs"
+    os.makedirs(loc)
+    sample = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < N_BINARY_DOCS)
+        .select("doc_id", "text")
+        .collect()  # bounded: N_BINARY_DOCS tiny docs — test scaffolding,
+    )  # not the operator under test (that's the binaryFile scan)
+    for row in sample:
+        with open(f"{loc}/doc_{row.doc_id}.bin", "wb") as f:
+            f.write(row.text.encode("utf-8"))
+    back = spark.read.format("binaryFile").load(loc)
+    return back.select(
+        F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        F.col("length").cast("bigint").alias("n_bytes"),
+        F.md5("content").alias("content_md5"),
+    )
 
 
 @golden(
@@ -972,7 +907,8 @@ def q_scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_month
     """,
 )
-def q_snapshot_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_delete_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Row-level DELETE on the snapshot table (sources/snapshots.py::
     snapshot_delete — the ``DELETE FROM t WHERE ...`` analog): commit
     orders month-clustered with manifest stats, delete every 3rd orderkey
@@ -980,10 +916,7 @@ def q_snapshot_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     month range can't intersect 1995 are carried by identity (zero I/O —
     asserted in tests/test_snapshots.py); only 1995's files are rewritten
     without the deleted rows, via a narrow no-shuffle filter. The oracle
-    applies the complement predicate to the raw table. Tempdir removed
-    before returning; result localCheckpoint-pinned."""
-    import shutil
-
+    applies the complement predicate to the raw table."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_delete,
         snapshot_merge,
@@ -996,22 +929,17 @@ def q_snapshot_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapdel_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_merge(
-            base, table, key_cols=["o_orderkey"], partition_col="o_month"
-        )
-        snapshot_delete(
-            spark, table, "o_month", "1995-01", "1995-12", "o_orderkey % 3 = 0"
-        )
-        out = snapshot_read(spark, table).groupBy("o_month").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("price").cast("double").alias("total_price"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_snap"
+    snapshot_merge(
+        base, table, key_cols=["o_orderkey"], partition_col="o_month"
+    )
+    snapshot_delete(
+        spark, table, "o_month", "1995-01", "1995-12", "o_orderkey % 3 = 0"
+    )
+    return snapshot_read(spark, table).groupBy("o_month").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("price").cast("double").alias("total_price"),
+    )
 
 
 @golden(
@@ -1025,7 +953,8 @@ def q_snapshot_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
 )
-def q_snapshot_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_optimize_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """OPTIMIZE (bin-pack compaction) on the snapshot table (sources/
     snapshots.py::snapshot_optimize): fragment a partkey slice of
     lineitem across one overwrite + three appends (the streaming-sink
@@ -1037,8 +966,6 @@ def q_snapshot_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     effect itself is driver-checked, not just the data equality.
     History checkpointing for the resulting multi-version log is
     exercised in tests/test_snapshots.py."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_append,
         snapshot_optimize,
@@ -1049,35 +976,30 @@ def q_snapshot_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_partkey").between(1, 400)
     ).select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
-    root = tempfile.mkdtemp(prefix="blhs_snapopt_")
-    try:
-        table = f"{root}/fact_snap"
-        snapshot_overwrite(
-            li.filter(F.col("l_partkey") <= 100).repartition(4),
+    table = f"{root}/fact_snap"
+    snapshot_overwrite(
+        li.filter(F.col("l_partkey") <= 100).repartition(4),
+        table,
+        stats_cols=["l_partkey"],
+    )
+    for lo, hi in [(101, 200), (201, 300), (301, 400)]:
+        snapshot_append(
+            li.filter(F.col("l_partkey").between(lo, hi)).repartition(4),
             table,
-            stats_cols=["l_partkey"],
         )
-        for lo, hi in [(101, 200), (201, 300), (301, 400)]:
-            snapshot_append(
-                li.filter(F.col("l_partkey").between(lo, hi)).repartition(4),
-                table,
-            )
-        n_before = len(snapshot_read(spark, table).inputFiles())
-        snapshot_optimize(
-            spark, table, target_file_bytes=128 << 20, cluster_col="l_partkey"
-        )
-        back = snapshot_read(spark, table)
-        packed = len(back.inputFiles()) < n_before
-        out = back.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.lit(bool(packed)).alias("packed"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    n_before = len(snapshot_read(spark, table).inputFiles())
+    snapshot_optimize(
+        spark, table, target_file_bytes=128 << 20, cluster_col="l_partkey"
+    )
+    back = snapshot_read(spark, table)
+    packed = len(back.inputFiles()) < n_before
+    return back.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(F.col("l_quantity").cast("decimal(18,2)"))
+        .cast("double")
+        .alias("sum_qty"),
+        F.lit(bool(packed)).alias("packed"),
+    )
 
 
 @golden(
@@ -1114,7 +1036,8 @@ def q_snapshot_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     SELECT c_custkey, status FROM feed WHERE status IS NOT NULL
     """,
 )
-def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Change data feed on the snapshot table (sources/snapshots.py::
     snapshot_changes — the ``table_changes(t, v_from, v_to)`` analog,
     composing the versioned format with operators/quality.py::
@@ -1125,8 +1048,6 @@ def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible-forever CDC read a downstream incremental consumer
     tails (versions are immutable until vacuum). The oracle replays all
     three versions and diffs them relationally."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_changes,
         snapshot_delete,
@@ -1145,23 +1066,18 @@ def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(18,2)")
         .alias("bal"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapcdc_")
-    try:
-        table = f"{root}/customer_snap"
-        snapshot_merge(
-            base, table, key_cols=["c_custkey"], partition_col="c_mktsegment"
-        )
-        snapshot_merge(
-            delta, table, key_cols=["c_custkey"], partition_col="c_mktsegment"
-        )
-        snapshot_delete(
-            spark, table, "c_mktsegment", "AUTOMOBILE", "AUTOMOBILE",
-            "c_custkey % 3 = 0",
-        )
-        out = snapshot_changes(spark, table, ["c_custkey"], v_from=1)
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/customer_snap"
+    snapshot_merge(
+        base, table, key_cols=["c_custkey"], partition_col="c_mktsegment"
+    )
+    snapshot_merge(
+        delta, table, key_cols=["c_custkey"], partition_col="c_mktsegment"
+    )
+    snapshot_delete(
+        spark, table, "c_mktsegment", "AUTOMOBILE", "AUTOMOBILE",
+        "c_custkey % 3 = 0",
+    )
+    return snapshot_changes(spark, table, ["c_custkey"], v_from=1)
 
 
 @golden(
@@ -1175,7 +1091,8 @@ def q_snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderkey = 7
     """,
 )
-def q_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Bloom-filter file index on the snapshot table (sources/snapshots.py::
     snapshot_bloom_index / snapshot_point_lookup): orders committed across
     8 files hash-distributed on o_custkey — so min/max stats on the lookup
@@ -1189,8 +1106,6 @@ def q_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in practice prunes ALL files, asserted in tests/test_snapshots.py).
     Bloom sizing: 2^18 bits x 7 hashes ≈ 0.4% FP at sf0.1's ~19k values
     per file — sized to the file count/SF as the docstring prescribes."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _point_lookup_files,
         snapshot_bloom_index,
@@ -1202,29 +1117,24 @@ def q_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.select(
         "o_orderkey", "o_custkey", F.col("o_totalprice").cast("double").alias("price")
     ).repartition(8, "o_custkey")
-    root = tempfile.mkdtemp(prefix="blhs_snapbloom_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_overwrite(base, table)
-        snapshot_bloom_index(
-            spark, table, "o_orderkey", num_bits=1 << 18, num_hashes=7
-        )
-        kept, all_files, _, _m = _point_lookup_files(spark, table, "o_orderkey", 7, None)
-        pruned = len(kept) < len(all_files)
-        absent_empty = (
-            snapshot_point_lookup(spark, table, "o_orderkey", 999_999_983).count()
-            == 0
-        )
-        out = snapshot_point_lookup(spark, table, "o_orderkey", 7).select(
-            "o_orderkey",
-            "o_custkey",
-            "price",
-            F.lit(pruned).alias("pruned"),
-            F.lit(absent_empty).alias("absent_empty"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_snap"
+    snapshot_overwrite(base, table)
+    snapshot_bloom_index(
+        spark, table, "o_orderkey", num_bits=1 << 18, num_hashes=7
+    )
+    kept, all_files, _, _m = _point_lookup_files(spark, table, "o_orderkey", 7, None)
+    pruned = len(kept) < len(all_files)
+    absent_empty = (
+        snapshot_point_lookup(spark, table, "o_orderkey", 999_999_983).count()
+        == 0
+    )
+    return snapshot_point_lookup(spark, table, "o_orderkey", 7).select(
+        "o_orderkey",
+        "o_custkey",
+        "price",
+        F.lit(pruned).alias("pruned"),
+        F.lit(absent_empty).alias("absent_empty"),
+    )
 
 
 @golden(
@@ -1247,7 +1157,8 @@ def q_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY priority
     """,
 )
-def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Schema evolution on the snapshot table (sources/snapshots.py::
     snapshot_append(merge_schema=True) — the mergeSchema / ADD COLUMN
     analog): commit 1995's orders WITHOUT the priority column, append
@@ -1258,8 +1169,6 @@ def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     The strictness half of the contract (silent drift raises without the
     opt-in; type changes always raise) is pinned in
     tests/test_snapshots.py."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_append,
         snapshot_overwrite,
@@ -1277,26 +1186,21 @@ def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("double").alias("price"),
         "o_orderpriority",
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapevo_")
-    try:
-        table = f"{root}/orders_evo"
-        snapshot_overwrite(y95, table)
-        snapshot_append(y96, table, merge_schema=True)
-        out = (
-            snapshot_read(spark, table)
-            .groupBy(
-                F.coalesce("o_orderpriority", F.lit("(pre-evolution)")).alias(
-                    "priority"
-                )
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.round(F.sum("price"), 2).alias("total_price"),
+    table = f"{root}/orders_evo"
+    snapshot_overwrite(y95, table)
+    snapshot_append(y96, table, merge_schema=True)
+    return (
+        snapshot_read(spark, table)
+        .groupBy(
+            F.coalesce("o_orderpriority", F.lit("(pre-evolution)")).alias(
+                "priority"
             )
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.round(F.sum("price"), 2).alias("total_price"),
+        )
+    )
 
 
 @golden(
@@ -1323,7 +1227,8 @@ def q_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_month
     """,
 )
-def q_snapshot_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_incremental_rollup(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Incremental view maintenance off the change feed (operators/
     incremental.py): materialize a monthly rollup of the v1 snapshot,
     then run a price-update + insert merge AND a whole-month DELETE
@@ -1336,8 +1241,6 @@ def q_snapshot_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     the count-reaches-zero rule). Sums ride DECIMAL(18,2) end-to-end so
     the mart+delta addition is exact and order-free; the double cast
     happens once at the end."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.operators.incremental import (
         apply_rollup_delta,
         rollup_delta,
@@ -1357,56 +1260,51 @@ def q_snapshot_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
         F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapivm_")
-    try:
-        table = f"{root}/orders_snap"
-        v1 = snapshot_merge(
-            base, table, key_cols=["o_orderkey"], partition_col="o_month"
+    table = f"{root}/orders_snap"
+    v1 = snapshot_merge(
+        base, table, key_cols=["o_orderkey"], partition_col="o_month"
+    )
+    # the stored mart, pinned as of v1 (localCheckpoint = "the mart
+    # exists on disk"; the refresh below must not re-derive it)
+    mart1 = (
+        snapshot_read(spark, table, v1)
+        .groupBy("o_month")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.sum("price").alias("sum_price"),
         )
-        # the stored mart, pinned as of v1 (localCheckpoint = "the mart
-        # exists on disk"; the refresh below must not re-derive it)
-        mart1 = (
-            snapshot_read(spark, table, v1)
-            .groupBy("o_month")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.sum("price").alias("sum_price"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # edit 1: price bump for every 7th key + brand-new rows (merge)
-        updated = base.filter(F.col("o_orderkey") % 7 == 0).withColumn(
-            "price", (F.col("price") + F.lit(5.00)).cast("decimal(18,2)")
-        )
-        added = base.filter(F.col("o_orderkey") % 11 == 0).select(
-            (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
-            "o_month",
-            F.lit(100.00).cast("decimal(18,2)").alias("price"),
-        )
-        snapshot_merge(
-            updated.unionByName(added),
-            table,
-            key_cols=["o_orderkey"],
-            partition_col="o_month",
-        )
-        # edit 2: drop one whole month (stats-pruned row-level DELETE)
-        snapshot_delete(spark, table, "o_month", "1995-03", "1995-03")
-        # refresh from the change feed only
-        old_rows, new_rows = snapshot_changed_rows(
-            spark, table, ["o_orderkey"], v1
-        )
-        delta = rollup_delta(old_rows, new_rows, ["o_month"], ["price"])
-        mart2 = apply_rollup_delta(
-            mart1, delta, ["o_month"], "n_orders", {"sum_price": "price"}
-        )
-        out = mart2.select(
-            "o_month",
-            "n_orders",
-            F.col("sum_price").cast("double").alias("total_price"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .localCheckpoint(eager=True)
+    )
+    # edit 1: price bump for every 7th key + brand-new rows (merge)
+    updated = base.filter(F.col("o_orderkey") % 7 == 0).withColumn(
+        "price", (F.col("price") + F.lit(5.00)).cast("decimal(18,2)")
+    )
+    added = base.filter(F.col("o_orderkey") % 11 == 0).select(
+        (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
+        "o_month",
+        F.lit(100.00).cast("decimal(18,2)").alias("price"),
+    )
+    snapshot_merge(
+        updated.unionByName(added),
+        table,
+        key_cols=["o_orderkey"],
+        partition_col="o_month",
+    )
+    # edit 2: drop one whole month (stats-pruned row-level DELETE)
+    snapshot_delete(spark, table, "o_month", "1995-03", "1995-03")
+    # refresh from the change feed only
+    old_rows, new_rows = snapshot_changed_rows(
+        spark, table, ["o_orderkey"], v1
+    )
+    delta = rollup_delta(old_rows, new_rows, ["o_month"], ["price"])
+    mart2 = apply_rollup_delta(
+        mart1, delta, ["o_month"], "n_orders", {"sum_price": "price"}
+    )
+    return mart2.select(
+        "o_month",
+        "n_orders",
+        F.col("sum_price").cast("double").alias("total_price"),
+    )
 
 
 @golden(
@@ -1484,7 +1382,8 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     """,
 )
-def q_snapshot_constraint_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_constraint_enforcement(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Table CHECK constraints on the snapshot table (sources/
     snapshots.py::snapshot_add_constraint — the ALTER TABLE ... CHECK
     analog): commit Q1-1995 orders, prove-and-add ``price > 0`` (one
@@ -1496,8 +1395,6 @@ def q_snapshot_constraint_enforcement(spark: SparkSession, sf_dir: str) -> DataF
     the table — and the constraint itself rides every manifest, so
     enforcement survives unrelated commits (pinned in
     tests/test_snapshots.py)."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         SnapshotConstraintError,
         snapshot_add_constraint,
@@ -1514,33 +1411,28 @@ def q_snapshot_constraint_enforcement(spark: SparkSession, sf_dir: str) -> DataF
         "o_orderstatus",
         F.col("o_totalprice").cast("double").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapck_")
+    table = f"{root}/orders_ck"
+    snapshot_overwrite(base, table)
+    snapshot_add_constraint(spark, table, "price_pos", "price > 0")
+    bad = base.limit(1).withColumn("price", F.lit(-1.0))
     try:
-        table = f"{root}/orders_ck"
-        snapshot_overwrite(base, table)
-        snapshot_add_constraint(spark, table, "price_pos", "price > 0")
-        bad = base.limit(1).withColumn("price", F.lit(-1.0))
-        try:
-            snapshot_merge(bad, table, key_cols=["o_orderkey"])
-            rejected = False
-        except SnapshotConstraintError:
-            rejected = True
-        good = base.limit(1)  # identical rows: value-neutral upsert
-        snapshot_merge(good, table, key_cols=["o_orderkey"])
-        out = (
-            snapshot_read(spark, table)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"))
-            .select(
-                "o_orderstatus",
-                "n_orders",
-                F.lit(rejected).alias("rejected_bad_commit"),
-                F.lit(True).alias("accepted_good_commit"),
-            )
+        snapshot_merge(bad, table, key_cols=["o_orderkey"])
+        rejected = False
+    except SnapshotConstraintError:
+        rejected = True
+    good = base.limit(1)  # identical rows: value-neutral upsert
+    snapshot_merge(good, table, key_cols=["o_orderkey"])
+    return (
+        snapshot_read(spark, table)
+        .groupBy("o_orderstatus")
+        .agg(F.count(F.lit(1)).alias("n_orders"))
+        .select(
+            "o_orderstatus",
+            "n_orders",
+            F.lit(rejected).alias("rejected_bad_commit"),
+            F.lit(True).alias("accepted_good_commit"),
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 @golden(
@@ -1567,7 +1459,8 @@ def q_snapshot_constraint_enforcement(spark: SparkSession, sf_dir: str) -> DataF
     GROUP BY priority
     """,
 )
-def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """The packaged materialized view (operators/incremental.py::
     materialized_rollup_build/refresh — CREATE/REFRESH MATERIALIZED VIEW
     over the snapshot format): build a priority rollup of 1994's orders,
@@ -1579,8 +1472,6 @@ def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str) -> Da
     applied >0 source versions) and ``second_refresh_noop`` (a fresh mart
     refuses to recompute). Values must equal the oracle's from-scratch
     replay of the final state."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.operators.incremental import (
         materialized_rollup_build,
         materialized_rollup_refresh,
@@ -1599,38 +1490,33 @@ def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str) -> Da
         "o_orderpriority",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapmv_")
-    try:
-        table = f"{root}/orders_mv_src"
-        mart = f"{root}/orders_mv_mart"
-        snapshot_merge(
-            base, table, key_cols=["o_orderkey"], partition_col="o_orderpriority"
-        )
-        materialized_rollup_build(
-            spark, table, mart,
-            key_cols=["o_orderkey"], group_cols=["o_orderpriority"],
-            sum_cols=["price"],
-        )
-        updated = base.filter(F.col("o_orderkey") % 5 == 0).withColumn(
-            "price", (F.col("price") + F.lit(7.50)).cast("decimal(18,2)")
-        )
-        snapshot_merge(
-            updated, table, key_cols=["o_orderkey"],
-            partition_col="o_orderpriority",
-        )
-        snapshot_delete(spark, table, "o_orderpriority", "1-URGENT", "1-URGENT")
-        applied = materialized_rollup_refresh(spark, table, mart)
-        noop = materialized_rollup_refresh(spark, table, mart) == 0
-        out = snapshot_read(spark, mart).select(
-            F.col("o_orderpriority").alias("priority"),
-            "n_rows",
-            F.col("sum_price").cast("double").alias("total_price"),
-            F.lit(applied > 0).alias("refresh_was_incremental"),
-            F.lit(noop).alias("second_refresh_noop"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_mv_src"
+    mart = f"{root}/orders_mv_mart"
+    snapshot_merge(
+        base, table, key_cols=["o_orderkey"], partition_col="o_orderpriority"
+    )
+    materialized_rollup_build(
+        spark, table, mart,
+        key_cols=["o_orderkey"], group_cols=["o_orderpriority"],
+        sum_cols=["price"],
+    )
+    updated = base.filter(F.col("o_orderkey") % 5 == 0).withColumn(
+        "price", (F.col("price") + F.lit(7.50)).cast("decimal(18,2)")
+    )
+    snapshot_merge(
+        updated, table, key_cols=["o_orderkey"],
+        partition_col="o_orderpriority",
+    )
+    snapshot_delete(spark, table, "o_orderpriority", "1-URGENT", "1-URGENT")
+    applied = materialized_rollup_refresh(spark, table, mart)
+    noop = materialized_rollup_refresh(spark, table, mart) == 0
+    return snapshot_read(spark, mart).select(
+        F.col("o_orderpriority").alias("priority"),
+        "n_rows",
+        F.col("sum_price").cast("double").alias("total_price"),
+        F.lit(applied > 0).alias("refresh_was_incremental"),
+        F.lit(noop).alias("second_refresh_noop"),
+    )
 
 
 @golden(
@@ -1647,7 +1533,8 @@ def q_snapshot_materialized_view_refresh(spark: SparkSession, sf_dir: str) -> Da
     GROUP BY o_orderstatus
     """,
 )
-def q_snapshot_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_update_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Predicate-addressed UPDATE on the snapshot table (sources/
     snapshots.py::snapshot_update — ``UPDATE t SET ... WHERE ...``):
     commit H1-1996 orders, bump every 4th orderkey's price by a constant,
@@ -1656,8 +1543,6 @@ def q_snapshot_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic keeps the updated sums exact. The constraint interplay
     (an UPDATE cannot violate an active CHECK) and NULL-predicate
     skip-semantics are pinned in tests/test_snapshots.py."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_overwrite,
         snapshot_read,
@@ -1672,27 +1557,22 @@ def q_snapshot_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapupd_")
-    try:
-        table = f"{root}/orders_upd"
-        snapshot_overwrite(base, table)
-        snapshot_update(
-            spark,
-            table,
-            {"price": "CAST(price + 25.00 AS DECIMAL(18,2))"},
-            where="o_orderkey % 4 = 0",
+    table = f"{root}/orders_upd"
+    snapshot_overwrite(base, table)
+    snapshot_update(
+        spark,
+        table,
+        {"price": "CAST(price + 25.00 AS DECIMAL(18,2))"},
+        where="o_orderkey % 4 = 0",
+    )
+    return (
+        snapshot_read(spark, table)
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("price").cast("double").alias("total_price"),
         )
-        out = (
-            snapshot_read(spark, table)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("price").cast("double").alias("total_price"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 @golden(
@@ -1707,7 +1587,8 @@ def q_snapshot_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     """,
 )
-def q_snapshot_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_python_datasource(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """The snapshot table as a REGISTERED Spark data source (sources/
     pyds.py, Spark 4 Python DataSource API): after registration,
     ``spark.read.format("lakesnap")`` plans a manifest-pinned scan with
@@ -1718,8 +1599,6 @@ def q_snapshot_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pruned`` is the planner-level contract: the same pushed predicate,
     fed to the reader class directly, keeps strictly fewer files than
     the table holds. Values must equal the raw-table oracle."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.pyds import (
         SnapshotReader,
         register_snapshot_datasource,
@@ -1734,36 +1613,31 @@ def q_snapshot_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     ).repartitionByRange(8, "o_orderkey").sortWithinPartitions("o_orderkey")
-    root = tempfile.mkdtemp(prefix="blhs_snappyds_")
-    try:
-        table = f"{root}/orders_pyds"
-        snapshot_overwrite(base, table, stats_cols=["o_orderkey"])
-        register_snapshot_datasource(spark)
-        df = (
-            spark.read.format("lakesnap")
-            .option("path", table)
-            .load()
-            .filter(F.col("o_orderkey").between(1000, 1999))
-        )
-        # planner-level pruning proof via the reader itself
-        r = SnapshotReader({"path": table}, snapshot_read(spark, table).schema)
-        r.pushFilters(
-            [GreaterThanOrEqual(("o_orderkey",), 1000),
-             LessThanOrEqual(("o_orderkey",), 1999)]
-        )
-        pruned = len(r.partitions()) < 8
-        out = df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        ).select(
-            "o_orderstatus", "n_orders", "total_price",
-            F.lit(pruned).alias("pruned"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_pyds"
+    snapshot_overwrite(base, table, stats_cols=["o_orderkey"])
+    register_snapshot_datasource(spark)
+    df = (
+        spark.read.format("lakesnap")
+        .option("path", table)
+        .load()
+        .filter(F.col("o_orderkey").between(1000, 1999))
+    )
+    # planner-level pruning proof via the reader itself
+    r = SnapshotReader({"path": table}, snapshot_read(spark, table).schema)
+    r.pushFilters(
+        [GreaterThanOrEqual(("o_orderkey",), 1000),
+         LessThanOrEqual(("o_orderkey",), 1999)]
+    )
+    pruned = len(r.partitions()) < 8
+    return df.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+        .cast("double")
+        .alias("total_price"),
+    ).select(
+        "o_orderstatus", "n_orders", "total_price",
+        F.lit(pruned).alias("pruned"),
+    )
 
 
 @golden(
@@ -1786,7 +1660,8 @@ def q_snapshot_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base
     """,
 )
-def q_snapshot_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_clone_divergence(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """SHALLOW CLONE (sources/snapshots.py::snapshot_clone): fork the
     Q1-1998 orders table in O(one manifest) — ``zero_copy`` is the
     driver-checked contract that the clone's v1 references the source's
@@ -1796,8 +1671,6 @@ def q_snapshot_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     reflects its own merge; the oracle replays both sides relationally.
     Vacuum ownership (expiring clone history never deletes source bytes)
     is pinned in tests/test_snapshots.py."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_clone,
@@ -1812,42 +1685,37 @@ def q_snapshot_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "o_orderkey", F.col("o_totalprice").cast("decimal(18,2)").alias("price")
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapclone_")
-    try:
-        src = f"{root}/orders_src"
-        cl = f"{root}/orders_clone"
-        snapshot_overwrite(base, src)
-        snapshot_clone(spark, src, cl)
-        zero_copy = (
-            _read_manifest(spark, cl, 1)["files"]
-            == _read_manifest(spark, src, 1)["files"]
-        )
-        delta = base.filter(F.col("o_orderkey") % 9 == 0).withColumn(
-            "price", (F.col("price") + F.lit(1.00)).cast("decimal(18,2)")
-        ).unionByName(
-            spark.createDataFrame(
-                [(999_999_901, "42.42")], "o_orderkey long, price string"
-            ).select("o_orderkey", F.col("price").cast("decimal(18,2)"))
-        )
-        snapshot_merge(delta, cl, key_cols=["o_orderkey"])
+    src = f"{root}/orders_src"
+    cl = f"{root}/orders_clone"
+    snapshot_overwrite(base, src)
+    snapshot_clone(spark, src, cl)
+    zero_copy = (
+        _read_manifest(spark, cl, 1)["files"]
+        == _read_manifest(spark, src, 1)["files"]
+    )
+    delta = base.filter(F.col("o_orderkey") % 9 == 0).withColumn(
+        "price", (F.col("price") + F.lit(1.00)).cast("decimal(18,2)")
+    ).unionByName(
+        spark.createDataFrame(
+            [(999_999_901, "42.42")], "o_orderkey long, price string"
+        ).select("o_orderkey", F.col("price").cast("decimal(18,2)"))
+    )
+    snapshot_merge(delta, cl, key_cols=["o_orderkey"])
 
-        def agg(df, side):
-            return df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("price").cast("double").alias("total_price"),
-            ).select(
-                F.lit(side).alias("side"),
-                "n_rows",
-                "total_price",
-                F.lit(zero_copy).alias("zero_copy"),
-            )
-
-        out = agg(snapshot_read(spark, src), "source").unionByName(
-            agg(snapshot_read(spark, cl), "clone")
+    def agg(df, side):
+        return df.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("price").cast("double").alias("total_price"),
+        ).select(
+            F.lit(side).alias("side"),
+            "n_rows",
+            "total_price",
+            F.lit(zero_copy).alias("zero_copy"),
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return agg(snapshot_read(spark, src), "source").unionByName(
+        agg(snapshot_read(spark, cl), "clone")
+    )
 
 
 @golden(
@@ -1863,7 +1731,8 @@ def q_snapshot_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-def q_snapshot_pyds_evolved_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_pyds_evolved_read(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """The Python DataSource reading a SCHEMA-EVOLVED table — the format's
     last untested seam (VERDICT r7 #8): v1 commits (o_orderkey,
     o_totalprice), v2 appends with ``merge_schema=True`` adding
@@ -1872,8 +1741,6 @@ def q_snapshot_pyds_evolved_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow layer (pyds.py::_conform) — exactly like the engine-side
     ``snapshot_read``. The oracle replays the union from the raw table
     with the pre-evolution rows labeled explicitly."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.pyds import (
         register_snapshot_datasource,
     )
@@ -1889,29 +1756,24 @@ def q_snapshot_pyds_evolved_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = orders.filter(F.col("o_orderkey").between(1000, 1499)).select(
         "o_orderkey", "o_totalprice", F.lit("web").alias("channel")
     )
-    root = tempfile.mkdtemp(prefix="blhs_pydsevo_")
-    try:
-        table = f"{root}/orders_evolved"
-        snapshot_overwrite(v1, table)
-        snapshot_append(v2, table, merge_schema=True)
-        register_snapshot_datasource(spark)
-        df = spark.read.format("lakesnap").option("path", table).load()
-        out = (
-            df.groupBy(
-                F.coalesce(F.col("channel"), F.lit("<pre-evolution>")).alias(
-                    "channel"
-                )
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_price"),
+    table = f"{root}/orders_evolved"
+    snapshot_overwrite(v1, table)
+    snapshot_append(v2, table, merge_schema=True)
+    register_snapshot_datasource(spark)
+    df = spark.read.format("lakesnap").option("path", table).load()
+    return (
+        df.groupBy(
+            F.coalesce(F.col("channel"), F.lit("<pre-evolution>")).alias(
+                "channel"
             )
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_price"),
+        )
+    )
 
 
 @golden(
@@ -1934,7 +1796,8 @@ def q_snapshot_pyds_evolved_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY version
     """,
 )
-def q_snapshot_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_restore_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """RESTORE TABLE t TO VERSION (sources/snapshots.py::snapshot_restore
     — Delta's RESTORE): after an overwrite (v1) and a DELETE of the even
     keys (v2), restoring to v1 commits the old content AS A NEW VERSION
@@ -1942,8 +1805,6 @@ def q_snapshot_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The emitted per-version aggregates prove v3 ≡ v1 while v2 still
     reads as the deleted state; the oracle replays all three states from
     the raw table."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_delete,
         snapshot_overwrite,
@@ -1955,23 +1816,18 @@ def q_snapshot_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.filter(F.col("o_orderkey") < 2000).select(
         "o_orderkey", F.col("o_totalprice").cast("decimal(18,2)").alias("price")
     )
-    root = tempfile.mkdtemp(prefix="blhs_snaprestore_")
-    try:
-        table = f"{root}/orders_restore"
-        snapshot_overwrite(base, table)
-        snapshot_delete(spark, table, extra_condition="o_orderkey % 2 = 0")
-        snapshot_restore(spark, table, 1)
+    table = f"{root}/orders_restore"
+    snapshot_overwrite(base, table)
+    snapshot_delete(spark, table, extra_condition="o_orderkey % 2 = 0")
+    snapshot_restore(spark, table, 1)
 
-        def agg(v: int):
-            return snapshot_read(spark, table, v).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("price").cast("double").alias("total_price"),
-            ).select(F.lit(v).alias("version"), "n_rows", "total_price")
+    def agg(v: int):
+        return snapshot_read(spark, table, v).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("price").cast("double").alias("total_price"),
+        ).select(F.lit(v).alias("version"), "n_rows", "total_price")
 
-        out = agg(1).unionByName(agg(2)).unionByName(agg(3)).orderBy("version")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return agg(1).unionByName(agg(2)).unionByName(agg(3)).orderBy("version")
 
 
 @golden(
@@ -1998,15 +1854,14 @@ def q_snapshot_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY version
     """,
 )
-def q_snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_history_audit(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """DESCRIBE HISTORY as a driver-checked surface (sources/
     snapshots.py::history — checkpointed O(new manifests) commit-log
     read): here overwrite → append → DELETE (even keys) → RESTORE to v2,
     with each version's time-travel row count proving the content the
     log claims. The oracle replays the four states relationally from the
     raw table."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         history,
         list_versions,
@@ -2018,31 +1873,26 @@ def q_snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="blhs_snaphist_")
-    try:
-        table = f"{root}/orders_hist"
-        snapshot_overwrite(
-            orders.filter(F.col("o_orderkey") < 2000).select("o_orderkey"), table
-        )
-        snapshot_append(
-            orders.filter(F.col("o_orderkey").between(2000, 2999)).select(
-                "o_orderkey"
-            ),
-            table,
-        )
-        snapshot_delete(spark, table, extra_condition="o_orderkey % 2 = 0")
-        snapshot_restore(spark, table, 2)
-        hist = history(spark, table).select("version", "operation")
-        counts = None
-        for v in list_versions(spark, table):
-            c = snapshot_read(spark, table, v).agg(
-                F.count(F.lit(1)).alias("n_rows")
-            ).select(F.lit(v).alias("version"), "n_rows")
-            counts = c if counts is None else counts.unionByName(c)
-        out = hist.join(counts, "version").orderBy("version")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_hist"
+    snapshot_overwrite(
+        orders.filter(F.col("o_orderkey") < 2000).select("o_orderkey"), table
+    )
+    snapshot_append(
+        orders.filter(F.col("o_orderkey").between(2000, 2999)).select(
+            "o_orderkey"
+        ),
+        table,
+    )
+    snapshot_delete(spark, table, extra_condition="o_orderkey % 2 = 0")
+    snapshot_restore(spark, table, 2)
+    hist = history(spark, table).select("version", "operation")
+    counts = None
+    for v in list_versions(spark, table):
+        c = snapshot_read(spark, table, v).agg(
+            F.count(F.lit(1)).alias("n_rows")
+        ).select(F.lit(v).alias("version"), "n_rows")
+        counts = c if counts is None else counts.unionByName(c)
+    return hist.join(counts, "version").orderBy("version")
 
 
 @golden(
@@ -2081,7 +1931,8 @@ def q_snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     """,
 )
-def q_snapshot_merge_when_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_merge_when_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Conditional three-clause MERGE INTO (sources/snapshots.py::
     snapshot_merge_when — the Delta MERGE surface; `snapshot_merge` is
     its unconditional special case): matched rows DELETE when the
@@ -2090,8 +1941,6 @@ def q_snapshot_merge_when_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     rows not matched by source DELETE on multiples of 7 (the
     sync-to-source clause). The oracle replays all four row fates
     relationally; aggregates over the merged table must agree."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_merge_when,
         snapshot_overwrite,
@@ -2111,31 +1960,26 @@ def q_snapshot_merge_when_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
         .cast("decimal(18,2)")
         .alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_mergewhen_")
-    try:
-        table = f"{root}/orders_mw"
-        snapshot_overwrite(t, table)
-        snapshot_merge_when(
-            s,
-            table,
-            key_cols=["o_orderkey"],
-            when_matched_update={"price": "CAST(s.price AS DECIMAL(18,2))"},
-            when_matched_update_condition="t.o_orderstatus = 'F'",
-            when_matched_delete="s.o_orderkey % 10 = 0",
-            when_not_matched_insert=True,
-            when_not_matched_by_source_delete="t.o_orderkey % 7 = 0",
+    table = f"{root}/orders_mw"
+    snapshot_overwrite(t, table)
+    snapshot_merge_when(
+        s,
+        table,
+        key_cols=["o_orderkey"],
+        when_matched_update={"price": "CAST(s.price AS DECIMAL(18,2))"},
+        when_matched_update_condition="t.o_orderstatus = 'F'",
+        when_matched_delete="s.o_orderkey % 10 = 0",
+        when_not_matched_insert=True,
+        when_not_matched_by_source_delete="t.o_orderkey % 7 = 0",
+    )
+    return (
+        snapshot_read(spark, table)
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("price").cast("double").alias("total_price"),
         )
-        out = (
-            snapshot_read(spark, table)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("price").cast("double").alias("total_price"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 @golden(
@@ -2146,14 +1990,13 @@ def q_snapshot_merge_when_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     FROM orders WHERE o_orderkey < 4000
     """,
 )
-def q_snapshot_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_metadata_count(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Metadata-only COUNT(*) (sources/snapshots.py::snapshot_count —
     Delta's footer count): the answer comes from O(files) parquet-footer
     reads with zero data I/O and no Spark job, here across an overwrite
     plus an append, and must equal both the scanned count and the raw
     relational count."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_append,
         snapshot_count,
@@ -2162,25 +2005,20 @@ def q_snapshot_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="blhs_metacount_")
-    try:
-        table = f"{root}/orders_meta"
-        snapshot_overwrite(
-            orders.filter(F.col("o_orderkey") < 3000).select("o_orderkey"), table
-        )
-        snapshot_append(
-            orders.filter(F.col("o_orderkey").between(3000, 3999)).select(
-                "o_orderkey"
-            ),
-            table,
-        )
-        n_meta = snapshot_count(spark, table)  # footers only, no job
-        out = snapshot_read(spark, table).agg(
-            F.count(F.lit(1)).alias("n_scan")
-        ).select(F.lit(n_meta).cast("bigint").alias("n_meta"), "n_scan")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_meta"
+    snapshot_overwrite(
+        orders.filter(F.col("o_orderkey") < 3000).select("o_orderkey"), table
+    )
+    snapshot_append(
+        orders.filter(F.col("o_orderkey").between(3000, 3999)).select(
+            "o_orderkey"
+        ),
+        table,
+    )
+    n_meta = snapshot_count(spark, table)  # footers only, no job
+    return snapshot_read(spark, table).agg(
+        F.count(F.lit(1)).alias("n_scan")
+    ).select(F.lit(n_meta).cast("bigint").alias("n_meta"), "n_scan")
 
 
 @golden(
@@ -2195,15 +2033,14 @@ def q_snapshot_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY state
     """,
 )
-def q_snapshot_asof_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_asof_timestamp(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """TIMESTAMP AS OF time travel (snapshots.py::snapshot_read_asof):
     the commit log records each version's wall-clock time, so reading
     'as of' v1's own committed_at resolves to v1 and 'as of' the tip's
     time resolves to the tip — deterministic because the probe
     timestamps COME FROM the history the query just wrote. The oracle
     replays both states relationally."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         history,
         snapshot_append,
@@ -2212,32 +2049,27 @@ def q_snapshot_asof_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="blhs_asofts_")
-    try:
-        table = f"{root}/orders_asof"
-        snapshot_overwrite(
-            orders.filter(F.col("o_orderkey") < 1500).select("o_orderkey"), table
-        )
-        snapshot_append(
-            orders.filter(F.col("o_orderkey").between(1500, 1999)).select(
-                "o_orderkey"
-            ),
-            table,
-        )
-        ts = {
-            r.version: r.committed_at_unix
-            for r in history(spark, table).collect()
-        }
+    table = f"{root}/orders_asof"
+    snapshot_overwrite(
+        orders.filter(F.col("o_orderkey") < 1500).select("o_orderkey"), table
+    )
+    snapshot_append(
+        orders.filter(F.col("o_orderkey").between(1500, 1999)).select(
+            "o_orderkey"
+        ),
+        table,
+    )
+    ts = {
+        r.version: r.committed_at_unix
+        for r in history(spark, table).collect()
+    }
 
-        def agg(state: str, t: float):
-            return snapshot_read_asof(spark, table, t).agg(
-                F.count(F.lit(1)).alias("n_rows")
-            ).select(F.lit(state).alias("state"), "n_rows")
+    def agg(state: str, t: float):
+        return snapshot_read_asof(spark, table, t).agg(
+            F.count(F.lit(1)).alias("n_rows")
+        ).select(F.lit(state).alias("state"), "n_rows")
 
-        out = agg("v1", ts[1]).unionByName(agg("v2", ts[2])).orderBy("state")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return agg("v1", ts[1]).unionByName(agg("v2", ts[2])).orderBy("state")
 
 
 @golden(
@@ -2250,16 +2082,14 @@ def q_snapshot_asof_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1 AS BOOLEAN) AS bytes_reclaimed
     """,
 )
-def q_snapshot_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_vacuum_retention(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """VACUUM (snapshots.py::vacuum): after an overwrite supersedes v1,
     vacuum(keep_last=1) must drop v1's manifest, delete every data file
     only v1 referenced (bytes actually reclaimed on disk), and leave the
     tip fully readable. The contract booleans are computed Spark-side
     against the literal oracle, sketch-pattern style; tip_rows pins the
     surviving content relationally."""
-    import os
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         list_versions,
@@ -2270,30 +2100,25 @@ def q_snapshot_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     base = orders.filter(F.col("o_orderkey") < 1000).select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="blhs_vacuum_")
-    try:
-        table = f"{root}/orders_vac"
-        snapshot_overwrite(base, table)
-        v1_files = _read_manifest(spark, table, 1)["files"]
-        snapshot_overwrite(base.filter(F.col("o_orderkey") % 2 == 1), table)
-        n_deleted = vacuum(spark, table, keep_last=1)
-        versions_left = len(list_versions(spark, table))
-        expired_gone = versions_left == 1 and n_deleted == len(v1_files)
-        bytes_reclaimed = not any(
-            os.path.exists(f[5:] if f.startswith("file:") else f)
-            for f in v1_files
-        )
-        out = snapshot_read(spark, table).agg(
-            F.count(F.lit(1)).alias("tip_rows")
-        ).select(
-            F.lit(versions_left).cast("bigint").alias("versions_left"),
-            "tip_rows",
-            F.lit(expired_gone).alias("expired_gone"),
-            F.lit(bytes_reclaimed).alias("bytes_reclaimed"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_vac"
+    snapshot_overwrite(base, table)
+    v1_files = _read_manifest(spark, table, 1)["files"]
+    snapshot_overwrite(base.filter(F.col("o_orderkey") % 2 == 1), table)
+    n_deleted = vacuum(spark, table, keep_last=1)
+    versions_left = len(list_versions(spark, table))
+    expired_gone = versions_left == 1 and n_deleted == len(v1_files)
+    bytes_reclaimed = not any(
+        os.path.exists(f[5:] if f.startswith("file:") else f)
+        for f in v1_files
+    )
+    return snapshot_read(spark, table).agg(
+        F.count(F.lit(1)).alias("tip_rows")
+    ).select(
+        F.lit(versions_left).cast("bigint").alias("versions_left"),
+        "tip_rows",
+        F.lit(expired_gone).alias("expired_gone"),
+        F.lit(bytes_reclaimed).alias("bytes_reclaimed"),
+    )
 
 
 @golden(
@@ -2310,7 +2135,8 @@ def q_snapshot_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
 )
-def q_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_dv_delete(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Merge-on-read DELETE via deletion vectors (sources/snapshots.py::
     snapshot_delete_dv — Delta DVs / Iceberg position deletes): the
     commit writes dead (file, row-position) sidecars sized by the rows
@@ -2321,8 +2147,6 @@ def q_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``meta_count_ok`` (metadata-only COUNT — footer rows minus recorded
     cardinality — agrees with the scanned count). Content is the
     complement aggregate, replayed by the oracle on the raw table."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_count,
@@ -2337,29 +2161,24 @@ def q_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapdv_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_overwrite(base.repartition(4), table)
-        v1_files = _read_manifest(spark, table, 1)["files"]
-        v = snapshot_delete_dv(spark, table, "o_orderkey % 5 = 2")
-        m = _read_manifest(spark, table, v)
-        files_unchanged = sorted(m["files"]) == sorted(v1_files) and bool(
-            (m.get("dv") or {}).get("cardinality")
-        )
-        tip = snapshot_read(spark, table)
-        meta_count_ok = snapshot_count(spark, table) == tip.count()
-        out = tip.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("price").cast("double").alias("total_price"),
-        ).select(
-            "*",
-            F.lit(files_unchanged).alias("files_unchanged"),
-            F.lit(meta_count_ok).alias("meta_count_ok"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_snap"
+    snapshot_overwrite(base.repartition(4), table)
+    v1_files = _read_manifest(spark, table, 1)["files"]
+    v = snapshot_delete_dv(spark, table, "o_orderkey % 5 = 2")
+    m = _read_manifest(spark, table, v)
+    files_unchanged = sorted(m["files"]) == sorted(v1_files) and bool(
+        (m.get("dv") or {}).get("cardinality")
+    )
+    tip = snapshot_read(spark, table)
+    meta_count_ok = snapshot_count(spark, table) == tip.count()
+    return tip.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("price").cast("double").alias("total_price"),
+    ).select(
+        "*",
+        F.lit(files_unchanged).alias("files_unchanged"),
+        F.lit(meta_count_ok).alias("meta_count_ok"),
+    )
 
 
 @golden(
@@ -2375,7 +2194,8 @@ def q_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
 )
-def q_snapshot_dv_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_dv_purge(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """DV lifecycle close-out (sources/snapshots.py::snapshot_purge_dv —
     the ``REORG TABLE ... APPLY (PURGE)`` analog): two OVERLAPPING
     merge-on-read deletes compose without double-recording a position
@@ -2385,8 +2205,6 @@ def q_snapshot_dv_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``clean_files_carried`` pins that every vector-free file survives by
     identity, ``dv_cleared`` that the tip ends vector-free. Content is
     the double-complement aggregate the oracle replays."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_delete_dv,
@@ -2397,39 +2215,34 @@ def q_snapshot_dv_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_orderpriority")
-    root = tempfile.mkdtemp(prefix="blhs_snapdvp_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_overwrite(base.repartition(4), table)
-        snapshot_delete_dv(spark, table, "o_orderkey % 5 = 2")
-        v = snapshot_delete_dv(spark, table, "o_orderkey % 10 = 7")
-        m = _read_manifest(spark, table, v)
-        card_total = sum((m.get("dv") or {}).get("cardinality", {}).values())
-        expected_dead = (
-            snapshot_read(spark, table, 1)
-            .filter("o_orderkey % 5 = 2 OR o_orderkey % 10 = 7")
-            .count()
-        )
-        deletes_composed = card_total == expected_dead
-        dirty = set((m.get("dv") or {}).get("cardinality", {}))
-        clean = set(m["files"]) - dirty
-        pv = snapshot_purge_dv(spark, table)
-        mp = _read_manifest(spark, table, pv)
-        dv_cleared = "dv" not in mp
-        clean_files_carried = clean <= set(mp["files"]) and dirty.isdisjoint(
-            set(mp["files"])
-        )
-        out = snapshot_read(spark, table).groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias("n_orders")
-        ).select(
-            "*",
-            F.lit(deletes_composed).alias("deletes_composed"),
-            F.lit(dv_cleared).alias("dv_cleared"),
-            F.lit(clean_files_carried).alias("clean_files_carried"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_snap"
+    snapshot_overwrite(base.repartition(4), table)
+    snapshot_delete_dv(spark, table, "o_orderkey % 5 = 2")
+    v = snapshot_delete_dv(spark, table, "o_orderkey % 10 = 7")
+    m = _read_manifest(spark, table, v)
+    card_total = sum((m.get("dv") or {}).get("cardinality", {}).values())
+    expected_dead = (
+        snapshot_read(spark, table, 1)
+        .filter("o_orderkey % 5 = 2 OR o_orderkey % 10 = 7")
+        .count()
+    )
+    deletes_composed = card_total == expected_dead
+    dirty = set((m.get("dv") or {}).get("cardinality", {}))
+    clean = set(m["files"]) - dirty
+    pv = snapshot_purge_dv(spark, table)
+    mp = _read_manifest(spark, table, pv)
+    dv_cleared = "dv" not in mp
+    clean_files_carried = clean <= set(mp["files"]) and dirty.isdisjoint(
+        set(mp["files"])
+    )
+    return snapshot_read(spark, table).groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders")
+    ).select(
+        "*",
+        F.lit(deletes_composed).alias("deletes_composed"),
+        F.lit(dv_cleared).alias("dv_cleared"),
+        F.lit(clean_files_carried).alias("clean_files_carried"),
+    )
 
 
 @golden(
@@ -2451,7 +2264,8 @@ def q_snapshot_dv_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY bucket
     """,
 )
-def q_snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_column_mapping(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Metadata-only schema surgery (sources/snapshots.py::
     snapshot_rename_column / snapshot_drop_column — Delta column
     mapping, name mode): RENAME and DROP each commit ONE manifest while
@@ -2463,8 +2277,6 @@ def q_snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``old_name_travels`` (time travel to v1 still reads the original
     column name). Content: the oracle replays base ∪ appended under the
     renamed column."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_append,
@@ -2480,42 +2292,37 @@ def q_snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").alias("amount"),
         "o_orderstatus",
     )
-    root = tempfile.mkdtemp(prefix="blhs_snapcm_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_overwrite(base.repartition(4), table)
-        v1_files = _read_manifest(spark, table, 1)["files"]
-        rv = snapshot_rename_column(spark, table, "amount", "price")
-        rename_metadata_only = (
-            _read_manifest(spark, table, rv)["files"] == v1_files
-        )
-        dv = snapshot_drop_column(spark, table, "o_orderstatus")
-        drop_metadata_only = _read_manifest(spark, table, dv)["files"] == v1_files
-        snapshot_append(
-            base.filter(F.col("o_orderkey") % 100 == 0).select(
-                "o_orderkey", F.col("amount").alias("price")
-            ),
-            table,
-        )
-        old_name_travels = snapshot_read(spark, table, 1).columns == [
-            "o_orderkey",
-            "amount",
-            "o_orderstatus",
-        ] and snapshot_read(spark, table).columns == ["o_orderkey", "price"]
-        out = snapshot_read(spark, table).groupBy(
-            (F.col("o_orderkey") % 7).alias("bucket")
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("price").cast("double").alias("sum_price"),
-        ).select(
-            "*",
-            F.lit(rename_metadata_only).alias("rename_metadata_only"),
-            F.lit(drop_metadata_only).alias("drop_metadata_only"),
-            F.lit(old_name_travels).alias("old_name_travels"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_snap"
+    snapshot_overwrite(base.repartition(4), table)
+    v1_files = _read_manifest(spark, table, 1)["files"]
+    rv = snapshot_rename_column(spark, table, "amount", "price")
+    rename_metadata_only = (
+        _read_manifest(spark, table, rv)["files"] == v1_files
+    )
+    dv = snapshot_drop_column(spark, table, "o_orderstatus")
+    drop_metadata_only = _read_manifest(spark, table, dv)["files"] == v1_files
+    snapshot_append(
+        base.filter(F.col("o_orderkey") % 100 == 0).select(
+            "o_orderkey", F.col("amount").alias("price")
+        ),
+        table,
+    )
+    old_name_travels = snapshot_read(spark, table, 1).columns == [
+        "o_orderkey",
+        "amount",
+        "o_orderstatus",
+    ] and snapshot_read(spark, table).columns == ["o_orderkey", "price"]
+    return snapshot_read(spark, table).groupBy(
+        (F.col("o_orderkey") % 7).alias("bucket")
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("price").cast("double").alias("sum_price"),
+    ).select(
+        "*",
+        F.lit(rename_metadata_only).alias("rename_metadata_only"),
+        F.lit(drop_metadata_only).alias("drop_metadata_only"),
+        F.lit(old_name_travels).alias("old_name_travels"),
+    )
 
 
 @golden(
@@ -2530,7 +2337,8 @@ def q_snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
 )
-def q_snapshot_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_convert_in_place(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """CONVERT TO the snapshot format in place (sources/snapshots.py::
     snapshot_convert — the ``CONVERT TO DELTA`` analog): a plain parquet
     directory becomes an ACID table whose v1 references the existing
@@ -2540,9 +2348,6 @@ def q_snapshot_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-on-read delete (DVs never rewrite); ``acid_after_convert``
     pins that time travel to v1 still sees every original row. Content:
     the post-delete complement, replayed by the oracle."""
-    import os as _os
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_convert,
         snapshot_delete_dv,
@@ -2551,32 +2356,27 @@ def q_snapshot_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_orderpriority")
-    root = tempfile.mkdtemp(prefix="blhs_snapconv_")
-    try:
-        plain = f"{root}/orders_plain"
-        base.repartition(4).write.parquet(plain)
-        listing = sorted(
-            p for p in _os.listdir(plain) if p.endswith(".parquet")
-        )
-        n_total = base.count()
-        snapshot_convert(spark, plain)
-        snapshot_delete_dv(spark, plain, "o_orderkey % 4 = 1")
-        zero_copy = listing == sorted(
-            p for p in _os.listdir(plain) if p.endswith(".parquet")
-        )
-        acid_after_convert = (
-            snapshot_read(spark, plain, 1).count() == n_total
-        )
-        out = snapshot_read(spark, plain).groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias("n_orders")
-        ).select(
-            "*",
-            F.lit(zero_copy).alias("zero_copy"),
-            F.lit(acid_after_convert).alias("acid_after_convert"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    plain = f"{root}/orders_plain"
+    base.repartition(4).write.parquet(plain)
+    listing = sorted(
+        p for p in os.listdir(plain) if p.endswith(".parquet")
+    )
+    n_total = base.count()
+    snapshot_convert(spark, plain)
+    snapshot_delete_dv(spark, plain, "o_orderkey % 4 = 1")
+    zero_copy = listing == sorted(
+        p for p in os.listdir(plain) if p.endswith(".parquet")
+    )
+    acid_after_convert = (
+        snapshot_read(spark, plain, 1).count() == n_total
+    )
+    return snapshot_read(spark, plain).groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders")
+    ).select(
+        "*",
+        F.lit(zero_copy).alias("zero_copy"),
+        F.lit(acid_after_convert).alias("acid_after_convert"),
+    )
 
 
 @golden(
@@ -2597,7 +2397,8 @@ def q_snapshot_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY bucket
     """,
 )
-def q_snapshot_idempotent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_idempotent_append(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Idempotent writer protocol (sources/snapshots.py::snapshot_append
     txn_app_id/txn_version — Delta's txnAppId/txnVersion): a retried or
     replayed (app, version) append applies AT MOST ONCE. The delta is
@@ -2608,8 +2409,6 @@ def q_snapshot_idempotent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest, so retention can't forget it — the failure mode of
     log-scan dedup). Content: base ∪ one delta, replayed by the
     oracle."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_append,
         snapshot_overwrite,
@@ -2623,33 +2422,28 @@ def q_snapshot_idempotent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
     delta = base.filter(F.col("o_orderkey") % 50 == 0)
-    root = tempfile.mkdtemp(prefix="blhs_snaptxn_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_overwrite(base.repartition(4), table)
-        n_expected = base.count() + delta.count()
-        snapshot_append(delta, table, txn_app_id="loader", txn_version=1)
-        snapshot_append(delta, table, txn_app_id="loader", txn_version=1)
-        snapshot_append(delta, table, txn_app_id="loader", txn_version=0)
-        replay_noop = snapshot_read(spark, table).count() == n_expected
-        vacuum(spark, table, keep_last=1)
-        snapshot_append(delta, table, txn_app_id="loader", txn_version=1)
-        watermark_survives_vacuum = (
-            snapshot_read(spark, table).count() == n_expected
-        )
-        out = snapshot_read(spark, table).groupBy(
-            (F.col("o_orderkey") % 5).alias("bucket")
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("price").cast("double").alias("sum_price"),
-        ).select(
-            "*",
-            F.lit(replay_noop).alias("replay_noop"),
-            F.lit(watermark_survives_vacuum).alias("watermark_survives_vacuum"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/orders_snap"
+    snapshot_overwrite(base.repartition(4), table)
+    n_expected = base.count() + delta.count()
+    snapshot_append(delta, table, txn_app_id="loader", txn_version=1)
+    snapshot_append(delta, table, txn_app_id="loader", txn_version=1)
+    snapshot_append(delta, table, txn_app_id="loader", txn_version=0)
+    replay_noop = snapshot_read(spark, table).count() == n_expected
+    vacuum(spark, table, keep_last=1)
+    snapshot_append(delta, table, txn_app_id="loader", txn_version=1)
+    watermark_survives_vacuum = (
+        snapshot_read(spark, table).count() == n_expected
+    )
+    return snapshot_read(spark, table).groupBy(
+        (F.col("o_orderkey") % 5).alias("bucket")
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("price").cast("double").alias("sum_price"),
+    ).select(
+        "*",
+        F.lit(replay_noop).alias("replay_noop"),
+        F.lit(watermark_survives_vacuum).alias("watermark_survives_vacuum"),
+    )
 
 
 @golden(
@@ -2677,7 +2471,8 @@ def q_snapshot_idempotent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_month
     """,
 )
-def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_replace_where(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Atomic partition reload (sources/snapshots.py::
     snapshot_replace_where — Delta's ``replaceWhere``): ONE commit swaps
     exactly the rows of one month-range for a recomputed version
@@ -2686,8 +2481,6 @@ def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins that every file whose month range provably misses 1995 appears
     verbatim in the new manifest (zero I/O for untouched partitions, the
     100 TB property). The oracle replays complement ∪ recomputed."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         snapshot_merge,
@@ -2701,39 +2494,34 @@ def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = tempfile.mkdtemp(prefix="blhs_snaprw_")
-    try:
-        table = f"{root}/orders_snap"
-        snapshot_merge(
-            base, table, key_cols=["o_orderkey"], partition_col="o_month"
+    table = f"{root}/orders_snap"
+    snapshot_merge(
+        base, table, key_cols=["o_orderkey"], partition_col="o_month"
+    )
+    m0 = _read_manifest(spark, table, 1)
+    stats = m0.get("file_stats") or {}
+    disjoint = [
+        f
+        for f in m0["files"]
+        if stats.get(f, {}).get("o_month")
+        and stats[f]["o_month"][0] is not None
+        and (
+            stats[f]["o_month"][1] < "1995-01"
+            or stats[f]["o_month"][0] > "1995-12"
         )
-        m0 = _read_manifest(spark, table, 1)
-        stats = m0.get("file_stats") or {}
-        disjoint = [
-            f
-            for f in m0["files"]
-            if stats.get(f, {}).get("o_month")
-            and stats[f]["o_month"][0] is not None
-            and (
-                stats[f]["o_month"][1] < "1995-01"
-                or stats[f]["o_month"][0] > "1995-12"
-            )
-        ]
-        recomputed = base.filter(
-            F.col("o_month").between("1995-01", "1995-12")
-        ).withColumn("price", (F.col("price") * 2).cast("decimal(18,2)"))
-        v = snapshot_replace_where(
-            recomputed, table, "o_month", "1995-01", "1995-12"
-        )
-        m = _read_manifest(spark, table, v)
-        disjoint_carried = set(disjoint) <= set(m["files"])
-        out = snapshot_read(spark, table).groupBy("o_month").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("price").cast("double").alias("total_price"),
-        ).select("*", F.lit(disjoint_carried).alias("disjoint_carried"))
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ]
+    recomputed = base.filter(
+        F.col("o_month").between("1995-01", "1995-12")
+    ).withColumn("price", (F.col("price") * 2).cast("decimal(18,2)"))
+    v = snapshot_replace_where(
+        recomputed, table, "o_month", "1995-01", "1995-12"
+    )
+    m = _read_manifest(spark, table, v)
+    disjoint_carried = set(disjoint) <= set(m["files"])
+    return snapshot_read(spark, table).groupBy("o_month").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("price").cast("double").alias("total_price"),
+    ).select("*", F.lit(disjoint_carried).alias("disjoint_carried"))
 
 
 @golden(
@@ -2747,7 +2535,8 @@ def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_partkey
     """,
 )
-def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """OPTIMIZE ZORDER BY (sources/snapshots.py::snapshot_zorder):
     lineitem committed orderkey-clustered (the natural arrival layout,
     where per-file [min,max] on every OTHER key spans the whole domain),
@@ -2759,8 +2548,6 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the table holds, and the combined scan fewer still) is asserted
     in tests/test_snapshots.py::test_zorder_multi_column_pruning. The
     rewrite is layout-only: content is value-identical at every step."""
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         snapshot_overwrite,
         snapshot_scan,
@@ -2770,36 +2557,31 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
     )
-    root = tempfile.mkdtemp(prefix="blhs_zorder_")
-    try:
-        table = f"{root}/lineitem_z"
-        snapshot_overwrite(
-            li.repartitionByRange(16, "l_orderkey").sortWithinPartitions(
-                "l_orderkey"
-            ),
+    table = f"{root}/lineitem_z"
+    snapshot_overwrite(
+        li.repartitionByRange(16, "l_orderkey").sortWithinPartitions(
+            "l_orderkey"
+        ),
+        table,
+        stats_cols=["l_orderkey", "l_partkey", "l_suppkey"],
+    )
+    snapshot_zorder(
+        spark, table, ["l_partkey", "l_suppkey"], target_file_bytes=256_000
+    )
+    return (
+        snapshot_scan(
+            spark,
             table,
-            stats_cols=["l_orderkey", "l_partkey", "l_suppkey"],
+            ranges={"l_partkey": (100, 160), "l_suppkey": (2, 40)},
         )
-        snapshot_zorder(
-            spark, table, ["l_partkey", "l_suppkey"], target_file_bytes=256_000
+        .groupBy("l_partkey")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum(F.col("l_quantity").cast("bigint"))
+            .cast("bigint")
+            .alias("total_qty"),
         )
-        out = (
-            snapshot_scan(
-                spark,
-                table,
-                ranges={"l_partkey": (100, 160), "l_suppkey": (2, 40)},
-            )
-            .groupBy("l_partkey")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum(F.col("l_quantity").cast("bigint"))
-                .cast("bigint")
-                .alias("total_qty"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 @golden(
@@ -2816,7 +2598,8 @@ def q_snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id
     """,
 )
-def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Temporal Z-order pruning (VERDICT r9 #2 — the r9 feature's own
     driver row): events committed user_id-HASH-distributed, the layout
     where per-file [min,max] on BOTH query dimensions span the whole
@@ -2832,8 +2615,6 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_select_files``); result values must equal the plain
     doubly-filtered oracle."""
     import datetime as _dt
-    import shutil
-
     from bookstore_aws_lakehouse_spark.sources.snapshots import (
         _read_manifest,
         _select_files,
@@ -2848,46 +2629,41 @@ def q_snapshot_zorder_time_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo = _dt.datetime(2024, 1, 10)
     hi = _dt.datetime(2024, 1, 12, 23, 59, 59, 999999)
-    root = tempfile.mkdtemp(prefix="blhs_zorder_time_")
-    try:
-        table = f"{root}/events_z"
-        snapshot_overwrite(
-            ev.repartition(8, "user_id"), table, stats_cols=["ts", "user_id"]
+    table = f"{root}/events_z"
+    snapshot_overwrite(
+        ev.repartition(8, "user_id"), table, stats_cols=["ts", "user_id"]
+    )
+    # size the rewrite to ~12 files at ANY fixture SF (a fixed byte
+    # target yields 1 file at sf0.001 — nothing to prune — or
+    # hundreds at sf0.1 — manifest bloat); production would pass a
+    # real 128 MB-class target
+    m0 = _read_manifest(spark, table, list_versions(spark, table)[-1])
+    total_bytes = sum(
+        os.path.getsize(f[5:] if f.startswith("file:") else f)
+        for f in m0["files"]
+        if "://" not in (f[5:] if f.startswith("file:") else f)
+    )
+    snapshot_zorder(
+        spark,
+        table,
+        ["ts", "user_id"],
+        target_file_bytes=max(4_000, total_bytes // 12),
+    )
+    m = _read_manifest(spark, table, list_versions(spark, table)[-1])
+    opened, _ = _select_files(
+        m, {"ts": {"lo": lo, "hi": hi}, "user_id": {"lo": 10, "hi": 40}}
+    )
+    pruned = len(m["files"]) >= 4 and len(opened) < len(m["files"])
+    return (
+        snapshot_scan(
+            spark, table, ranges={"ts": (lo, hi), "user_id": (10, 40)}
         )
-        # size the rewrite to ~12 files at ANY fixture SF (a fixed byte
-        # target yields 1 file at sf0.001 — nothing to prune — or
-        # hundreds at sf0.1 — manifest bloat); production would pass a
-        # real 128 MB-class target
-        m0 = _read_manifest(spark, table, list_versions(spark, table)[-1])
-        total_bytes = sum(
-            os.path.getsize(f[5:] if f.startswith("file:") else f)
-            for f in m0["files"]
-            if "://" not in (f[5:] if f.startswith("file:") else f)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_value"),
         )
-        snapshot_zorder(
-            spark,
-            table,
-            ["ts", "user_id"],
-            target_file_bytes=max(4_000, total_bytes // 12),
-        )
-        m = _read_manifest(spark, table, list_versions(spark, table)[-1])
-        opened, _ = _select_files(
-            m, {"ts": {"lo": lo, "hi": hi}, "user_id": {"lo": 10, "hi": 40}}
-        )
-        pruned = len(m["files"]) >= 4 and len(opened) < len(m["files"])
-        out = (
-            snapshot_scan(
-                spark, table, ranges={"ts": (lo, hi), "user_id": (10, 40)}
-            )
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-            .select("*", F.lit(pruned).alias("pruned"))
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .select("*", F.lit(pruned).alias("pruned"))
+    )

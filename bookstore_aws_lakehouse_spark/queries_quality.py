@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from bookstore_aws_lakehouse_spark.catalog import load_table
 from bookstore_aws_lakehouse_spark.operators.quality import fk_orphans, profile, snapshot_diff
-from bookstore_aws_lakehouse_spark.registry import golden
+from bookstore_aws_lakehouse_spark.registry import golden, scratch
 
 
 @golden(
@@ -278,7 +278,8 @@ _VERSION_DRIFT_SQL = _drift_sql(
 
 
 @golden("dq_version_drift", _VERSION_DRIFT_SQL)
-def q_dq_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_dq_version_drift(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Distribution drift BETWEEN SNAPSHOT VERSIONS — the ingestion-batch
     monitor: commit v1 of a document table, append a corrupted batch
     (n_chars ×3 — a mis-parsed re-crawl), then time-travel BOTH versions
@@ -290,9 +291,6 @@ def q_dq_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays both version states relationally and the same
     bucket/TVD arithmetic (shared ``_drift_sql`` body — one source of
     truth)."""
-    import shutil
-    import tempfile
-
     from bookstore_aws_lakehouse_spark.operators.quality import (
         distribution_drift,
     )
@@ -305,21 +303,16 @@ def q_dq_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    root = tempfile.mkdtemp(prefix="blhs_vdrift_")
-    try:
-        table = f"{root}/docs_drift"
-        snapshot_overwrite(docs.filter(F.col("doc_id") % 10 != 0), table)
-        snapshot_append(
-            docs.filter(F.col("doc_id") % 10 == 0).withColumn(
-                "n_chars", F.col("n_chars") * 3
-            ),
-            table,
-        )
-        v1 = snapshot_read(spark, table, 1).withColumn("version", F.lit("v1"))
-        v2 = snapshot_read(spark, table, 2).withColumn("version", F.lit("v2"))
-        out = distribution_drift(
-            v1.unionByName(v2), "version", "n_chars"
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/docs_drift"
+    snapshot_overwrite(docs.filter(F.col("doc_id") % 10 != 0), table)
+    snapshot_append(
+        docs.filter(F.col("doc_id") % 10 == 0).withColumn(
+            "n_chars", F.col("n_chars") * 3
+        ),
+        table,
+    )
+    v1 = snapshot_read(spark, table, 1).withColumn("version", F.lit("v1"))
+    v2 = snapshot_read(spark, table, 2).withColumn("version", F.lit("v2"))
+    return distribution_drift(
+        v1.unionByName(v2), "version", "n_chars"
+    )

@@ -15,7 +15,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bookstore_aws_lakehouse_spark.registry import golden
+from bookstore_aws_lakehouse_spark.registry import golden, scratch
 from bookstore_aws_lakehouse_spark.streaming.jobs import (
     dedup_within_watermark,
     read_events_stream,
@@ -296,35 +296,28 @@ def q_stream_sliding_windows_4panes(spark: SparkSession, sf_dir: str) -> DataFra
     GROUP BY window_start_ns
     """,
 )
-def q_stream_snapshot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_stream_snapshot_rollup(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Continuous aggregate with a snapshot-table sink end-to-end
     (streaming/jobs.py::continuous_aggregate_snapshot): the hourly
     tumbling aggregation streamed through foreachBatch into the
     manifest-versioned table via the MERGE file-pruned on day_no —
     every micro-batch is an isolated, time-travelable commit; concurrent
     readers never see a half-merged mart. The final snapshot is read
-    back and must equal the batch SQL answer. One tempdir (table +
-    checkpoint), removed before returning; result localCheckpoint-pinned."""
-    import shutil
-    import tempfile
-
+    back and must equal the batch SQL answer. The table and the stream
+    checkpoint share one scratch directory."""
     from bookstore_aws_lakehouse_spark.sources.snapshots import snapshot_read
     from bookstore_aws_lakehouse_spark.streaming.jobs import (
         continuous_aggregate_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="blhs_caggsnap_")
-    try:
-        table = f"{root}/rollup_snap"
-        continuous_aggregate_snapshot(
-            spark, sf_dir, table, checkpoint=f"{root}/ckpt"
-        )
-        df = snapshot_read(spark, table).select(
-            "window_start_ns", "n_events", "total_value"
-        )
-        return df.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = f"{root}/rollup_snap"
+    continuous_aggregate_snapshot(
+        spark, sf_dir, table, checkpoint=f"{root}/ckpt"
+    )
+    return snapshot_read(spark, table).select(
+        "window_start_ns", "n_events", "total_value"
+    )
 
 
 @golden(
@@ -338,7 +331,8 @@ def q_stream_snapshot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_month
     """,
 )
-def q_stream_snapshot_source_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def q_stream_snapshot_source_tail(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """The snapshot log as a STREAMING SOURCE (sources/pyds.py::
     SnapshotStreamReader — the lakesnap format's readStream side):
     three monthly appends build an append-only table, then
@@ -349,9 +343,6 @@ def q_stream_snapshot_source_tail(spark: SparkSession, sf_dir: str) -> DataFrame
     batch aggregate of the three months. Checkpoint-resume exactly-once
     and the append-only refusal contract are pinned in
     tests/test_pyds.py."""
-    import shutil
-    import tempfile as _tempfile
-
     from bookstore_aws_lakehouse_spark.sources.pyds import (
         register_snapshot_datasource,
     )
@@ -367,40 +358,35 @@ def q_stream_snapshot_source_tail(spark: SparkSession, sf_dir: str) -> DataFrame
         ("1997-02-01", "1997-02-28"),
         ("1997-03-01", "1997-03-31"),
     ]
-    root = _tempfile.mkdtemp(prefix="blhs_snaptail_")
-    try:
-        table = f"{root}/orders_tail"
-        for i, (lo, hi) in enumerate(months):
-            slice_df = orders.filter(F.col("o_orderdate").between(lo, hi)).select(
-                "o_orderkey",
-                F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
-                F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-            )
-            if i == 0:
-                snapshot_overwrite(slice_df, table)
-            else:
-                snapshot_append(slice_df, table)
-        register_snapshot_datasource(spark)
-        q = (
-            spark.readStream.format("lakesnap")
-            .option("path", table)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", f"{root}/out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
+    table = f"{root}/orders_tail"
+    for i, (lo, hi) in enumerate(months):
+        slice_df = orders.filter(F.col("o_orderdate").between(lo, hi)).select(
+            "o_orderkey",
+            F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
+            F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
         )
-        q.awaitTermination()
-        out = (
-            spark.read.parquet(f"{root}/out")
-            .groupBy("o_month")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("price").cast("double").alias("total_price"),
-            )
+        if i == 0:
+            snapshot_overwrite(slice_df, table)
+        else:
+            snapshot_append(slice_df, table)
+    register_snapshot_datasource(spark)
+    q = (
+        spark.readStream.format("lakesnap")
+        .option("path", table)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", f"{root}/out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", f"{root}/ckpt")
+        .start()
+    )
+    q.awaitTermination()
+    return (
+        spark.read.parquet(f"{root}/out")
+        .groupBy("o_month")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("price").cast("double").alias("total_price"),
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )

@@ -5,12 +5,16 @@
 semantics SQL cannot express; those are only checked to build and run).
 
 Query modules self-register via the ``@golden`` decorator; ``load_all()``
-imports every module so the registry is complete.
+imports every module so the registry is complete. Round-trip queries that
+write and re-read files stack ``@scratch`` under ``@golden``.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
+import shutil
+import tempfile
 from collections.abc import Callable
 from textwrap import dedent
 
@@ -59,6 +63,25 @@ def golden(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]
         return fn
 
     return deco
+
+
+def scratch(fn: Callable[[SparkSession, str, str], DataFrame]) -> QueryFn:
+    """Turn a round-trip builder ``fn(spark, sf_dir, root)`` into a query.
+
+    ``root`` is a fresh scratch directory. The built frame is pinned with
+    ``localCheckpoint(eager=True)`` so it no longer reads from ``root``,
+    and ``root`` is removed whether or not the build succeeds.
+    """
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        root = tempfile.mkdtemp(prefix=f"blhs_{fn.__name__}_")
+        try:
+            return fn(spark, sf_dir, root).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    return run
 
 
 def load_all() -> tuple[dict[str, QueryFn], dict[str, str]]:

@@ -35,6 +35,10 @@ DEFAULT_CONF: dict[str, str] = {
     # silently diverge every size()/split()-on-NULL expression from the
     # DuckDB oracles (len(NULL) IS NULL)
     "spark.sql.legacy.sizeOfNull": "false",
+    # Python data sources may prune files from pushed filters (the lakesnap
+    # reader does); off by default in Spark 4.1, where a reader that
+    # implements pushFilters is otherwise rejected outright
+    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 

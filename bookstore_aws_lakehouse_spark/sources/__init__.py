@@ -8,6 +8,5 @@ from bookstore_aws_lakehouse_spark.sources.readers import (  # noqa: F401
 from bookstore_aws_lakehouse_spark.sources.writers import (  # noqa: F401
     write_parquet,
     write_csv,
-    save_as_table,
     save_as_bucketed_table,
 )

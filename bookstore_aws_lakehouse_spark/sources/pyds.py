@@ -262,11 +262,11 @@ class SnapshotDataSource(DataSource):
 
 
 def register_snapshot_datasource(spark) -> None:
-    """Register ``format("lakesnap")`` on the session (idempotent) and
-    enable Python-data-source filter pushdown (off by default in Spark
-    4.1; without it a reader implementing ``pushFilters`` is rejected
-    outright)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Register ``format("lakesnap")`` on the session (idempotent). The
+    session conf is left alone: the reader needs
+    ``spark.sql.python.filterPushdown.enabled``, which ``get_spark`` sets,
+    and any other session fails its read with Spark's
+    ``DATA_SOURCE_PUSHDOWN_DISABLED`` error naming that conf."""
     spark.dataSource.register(SnapshotDataSource)
 
 

@@ -168,20 +168,6 @@ def save_as_bucketed_table(
     writer.saveAsTable(name)
 
 
-def save_as_table(
-    df: DataFrame,
-    name: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
-) -> None:
-    """S4 — register output in the session catalog (Glue-catalog analog):
-    downstream ``spark.sql`` resolves it by name."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(name)
-
-
 def write_parquet_clustered(
     df: DataFrame,
     path: str,

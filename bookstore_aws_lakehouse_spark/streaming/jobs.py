@@ -384,78 +384,3 @@ def stream_stream_join(
         & (F.col("right_time") <= F.col("left_time") + F.expr(f"INTERVAL {within}")),
         "inner",
     ).select("user_id", "left_id", "right_id")
-
-
-# ---- custom stateful operator (transformWithStateInPandas, Spark 4) ------
-
-
-def transform_with_state_user_stats(stream: DataFrame) -> DataFrame:
-    """The same per-user running stats as ``stateful_user_stats`` through
-    Spark 4's ``transformWithStateInPandas`` — the successor API to
-    applyInPandasWithState: state is DECLARED (named ValueState with a
-    schema, optional TTL; ListState/MapState and event-time timers also
-    available on the handle) instead of one opaque tuple, so the engine
-    can evict/checkpoint per state variable. Semantics kept identical
-    and deliberately verifiable: totals accumulate in integer cents, and
-    with availableNow the final update per user equals the batch groupBy.
-
-    SANDBOX-BLOCKED at runtime (NOTES_r9): the transformWithState state
-    server speaks protobuf between the JVM and the Python worker, and
-    this offline container ships no ``google.protobuf`` (verified; same
-    class of block as delta-spark/avro). The plan builds and the
-    operator is correct per the API, but execution needs protobuf — so
-    this raises a clear error up front instead of crashing the worker,
-    and ``stateful_user_stats`` (applyInPandasWithState, oracle-verified
-    by stream_stateful_user_stats) remains the supported stateful path
-    here."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf for its "
-            "JVM<->Python state protocol, which this offline sandbox does "
-            "not provide — use stateful_user_stats "
-            "(applyInPandasWithState) instead"
-        ) from exc
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stats = handle.getValueState(
-                "stats", "n bigint, cents bigint, mx double"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, cents, mx = (
-                self._stats.get() if self._stats.exists() else (0, 0, None)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                # same NULL contract as stateful_user_stats: skip like SQL
-                vals = pdf["value"].dropna()
-                cents += int(
-                    pd.Series(vals * 100).round().astype("int64").sum()
-                )
-                if len(vals):
-                    batch_max = float(vals.max())
-                    mx = batch_max if mx is None else max(mx, batch_max)
-            self._stats.update((n, cents, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value_cents": [cents],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserStats(),
-        outputStructType=USER_STATS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

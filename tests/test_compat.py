@@ -3,8 +3,6 @@ literal rows (sample-data.csv shapes — including its quirks)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from bookstore_aws_lakehouse_spark.compat import Extractor, Loader, Transformer
@@ -52,7 +50,7 @@ def test_clean_reproduces_reference_quirks(raw):
     assert countries["2"] == ""
 
 
-def test_full_reference_flow_and_loader(spark, raw):
+def test_full_reference_flow_and_loader(spark, raw, tmp_path):
     t, loader = Transformer(), Loader()
     clean = t.transform(t.transform(raw, "ExpandData"), "CleanData")
     books = t.transform(clean, "BooksDimensionTable")
@@ -65,7 +63,7 @@ def test_full_reference_flow_and_loader(spark, raw):
     assert top.columns == ["ISBN", "Book-Title", "Average-Rating", "Total-Ratings"]
     assert top.count() == 0  # < 100 ratings per book in 3 rows
 
-    out = tempfile.mkdtemp(prefix="blhs_compat_")
+    out = str(tmp_path)
     loader.load(facts, "overwrite", out, "Ratings")
     back = Extractor().extract_csv(spark, f"{out}/Ratings")
     assert back.count() == facts.count()

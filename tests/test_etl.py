@@ -3,13 +3,11 @@ mart is readable, idempotent, and consistent with the in-memory branches."""
 
 from __future__ import annotations
 
-import tempfile
-
 from bookstore_aws_lakehouse_spark.plans.etl import run_etl
 
 
-def test_run_etl_writes_star_schema(spark, sf_smoke):
-    out_dir = tempfile.mkdtemp(prefix="blhs_etl_")
+def test_run_etl_writes_star_schema(spark, sf_smoke, tmp_path):
+    out_dir = str(tmp_path)
     branches = run_etl(spark, sf_smoke, out_dir, min_ratings=20)
 
     dim_c = spark.read.parquet(f"{out_dir}/dim_customers")

@@ -8,6 +8,7 @@ before committing a new query.
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pytest
 
@@ -25,8 +26,16 @@ def con():
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))
-def test_golden_matches_oracle(spark, con, name):
+def test_golden_matches_oracle(spark, con, name, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     compare(GOLDEN[name](spark, SF_DIR), con, ORACLE[name], name)
+    # the events-stream symlink directory is made once per process and
+    # reused by every later stream query (streaming/jobs.py::_STREAM_DIRS)
+    left = sorted(
+        p.name for p in tmp_path.iterdir()
+        if not p.name.startswith("blhs_events_stream_")
+    )
+    assert left == [], f"{name} left scratch files behind: {left}"
 
 
 def test_all_golden_queries_run(spark):

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from bookstore_aws_lakehouse_spark.operators.linalg import (
     covariance_rows,
-    dim_means,
     pc_scores,
     power_iteration,
     top_principal_component,
@@ -78,13 +77,13 @@ def test_pc_scores_is_centered_projection(spark, sf_smoke):
     ).astype(np.float64)
     u = [0.0] * 64
     u[5] = 1.0
-    m = dim_means(emb, "embedding", 64)
+    m = V.mean(axis=0)
     got = {
         r["vec_id"]: r["score"]
-        for r in pc_scores(emb, u, m).collect()
+        for r in pc_scores(emb, u, m.tolist()).collect()
     }
     ids = [r["vec_id"] for r in emb.orderBy("vec_id").select("vec_id").collect()]
-    exp = np.round(V[:, 5] - np.array(m)[5], 6)
+    exp = np.round(V[:, 5] - m[5], 6)
     for k, e in zip(ids, exp):
         assert math.isclose(got[k], float(e), abs_tol=1.5e-6)
 
@@ -248,19 +247,14 @@ def test_pc_project_is_shuffle_free(spark, sf_smoke):
     assert "Exchange" not in plan
 
 
-def test_pca_scores_row_uses_exactly_two_corpus_scans(spark, sf_smoke, monkeypatch):
+def test_pca_scores_row_uses_exactly_two_corpus_scans(spark, sf_smoke):
     """VERDICT r12 #2 'Done' criterion, pinned: the scores row touches
     the corpus exactly twice — the covariance scan (under the pin) and
-    the scoring pass. Means come off the pin, so dim_means (the retired
-    third scan) must never be called, and the returned frame's plan
-    holds exactly ONE parquet scan (the scoring pass)."""
-    import bookstore_aws_lakehouse_spark.operators.linalg as linalg
+    the scoring pass. Means come off the pin (no third scan), so the
+    returned frame's plan holds exactly ONE parquet scan (the scoring
+    pass)."""
     from bookstore_aws_lakehouse_spark.registry import load_all
 
-    def _boom(*a, **k):
-        raise AssertionError("dim_means called — that's a third corpus scan")
-
-    monkeypatch.setattr(linalg, "dim_means", _boom)
     GOLDEN, _ = load_all()
     out = GOLDEN["embedding_pca_scores_topk"](spark, sf_smoke)
     plan = out._jdf.queryExecution().executedPlan().toString()

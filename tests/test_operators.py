@@ -17,7 +17,6 @@ from bookstore_aws_lakehouse_spark.operators.setops import (
     union_all_by_name,
 )
 from bookstore_aws_lakehouse_spark.operators.windows import top_n_per_group
-from bookstore_aws_lakehouse_spark.plans.pipeline import Pipeline, get_transform, register_transform
 
 
 def test_null_normalize_catches_space_and_empty(spark):
@@ -103,32 +102,14 @@ def test_setops(spark):
     assert sorted(r["v"] for r in except_rows(a, b).collect()) == [1, 2]
 
 
-def test_pipeline_registry_dispatch_raises_on_unknown(spark):
-    import pytest
-
-    @register_transform("test_double")
-    def double_v(df):
-        return df.withColumn("v", F.col("v") * 2)
-
-    df = spark.createDataFrame([(1,)], ["v"])
-    out = Pipeline([]).then("test_double").run(df)
-    assert out.collect()[0]["v"] == 2
-    with pytest.raises(ValueError, match="Invalid transformer type"):
-        get_transform("nope")
-
-
 def test_exact_sum_and_avg_order_independent(spark):
-    from bookstore_aws_lakehouse_spark.functions.scalar import exact_avg, exact_sum
+    from bookstore_aws_lakehouse_spark.functions.scalar import exact_sum
 
     # classic float trap: 0.1+0.2 accumulation order changes plain double
     # sums; decimal-cast sums are exact regardless of partitioning
     vals = [(0.1,)] * 10 + [(0.2,)] * 10
     a = spark.createDataFrame(vals, ["v"]).repartition(8)
-    row = a.agg(
-        exact_sum("v").alias("s"), exact_avg("v").alias("m")
-    ).collect()[0]
-    assert row["s"] == 3.0
-    assert row["m"] == 0.15
+    assert a.agg(exact_sum("v").alias("s")).collect()[0]["s"] == 3.0
 
 
 def test_null_if_in_helper(spark):
@@ -268,25 +249,6 @@ def test_cms_never_undercounts_and_exact_on_sparse_input(spark):
     # measures exact (deterministic; a regression here means the hashing
     # or min-estimator broke)
     assert got == {"a": 50, "b": 7, "c": 1, "zz": 0}
-
-
-def test_cms_merge_equals_union_build(spark):
-    from bookstore_aws_lakehouse_spark.operators.sketches import (
-        cms_build,
-        cms_estimate,
-        cms_merge,
-    )
-
-    d1 = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "v string")
-    d2 = spark.createDataFrame([("a",)] * 3 + [("c",)] * 4, "v string")
-    merged = cms_merge(
-        cms_build(d1, "v", 4, 512), cms_build(d2, "v", 4, 512)
-    )
-    direct = cms_build(d1.unionAll(d2), "v", 4, 512)
-    probes = spark.createDataFrame([("a",), ("b",), ("c",)], "v string")
-    em = {r.v: r.est_n for r in cms_estimate(merged, probes, "v", 4, 512).collect()}
-    ed = {r.v: r.est_n for r in cms_estimate(direct, probes, "v", 4, 512).collect()}
-    assert em == ed == {"a": 8, "b": 2, "c": 4}
 
 
 def test_cms_grid_is_bounded_and_estimate_broadcasts(spark):

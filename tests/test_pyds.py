@@ -41,6 +41,32 @@ def test_format_read_matches_snapshot_read(spark, tmp_path):
     ]
 
 
+def test_registration_leaves_session_conf_alone(spark, tmp_path):
+    """Registering the format changes no session conf (a conf change would
+    also change the conf hash Engine.sql's result cache keys on), and a
+    filtered read still plans with pushed filters: get_spark's defaults
+    already enable Python-source filter pushdown."""
+    session = spark.newSession()
+    table = str(tmp_path / "t")
+    _mk(session, table)
+    # Spark checks a Python source's name against the JVM-active session,
+    # which already holds lakesnap once an earlier test registered it there
+    jvm_sessions = spark._jvm.org.apache.spark.sql.SparkSession
+    jvm_sessions.setActiveSession(session._jsparkSession)
+    try:
+        before = session.conf.getAll
+        register_snapshot_datasource(session)
+        assert session.conf.getAll == before
+        got = (
+            session.read.format("lakesnap").option("path", table).load()
+            .filter("k IN (5, 399)")
+            .collect()
+        )
+    finally:
+        jvm_sessions.setActiveSession(spark._jsparkSession)
+    assert sorted((r.k, r.v) for r in got) == [(5, 5), (399, 0)]
+
+
 def test_reader_prunes_files_from_pushed_filters(spark, tmp_path):
     """Planner-level proof, no Spark needed: the reader keeps only files
     whose stats may match the pushed predicate, returns every filter as

@@ -169,30 +169,6 @@ def test_snapshot_sink_maintenance_rebuilds_bloom_index(spark, tmp_path):
     assert snapshot_point_lookup(spark, table, "window_start_ns", key).count() == 1
 
 
-def test_transform_with_state_blocked_loudly_without_protobuf(spark, sf_smoke):
-    """Spark 4's transformWithStateInPandas needs google.protobuf for its
-    state protocol; this sandbox verifiably lacks it (NOTES_r9). The
-    operator must fail UP FRONT with a clear pointer to the supported
-    applyInPandasWithState path — not crash the Python worker mid-query.
-    (If protobuf ever appears, the operator runs and this test instead
-    asserts the plan builds.)"""
-    import pytest as _pytest
-
-    from bookstore_aws_lakehouse_spark.streaming.jobs import (
-        read_events_stream,
-        transform_with_state_user_stats,
-    )
-
-    stream = read_events_stream(spark, sf_smoke)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with _pytest.raises(NotImplementedError, match="applyInPandasWithState"):
-            transform_with_state_user_stats(stream)
-    else:  # pragma: no cover - environment-dependent branch
-        assert transform_with_state_user_stats(stream).isStreaming
-
-
 def test_stateful_user_stats_skips_null_values(spark, tmp_path):
     """NULL `value` rows must be SKIPPED like SQL's sum()/max() (count(*)
     still counts the row): before the fix, astype(int64) on the NaN

@@ -80,15 +80,8 @@ def test_schema_evolution_merge_schema(spark, tmp_path):
 
 def test_save_as_table_and_read_json(spark, tmp_path):
     from bookstore_aws_lakehouse_spark.sources.readers import read_json
-    from bookstore_aws_lakehouse_spark.sources.writers import save_as_table
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
-    save_as_table(df, "t_catalog_demo")
-    assert spark.table("t_catalog_demo").count() == 2
-    # idempotent overwrite (Glue-catalog analog of the reference's S4)
-    save_as_table(df, "t_catalog_demo")
-    assert spark.table("t_catalog_demo").count() == 2
-
     jpath = str(tmp_path / "j")
     df.write.json(jpath)
     back = read_json(spark, jpath, schema="id long, v string")

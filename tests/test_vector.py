@@ -10,7 +10,6 @@ from bookstore_aws_lakehouse_spark.functions.vector import (
     cosine_similarity,
     dot,
     l2_norm,
-    make_cosine_similarity_pandas,
 )
 
 
@@ -26,23 +25,6 @@ def test_dot_and_norm(spark):
 def test_cosine_zero_norm_is_null(spark):
     df = spark.createDataFrame([([0.0, 0.0], [1.0, 1.0])], ["a", "b"])
     assert df.select(cosine_similarity(F.col("a"), F.col("b")).alias("c")).collect()[0]["c"] is None
-
-
-def test_pandas_udf_matches_jvm_path(spark, sf_smoke):
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet").limit(50)
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("ia") < F.col("ib"))
-    cos_pd = make_cosine_similarity_pandas()
-    both = pairs.select(
-        "ia",
-        "ib",
-        cosine_similarity(F.col("va"), F.col("vb")).alias("jvm"),
-        cos_pd(F.col("va"), F.col("vb")).alias("py"),
-    ).collect()
-    assert len(both) == 50 * 49 / 2
-    for r in both:
-        assert math.isclose(r["jvm"], r["py"], rel_tol=1e-12), (r["ia"], r["ib"])
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_smoke):
@@ -243,6 +225,14 @@ def test_exact_pandas_udf_is_bit_identical_to_jvm(spark, sf_smoke):
     assert len(both) == 60 * 59 / 2
     for r in both:
         assert r["jvm"] == r["py"]  # bit-identical, no tolerance
+    # a zero norm yields NULL on both paths (not NaN, not a crash)
+    zero = spark.createDataFrame(
+        [([0.0, 0.0], [1.0, 0.0])], "a array<double>, b array<double>"
+    ).select(
+        cosine_similarity(F.col("a"), F.col("b")).alias("jvm"),
+        cos_exact(F.col("a"), F.col("b")).alias("py"),
+    )
+    assert [tuple(r) for r in zero.collect()] == [(None, None)]
 
 
 def test_pq_encode_seeds_self_code_and_shapes(spark):
@@ -392,37 +382,6 @@ def test_ivfpq_residual_multiprobe_superset_and_structure(spark):
     for q, rows in by_q.items():
         contributing = {cells[v] for _, _, v in rows}
         assert len(contributing) <= 2
-
-
-def test_pandas_cosine_handles_nulls_and_zero_norms(spark):
-    """The Arrow cosine must mirror the JVM path on degenerate input:
-    NULL vectors and zero norms yield NULL (not NaN / not a crash)."""
-    from bookstore_aws_lakehouse_spark.functions.vector import (
-        cosine_similarity,
-        make_cosine_similarity_pandas,
-    )
-    from pyspark.sql import functions as F
-
-    cos = make_cosine_similarity_pandas()
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0], [1.0, 0.0]),
-            (2, None, [1.0, 0.0]),
-            (3, [0.0, 0.0], [1.0, 0.0]),
-        ],
-        "k int, a array<double>, b array<double>",
-    )
-    got = {
-        r.k: (r.pandas_cos, r.jvm_cos)
-        for r in df.select(
-            "k",
-            cos("a", "b").alias("pandas_cos"),
-            cosine_similarity(F.col("a"), F.col("b")).alias("jvm_cos"),
-        ).collect()
-    }
-    assert got[1] == (1.0, 1.0)
-    assert got[2] == (None, None)
-    assert got[3] == (None, None)
 
 
 def test_semantic_dedup_keeps_lowest_id_representative(spark):
