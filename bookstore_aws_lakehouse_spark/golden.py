@@ -44,7 +44,7 @@ from bookstore_aws_lakehouse_spark.operators.projection import (
 from bookstore_aws_lakehouse_spark.operators.sort import top_k
 from bookstore_aws_lakehouse_spark.operators.windows import top_n_per_group
 
-from bookstore_aws_lakehouse_spark.registry import GOLDEN, ORACLE, golden  # noqa: F401
+from bookstore_aws_lakehouse_spark.registry import golden
 
 
 # --------------------------------------------------------------------------

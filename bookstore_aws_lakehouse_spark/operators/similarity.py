@@ -28,7 +28,6 @@ from bookstore_aws_lakehouse_spark.functions.vector import (
     dot,
     l2_norm,
 )
-from bookstore_aws_lakehouse_spark.operators.dedup import md5_hash64
 from bookstore_aws_lakehouse_spark.operators.windows import top_n_per_group
 
 _sim_log = logging.getLogger(__name__)

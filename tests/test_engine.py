@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import re
 import shutil
 
 import pytest
@@ -402,6 +403,184 @@ def test_result_cache_under_thread_stress(spark, sf_smoke, monkeypatch):
     assert e._results_bytes == sum(r.nbytes for r in e._results.values())
     assert e._results_bytes <= engine_mod._RESULT_CACHE_BYTES
     assert 0 < len(e._results) < len(queries)
+
+
+def _variant(sql: str, having: int | None = None, limit: int | None = None) -> str:
+    """``sql`` with another HAVING threshold and LIMIT."""
+    if having is not None:
+        sql = re.sub(r"HAVING count\(\*\) >= \d+", f"HAVING count(*) >= {having}", sql)
+    if limit is not None:
+        sql = re.sub(r"LIMIT \d+", f"LIMIT {limit}", sql)
+    return sql
+
+
+def test_variant_of_a_stored_core_runs_no_job(spark, sf_smoke):
+    """After dash_top100_books, its HAVING 30 / LIMIT 5 variant is served
+    from the stored aggregate: no Spark job, DuckDB's rows in DuckDB's
+    order, and nothing in Spark's CacheManager."""
+    from tests.oracle import compare, duckdb_connection
+    from tests.test_cache_residue import _cache_is_empty, _clear_cache
+
+    _clear_cache(spark)
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = DASHBOARD_VIEWS["dash_top100_books"]
+    e.sql(sql).collect()
+    variant = _variant(sql, having=30, limit=5)
+    rows, jobs = _jobs(spark, lambda: e.sql(variant).collect())
+    assert jobs == 0
+    con = duckdb_connection(sf_smoke)
+    try:
+        want = con.execute(variant).fetchall()
+        compare(e.sql(variant), con, variant, "dash_top100_books HAVING 30 LIMIT 5")
+    finally:
+        con.close()
+    assert 0 < len(rows) <= 5
+    assert [r["p_partkey"] for r in rows] == [w[0] for w in want]
+    assert _cache_is_empty(spark)
+
+
+def test_other_region_literal_runs_jobs(spark, sf_smoke):
+    """A region literal is pushed into the core, so another region is
+    another core: it runs its jobs and gets its own answer."""
+    from tests.oracle import compare, duckdb_connection
+
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = " ".join(DASHBOARD_VIEWS["dash_top10_states"].split())
+    e.sql(sql).collect()
+    europe = sql.replace("r_name = 'ASIA'", "r_name = 'EUROPE'")
+    _, jobs = _jobs(spark, lambda: e.sql(europe).collect())
+    assert jobs > 0
+    con = duckdb_connection(sf_smoke)
+    try:
+        compare(e.sql(europe), con, europe, "dash_top10_states EUROPE")
+    finally:
+        con.close()
+
+
+def test_core_over_the_cap_runs_the_whole_query(spark, sf_smoke, monkeypatch):
+    """A core of more rows than the cap is remembered as too big; its
+    queries, the first and a variant, run whole and match DuckDB."""
+    from bookstore_aws_lakehouse_spark import engine as engine_mod
+    from tests.oracle import compare, duckdb_connection
+
+    monkeypatch.setattr(engine_mod, "_RESULT_MAX_ROWS", 10)
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = DASHBOARD_VIEWS["dash_top10_countries"]  # a core of 25 nations
+    variant = _variant(sql, limit=5)
+    con = duckdb_connection(sf_smoke)
+    try:
+        compare(e.sql(sql), con, sql, "dash_top10_countries")
+        assert [r.answer for r in e._results.values()].count(None) == 1
+        _, jobs = _jobs(spark, lambda: e.sql(variant).collect())
+        assert jobs > 0
+        compare(e.sql(variant), con, variant, "dash_top10_countries LIMIT 5")
+    finally:
+        con.close()
+
+
+def test_rewritten_file_misses_the_core(spark, sf_smoke, tmp_path):
+    """A variant whose core was stored before one of its files was
+    rewritten in place runs its jobs again."""
+    import pyarrow.parquet as pq
+
+    sf_dir = _lake_copy(sf_smoke, tmp_path)
+    e = Engine(spark=spark, sf_dir=sf_dir)
+    sql = (
+        "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey"
+        " ORDER BY n DESC, n_regionkey LIMIT 4"
+    )
+    e.sql(sql).collect()
+    _, jobs = _jobs(spark, lambda: e.sql(_variant(sql, limit=3)).collect())
+    assert jobs == 0
+    path = f"{sf_dir}/nation.parquet"
+    pq.write_table(pq.read_table(path).slice(0, 5), path)
+    _, jobs = _jobs(spark, lambda: e.sql(_variant(sql, limit=2)).collect())
+    assert jobs > 0
+
+
+def test_core_hit_keeps_sparks_order(spark, sf_smoke, tmp_path):
+    """A core hit sorts in the driver with Spark's own ordering: DESC
+    NULLS FIRST over NULL, NaN, infinities and ties, then a string key
+    ASC NULLS LAST, gives the rows and row order Spark gives uncached. A
+    filter under the sort is applied over the sorted rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nan, inf = float("nan"), float("inf")
+    k = [1.5, None, nan, -inf, 1.5, inf, 0.0, None, nan, 1.5, -2.0, 0.0]
+    s = ["b", "a", None, "c", "a", "d", None, "e", "f", None, "g", "h"]
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": k, "s": s, "v": list(range(len(k)))}), path)
+    spark.read.parquet(path).createOrReplaceTempView("t_order")
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sql = (
+        "SELECT k, s, v FROM t_order WHERE v >= {} "
+        "ORDER BY k DESC NULLS FIRST, s ASC NULLS LAST LIMIT {}"
+    )
+    try:
+        e.sql(sql.format(0, 12)).collect()
+        for lo, limit in [(0, 12), (2, 7), (1, 3)]:
+            query = sql.format(lo, limit)
+            got, jobs = _jobs(spark, lambda: e.sql(query).collect())
+            assert jobs == 0, query
+            want = spark.sql(query).collect()
+            assert repr([tuple(r) for r in got]) == repr([tuple(r) for r in want])
+    finally:
+        spark.catalog.dropTempView("t_order")
+
+
+@pytest.mark.parametrize("limits", [(5, 5), (5, 7)], ids=["same_text", "same_core"])
+def test_two_threads_missing_together_run_one_miss(spark, sf_smoke, monkeypatch, limits):
+    """Two threads that miss together, on one request or on two requests
+    over one core, run the jobs of one miss between them: the second
+    waits for the first and is served its answer."""
+    import threading
+
+    from bookstore_aws_lakehouse_spark import engine as engine_mod
+
+    sql = (
+        "SELECT c_mktsegment, count(*) AS n FROM customer GROUP BY c_mktsegment"
+        " ORDER BY n DESC, c_mktsegment LIMIT {}"
+    )
+    alone = Engine(spark=spark, sf_dir=sf_smoke)
+    want, one_miss = _jobs(spark, lambda: alone.sql(sql.format(limits[0])).collect())
+    assert one_miss > 0
+
+    both_analysed = threading.Barrier(2, timeout=60)
+    real_analyze = engine_mod.analyze_sql
+
+    def analyze_then_wait(*args):
+        df = real_analyze(*args)
+        both_analysed.wait()
+        return df
+
+    monkeypatch.setattr(engine_mod, "analyze_sql", analyze_then_wait)
+    e = Engine(spark=spark, sf_dir=sf_smoke)
+    sc = spark.sparkContext
+    group = f"test_engine_{next(_GROUPS)}"
+    got: list = [None, None]
+    errors: list[BaseException] = []
+
+    def client(i: int) -> None:
+        sc.setJobGroup(group, group)
+        try:
+            got[i] = e.sql(sql.format(limits[i])).collect()
+        except BaseException as exc:
+            errors.append(exc)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == one_miss
+    # customer has five market segments, so both LIMITs return them all
+    assert got[0] == got[1] == want
 
 
 def test_unbounded_query_stays_lazy(spark, sf_smoke):
